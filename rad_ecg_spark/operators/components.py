@@ -40,10 +40,14 @@ the next call — measured block accumulation slows repeated in-JVM runs
 (34 s -> 70 s over four back-to-back 10M-edge runs). One-shot jobs
 (spark-submit, the registry queries) are unaffected.
 
-Convergence detection without materializing edge-set diffs: the pair
-(edge_count, sum(xxhash64(src,dst))) is a fingerprint; two identical
-fingerprints in a row ⇒ stable. Cheap (one agg) and collision-safe in
-practice (64-bit sum over distinct sets).
+Both loops run on ``graph_core.iterate`` (pinned conf, lazy per-round
+localCheckpoint materialized by the round's one summary aggregate,
+freeing superseded state); this module supplies ``hashmin_step`` and
+``star_step`` and their convergence tests. Hashmin stops when no label
+changed. Star detects convergence without materializing edge-set
+diffs: the pair (edge_count, sum(xxhash64(src,dst))) is a fingerprint;
+two identical fingerprints in a row ⇒ stable. Cheap (one agg) and
+collision-safe in practice (64-bit sum over distinct sets).
 
 Output: DataFrame(id, component) where component = min vertex id of the
 component — exact, deterministic, parallelism-independent.
@@ -56,9 +60,12 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from rad_ecg_spark.operators.graph_core import (
-    free_local_checkpoint,
+    IterStats,
+    iterate,
+    messages,
     normalize_edges,
     pinned_loop_conf,
+    shuffle_partitions,
     size_partitions,
     vertices_of,
 )
@@ -104,15 +111,45 @@ def _small_star(sym: DataFrame) -> DataFrame:
     return smaller.unionByName(self_edge).filter(F.col("src") != F.col("dst"))
 
 
-def _fingerprint(edges: DataFrame) -> tuple[int, int]:
-    row = edges.agg(
-        F.count(F.lit(1)).alias("cnt"),
-        # decimal(38,0) sum: immune to ANSI long-overflow on hash sums
-        F.coalesce(
-            F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")), F.lit(0)
-        ).alias("chk"),
-    ).collect()[0]
-    return int(row["cnt"]), int(row["chk"])
+def _sym_dedup(e: DataFrame, num_partitions: int) -> DataFrame:
+    """Symmetric view of ``e`` on the src partitioning with the round's
+    ONE dedup (no extra shuffle: subset rule)."""
+    return (
+        _sym_nodedup(e)
+        .repartition(num_partitions, "src")
+        .dropDuplicates(["src", "dst"])
+    )
+
+
+def star_step(cur: DataFrame, num_partitions: int) -> DataFrame:
+    """One large-star + small-star round over the symmetric edge set."""
+    cur = _large_star(cur)
+    cur = _sym_nodedup(cur)  # star ops consume the symmetric view
+    return _sym_dedup(_small_star(cur), num_partitions)
+
+
+def hashmin_step(labels: DataFrame, sym: DataFrame) -> DataFrame:
+    """One frontier hashmin round: (id, component, changed) -> same."""
+    # min over neighbors of dst: sym is symmetric, so grouping the
+    # src-side labels by dst sees every neighbor of every vertex.
+    # Plain groupBy (no pre-repartition): the loop conf pins
+    # shuffle.partitions = num_partitions, so the aggregate lands on
+    # the state's partition count AND gets map-side partial
+    # aggregation before the exchange (the explicit repartition
+    # shuffled the raw 2|E| message rows).
+    frontier = labels.filter(F.col("changed") == 1).select("id", "component")
+    msgs = messages(sym, frontier, ["dst", "component"])
+    nbr_min = msgs.groupBy("dst").agg(F.min("component").alias("nbr_min"))
+    new_comp = F.least(
+        F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))
+    )
+    return labels.join(nbr_min.hint("shuffle_hash"), labels.id == nbr_min.dst, "left").select(
+        "id",
+        new_comp.alias("component"),
+        # change detection inline (delta-as-a-column) — no per-round
+        # self-join
+        (new_comp != F.col("component")).cast("long").alias("changed"),
+    )
 
 
 def connected_components(
@@ -139,7 +176,7 @@ def connected_components(
     # cache that inherits that layout makes every downstream map side
     # (verts distinct, sym build) 1-2-way parallel. One narrow exchange
     # of (src, dst) pairs buys full-width map sides.
-    n_session = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    n_session = shuffle_partitions(spark)
     edges = (
         normalize_edges(edges)
         .repartition(n_session, "src", "dst")
@@ -153,6 +190,11 @@ def connected_components(
         # 2 partitions at sf1.0 (1.2 s/round vs 0.45 s at 16).
         num_partitions = size_partitions(spark, n_edges * 2)
 
+    # pinned around the whole run, not only inside iterate(): the state
+    # set-ups between and around the loops (hashmin's initial labels,
+    # star's initial symmetric view, the hybrid quotient joins) are
+    # planned here, and under AQE even a lazy localCheckpoint runs its
+    # shuffle stages as soon as it is taken
     with pinned_loop_conf(spark, num_partitions):
         result = _run(edges, verts, method, max_iter, num_partitions, hashmin_rounds)
     out = result.select("id", "component")
@@ -171,7 +213,7 @@ def _hashmin(edges, verts, max_rounds, num_partitions):
     exchange-free — then the (dst, component) message stream pays the
     round's ONE shuffle into the min aggregation, and the write-back
     join is co-partitioned again (labels by id, nbr_min by dst).
-    Audited live by tools/audit_loops.py::hashmin_round_plan.
+    Audited live by tools/audit_loops.py::hashmin_steady_plan.
 
     Frontier (delta) propagation: each round sends messages only from
     vertices whose label CHANGED last round. Labels are monotonically
@@ -196,15 +238,7 @@ def _hashmin(edges, verts, max_rounds, num_partitions):
     # both directions -> ONE exchange (repartition by src; the dedup
     # reuses HashPartitioning(src) via the subset rule) instead of
     # symmetrize()'s distinct-then-repartition double shuffle.
-    sym = (
-        edges.unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .repartition(num_partitions, "src")
-        .dropDuplicates(["src", "dst"])
-        .persist()
-    )
+    sym = _sym_dedup(edges, num_partitions).persist()
     # lazy persist: round 1's message join materializes sym ONCE
     # (persist locking) through the caller's cached edges — a dedicated
     # count() here was a pure 2|E| barrier job (same fusion as
@@ -212,79 +246,40 @@ def _hashmin(edges, verts, max_rounds, num_partitions):
     # holds no upstream cache hostage: edges stays cached for the
     # hybrid quotient regardless, and sym.unpersist() after the loop is
     # unchanged.
-    converged = False
-    for _ in range(max_rounds):
-        # min over neighbors of dst: sym is symmetric, so grouping the
-        # src-side labels by dst sees every neighbor of every vertex.
-        # Plain groupBy (no pre-repartition): the loop conf pins
-        # shuffle.partitions = num_partitions, so the aggregate lands on
-        # the state's partition count AND gets map-side partial
-        # aggregation before the exchange (the explicit repartition
-        # shuffled the raw 2|E| message rows).
-        frontier = labels.filter(F.col("changed") == 1).select("id", "component")
-        msgs = sym.join(
-            frontier.hint("shuffle_hash"), sym.src == frontier.id
-        ).select("dst", "component")
-        nbr_min = msgs.groupBy("dst").agg(F.min("component").alias("nbr_min"))
-        new_comp = F.least(
-            F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))
-        )
-        new_labels = (
-            labels.join(nbr_min.hint("shuffle_hash"), labels.id == nbr_min.dst, "left")
-            .select(
-                "id",
-                new_comp.alias("component"),
-                # change detection inline (delta-as-a-column, see
-                # pagerank.py) — no per-iteration self-join
-                (new_comp != F.col("component")).cast("long").alias("changed"),
-            )
-            # lineage truncation per iteration (see pagerank.py doc);
-            # lazy: the changed-count agg below materializes it (one job)
-            .localCheckpoint(eager=False)
-        )
-        changed = int(
-            new_labels.agg(F.coalesce(F.sum("changed"), F.lit(0))).collect()[0][0]
-        )
-        free_local_checkpoint(labels)
-        # keep the checkpointed frame itself (not a projection) so the
-        # next round's free_local_checkpoint can release its blocks
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
+    stats = IterStats()
+    labels = iterate(
+        labels,
+        lambda state, prev: hashmin_step(state, sym),
+        [F.coalesce(F.sum("changed"), F.lit(0)).alias("changed")],
+        lambda row, prev: row["changed"] == 0,
+        stats,
+        num_partitions,
+        max_rounds,
+    )
     sym.unpersist()
-    return labels, converged
+    return labels, stats.converged
 
 
 def _star_components(edges, num_partitions, max_iter):
     """Star alternation on ``edges``; returns DataFrame(id, component)
     covering the vertices that appear in edges (isolated vertices are
     the caller's job)."""
-    cur = (
-        _sym_nodedup(edges)
-        .repartition(num_partitions, "src")
-        .dropDuplicates(["src", "dst"])  # no extra shuffle (subset rule)
+    cur = _sym_dedup(edges, num_partitions).localCheckpoint(eager=True)
+    cur = iterate(
+        cur,
+        lambda state, prev: star_step(state, num_partitions),
+        [
+            F.count(F.lit(1)).alias("cnt"),
+            # decimal(38,0) sum: immune to ANSI long-overflow on hash sums
+            F.coalesce(
+                F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")), F.lit(0)
+            ).alias("chk"),
+        ],
+        lambda row, prev: row == prev,
+        IterStats(),
+        num_partitions,
+        max_iter,
     )
-    cur = cur_ckpt = cur.localCheckpoint(eager=True)
-    prev_ckpt = None
-    prev_fp = None
-    for _ in range(max_iter):
-        cur = _large_star(cur)
-        cur = _sym_nodedup(cur)  # star ops consume the symmetric view
-        cur = _small_star(cur)
-        prev_ckpt = cur_ckpt
-        cur = cur_ckpt = (
-            _sym_nodedup(cur)
-            .repartition(num_partitions, "src")
-            .dropDuplicates(["src", "dst"])  # ONE dedup per round
-            # lazy: the fingerprint agg below materializes it (one job)
-            .localCheckpoint(eager=False)
-        )
-        fp = _fingerprint(cur)
-        free_local_checkpoint(prev_ckpt)
-        if fp == prev_fp:
-            break
-        prev_fp = fp
     # stable symmetric star graph: component(v) = min(N(v) ∪ {v})
     return _min_of_neighborhood(cur).select(
         F.col("src").alias("id"), F.col("m").alias("component")

@@ -35,6 +35,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from rad_ecg_spark.operators.graph_core import shuffle_partitions
+
 EPISODE_SCHEMA = (
     "user_id long, episode_id int, n_events long, "
     "start_ms long, end_ms long, sum_cents long, peak_cents long"
@@ -55,7 +57,7 @@ def detect_episodes(
 
     thr_c = int(round(threshold * 100))
     spark = events.sparkSession
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    n_parts = shuffle_partitions(spark)
 
     def _empty() -> pd.DataFrame:
         return pd.DataFrame(

@@ -1,5 +1,6 @@
 """Shared graph plumbing: canonical edge frames, vertices, degrees,
-dictionary encoding.
+dictionary encoding, and the ``iterate`` loop driver every iterative
+graph algorithm runs on.
 
 Canonical edge schema everywhere in the engine: ``src``, ``dst`` (any
 orderable type — string urls or long ids). All operators accept a frame
@@ -17,12 +18,14 @@ Scale notes:
 
 from __future__ import annotations
 
+import time
 from contextlib import contextmanager
-from typing import Iterator
+from dataclasses import dataclass, field
+from typing import Any, Callable, Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 
 
@@ -44,12 +47,22 @@ def normalize_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> Dat
 EDGE_ROWS_PER_PARTITION = 150_000
 
 
+def shuffle_partitions(spark) -> int:
+    """The session's effective ``spark.sql.shuffle.partitions``.
+
+    No fallback value: ``conf.get(key, default)`` returns the default
+    whenever the session never set the key explicitly, while Spark itself
+    shuffles into its built-in default (200) — so a typed fallback sizes
+    work for a parallelism the session does not have."""
+    return int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+
 def size_partitions(spark, n_rows: int, configured: int | None = None) -> int:
     """Partition count proportional to data size, capped by the session
     shuffle-partition setting (which on a real cluster is sized to
     executor count)."""
     if configured is None:
-        configured = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+        configured = shuffle_partitions(spark)
     return max(2, min(configured, n_rows // EDGE_ROWS_PER_PARTITION + 1))
 
 
@@ -125,6 +138,97 @@ def free_local_checkpoint(df: DataFrame | None) -> None:
         pass  # best-effort: a leaked block degrades perf, not correctness
 
 
+@dataclass
+class IterStats:
+    """What ``iterate`` records per loop: iterations run (counting any
+    resumed-from prefix), per-iteration wall and the converged flag."""
+
+    iterations: int = 0
+    iter_wall_s: list[float] = field(default_factory=list)
+    converged: bool = False
+
+    def record(self, row: Row) -> None:
+        """Keep the iteration's convergence signal (subclasses)."""
+
+
+def iterate(
+    state: DataFrame,
+    step: Callable[[DataFrame, Any], DataFrame],
+    summary: list[Column],
+    done: Callable[[Row, Any], bool],
+    stats: IterStats,
+    num_partitions: int,
+    max_iter: int,
+    start: int = 0,
+    prev: Any = None,
+    checkpointer=None,
+    checkpoint_every: int = 1,
+    snapshot: Callable[[DataFrame, Row], dict] | None = None,
+) -> DataFrame:
+    """Run ``state = step(state, prev)`` from iteration ``start`` until
+    ``done(row, prev)`` or ``max_iter``; returns the final state.
+
+    ``row`` is the one-row ``summary`` aggregate over the new state and
+    ``prev`` the previous iteration's row (on the first iteration, the
+    ``prev`` argument: a summary of the initial state, or None).
+
+    The loop discipline every iterative graph algorithm shares, stated
+    once here:
+    - ``pinned_loop_conf(num_partitions)`` for the whole loop, so the
+      state's hand partitioning survives and natural shuffles land on it;
+    - the new state's lineage is truncated with localCheckpoint EVERY
+      iteration. Not optional: a new-state plan references the old state
+      ~2x, so without truncation the logical plan grows exponentially
+      (measured 2.4 s/iter -> 140 s/iter by iteration 8); persist() does
+      not help, it caches execution, not the logical plan. The checkpoint
+      is LAZY and the summary ``collect`` is the action that materializes
+      it, so a steady iteration is ONE Spark job (a checkpoint job plus
+      an agg job measured ~2-3% slower). The summary is a column
+      aggregate, never a join, so the driver holds scalars only;
+    - ``checkpointer.wait()`` before ``free_local_checkpoint(old)``: an
+      async commit may still be writing the superseded state;
+    - ``stats`` gets the iteration count, the wall (durable commit time
+      excluded), ``stats.record(row)`` and the converged flag;
+    - every ``checkpoint_every`` iterations ``checkpointer.commit`` gets
+      ``snapshot(state, row)``, and the last commit lands before return.
+    """
+    with pinned_loop_conf(state.sparkSession, num_partitions):
+        for it in range(start, max_iter):
+            t_iter = time.monotonic()
+            new_state = step(state, prev).localCheckpoint(eager=False)
+            row = new_state.agg(*summary).collect()[0]
+            if checkpointer is not None:
+                checkpointer.wait()
+            free_local_checkpoint(state)
+            state = new_state
+            stats.iterations = it + 1
+            stats.record(row)
+            stats.iter_wall_s.append(round(time.monotonic() - t_iter, 3))
+            if checkpointer is not None and (it + 1) % checkpoint_every == 0:
+                checkpointer.commit(iteration=it + 1, **snapshot(state, row))
+            if done(row, prev):
+                stats.converged = True
+                break
+            prev = row
+    if checkpointer is not None:
+        checkpointer.wait()  # the final snapshot must land before return
+    return state
+
+
+def messages(edges: DataFrame, state: DataFrame, cols: list, hubs=None) -> DataFrame:
+    """Per-edge messages src -> dst: ``cols`` selected from
+    ``edges ⋈ state`` on ``edges.src == state.id``.
+
+    ``edges`` is hash-partitioned by src and ``state`` by id, so the join
+    is co-partitioned; shuffle_hash builds a map over the per-partition
+    state slice, where sort-merge would re-sort the edge table every
+    iteration. ``hubs`` (an ``operators.skew.HubSplit`` of ``edges``)
+    routes supernode edges through its broadcast path instead."""
+    if hubs is not None:
+        return hubs.messages(state, cols)
+    return edges.join(state.hint("shuffle_hash"), edges.src == state.id).select(*cols)
+
+
 def vertices_of(edges: DataFrame) -> DataFrame:
     """Distinct vertex set, column ``id``."""
     return (
@@ -163,7 +267,7 @@ def encode_vertices(
     """
     spark = edges.sparkSession
     if partitions is None:
-        partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+        partitions = shuffle_partitions(spark)
     verts = vertices_of(edges)
     key_type = verts.schema["id"].dataType.simpleString()
 

@@ -35,6 +35,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from rad_ecg_spark.operators.graph_core import shuffle_partitions
+
 
 def global_row_number(
     df: DataFrame,
@@ -122,7 +124,7 @@ def _sweep_chunks(chunked: DataFrame, kernel_one, schema: str) -> DataFrame:
     rows into the same kernel — identical outputs.
     """
     spark = chunked.sparkSession
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    n_parts = shuffle_partitions(spark)
 
     def sweep(batches):
         frames = [b for b in batches if len(b)]

@@ -6,7 +6,9 @@ breaking frequency ties by the SMALLEST label (not hash order) — that is
 what makes the output identical at any parallelism (local[8] == local[32]
 bitwise, SURVEY.md §7.3).
 
-Loop discipline (same as operators/pagerank.py — measured there):
+Plan shape of one round (the loop itself — pinned conf, lazy
+per-round localCheckpoint materialized by the changed-count aggregate,
+freeing superseded state, stats — is ``graph_core.iterate``):
 - the symmetric edge table is hash-partitioned by ``src`` ONCE and
   persisted; the per-round labels join (sym.src == labels.id) is
   co-partitioned with a shuffle_hash hint, so the 2|E| edge rows are
@@ -23,9 +25,7 @@ Loop discipline (same as operators/pagerank.py — measured there):
   round's change count — the driver holds a single scalar;
 - the argmax is min_by over a packed (-cnt, label) struct, a single
   hash-agg with partial aggregation — skew-safe for supernodes (a
-  window row_number would sort every dst group);
-- localCheckpoint every round truncates the exponentially-growing plan;
-  superseded checkpoint blocks are freed explicitly.
+  window row_number would sort every dst group).
 
 Reference capability donor: mode aggregation with deterministic pick
 (/root/reference/src/rad_ecg/scripts/porcine/pig_extract.py:1007) and
@@ -41,21 +41,59 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from rad_ecg_spark.operators.graph_core import (
-    free_local_checkpoint,
+    IterStats,
+    iterate,
+    messages,
     normalize_edges,
-    pinned_loop_conf,
     size_partitions,
     symmetrize,
     vertices_of,
 )
+from rad_ecg_spark.operators.skew import HubSplit
 
 
 @dataclass
-class LabelPropStats:
-    iterations: int = 0
+class LabelPropStats(IterStats):
     changes: list[int] = field(default_factory=list)
-    iter_wall_s: list[float] = field(default_factory=list)
-    converged: bool = False
+
+    def record(self, row) -> None:
+        self.changes.append(int(row["changed"]))
+
+
+def label_propagation_step(
+    labels: DataFrame, sym: DataFrame, num_partitions: int, hubs: HubSplit | None = None
+) -> DataFrame:
+    """One synchronous round: (id, label[, changed]) -> (id, label,
+    changed)."""
+    # messages flow src -> dst (sym by src, labels by id: co-partitioned)
+    msgs = messages(sym, labels, ["dst", "label"], hubs)
+    # THE round's single exchange; both groupBys below are satisfied
+    # by HashPartitioning(dst) (subset rule) — no further shuffle.
+    counts = (
+        msgs.repartition(num_partitions, "dst")
+        .groupBy("dst", "label")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+    # argmax by (cnt desc, label asc): min_by over struct(-cnt, label).
+    # Round-6 audit note: the struct buffer makes this a partial+final
+    # SortAggregate pair (not hash-aggregable). Two rewrites were
+    # measured and REJECTED: max-then-filter-then-min re-planned the
+    # equality filter into the join key (5 live exchanges/round), and
+    # a decimal-packed max (hash-aggregable) timed identical to
+    # min_by at 3M messages/round (0.48-0.52 s both) — the sort runs
+    # on the post-exchange partition stream and is not the wall.
+    best = counts.groupBy("dst").agg(
+        F.min_by("label", F.struct((-F.col("cnt")).alias("nc"), F.col("label"))).alias(
+            "new_label"
+        )
+    )
+    new_label = F.coalesce(F.col("new_label"), labels.label)
+    return labels.join(best.hint("shuffle_hash"), labels.id == best.dst, "left").select(
+        labels.id,
+        new_label.alias("label"),
+        # change detection inline — no self-join, one agg scan
+        (new_label != labels.label).cast("long").alias("changed"),
+    )
 
 
 def label_propagation(
@@ -79,8 +117,6 @@ def label_propagation(
     output is BITWISE identical to the unsplit plan (asserted in
     tests), not merely 1e-12-close.
     """
-    import time as _time
-
     spark = edges.sparkSession
     if stats is None:
         stats = LabelPropStats()
@@ -95,17 +131,11 @@ def label_propagation(
     sym.count()
     sym0.unpersist()
 
-    residual = hub_edges = hub_ids = None
-    if hub_degree_threshold is not None:
-        from rad_ecg_spark.operators.skew import split_hub_edges
-
-        residual, hub_edges, hub_ids = split_hub_edges(sym, hub_degree_threshold)
-        residual = residual.persist(StorageLevel.MEMORY_AND_DISK)
-        hub_edges = hub_edges.repartition(num_partitions).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        hub_ids = hub_ids.persist()
-        residual.count(), hub_edges.count(), hub_ids.count()
+    hubs = (
+        HubSplit(sym, hub_degree_threshold, num_partitions)
+        if hub_degree_threshold is not None
+        else None
+    )
     # select BEFORE repartition: localCheckpoint records only the FIRST
     # partitioning of a PartitioningCollection, and selecting
     # id->label AFTER the repartition makes that hash(label), which the
@@ -118,83 +148,21 @@ def label_propagation(
         # lazy: round 1's join materializes it
         .localCheckpoint(eager=False)
     )
-
-    with pinned_loop_conf(spark, num_partitions):
-      for it in range(max_iter):
-        t_iter = _time.monotonic()
-        # messages flow src -> dst; the join is co-partitioned (sym by
-        # src, labels by id), shuffle_hash builds over the labels slice.
-        if residual is None:
-            msgs = sym.join(
-                labels.hint("shuffle_hash"), sym.src == labels.id
-            ).select("dst", "label")
-        else:
-            # supernode path: hub edges (balanced partitioning) join a
-            # broadcast label slice (<= 2|E|/threshold rows); residual
-            # keeps the co-partitioned path with bounded per-key rows
-            hub_slice = labels.join(F.broadcast(hub_ids), "id", "left_semi")
-            m_rest = residual.join(
-                labels.hint("shuffle_hash"), residual.src == labels.id
-            ).select("dst", "label")
-            m_hub = hub_edges.join(
-                F.broadcast(hub_slice), hub_edges.src == F.col("id")
-            ).select("dst", "label")
-            msgs = m_rest.unionByName(m_hub)
-        # THE round's single exchange; both groupBys below are satisfied
-        # by HashPartitioning(dst) (subset rule) — no further shuffle.
-        counts = (
-            msgs.repartition(num_partitions, "dst")
-            .groupBy("dst", "label")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        # argmax by (cnt desc, label asc): min_by over struct(-cnt, label).
-        # Round-6 audit note: the struct buffer makes this a partial+final
-        # SortAggregate pair (not hash-aggregable). Two rewrites were
-        # measured and REJECTED: max-then-filter-then-min re-planned the
-        # equality filter into the join key (5 live exchanges/round), and
-        # a decimal-packed max (hash-aggregable) timed identical to
-        # min_by at 3M messages/round (0.48-0.52 s both) — the sort runs
-        # on the post-exchange partition stream and is not the wall.
-        best = counts.groupBy("dst").agg(
-            F.min_by("label", F.struct((-F.col("cnt")).alias("nc"), F.col("label"))).alias(
-                "new_label"
-            )
-        )
-        new_labels = (
-            labels.join(best.hint("shuffle_hash"), labels.id == best.dst, "left")
-            .select(
-                labels.id,
-                F.coalesce(F.col("new_label"), labels.label).alias("label"),
-                # change detection inline — no self-join, one agg scan
-                (F.coalesce(F.col("new_label"), labels.label) != labels.label)
-                .cast("long")
-                .alias("changed"),
-            )
-            # truncate lineage every iteration (see operators/pagerank.py);
-            # lazy: the changed-count agg below materializes it (one job)
-            .localCheckpoint(eager=False)
-        )
+    labels = iterate(
+        labels,
+        lambda state, prev: label_propagation_step(state, sym, num_partitions, hubs),
         # coalesce: sum over zero rows is NULL (empty vertex set)
-        changed = int(
-            new_labels.agg(
-                F.coalesce(F.sum("changed"), F.lit(0))
-            ).collect()[0][0]
-        )
-        free_local_checkpoint(labels)
-        labels = new_labels
-        stats.iterations = it + 1
-        stats.changes.append(changed)
-        stats.iter_wall_s.append(round(_time.monotonic() - t_iter, 3))
-        if changed == 0:
-            stats.converged = True
-            break
-
+        [F.coalesce(F.sum("changed"), F.lit(0)).alias("changed")],
+        lambda row, prev: row["changed"] == 0,
+        stats,
+        num_partitions,
+        max_iter,
+    )
     sym.unpersist()
-    # mirror pagerank's cleanup: without this the hub-split path leaked
-    # ~2|E|+ cached rows per call in a long-lived driver (ADVICE r05),
-    # and in run_pipeline the leaked blocks squat on storage while
-    # components/triangles run afterwards in the same session
-    for df in (residual, hub_edges, hub_ids):
-        if df is not None:
-            df.unpersist()
+    # without this the hub-split path leaked ~2|E|+ cached rows per call
+    # in a long-lived driver (ADVICE r05), and in run_pipeline the leaked
+    # blocks squat on storage while components/triangles run afterwards
+    # in the same session
+    if hubs is not None:
+        hubs.unpersist()
     return labels.select("id", "label")

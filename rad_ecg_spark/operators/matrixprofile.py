@@ -36,6 +36,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from rad_ecg_spark.operators.graph_core import shuffle_partitions
+
 MP_SCHEMA = (
     "user_id long, discord_idx int, nn_idx int, mp_e6 long, n_windows int"
 )
@@ -142,7 +144,7 @@ def _sweep_groups(events, kernel_one, schema, user_col, ts_col, value_col, order
     so outputs are identical.
     """
     spark = events.sparkSession
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    n_parts = shuffle_partitions(spark)
     prepared = events.select(
         F.col(user_col).alias("uid"),
         F.unix_millis(F.col(ts_col).cast("timestamp")).alias("ts_ms"),

@@ -32,13 +32,10 @@ local[32] @ 10M edges):
   shuffled rows). AQE skew-join handles src-side skew in the join;
   AQE partition coalescing is disabled inside the loop so the state's
   partitioning stays aligned across iterations.
-- Lineage is cut with localCheckpoint EVERY iteration (the reference
-  never faces this — its state is a mutable array). This is not
-  optional: the new-state plan references the old state ~2×, so without
-  truncation the logical plan grows exponentially and Catalyst analysis
-  time explodes after ~6 iterations (measured: 2.4s/iter → 140s/iter by
-  iteration 8). persist() alone does NOT help — it caches execution,
-  not the logical plan.
+- The loop itself (pinned conf, lazy per-iteration localCheckpoint
+  materialized by the one summary aggregate, wait-before-free, stats,
+  checkpoint commits, resume start) is ``graph_core.iterate``; this
+  module supplies ``pagerank_step`` and the delta < tol test.
 - Optional durable checkpointing via plans.checkpoint.CheckpointManager:
   per-iteration snapshot + _meta lineage row; ``resume=True`` restarts
   from the last complete iteration (north_rule requirement).
@@ -57,25 +54,92 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from rad_ecg_spark.operators.graph_core import (
-    free_local_checkpoint,
+    IterStats,
+    iterate,
+    messages,
     normalize_edges,
     out_degrees,
-    pinned_loop_conf,
     size_partitions,
 )
+from rad_ecg_spark.operators.skew import HubSplit
 from rad_ecg_spark.plans.checkpoint import CheckpointManager
 
 
 @dataclass
-class PageRankStats:
-    iterations: int = 0
+class PageRankStats(IterStats):
     deltas: list[float] = field(default_factory=list)
-    iter_wall_s: list[float] = field(default_factory=list)
     setup_wall_s: float = 0.0
-    converged: bool = False
     num_vertices: int = 0
     num_edges: int = 0
     resumed_from: int | None = None
+
+    def record(self, row) -> None:
+        self.deltas.append(float(row["delta"]))
+
+
+def pagerank_step(
+    ranks: DataFrame,
+    edges: DataFrame,
+    dangling: float,
+    n: int,
+    damping: float,
+    hubs: HubSplit | None = None,
+) -> DataFrame:
+    """One power iteration: (id, outdeg, rank) -> (id, outdeg, rank,
+    delta). ``dangling`` is the current state's dangling mass."""
+    d = float(damping)
+    base = (1.0 - d) / n
+    msgs = messages(
+        edges,
+        ranks.filter(F.col("outdeg") > 0),
+        [F.col("dst"), (F.col("rank") / F.col("outdeg")).alias("w")],
+        hubs,
+    )
+    contribs = msgs.groupBy("dst").agg(F.sum("w").alias("in_sum"))
+    new_rank = F.lit(base) + F.lit(d) * (
+        F.coalesce(F.col("in_sum"), F.lit(0.0)) + F.lit(dangling / n)
+    )
+    return ranks.join(
+        contribs.hint("shuffle_hash"), ranks.id == contribs.dst, "left"
+    ).select(
+        ranks.id,
+        ranks.outdeg,
+        new_rank.alias("rank"),
+        F.abs(new_rank - ranks.rank).alias("delta"),
+    )
+
+
+def _prepare(raw: DataFrame, num_partitions: int, dedupe_edges: bool):
+    """(edges, n_edges, verts): the edge set hash-partitioned by src,
+    persisted and counted, and the (id, outdeg) state table
+    hash-partitioned by id, persisted but not yet materialized."""
+    edges = raw.repartition(num_partitions, "src")
+    if dedupe_edges:
+        # PageRank is defined over an edge SET; duplicate (src,dst) rows
+        # would silently inflate outdeg. Dedup AFTER the src repartition:
+        # HashPartitioning(src) satisfies the (src,dst) grouping (subset
+        # rule), so the distinct adds NO second shuffle.
+        edges = edges.dropDuplicates(["src", "dst"])
+    edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
+    n_edges = edges.count()
+    # state table carries the static outdeg so the loop never re-joins a
+    # separate degree table. Vertex set = dst side ∪ degree table keys:
+    # out_degrees reuses the cached edges' HashPartitioning(src) with no
+    # exchange, so only the dst projection is shuffled (half the rows the
+    # old union-both-sides-then-distinct moved), and the full-outer join
+    # is co-partitioned.
+    deg = out_degrees(edges)
+    dsts = edges.select(F.col("dst").alias("id")).distinct()
+    verts = (
+        dsts.join(deg, dsts.id == deg.src, "full_outer")
+        .select(
+            F.coalesce(F.col("id"), F.col("src")).alias("id"),
+            F.coalesce(F.col("outdeg"), F.lit(0)).alias("outdeg"),
+        )
+        .repartition(num_partitions, "id")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    return edges, n_edges, verts
 
 
 def pagerank(
@@ -137,32 +201,7 @@ def pagerank(
         # callers with an expensive edge derivation persist it themselves
         # (plans/pipeline.py does).
         num_partitions = size_partitions(spark, raw.count())
-    edges = raw.repartition(num_partitions, "src")
-    if dedupe_edges:
-        # PageRank is defined over an edge SET; duplicate (src,dst) rows
-        # would silently inflate outdeg. Dedup AFTER the src repartition:
-        # HashPartitioning(src) satisfies the (src,dst) grouping (subset
-        # rule), so the distinct adds NO second shuffle.
-        edges = edges.dropDuplicates(["src", "dst"])
-    edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    n_edges = edges.count()
-    # state table carries the static outdeg so the loop never re-joins a
-    # separate degree table. Vertex set = dst side ∪ degree table keys:
-    # out_degrees reuses the cached edges' HashPartitioning(src) with no
-    # exchange, so only the dst projection is shuffled (half the rows the
-    # old union-both-sides-then-distinct moved), and the full-outer join
-    # is co-partitioned.
-    deg = out_degrees(edges)
-    dsts = edges.select(F.col("dst").alias("id")).distinct()
-    verts = (
-        dsts.join(deg, dsts.id == deg.src, "full_outer")
-        .select(
-            F.coalesce(F.col("id"), F.col("src")).alias("id"),
-            F.coalesce(F.col("outdeg"), F.lit(0)).alias("outdeg"),
-        )
-        .repartition(num_partitions, "id")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    edges, n_edges, verts = _prepare(raw, num_partitions, dedupe_edges)
     n = verts.count()
     stats.num_vertices = n
     stats.num_edges = n_edges
@@ -172,20 +211,11 @@ def pagerank(
         verts.unpersist()
         return out
 
-    residual = hub_edges = hub_ids = None
-    if hub_degree_threshold is not None:
-        from rad_ecg_spark.operators.skew import split_hub_edges
-
-        residual, hub_edges, hub_ids = split_hub_edges(edges, hub_degree_threshold)
-        # residual inherits HashPartitioning(src) (broadcast anti-join
-        # preserves the streamed side's partitioning); hub edges get
-        # BALANCED round-robin partitioning — that is the point.
-        residual = residual.persist(StorageLevel.MEMORY_AND_DISK)
-        hub_edges = hub_edges.repartition(num_partitions).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        hub_ids = hub_ids.persist()
-        residual.count(), hub_edges.count(), hub_ids.count()
+    hubs = (
+        HubSplit(edges, hub_degree_threshold, num_partitions)
+        if hub_degree_threshold is not None
+        else None
+    )
 
     start_iter = 0
     ranks = None
@@ -214,107 +244,41 @@ def pagerank(
         F.coalesce(F.sum("rank"), F.lit(0.0))
     ).collect()[0][0]
 
-    d = float(damping)
-    base = (1.0 - d) / n
     # resolve the criterion once n is known; the loop compares against
     # an absolute threshold either way
     eff_tol = float(tol) if tol_mode == "abs" else float(tol) / n
     stats.setup_wall_s = _time.monotonic() - t_setup
-    # pin shuffle.partitions = num_partitions too: the contribution
-    # groupBy("dst") then lands on the state's partition count, keeping
-    # the write-back join exchange-free at ANY num_partitions (not just
-    # when it happens to equal the session default).
-    with pinned_loop_conf(spark, num_partitions):
-        for it in range(start_iter, max_iter):
-            t_iter = _time.monotonic()
-            # shuffle_hash: build a hash map over the per-partition ranks
-            # slice; sort-merge would re-sort the edge table every
-            # iteration. Both sides are already hash-partitioned.
-            active = ranks.filter(F.col("outdeg") > 0)
-            if residual is None:
-                msgs = edges.join(
-                    active.hint("shuffle_hash"), edges.src == ranks.id
-                ).select(F.col("dst"), (F.col("rank") / F.col("outdeg")).alias("w"))
-            else:
-                # supernode path: hub edges (balanced partitioning) join a
-                # broadcast rank slice (<= |E|/threshold rows); residual
-                # keeps the co-partitioned path with bounded per-key rows
-                hub_slice = active.join(F.broadcast(hub_ids), "id", "left_semi")
-                m_rest = residual.join(
-                    active.hint("shuffle_hash"), residual.src == ranks.id
-                ).select(F.col("dst"), (F.col("rank") / F.col("outdeg")).alias("w"))
-                m_hub = hub_edges.join(
-                    F.broadcast(hub_slice), hub_edges.src == F.col("id")
-                ).select(F.col("dst"), (F.col("rank") / F.col("outdeg")).alias("w"))
-                msgs = m_rest.unionByName(m_hub)
-            contribs = msgs.groupBy("dst").agg(F.sum("w").alias("in_sum"))
-            new_ranks = (
-                ranks.join(contribs.hint("shuffle_hash"), ranks.id == contribs.dst, "left")
-                .select(
-                    ranks.id,
-                    ranks.outdeg,
-                    (
-                        F.lit(base)
-                        + F.lit(d)
-                        * (
-                            F.coalesce(F.col("in_sum"), F.lit(0.0))
-                            + F.lit(dangling / n)
-                        )
-                    ).alias("rank"),
-                    F.abs(
-                        F.lit(base)
-                        + F.lit(d)
-                        * (
-                            F.coalesce(F.col("in_sum"), F.lit(0.0))
-                            + F.lit(dangling / n)
-                        )
-                        - ranks.rank
-                    ).alias("delta"),
-                )
-                # truncate the logical plan (module doc). LAZY: the
-                # convergence agg two lines down is the materializing
-                # action, so each iteration launches ONE job instead of
-                # a checkpoint job + an agg job (measured ~2-3% off the
-                # steady iteration).
-                .localCheckpoint(eager=False)
-            )
-            # single aggregate scan: convergence delta + next dangling
-            # mass + total mass. No join — delta is a column.
-            row = new_ranks.agg(
-                F.max("delta").alias("delta"),
-                F.sum(F.when(F.col("outdeg") == 0, F.col("rank")).otherwise(0.0)).alias(
-                    "dangling"
-                ),
-                F.sum("rank").alias("mass"),
-            ).collect()[0]
-            delta, dangling = float(row["delta"]), float(row["dangling"])
-            if checkpointer is not None:
-                # an async commit may still be writing the PREVIOUS state;
-                # its blocks must not be freed out from under the writer
-                checkpointer.wait()
-            free_local_checkpoint(ranks)  # release superseded state blocks
-            ranks = new_ranks
-            stats.iterations = it + 1
-            stats.deltas.append(delta)
-            stats.iter_wall_s.append(round(_time.monotonic() - t_iter, 3))
-            if checkpointer is not None and (it + 1) % checkpoint_every == 0:
-                checkpointer.commit(
-                    iteration=it + 1,
-                    state=ranks.select("id", "rank"),
-                    rows=n,
-                    agg_value=float(row["mass"]),
-                    delta_max=delta,
-                )
-            if delta < eff_tol:
-                stats.converged = True
-                break
-
-    if checkpointer is not None:
-        checkpointer.wait()  # the final snapshot must land before return
+    ranks = iterate(
+        ranks,
+        lambda state, prev: pagerank_step(
+            state, edges, prev["dangling"], n, damping, hubs
+        ),
+        # convergence delta + next dangling mass + total mass
+        [
+            F.max("delta").alias("delta"),
+            F.sum(F.when(F.col("outdeg") == 0, F.col("rank")).otherwise(0.0)).alias(
+                "dangling"
+            ),
+            F.sum("rank").alias("mass"),
+        ],
+        lambda row, prev: row["delta"] < eff_tol,
+        stats,
+        num_partitions,
+        max_iter,
+        start=start_iter,
+        prev={"dangling": dangling},
+        checkpointer=checkpointer,
+        checkpoint_every=checkpoint_every,
+        snapshot=lambda state, row: dict(
+            state=state.select("id", "rank"),
+            rows=n,
+            agg_value=float(row["mass"]),
+            delta_max=float(row["delta"]),
+        ),
+    )
     result = ranks.select("id", "rank")
     edges.unpersist()
     verts.unpersist()
-    for df in (residual, hub_edges, hub_ids):
-        if df is not None:
-            df.unpersist()
+    if hubs is not None:
+        hubs.unpersist()
     return result

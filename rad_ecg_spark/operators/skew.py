@@ -17,7 +17,9 @@ Two structural tools:
   (the slice has at most |hubs| rows — tiny by definition of a hub
   threshold); residual edges keep the co-partitioned shuffle-hash path,
   where the per-src row count is bounded by the threshold, so no task
-  can be handed more than threshold rows for one key.
+  can be handed more than threshold rows for one key. ``HubSplit`` is
+  that split persisted for a loop (PageRank and label propagation
+  ``hub_degree_threshold``) together with its per-iteration messages.
 
 Reference capability donor: the work-queue rebalancing idea
 (/root/reference/src/rad_ecg/scripts/peak_detect_v4.py:1664-1679) —
@@ -28,6 +30,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
+
+from rad_ecg_spark.operators.graph_core import messages
 
 
 def salted_join(
@@ -83,3 +88,34 @@ def split_hub_edges(
     hub_edges = edges.join(F.broadcast(hubs), "src", "left_semi")
     residual = edges.join(F.broadcast(hubs), "src", "left_anti")
     return residual, hub_edges, hubs.select(F.col("src").alias("id"))
+
+
+class HubSplit:
+    """``split_hub_edges`` of a src-partitioned edge table, persisted and
+    materialized once for an iterative loop; ``unpersist()`` after it."""
+
+    def __init__(self, edges: DataFrame, threshold: int, num_partitions: int):
+        residual, hub_edges, hub_ids = split_hub_edges(edges, threshold)
+        # residual inherits HashPartitioning(src) (broadcast anti-join
+        # preserves the streamed side's partitioning); hub edges get
+        # BALANCED round-robin partitioning — that is the point.
+        self.residual = residual.persist(StorageLevel.MEMORY_AND_DISK)
+        self.hub_edges = hub_edges.repartition(num_partitions).persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
+        self.hub_ids = hub_ids.persist()
+        self.residual.count(), self.hub_edges.count(), self.hub_ids.count()
+
+    def messages(self, state: DataFrame, cols: list) -> DataFrame:
+        """graph_core.messages over the split: residual edges keep the
+        co-partitioned path with bounded per-key rows, hub edges join a
+        broadcast state slice (<= |E|/threshold rows)."""
+        hub_slice = state.join(F.broadcast(self.hub_ids), "id", "left_semi")
+        m_hub = self.hub_edges.join(
+            F.broadcast(hub_slice), self.hub_edges.src == F.col("id")
+        ).select(*cols)
+        return messages(self.residual, state, cols).unionByName(m_hub)
+
+    def unpersist(self) -> None:
+        for df in (self.residual, self.hub_edges, self.hub_ids):
+            df.unpersist()

@@ -29,19 +29,6 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-META_SCHEMA = T.StructType(
-    [
-        T.StructField("algo", T.StringType()),
-        T.StructField("iteration", T.IntegerType()),
-        T.StructField("rows", T.LongType()),
-        T.StructField("agg_value", T.DoubleType()),
-        T.StructField("delta_max", T.DoubleType()),
-        T.StructField("wall_ms", T.LongType()),
-        T.StructField("status", T.StringType()),
-    ]
-)
 
 
 class CheckpointManager:
@@ -158,8 +145,12 @@ class CheckpointManager:
         delta_max: float,
         wall_ms: int,
     ) -> None:
-        state.write.mode("overwrite").parquet(self._state_dir(iteration))
+        self._write_state(state, self._state_dir(iteration))
         self._append_meta_row(iteration, rows, agg_value, delta_max, wall_ms)
+
+    def _write_state(self, state: DataFrame, out_dir: str) -> None:
+        """Commit step 1: the iteration's state snapshot (idempotent)."""
+        state.write.mode("overwrite").parquet(out_dir)
 
     def _append_meta_row(
         self, iteration: int, rows: int, agg_value: float, delta_max: float, wall_ms: int
@@ -169,9 +160,9 @@ class CheckpointManager:
         scheduling per iteration — measured, BENCH/BASELINE.md round-4)
         to move one row; an Iceberg catalog commit is likewise a
         driver/catalog-side metadata operation (plans/catalog.py maps
-        this call to the snapshot-commit API). Arrow types mirror
-        META_SCHEMA exactly so spark.read.parquet sees one schema across
-        engine- and driver-written files. Object-store roots (gs://,
+        this call to the snapshot-commit API). These Arrow types are
+        the one definition of the _meta schema, so spark.read.parquet
+        sees one schema across all rows. Object-store roots (gs://,
         s3://) resolve through pyarrow's FileSystem.from_uri, the same
         driver-side path an Iceberg catalog commit takes; local paths
         use the local FS."""

@@ -99,32 +99,8 @@ class PartwiseCheckpointManager(CheckpointManager):
     """CheckpointManager whose state snapshots are per-partition
     idempotent files — drop-in for pagerank(checkpointer=...), giving
     mid-iteration resume: re-running a killed iteration's commit only
-    writes partitions that didn't land."""
+    writes partitions that didn't land. Everything else (async worker,
+    _meta append, resume) is the base class's."""
 
-    def commit(self, iteration, state, rows, agg_value, delta_max) -> None:
-        import time
-
-        wall_ms = int((time.monotonic() - self._t0) * 1000)
-        self._t0 = time.monotonic()
-        write_state_partwise(state, self._state_dir(iteration))
-        meta = self.spark.createDataFrame(
-            [
-                (
-                    self.algo,
-                    iteration,
-                    rows,
-                    float(agg_value),
-                    float(delta_max),
-                    wall_ms,
-                    "complete",
-                )
-            ],
-            schema=self._meta_schema(),
-        )
-        meta.coalesce(1).write.mode("append").parquet(self._meta_dir())
-
-    @staticmethod
-    def _meta_schema():
-        from rad_ecg_spark.plans.checkpoint import META_SCHEMA
-
-        return META_SCHEMA
+    def _write_state(self, state: DataFrame, out_dir: str) -> None:
+        write_state_partwise(state, out_dir)

@@ -27,6 +27,8 @@ load -> clean/dedup -> per-section analytics -> checkpointed outputs).
 
 from __future__ import annotations
 
+import contextlib
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -201,7 +203,10 @@ def run_pipeline(
             if checkpoint_dir
             else None
         )
-        try:
+        # the manager's exit drains an in-flight async commit, even on
+        # error, without letting a failed drain replace an exception
+        # already propagating from pagerank()
+        with ck if ck is not None else contextlib.nullcontext():
             st = PageRankStats()
             ranks = pagerank(
                 edges, tol=tol, tol_mode=tol_mode, max_iter=max_iter,
@@ -209,22 +214,6 @@ def run_pipeline(
                 hub_degree_threshold=hub_degree_threshold,
             )
             ranks.write.mode("overwrite").parquet(os.path.join(out_dir, "pagerank"))
-        finally:
-            if ck is not None:
-                # drain an in-flight async commit, even on error — but
-                # never let a failed drain REPLACE an exception already
-                # propagating from pagerank() (ADVICE r05: the close()
-                # re-raise would mask the original error)
-                import sys as _sys
-
-                # must be read BEFORE the try: inside the except block
-                # exc_info() would report close()'s own error
-                propagating = _sys.exc_info()[0] is not None
-                try:
-                    ck.close()
-                except Exception:
-                    if not propagating:
-                        raise
         summary["pagerank"] = {
             "iterations": st.iterations,
             "converged": st.converged,

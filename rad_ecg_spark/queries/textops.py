@@ -25,6 +25,7 @@ from rad_ecg_spark.operators.dedup import (
     minhash_lsh_candidates,
     minhash_signatures,
 )
+from rad_ecg_spark.operators.graph_core import shuffle_partitions
 from rad_ecg_spark.operators.similarity import brute_force_topk
 
 WORDS_SQL = "list_filter(regexp_split_to_array(lower({c}), '[^a-z0-9]+'), x -> x <> '')"
@@ -45,7 +46,7 @@ def _spread(df, *cols):
     and sketch queries at sf1.0. On a many-file table at 100 TB the
     scan is already parallel; this helper is for the known-single-file
     registry inputs."""
-    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    n = shuffle_partitions(df.sparkSession)
     return df.repartition(n, *cols)
 
 

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from rad_ecg_spark.operators.graph_core import shuffle_partitions
+
 
 def synth_edges(
     spark: SparkSession,
@@ -39,7 +41,7 @@ def synth_edges(
     if n_vertices is None:
         n_vertices = max(10, n_edges // 10)
     if partitions is None:
-        partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+        partitions = shuffle_partitions(spark)
     base = spark.range(0, n_edges, 1, partitions)
     h = lambda salt: F.abs(F.xxhash64(F.col("id"), F.lit(seed), F.lit(salt)))  # noqa: E731
     if src_skew == "powerlaw":

@@ -241,3 +241,21 @@ class TestEncodeVertices:
         for v in raw:
             assert abs(raw[v] - back[v]) < 1e-9
         assert np is not None
+
+
+class TestShufflePartitions:
+    def test_size_partitions_follows_effective_default(self, spark):
+        """A session that never sets spark.sql.shuffle.partitions shuffles
+        into Spark's built-in default; partition sizing must cap at that
+        value, not at a hard-coded fallback."""
+        from rad_ecg_spark.operators.graph_core import size_partitions
+
+        key = "spark.sql.shuffle.partitions"
+        old = spark.conf.get(key)
+        spark.conf.unset(key)
+        try:
+            agg = spark.range(10).selectExpr("id % 3 AS k").groupBy("k").count()
+            effective = agg.rdd.getNumPartitions()
+            assert size_partitions(spark, 10**9) == effective
+        finally:
+            spark.conf.set(key, old)

@@ -195,7 +195,8 @@ class TestPartwiseCheckpoint:
         assert back.count() == 1000
         assert back.agg(F.sum("rank")).collect()[0][0] == df.agg(F.sum("rank")).collect()[0][0]
 
-    def test_pagerank_resume_with_partwise_manager(self, spark, tmp_path):
+    @pytest.mark.parametrize("async_write", [False, True])
+    def test_pagerank_resume_with_partwise_manager(self, spark, tmp_path, async_write):
         from rad_ecg_spark.operators.pagerank import PageRankStats, pagerank
         from rad_ecg_spark.plans.partwise import PartwiseCheckpointManager
 
@@ -207,10 +208,19 @@ class TestPartwiseCheckpoint:
             for r in pagerank(edges, tol=0.0, max_iter=6).collect()
         }
         root = str(tmp_path / "ckpt")
-        cp1 = PartwiseCheckpointManager(spark, root, "pr")
+        cp1 = PartwiseCheckpointManager(spark, root, "pr", async_write=async_write)
+        in_flight = []
+        commit = cp1.commit
+
+        def spy(**kwargs):
+            commit(**kwargs)
+            in_flight.append(cp1._pending is not None)
+
+        cp1.commit = spy
         pagerank(edges, tol=0.0, max_iter=3, checkpointer=cp1).count()
+        assert in_flight == [async_write] * 3
         assert cp1.last_complete() == 3
-        cp2 = PartwiseCheckpointManager(spark, root, "pr")
+        cp2 = PartwiseCheckpointManager(spark, root, "pr", async_write=async_write)
         st = PageRankStats()
         resumed = {
             r["id"]: r["rank"]
@@ -219,7 +229,7 @@ class TestPartwiseCheckpoint:
             ).collect()
         }
         assert st.resumed_from == 3
-        assert all(abs(full[k] - resumed[k]) < 1e-15 for k in full)
+        assert resumed == full
 
 
 class TestCsvSource:

@@ -111,6 +111,38 @@ class TestRunPipeline:
         mass = ranks.agg(F.sum("rank")).collect()[0][0]
         assert abs(mass - 1.0) < 1e-9
 
+    def test_pagerank_error_not_masked_by_failed_async_commit(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """pagerank() raises while its async checkpoint commit also
+        fails: the pagerank error is the one that propagates."""
+        import pytest
+
+        from rad_ecg_spark.operators import pagerank as pr_mod
+        from rad_ecg_spark.plans.checkpoint import CheckpointManager
+
+        failed_commits = []
+
+        def failing_write(self, *args, **kwargs):
+            failed_commits.append(self._async)
+            raise OSError("commit failed")
+
+        def failing_pagerank(edges, checkpointer=None, **kwargs):
+            checkpointer.commit(
+                iteration=1, state=edges, rows=0, agg_value=0.0, delta_max=0.0
+            )
+            raise ValueError("pagerank failed")
+
+        monkeypatch.setattr(CheckpointManager, "_commit_sync", failing_write)
+        monkeypatch.setattr(pr_mod, "pagerank", failing_pagerank)
+        both, _ = _pages_with_mirrors(spark, n_sites=2, per_site=4)
+        with pytest.raises(ValueError, match="pagerank failed"):
+            run_pipeline(
+                spark, both, str(tmp_path / "out"), algos=("pagerank",),
+                checkpoint_dir=str(tmp_path / "ck"),
+            )
+        assert failed_commits == [True]
+
 
 class TestPipelineRound5:
     def test_null_text_pages_stay_in_rep_map(self, spark):

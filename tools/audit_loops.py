@@ -1,10 +1,16 @@
 """Iterative-loop plan audit: PROVE the one-exchange-per-iteration
 claims by walking the physical plan tree of a steady-state iteration.
 
+Every audited plan is one call of the engine's own step function
+(``pagerank_step``, ``label_propagation_step``, ``hashmin_step``, with
+``operators.skew.HubSplit`` for the hub-split variants) on a state that
+one real step has already brought to the steady shape — a checkpointed
+step output, exactly as inside ``graph_core.iterate``.
+
 Counts ShuffleExchange nodes reachable without descending into cached
 (InMemoryTableScan) or checkpointed (ExistingRDD) subtrees — i.e. the
-shuffles a steady-state iteration actually pays. Appends the results to
-PLANS.md and exits non-zero on violation.
+shuffles a steady-state iteration actually pays. Rewrites its section
+of PLANS.md and exits non-zero on violation.
 
 Usage: python tools/audit_loops.py
 """
@@ -17,90 +23,70 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
-from pyspark.storagelevel import StorageLevel  # noqa: E402
+
+SECTION = "## Iterative-loop exchange audit (tools/audit_loops.py)"
 
 
-def count_live_exchanges(df) -> tuple[int, list[str]]:
-    """(#shuffle exchanges, node names) outside cached subtrees."""
-    hits: list[str] = []
+def _live_nodes(df) -> list:
+    """Physical plan nodes outside cached (InMemoryTableScan) subtrees,
+    whose build cost was paid once at persist time."""
+    nodes = []
 
     def walk(node) -> None:
-        name = node.getClass().getSimpleName()
-        if name.startswith("InMemoryTableScan"):
-            return  # cached: its build cost was paid once at persist time
-        if name.startswith("ShuffleExchange"):
-            hits.append(node.nodeName())
+        if node.getClass().getSimpleName().startswith("InMemoryTableScan"):
+            return
+        nodes.append(node)
         it = node.children().iterator()
         while it.hasNext():
             walk(it.next())
 
     walk(df._jdf.queryExecution().executedPlan())
+    return nodes
+
+
+def count_live_nodes(df, prefixes: tuple[str, ...]) -> dict[str, int]:
+    """Count live plan nodes by class-name prefix."""
+    names = [n.getClass().getSimpleName() for n in _live_nodes(df)]
+    return {p: sum(name.startswith(p) for name in names) for p in prefixes}
+
+
+def count_live_exchanges(df) -> tuple[int, list[str]]:
+    """(#shuffle exchanges, node names) outside cached subtrees."""
+    hits = [
+        n.nodeName()
+        for n in _live_nodes(df)
+        if n.getClass().getSimpleName().startswith("ShuffleExchange")
+    ]
     return len(hits), hits
 
 
-def pagerank_iteration_plan(spark, P=4):
+def _steady(state, step):
+    """The plan of ``step`` on ``state`` after one real warm-up step."""
+    return step(step(state).localCheckpoint(eager=True))
+
+
+def _hubs(edges, hub_threshold, P):
+    from rad_ecg_spark.operators.skew import HubSplit
+
+    return None if hub_threshold is None else HubSplit(edges, hub_threshold, P)
+
+
+def pagerank_steady_plan(spark, n_edges, P, hub_threshold=None):
+    from rad_ecg_spark.operators.pagerank import _prepare, pagerank_step
     from rad_ecg_spark.sources.synth_graph import synth_edges
 
-    edges = (
-        synth_edges(spark, 100_000, partitions=P)
-        .repartition(P, "src")
-        .dropDuplicates(["src", "dst"])
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    edges.count()
-    verts = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-        .join(
-            edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg")),
-            F.col("id") == F.col("src"),
-            "left",
-        )
-        .select("id", F.coalesce("outdeg", F.lit(0)).alias("outdeg"))
-        .repartition(P, "id")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    edges, _, verts = _prepare(synth_edges(spark, n_edges, partitions=P), P, True)
     n = verts.count()
+    hubs = _hubs(edges, hub_threshold, P)
     ranks = verts.select(
-        "id", "outdeg", (F.lit(1.0) / n).alias("rank")
+        "id", "outdeg", (F.lit(1.0) / F.lit(float(n))).alias("rank")
     ).localCheckpoint(eager=True)
-    # run one real iteration so the audited plan is the STEADY state
-    # (ranks = a checkpointed join output, exactly like inside the loop)
-    for _ in range(1):
-        contribs = (
-            edges.join(
-                ranks.filter(F.col("outdeg") > 0).hint("shuffle_hash"),
-                edges.src == ranks.id,
-            )
-            .select(F.col("dst"), (F.col("rank") / F.col("outdeg")).alias("w"))
-            .groupBy("dst")
-            .agg(F.sum("w").alias("in_sum"))
-        )
-        newr = F.lit(0.15 / n) + F.lit(0.85) * F.coalesce(F.col("in_sum"), F.lit(0.0))
-        ranks = (
-            ranks.join(contribs.hint("shuffle_hash"), ranks.id == contribs.dst, "left")
-            .select(ranks.id, ranks.outdeg, newr.alias("rank"),
-                    F.abs(newr - ranks.rank).alias("delta"))
-            .localCheckpoint(eager=True)
-        )
-    contribs = (
-        edges.join(
-            ranks.filter(F.col("outdeg") > 0).hint("shuffle_hash"),
-            edges.src == ranks.id,
-        )
-        .select(F.col("dst"), (F.col("rank") / F.col("outdeg")).alias("w"))
-        .groupBy("dst")
-        .agg(F.sum("w").alias("in_sum"))
-    )
-    newr = F.lit(0.15 / n) + F.lit(0.85) * F.coalesce(F.col("in_sum"), F.lit(0.0))
-    return ranks.join(
-        contribs.hint("shuffle_hash"), ranks.id == contribs.dst, "left"
-    ).select(ranks.id, ranks.outdeg, newr.alias("rank"),
-             F.abs(newr - ranks.rank).alias("delta"))
+    return _steady(ranks, lambda r: pagerank_step(r, edges, 0.0, n, 0.85, hubs))
 
 
-def labelprop_round_plan(spark, P=4):
+def _sym_and_verts(spark, n_edges, P):
+    """label propagation's setup: the symmetric edge table partitioned by
+    src and persisted, and the vertex set."""
     from rad_ecg_spark.operators.graph_core import (
         normalize_edges,
         symmetrize,
@@ -108,64 +94,32 @@ def labelprop_round_plan(spark, P=4):
     )
     from rad_ecg_spark.sources.synth_graph import synth_edges
 
-    e = synth_edges(spark, 100_000, partitions=P)
-    sym = (
-        symmetrize(normalize_edges(e))
-        .repartition(P, "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    e = synth_edges(spark, n_edges, partitions=P)
+    sym = symmetrize(normalize_edges(e)).repartition(P, "src").persist()
     sym.count()
+    return sym, vertices_of(e)
+
+
+def labelprop_steady_plan(spark, n_edges, P, hub_threshold=None):
+    from rad_ecg_spark.operators.labelprop import label_propagation_step
+
+    sym, verts = _sym_and_verts(spark, n_edges, P)
+    hubs = _hubs(sym, hub_threshold, P)
     labels = (
-        vertices_of(e)
-        .select("id", F.col("id").alias("label"))
+        verts.select("id", F.col("id").alias("label"))
         .repartition(P, "id")
         .localCheckpoint(eager=True)
     )
-
-    def one_round(labels):
-        msgs = sym.join(labels.hint("shuffle_hash"), sym.src == labels.id).select(
-            "dst", "label"
-        )
-        counts = (
-            msgs.repartition(P, "dst")
-            .groupBy("dst", "label")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        best = counts.groupBy("dst").agg(
-            F.min_by(
-                "label", F.struct((-F.col("cnt")).alias("nc"), F.col("label"))
-            ).alias("new_label")
-        )
-        return labels.join(
-            best.hint("shuffle_hash"), labels.id == best.dst, "left"
-        ).select(labels.id, F.coalesce(F.col("new_label"), labels.label).alias("label"))
-
-    labels = one_round(labels).localCheckpoint(eager=True)  # warm to steady state
-    return one_round(labels)
+    return _steady(labels, lambda s: label_propagation_step(s, sym, P, hubs))
 
 
-def hashmin_round_plan(spark, P=4):
-    """One steady-state round of connected-components hashmin — the
-    common-case phase of the hybrid method (operators/components.py):
-    sym edges persisted+partitioned once, labels checkpointed, so a
-    round pays only the join/agg exchange."""
-    from rad_ecg_spark.operators.graph_core import (
-        normalize_edges,
-        symmetrize,
-        vertices_of,
-    )
-    from rad_ecg_spark.sources.synth_graph import synth_edges
+def hashmin_steady_plan(spark, n_edges, P):
+    """The common-case phase of connected components' hybrid method."""
+    from rad_ecg_spark.operators.components import hashmin_step
 
-    e = synth_edges(spark, 100_000, partitions=P)
-    sym = (
-        symmetrize(normalize_edges(e))
-        .repartition(P, "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    sym.count()
+    sym, verts = _sym_and_verts(spark, n_edges, P)
     labels = (
-        vertices_of(e)
-        .select(
+        verts.select(
             "id",
             F.col("id").alias("component"),
             F.lit(1).cast("long").alias("changed"),
@@ -173,157 +127,51 @@ def hashmin_round_plan(spark, P=4):
         .repartition(P, "id")
         .localCheckpoint(eager=True)
     )
-
-    def one_round(labels):
-        # frontier propagation (round 6): messages only from vertices
-        # whose label changed last round — same plan shape, smaller stream
-        frontier = labels.filter(F.col("changed") == 1).select("id", "component")
-        msgs = sym.join(
-            frontier.hint("shuffle_hash"), sym.src == frontier.id
-        ).select("dst", "component")
-        nbr_min = msgs.groupBy("dst").agg(F.min("component").alias("nbr_min"))
-        new_comp = F.least(
-            F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))
-        )
-        return labels.join(
-            nbr_min.hint("shuffle_hash"), labels.id == nbr_min.dst, "left"
-        ).select(
-            "id",
-            new_comp.alias("component"),
-            (new_comp != F.col("component")).cast("long").alias("changed"),
-        )
-
-    labels = one_round(labels).localCheckpoint(eager=True)  # warm to steady state
-    return one_round(labels)
+    return _steady(labels, lambda s: hashmin_step(s, sym))
 
 
-def count_live_nodes(df, prefixes: tuple[str, ...]) -> dict[str, int]:
-    """Count live plan nodes by class-name prefix, skipping cached
-    subtrees (same walk as count_live_exchanges)."""
-    counts = {p: 0 for p in prefixes}
-
-    def walk(node) -> None:
-        name = node.getClass().getSimpleName()
-        if name.startswith("InMemoryTableScan"):
-            return
-        for p in prefixes:
-            if name.startswith(p):
-                counts[p] += 1
-        it = node.children().iterator()
-        while it.hasNext():
-            walk(it.next())
-
-    walk(df._jdf.queryExecution().executedPlan())
-    return counts
-
-
-def _hub_split_inputs(spark, P=4, threshold=50):
-    """Shared fixture for the hub-split steady audits: a synthetic graph
-    with its edges split into residual (co-partitioned) and hub
-    (balanced) tables, exactly as pagerank/labelprop do."""
-    from rad_ecg_spark.operators.skew import split_hub_edges
-    from rad_ecg_spark.sources.synth_graph import synth_edges
-
-    edges = (
-        synth_edges(spark, 100_000, partitions=P)
-        .repartition(P, "src")
-        .dropDuplicates(["src", "dst"])
-        .persist(StorageLevel.MEMORY_AND_DISK)
+def audit(spark, n_edges=100_000, hub_threshold=50, P=4):
+    """[(name, live exchanges, exchange names + notes, ok)] for the five
+    steady-state loop plans. Budget: 1 live exchange each; the hub-split
+    plans also at most 3 broadcasts and 3 sorts."""
+    plans = (
+        ("pagerank_steady_iteration", lambda: pagerank_steady_plan(spark, n_edges, P)),
+        ("labelprop_steady_round", lambda: labelprop_steady_plan(spark, n_edges, P)),
+        ("cc_hashmin_steady_round", lambda: hashmin_steady_plan(spark, n_edges, P)),
+        (
+            "pagerank_hubsplit_steady",
+            lambda: pagerank_steady_plan(spark, n_edges, P, hub_threshold),
+        ),
+        (
+            "lp_hubsplit_steady",
+            lambda: labelprop_steady_plan(spark, n_edges, P, hub_threshold),
+        ),
     )
-    edges.count()
-    residual, hub_edges, hub_ids = split_hub_edges(edges, threshold)
-    residual = residual.persist(StorageLevel.MEMORY_AND_DISK)
-    hub_edges = hub_edges.repartition(P).persist(StorageLevel.MEMORY_AND_DISK)
-    hub_ids = hub_ids.persist()
-    residual.count(), hub_edges.count(), hub_ids.count()
-    return edges, residual, hub_edges, hub_ids
-
-
-def pagerank_hubsplit_steady_plan(spark, P=4):
-    """One steady-state iteration of the hub-split PageRank path
-    (operators/pagerank.py hub_degree_threshold): residual keeps the
-    co-partitioned shuffle-hash join, hub edges join a BROADCAST rank
-    slice, the union feeds one partial-agg exchange. Expected: 1 live
-    shuffle exchange + broadcasts, no extra sort (r05 VERDICT #6)."""
-    edges, residual, hub_edges, hub_ids = _hub_split_inputs(spark, P)
-    verts = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-        .join(
-            edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg")),
-            F.col("id") == F.col("src"),
-            "left",
-        )
-        .select("id", F.coalesce("outdeg", F.lit(0)).alias("outdeg"))
-        .repartition(P, "id")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n = verts.count()
-    ranks = verts.select(
-        "id", "outdeg", (F.lit(1.0) / n).alias("rank")
-    ).localCheckpoint(eager=True)
-
-    def one_iter(ranks):
-        active = ranks.filter(F.col("outdeg") > 0)
-        hub_slice = active.join(F.broadcast(hub_ids), "id", "left_semi")
-        m_rest = residual.join(
-            active.hint("shuffle_hash"), residual.src == ranks.id
-        ).select(F.col("dst"), (F.col("rank") / F.col("outdeg")).alias("w"))
-        m_hub = hub_edges.join(
-            F.broadcast(hub_slice), hub_edges.src == F.col("id")
-        ).select(F.col("dst"), (F.col("rank") / F.col("outdeg")).alias("w"))
-        contribs = (
-            m_rest.unionByName(m_hub).groupBy("dst").agg(F.sum("w").alias("in_sum"))
-        )
-        newr = F.lit(0.15 / n) + F.lit(0.85) * F.coalesce(F.col("in_sum"), F.lit(0.0))
-        return ranks.join(
-            contribs.hint("shuffle_hash"), ranks.id == contribs.dst, "left"
-        ).select(ranks.id, ranks.outdeg, newr.alias("rank"))
-
-    ranks = one_iter(ranks).localCheckpoint(eager=True)  # warm to steady state
-    return one_iter(ranks)
-
-
-def labelprop_hubsplit_steady_plan(spark, P=4):
-    """One steady-state round of the hub-split label-propagation path
-    (operators/labelprop.py hub_degree_threshold). Expected: 1 live
-    shuffle exchange + broadcasts, no extra sort (r05 VERDICT #6)."""
-    from rad_ecg_spark.operators.graph_core import vertices_of
-
-    edges, residual, hub_edges, hub_ids = _hub_split_inputs(spark, P)
-    labels = (
-        vertices_of(edges)
-        .select("id", F.col("id").alias("label"))
-        .repartition(P, "id")
-        .localCheckpoint(eager=True)
-    )
-
-    def one_round(labels):
-        hub_slice = labels.join(F.broadcast(hub_ids), "id", "left_semi")
-        m_rest = residual.join(
-            labels.hint("shuffle_hash"), residual.src == labels.id
-        ).select("dst", "label")
-        m_hub = hub_edges.join(
-            F.broadcast(hub_slice), hub_edges.src == F.col("id")
-        ).select("dst", "label")
-        counts = (
-            m_rest.unionByName(m_hub)
-            .repartition(P, "dst")
-            .groupBy("dst", "label")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        best = counts.groupBy("dst").agg(
-            F.min_by(
-                "label", F.struct((-F.col("cnt")).alias("nc"), F.col("label"))
-            ).alias("new_label")
-        )
-        return labels.join(
-            best.hint("shuffle_hash"), labels.id == best.dst, "left"
-        ).select(labels.id, F.coalesce(F.col("new_label"), labels.label).alias("label"))
-
-    labels = one_round(labels).localCheckpoint(eager=True)  # warm to steady state
-    return one_round(labels)
+    results = []
+    for name, build in plans:
+        df = build()
+        n, hits = count_live_exchanges(df)
+        ok = n <= 1
+        if name.endswith("hubsplit_steady"):
+            # the split path adds broadcasts: budget them explicitly
+            # (<= 3: hub_ids semi-join build, hub slice, and at most one
+            # planner-chosen extra) and forbid sorts beyond min_by's
+            # partial+final SortAggregate pair plus the one sort under
+            # the final agg (measured equivalent to hash-aggregable
+            # rewrites, OPTIMIZATION_r06.md §12b) — e.g. a sort-merge
+            # join sneaking into the loop
+            nodes = count_live_nodes(df, ("BroadcastExchange", "Sort"))
+            hits = hits + [
+                f"broadcasts={nodes['BroadcastExchange']} sorts={nodes['Sort']}"
+            ]
+            if nodes["BroadcastExchange"] > 3:
+                ok = False
+                hits.append("broadcast budget 3 exceeded")
+            if nodes["Sort"] > 3:
+                ok = False
+                hits.append("sort budget 3 exceeded: SMJ in steady loop?")
+        results.append((name, n, hits, ok))
+    return results
 
 
 def main() -> None:
@@ -338,55 +186,24 @@ def main() -> None:
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
-    results = []
-    failures = []
-    for name, df, budget in (
-        ("pagerank_steady_iteration", pagerank_iteration_plan(spark), 1),
-        ("labelprop_steady_round", labelprop_round_plan(spark), 1),
-        ("cc_hashmin_steady_round", hashmin_round_plan(spark), 1),
-        ("pagerank_hubsplit_steady", pagerank_hubsplit_steady_plan(spark), 1),
-        ("lp_hubsplit_steady", labelprop_hubsplit_steady_plan(spark), 1),
-    ):
-        n, hits = count_live_exchanges(df)
-        ok = n <= budget
-        extra = ""
-        if name.endswith("hubsplit_steady"):
-            # r05 VERDICT #6: the split path adds broadcasts whose shape
-            # was asserted nowhere — budget them explicitly (<= 3: hub_ids
-            # semi-join build, hub slice, and at most one planner-chosen
-            # extra) and forbid sorts (no SMJ regressions in the loop).
-            nodes = count_live_nodes(df, ("BroadcastExchange", "Sort"))
-            extra = f"; broadcasts={nodes['BroadcastExchange']} sorts={nodes['Sort']}"
-            if nodes["BroadcastExchange"] > 3:
-                ok = False
-                extra += " (broadcast budget 3 exceeded)"
-            # min_by's struct buffer plans as a partial+final
-            # SortAggregate pair (2 sorts) + one sort under the final
-            # agg — measured equivalent to hash-aggregable rewrites
-            # (OPTIMIZATION_r06.md §12b); budget forbids anything MORE
-            # (e.g. a sort-merge join sneaking into the loop)
-            if nodes["Sort"] > 3:
-                ok = False
-                extra += " (sort budget 3 exceeded: SMJ in steady loop?)"
-        results.append((name, n, budget, hits if not extra else hits + [extra], ok))
-        if not ok:
-            failures.append(name)
-        print(
-            ("PASS " if ok else "FAIL ")
-            + f"{name}: {n} live exchange(s) (budget {budget}): {hits}{extra}"
-        )
-
+    results = audit(spark)
     lines = [
-        "\n## Iterative-loop exchange audit (tools/audit_loops.py)\n",
-        "Live ShuffleExchange nodes in one STEADY-STATE iteration plan",
-        "(cached/checkpointed subtrees excluded — their cost was paid once):\n",
+        SECTION + "\n",
+        "Live ShuffleExchange nodes in one STEADY-STATE iteration plan, built",
+        "by the engine's own step functions (cached/checkpointed subtrees",
+        "excluded — their cost was paid once):\n",
     ]
-    for name, n, budget, hits, ok in results:
-        lines.append(f"- {name}: **{n}** (budget {budget}) — {hits} — {'OK' if ok else 'FAIL'}")
-    with open("PLANS.md", "a") as f:
-        f.write("\n".join(lines) + "\n")
-    print("appended loop audit to PLANS.md")
-    if failures:
+    for name, n, hits, ok in results:
+        print(("PASS " if ok else "FAIL ") + f"{name}: {n} live exchange(s) (budget 1): {hits}")
+        lines.append(f"- {name}: **{n}** (budget 1) — {hits} — {'OK' if ok else 'FAIL'}")
+    with open("PLANS.md") as f:
+        text = f.read()
+    # replace this audit's section (always the file's last) on a re-run
+    text = text.split("\n" + SECTION)[0].rstrip("\n") + "\n"
+    with open("PLANS.md", "w") as f:
+        f.write(text + "\n" + "\n".join(lines) + "\n")
+    print("wrote loop audit to PLANS.md")
+    if not all(ok for *_, ok in results):
         sys.exit(1)
 
 
