@@ -33,10 +33,11 @@ common case without giving up the worst-case round bound on a
 long-chain component.
 
 Session lifetime note: results are projections over localCheckpoint
-state whose blocks live until the DataFrame is garbage-collected, so a
-long-lived driver LOOPING over many connected_components calls should
-materialize (write/collect) each result and drop the reference before
-the next call — measured block accumulation slows repeated in-JVM runs
+state (and the input cut, ``graph_core.edge_set``) whose blocks live
+until the DataFrame is garbage-collected, so a long-lived driver
+LOOPING over many connected_components calls should materialize
+(write/collect) each result and drop the reference before the next
+call — measured block accumulation slows repeated in-JVM runs
 (34 s -> 70 s over four back-to-back 10M-edge runs). One-shot jobs
 (spark-submit, the registry queries) are unaffected.
 
@@ -57,16 +58,16 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from rad_ecg_spark.operators.graph_core import (
     IterStats,
+    both_directions,
+    edge_set,
     iterate,
     messages,
-    normalize_edges,
     pinned_loop_conf,
-    shuffle_partitions,
     size_partitions,
+    symmetric,
     vertices_of,
 )
 
@@ -76,18 +77,6 @@ def _min_of_neighborhood(sym: DataFrame) -> DataFrame:
     return sym.groupBy("src").agg(
         F.least(F.min("dst"), F.first("src")).alias("m")
     )
-
-
-def _sym_nodedup(e: DataFrame) -> DataFrame:
-    """Both directions WITHOUT distinct: duplicate rows don't change any
-    min-aggregation inside a star round, and skipping two intermediate
-    distincts per round (each a full shuffle) measured ~2x faster. The
-    round's single dedup happens at the end, co-located with the src
-    partitioning (subset rule: HashPartitioning(src) satisfies the
-    (src,dst) grouping)."""
-    return e.unionByName(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).filter(F.col("src") != F.col("dst"))
 
 
 def _large_star(sym: DataFrame) -> DataFrame:
@@ -111,21 +100,13 @@ def _small_star(sym: DataFrame) -> DataFrame:
     return smaller.unionByName(self_edge).filter(F.col("src") != F.col("dst"))
 
 
-def _sym_dedup(e: DataFrame, num_partitions: int) -> DataFrame:
-    """Symmetric view of ``e`` on the src partitioning with the round's
-    ONE dedup (no extra shuffle: subset rule)."""
-    return (
-        _sym_nodedup(e)
-        .repartition(num_partitions, "src")
-        .dropDuplicates(["src", "dst"])
-    )
-
-
 def star_step(cur: DataFrame, num_partitions: int) -> DataFrame:
     """One large-star + small-star round over the symmetric edge set."""
-    cur = _large_star(cur)
-    cur = _sym_nodedup(cur)  # star ops consume the symmetric view
-    return _sym_dedup(_small_star(cur), num_partitions)
+    # star ops consume the symmetric view; duplicate rows do not change
+    # a min-aggregation, so the round's ONE dedup is the final one
+    # (skipping two intermediate distincts measured ~2x faster)
+    cur = both_directions(_large_star(cur))
+    return symmetric(_small_star(cur), num_partitions)
 
 
 def hashmin_step(labels: DataFrame, sym: DataFrame) -> DataFrame:
@@ -165,25 +146,13 @@ def connected_components(
     (O(diameter) rounds, fastest on web-shaped graphs), or "hybrid"
     (hashmin capped at ``hashmin_rounds``, then star on the label
     contraction if not yet converged — see module docstring)."""
+    if method not in ("star", "hashmin", "hybrid"):
+        raise ValueError(f"method must be 'star', 'hashmin' or 'hybrid', got {method!r}")
     spark = edges.sparkSession
-    # persist the normalized edges: verts, sym and (on the hybrid
-    # fallback) the quotient all re-read them, and the input is often an
-    # expensive derivation (a distinct over a source table) that would
-    # otherwise be recomputed per consumer (measured ~1.5 s per re-read
-    # at sf1.0).
-    # repartition to the session parallelism BEFORE caching: the input
-    # is typically a 1-2-split scan (single-row-group parquet), and a
-    # cache that inherits that layout makes every downstream map side
-    # (verts distinct, sym build) 1-2-way parallel. One narrow exchange
-    # of (src, dst) pairs buys full-width map sides.
-    n_session = shuffle_partitions(spark)
-    edges = (
-        normalize_edges(edges)
-        .repartition(n_session, "src", "dst")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n_edges = edges.count()
-    verts = vertices_of(edges).persist(StorageLevel.MEMORY_AND_DISK)
+    # the cut is not freed here: the star result joins verts, a view of
+    # it, and hashmin labels still read it when no round ran
+    edges, n_edges = edge_set(edges)
+    verts = vertices_of(edges)
     if num_partitions is None:
         # size on the symmetric edge table (2|E|) — the rows every round
         # actually moves; vertex-count sizing left a 3M-row sym table on
@@ -197,10 +166,7 @@ def connected_components(
     # shuffle stages as soon as it is taken
     with pinned_loop_conf(spark, num_partitions):
         result = _run(edges, verts, method, max_iter, num_partitions, hashmin_rounds)
-    out = result.select("id", "component")
-    verts.unpersist()
-    edges.unpersist()
-    return out
+    return result.select("id", "component")
 
 
 def _hashmin(edges, verts, max_rounds, num_partitions):
@@ -235,17 +201,10 @@ def _hashmin(edges, verts, max_rounds, num_partitions):
         # lazy: round 1's frontier join materializes it
         .localCheckpoint(eager=False)
     )
-    # both directions -> ONE exchange (repartition by src; the dedup
-    # reuses HashPartitioning(src) via the subset rule) instead of
-    # symmetrize()'s distinct-then-repartition double shuffle.
-    sym = _sym_dedup(edges, num_partitions).persist()
     # lazy persist: round 1's message join materializes sym ONCE
-    # (persist locking) through the caller's cached edges — a dedicated
-    # count() here was a pure 2|E| barrier job (same fusion as
-    # triangle_count; labels above is lazy for the same reason). sym
-    # holds no upstream cache hostage: edges stays cached for the
-    # hybrid quotient regardless, and sym.unpersist() after the loop is
-    # unchanged.
+    # (persist locking) — a dedicated count() here was a pure 2|E|
+    # barrier job (labels above is lazy for the same reason)
+    sym = symmetric(edges, num_partitions).persist()
     stats = IterStats()
     labels = iterate(
         labels,
@@ -264,7 +223,7 @@ def _star_components(edges, num_partitions, max_iter):
     """Star alternation on ``edges``; returns DataFrame(id, component)
     covering the vertices that appear in edges (isolated vertices are
     the caller's job)."""
-    cur = _sym_dedup(edges, num_partitions).localCheckpoint(eager=True)
+    cur = symmetric(edges, num_partitions).localCheckpoint(eager=True)
     cur = iterate(
         cur,
         lambda state, prev: star_step(state, num_partitions),

@@ -523,23 +523,11 @@ def dup_clusters(
     from rad_ecg_spark.operators.components import connected_components
 
     cand = minhash_lsh_candidates(df, text_col, id_col, bands, max_bucket)
-    # PERSIST the verified pair graph before the iterative CC consumes
-    # it: every hashmin/star round re-reads the edge table, and without
-    # a persist each round would recompute the full candidates+verify
-    # chain. Protocol-cited number (round 5, sf0.1, local[32], one
-    # quiet session, best of 3): whole query 23.5 s with this persist
-    # vs 134.6 s without it (the round-3 pre-persist measurement);
-    # earlier one-off readings (16.0, ~36, 137.5 s) were single runs
-    # under varying co-tenant load — the best-of-3 is the engine number.
-    verified = (
-        verify_jaccard_pairs(cand, df, text_col, id_col, threshold_num, threshold_den)
-        .select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .persist()
-    )
-    # lazy persist: connected_components' own sizing count materializes
-    # verified exactly once (persist locking) while filling its edge
-    # cache — a dedicated verified.count() was a pure extra pass over
-    # the candidates+verify chain (same fusion as triangle_count/CC).
+    # connected_components reads verified exactly once, into its input
+    # cut (graph_core.edge_set)
+    verified = verify_jaccard_pairs(
+        cand, df, text_col, id_col, threshold_num, threshold_den
+    ).select(F.col("a").alias("src"), F.col("b").alias("dst"))
     # hybrid = capped hashmin then star-on-contraction: measured 3.7x
     # faster than pure star on the sf0.01 pair graph (7.6 vs 28.3 s)
     # and it keeps star's worst-case round bound on chain-shaped
@@ -551,7 +539,4 @@ def dup_clusters(
         F.col("component").alias("rep"),
         "cluster_size",
     )
-    # cc's per-round state is localCheckpointed (concrete blocks), so the
-    # verified lineage is already truncated and the cache can be freed
-    verified.unpersist()
     return out

@@ -1,19 +1,35 @@
-"""Shared graph plumbing: canonical edge frames, vertices, degrees,
-dictionary encoding, and the ``iterate`` loop driver every iterative
-graph algorithm runs on.
+"""Shared graph plumbing: the one input path (``edge_set``), the
+symmetric view, vertices, degrees, and the ``iterate`` loop driver every
+iterative graph algorithm runs on.
 
 Canonical edge schema everywhere in the engine: ``src``, ``dst`` (any
 orderable type — string urls or long ids). All operators accept a frame
 with those two columns and are agnostic to the vertex type.
 
+Input-cut invariant: every graph operator (``pagerank``,
+``connected_components``, ``label_propagation``, ``triangle_count``,
+``triangles``) takes its input only through ``edge_set``, which returns
+the deduplicated edge set behind a lazy ``localCheckpoint`` that its
+own count materializes — the input is read exactly once, and nothing
+the operator plans afterwards sees the input's lineage. The reason is
+join planning, not caching: over a persisted-and-counted DataFrame
+whose plan is a deep upstream derivation (the pipeline's extract/dedup
+``edges``), every self-join re-runs the broadcast jobs of that upstream
+plan, while a plain ``select … distinct`` reads the cache in one job.
+Measured on a 4-core host (``local[4]``, AQE on): on the pipeline graph
+of 6 × 10 generated pages, ``triangle_count`` ran 99 Spark jobs before
+the cut and 9 after, as many as on a flat copy of the same rows; in the
+traced perfbench ``web_pipeline`` pass (1,000 pages) Spark jobs fell
+from 478 to 132 (triangles 208 -> 10, label propagation 65 -> 13,
+components 47 -> 12, PageRank 71 -> 39) and the untraced pass wall from
+46.7 to 25.0 s (medians of 3). The cut is executor-local, like the
+loops' per-iteration state: an executor lost mid-operator fails the
+operator.
+
 Scale notes:
-- ``vertices_of`` is a union + distinct — one shuffle, done once per job
-  and persisted by callers.
-- ``encode_vertices`` maps arbitrary vertex keys to dense longs with a
-  deterministic global ordering. Joins on 8-byte longs beat 40+-byte url
-  strings in every shuffle of every iteration, so iterative algorithms
-  should run on encoded edges at scale; the mapping is a one-time
-  range-sort that pays for itself after ~1 iteration.
+- ``vertices_of`` is a union + distinct — one shuffle over the cut.
+- ``symmetric`` is the one undirected view: both directions on ONE
+  exchange (repartition by src; the dedup reuses that partitioning).
 """
 
 from __future__ import annotations
@@ -21,16 +37,10 @@ from __future__ import annotations
 import time
 from contextlib import contextmanager
 from dataclasses import dataclass, field
-from typing import Any, Callable, Iterator
+from typing import Any, Callable
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
-
-
-def normalize_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
-    return edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
 
 
 # target rows per partition for iterative graph state/edges: small enough
@@ -117,7 +127,6 @@ def pinned_loop_conf(spark, shuffle_partitions: int | None = None):
                 spark.conf.set(k, v)
 
 
-
 def free_local_checkpoint(df: DataFrame | None) -> None:
     """Explicitly release a localCheckpoint'd DataFrame's storage blocks.
 
@@ -136,6 +145,34 @@ def free_local_checkpoint(df: DataFrame | None) -> None:
             plan.rdd().unpersist(False)
     except Exception:
         pass  # best-effort: a leaked block degrades perf, not correctness
+
+
+def edge_set(edges: DataFrame) -> tuple[DataFrame, int]:
+    """``(cut, n_edges)``: the input's distinct (src, dst) pairs behind a
+    lazy ``localCheckpoint`` that the count materializes — one job, one
+    read of the input (see the module docstring). The only way a graph
+    operator takes input; the caller frees the cut
+    (``free_local_checkpoint``) once the DataFrame it returns no longer
+    reads it.
+
+    The cut records no key partitioning, on purpose: a self-join
+    re-instances the checkpoint, and a copy whose recorded partitioning
+    names the new attributes no longer matches plans cached over the
+    original, so every cache downstream of a self-join misses (measured:
+    a ``triangle_count`` that persisted its canonical edge set ran that
+    distinct again, 30 jobs instead of 17). Taken under AQE the
+    checkpoint records none; taken with AQE off, which makes it one job
+    instead of three, the narrow ``coalesce`` drops it. A consumer that
+    needs a partitioning (PageRank's loop) repartitions the cut."""
+    spark = edges.sparkSession
+    with pinned_loop_conf(spark):
+        cut = (
+            edges.select("src", "dst")
+            .dropDuplicates(["src", "dst"])
+            .coalesce(shuffle_partitions(spark))
+            .localCheckpoint(eager=False)
+        )
+        return cut, cut.count()
 
 
 @dataclass
@@ -242,70 +279,20 @@ def out_degrees(edges: DataFrame) -> DataFrame:
     return edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
 
 
-def symmetrize(edges: DataFrame) -> DataFrame:
-    """Undirected view: both directions, distinct, self-loops dropped."""
-    sym = edges.select("src", "dst").unionByName(
+def both_directions(edges: DataFrame) -> DataFrame:
+    """Both directions of every edge, self-loops dropped, duplicates
+    kept (a min-aggregation does not see them)."""
+    return edges.unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).filter(F.col("src") != F.col("dst"))
+
+
+def symmetric(edges: DataFrame, num_partitions: int) -> DataFrame:
+    """The undirected view: ``both_directions`` hash-partitioned by src
+    and deduplicated on that partitioning — ONE exchange (subset rule),
+    where a distinct-then-repartition pays two."""
+    return (
+        both_directions(edges)
+        .repartition(num_partitions, "src")
+        .dropDuplicates(["src", "dst"])
     )
-    return sym.filter(F.col("src") != F.col("dst")).distinct()
-
-
-def encode_vertices(
-    edges: DataFrame, partitions: int | None = None
-) -> tuple[DataFrame, DataFrame]:
-    """Dictionary-encode vertex keys to dense longs ``0..V-1``.
-
-    Returns (encoded_edges(src:long, dst:long), mapping(id:long, key)).
-
-    Deterministic AND distributed: a two-phase zipWithIndex — range-
-    partition the sorted vertex set, count rows per partition on the
-    driver (tiny: one long per partition), then assign
-    ``vid = partition_offset + local_row_number`` inside ``mapInPandas``.
-    No single-partition global window, so this survives 10^11 vertices.
-    Same input graph → same encoding at any parallelism (bitwise-stable
-    outputs across local[8]/local[32], SURVEY.md §7.3).
-    """
-    spark = edges.sparkSession
-    if partitions is None:
-        partitions = shuffle_partitions(spark)
-    verts = vertices_of(edges)
-    key_type = verts.schema["id"].dataType.simpleString()
-
-    vs = (
-        verts.repartitionByRange(partitions, "id")
-        .sortWithinPartitions("id")
-        .withColumn("pid", F.spark_partition_id())
-        .persist()
-    )
-    counts = {
-        r["pid"]: r["cnt"]
-        for r in vs.groupBy("pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
-    offsets: dict[int, int] = {}
-    acc = 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    b_offsets = spark.sparkContext.broadcast(offsets)
-
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        seen = 0
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pd.DataFrame({"key": pdf["id"], "vid": np.array([], dtype=np.int64)})
-                continue
-            base = b_offsets.value[int(pdf["pid"].iloc[0])]
-            vid = np.arange(seen, seen + len(pdf), dtype=np.int64) + base
-            seen += len(pdf)
-            yield pd.DataFrame({"key": pdf["id"].to_numpy(), "vid": vid})
-
-    mapping = vs.mapInPandas(assign, schema=f"key {key_type}, vid long").persist()
-
-    enc = (
-        edges.join(mapping.withColumnRenamed("key", "src"), "src")
-        .withColumnRenamed("vid", "src_vid")
-        .join(mapping.withColumnRenamed("key", "dst"), "dst")
-        .withColumnRenamed("vid", "dst_vid")
-        .select(F.col("src_vid").alias("src"), F.col("dst_vid").alias("dst"))
-    )
-    return enc, mapping.select(F.col("vid").alias("id"), F.col("key").alias("key"))

@@ -9,10 +9,11 @@ bitwise, SURVEY.md §7.3).
 Plan shape of one round (the loop itself — pinned conf, lazy
 per-round localCheckpoint materialized by the changed-count aggregate,
 freeing superseded state, stats — is ``graph_core.iterate``):
-- the symmetric edge table is hash-partitioned by ``src`` ONCE and
-  persisted; the per-round labels join (sym.src == labels.id) is
-  co-partitioned with a shuffle_hash hint, so the 2|E| edge rows are
-  never re-shuffled or re-sorted inside the loop;
+- the symmetric edge table (``graph_core.symmetric`` of the input cut)
+  is hash-partitioned by ``src`` ONCE and persisted; the per-round
+  labels join (sym.src == labels.id) is co-partitioned with a
+  shuffle_hash hint, so the 2|E| edge rows are never re-shuffled or
+  re-sorted inside the loop;
 - ONE exchange per round: messages repartition(P, dst). Both mode
   aggregations (groupBy(dst,label) then argmax per dst) run on that
   partitioning with no further exchange (HashPartitioning(dst) satisfies
@@ -42,11 +43,12 @@ from pyspark.storagelevel import StorageLevel
 
 from rad_ecg_spark.operators.graph_core import (
     IterStats,
+    edge_set,
+    free_local_checkpoint,
     iterate,
     messages,
-    normalize_edges,
     size_partitions,
-    symmetrize,
+    symmetric,
     vertices_of,
 )
 from rad_ecg_spark.operators.skew import HubSplit
@@ -121,15 +123,12 @@ def label_propagation(
     if stats is None:
         stats = LabelPropStats()
 
-    sym0 = symmetrize(normalize_edges(edges)).persist(StorageLevel.MEMORY_AND_DISK)
+    edges, n_edges = edge_set(edges)
     if num_partitions is None:
-        num_partitions = size_partitions(spark, sym0.count())
-    sym = (
-        sym0.repartition(num_partitions, "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    sym.count()
-    sym0.unpersist()
+        # sized on the symmetric table (2|E|), as connected components
+        num_partitions = size_partitions(spark, n_edges * 2)
+    # lazy persist: HubSplit's counts or round 1's join materialize it
+    sym = symmetric(edges, num_partitions).persist(StorageLevel.MEMORY_AND_DISK)
 
     hubs = (
         HubSplit(sym, hub_degree_threshold, num_partitions)
@@ -141,7 +140,7 @@ def label_propagation(
     # id->label AFTER the repartition makes that hash(label), which the
     # loop's join on id can't reuse (measured: one extra vertex-sized
     # exchange per round).
-    labels = (
+    initial = (
         vertices_of(edges)
         .select("id", F.col("id").alias("label"))
         .repartition(num_partitions, "id")
@@ -149,7 +148,7 @@ def label_propagation(
         .localCheckpoint(eager=False)
     )
     labels = iterate(
-        labels,
+        initial,
         lambda state, prev: label_propagation_step(state, sym, num_partitions, hubs),
         # coalesce: sum over zero rows is NULL (empty vertex set)
         [F.coalesce(F.sum("changed"), F.lit(0)).alias("changed")],
@@ -159,6 +158,8 @@ def label_propagation(
         max_iter,
     )
     sym.unpersist()
+    if labels is not initial:  # unmaterialized, initial still reads the cut
+        free_local_checkpoint(edges)
     # without this the hub-split path leaked ~2|E|+ cached rows per call
     # in a long-lived driver (ADVICE r05), and in run_pipeline the leaked
     # blocks squat on storage while components/triangles run afterwards

@@ -11,8 +11,9 @@ oracle in tests/oracles.py):
 Scale design (what must survive 10^12 documents; measured numbers from
 local[32] @ 10M edges):
 
-- ONE shuffle per iteration — the contribution groupBy("dst"). Edges are
-  hash-partitioned by ``src`` once and persisted; the ranks state is
+- ONE shuffle per iteration — the contribution groupBy("dst"). Edges
+  (the input cut, ``graph_core.edge_set``) are hash-partitioned by
+  ``src`` once and persisted; the ranks state is
   hash-partitioned by vertex id, so both per-iteration joins
   (edges⋈ranks on src, ranks⋈contribs on id=dst) reuse existing
   partitionings with no Exchange.
@@ -55,9 +56,10 @@ from pyspark.storagelevel import StorageLevel
 
 from rad_ecg_spark.operators.graph_core import (
     IterStats,
+    edge_set,
+    free_local_checkpoint,
     iterate,
     messages,
-    normalize_edges,
     out_degrees,
     size_partitions,
 )
@@ -109,19 +111,13 @@ def pagerank_step(
     )
 
 
-def _prepare(raw: DataFrame, num_partitions: int, dedupe_edges: bool):
-    """(edges, n_edges, verts): the edge set hash-partitioned by src,
-    persisted and counted, and the (id, outdeg) state table
-    hash-partitioned by id, persisted but not yet materialized."""
-    edges = raw.repartition(num_partitions, "src")
-    if dedupe_edges:
-        # PageRank is defined over an edge SET; duplicate (src,dst) rows
-        # would silently inflate outdeg. Dedup AFTER the src repartition:
-        # HashPartitioning(src) satisfies the (src,dst) grouping (subset
-        # rule), so the distinct adds NO second shuffle.
-        edges = edges.dropDuplicates(["src", "dst"])
-    edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    n_edges = edges.count()
+def _prepare(cut: DataFrame, num_partitions: int):
+    """(edges, verts) of an edge-set cut (``graph_core.edge_set``): the
+    edges hash-partitioned by src, and the (id, outdeg) state table
+    hash-partitioned by id — the one partitioning the loop's joins
+    share, which the cut itself does not record. Both persisted, not yet
+    materialized."""
+    edges = cut.repartition(num_partitions, "src").persist(StorageLevel.MEMORY_AND_DISK)
     # state table carries the static outdeg so the loop never re-joins a
     # separate degree table. Vertex set = dst side ∪ degree table keys:
     # out_degrees reuses the cached edges' HashPartitioning(src) with no
@@ -139,7 +135,7 @@ def _prepare(raw: DataFrame, num_partitions: int, dedupe_edges: bool):
         .repartition(num_partitions, "id")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    return edges, n_edges, verts
+    return edges, verts
 
 
 def pagerank(
@@ -152,11 +148,12 @@ def pagerank(
     checkpoint_every: int = 1,
     resume: bool = False,
     stats: PageRankStats | None = None,
-    dedupe_edges: bool = True,
     hub_degree_threshold: int | None = None,
     tol_mode: str = "abs",
 ) -> DataFrame:
-    """Returns DataFrame(id, rank). ``edges`` needs columns src, dst.
+    """Returns DataFrame(id, rank). ``edges`` needs columns src, dst;
+    PageRank runs on their edge set (``graph_core.edge_set``), so a
+    duplicate (src, dst) row does not inflate outdeg.
 
     Ranks sum to 1.0 at every iteration (dangling mass redistributed).
 
@@ -191,25 +188,18 @@ def pagerank(
     if stats is None:
         stats = PageRankStats()
 
-    raw = normalize_edges(edges)
+    cut, n_edges = edge_set(edges)
     if num_partitions is None:
         # size partitions to the data: tiny graphs at full parallelism
-        # pay ~6s/iteration of pure task overhead (measured). The sizing
-        # count is a pure scan of the input (no persist): the input is
-        # re-read once more into the shuffle below — cheaper than a
-        # 10M-row cache write+read (setup measured 2.9 -> 2.3 s), and
-        # callers with an expensive edge derivation persist it themselves
-        # (plans/pipeline.py does).
-        num_partitions = size_partitions(spark, raw.count())
-    edges, n_edges, verts = _prepare(raw, num_partitions, dedupe_edges)
+        # pay ~6s/iteration of pure task overhead (measured)
+        num_partitions = size_partitions(spark, n_edges)
+    edges, verts = _prepare(cut, num_partitions)
     n = verts.count()
     stats.num_vertices = n
     stats.num_edges = n_edges
-    if n == 0:
-        out = verts.select("id", F.lit(0.0).alias("rank"))
-        edges.unpersist()
-        verts.unpersist()
-        return out
+    if n == 0:  # the (empty) result reads verts, edges and the cut
+        return verts.select("id", F.lit(0.0).alias("rank"))
+    free_local_checkpoint(cut)  # verts.count() materialized edges
 
     hubs = (
         HubSplit(edges, hub_degree_threshold, num_partitions)

@@ -45,11 +45,9 @@ sym AS (SELECT src AS a, dst AS b FROM edges
 
 def derived_edges(spark: SparkSession, sf_dir: str, dedup: bool = True) -> DataFrame:
     """``dedup=False`` skips the edge-set DISTINCT (a full shuffle of
-    |orders| rows) for consumers that deduplicate themselves anyway:
-    pagerank repartitions+dropDuplicates its input, connected
-    components / label propagation dedup the symmetric view, triangles
-    dedup the canonical (least, greatest) view. Same edge SET either
-    way — only the redundant exchange is dropped (guide §2.4)."""
+    |orders| rows) for the graph operators, whose one input path
+    (``graph_core.edge_set``) deduplicates anyway. Same edge SET either
+    way."""
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
     cmax = customer.agg(F.max("c_custkey")).collect()[0][0]
@@ -75,14 +73,11 @@ def q_indegree_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # dedup=False: _oriented's canonical distinct subsumes the edge-set
-    # distinct (one shuffle instead of two)
     n = triangle_count(derived_edges(spark, sf_dir, dedup=False))
     return spark.createDataFrame([(n,)], "n_triangles long")
 
 
 def q_pagerank_5iter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # dedup=False: pagerank's own repartition+dropDuplicates subsumes it
     ranks = pagerank(derived_edges(spark, sf_dir, dedup=False), tol=0.0, max_iter=5)
     return ranks.select(
         "id", F.round(F.col("rank") * 1e9).cast("long").alias("rank_e9")
@@ -93,15 +88,12 @@ def q_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hybrid: hashmin (the measured 2x fast path on this low-diameter
     # graph) capped at 12 rounds, star-on-contraction as the worst-case
     # net — see operators/components.py docstring and BENCH/BASELINE.md
-    # dedup=False: the symmetric view's dropDuplicates subsumes it, and
-    # every aggregation in the loop is duplicate-insensitive (min)
     return connected_components(
         derived_edges(spark, sf_dir, dedup=False), method="hybrid"
     )
 
 
 def q_labelprop_3iter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # dedup=False: symmetrize()'s distinct subsumes the edge-set distinct
     return label_propagation(derived_edges(spark, sf_dir, dedup=False), max_iter=3)
 
 

@@ -6,11 +6,9 @@ count) plus seeded random graphs (/root/reference/tests/test_rad_ecg.py:31-52)."
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
 
 from rad_ecg_spark.operators.components import connected_components
-from rad_ecg_spark.operators.graph_core import encode_vertices
 from rad_ecg_spark.operators.labelprop import label_propagation
 from rad_ecg_spark.operators.pagerank import PageRankStats, pagerank
 from rad_ecg_spark.operators.triangles import triangle_count, triangles
@@ -123,6 +121,10 @@ class TestPageRank:
 
 
 class TestConnectedComponents:
+    def test_method_rejects_unknown(self, spark):
+        with pytest.raises(ValueError, match="method"):
+            connected_components(edges_df(spark, ISLANDS), method="Hybrid")
+
     @pytest.mark.parametrize("method", ["star", "hashmin", "hybrid"])
     def test_islands_exact(self, spark, method):
         got = {
@@ -219,28 +221,6 @@ class TestTriangles:
         for v, c in exp_per.items():
             assert got[v] == c
         assert sum(got.values()) == 3 * exp_total
-
-
-class TestEncodeVertices:
-    def test_dense_deterministic(self, spark):
-        pairs = random_graph(30, 100, seed=2)
-        enc, mapping = encode_vertices(edges_df(spark, pairs))
-        m = {r["key"]: r["id"] for r in mapping.collect()}
-        keys = sorted(m)
-        assert [m[k] for k in keys] == list(range(len(keys)))  # dense, sorted order
-        m_inv = {v: k for k, v in m.items()}
-        assert {(m_inv[r["src"]], m_inv[r["dst"]]) for r in enc.collect()} == set(pairs)
-
-    def test_pagerank_on_encoded_equals_raw(self, spark):
-        pairs = random_graph(40, 150, seed=4)
-        enc, mapping = encode_vertices(edges_df(spark, pairs))
-        raw = _rank_map(pagerank(edges_df(spark, pairs), tol=0.0, max_iter=8))
-        enc_ranks = {r["id"]: r["rank"] for r in pagerank(enc, tol=0.0, max_iter=8).collect()}
-        m = {r["id"]: r["key"] for r in mapping.collect()}
-        back = {m[k]: v for k, v in enc_ranks.items()}
-        for v in raw:
-            assert abs(raw[v] - back[v]) < 1e-9
-        assert np is not None
 
 
 class TestShufflePartitions:

@@ -242,3 +242,46 @@ class TestPipelineRound5:
             .count()
             == 0
         )
+
+
+class TestGraphInputCut:
+    def test_pipeline_edges_cost_no_more_jobs_than_a_flat_copy(self, spark):
+        """Each graph operator reads its input once, through the edge-set
+        cut (graph_core.edge_set): on the pipeline's persisted edges it
+        runs exactly as many Spark jobs as on a flat copy of the same
+        rows, instead of re-running the upstream extract/dedup plan in
+        its joins. Under AQE, the engine default: with AQE off a cut
+        carries its origin's size statistics and plans other joins than
+        a flat copy does."""
+        from rad_ecg_spark.operators.components import connected_components
+        from rad_ecg_spark.operators.labelprop import label_propagation
+        from rad_ecg_spark.operators.pagerank import pagerank
+        from rad_ecg_spark.operators.triangles import triangle_count
+
+        sc = spark.sparkContext
+        aqe = spark.conf.get("spark.sql.adaptive.enabled")
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+        try:
+            pages = generate_pages(spark, 6, 10)
+            _, rep_map = dedup_pages(pages)
+            edges = build_graph(pages, rep_map).persist()
+            edges.count()
+            flat = spark.createDataFrame(edges.collect(), edges.schema)
+            ops = {
+                "pagerank": lambda e: pagerank(e, tol=0.0, max_iter=3).collect(),
+                "components": lambda e: connected_components(e, method="hybrid").collect(),
+                "labelprop": lambda e: label_propagation(e, max_iter=3).collect(),
+                "triangles": triangle_count,
+            }
+            jobs: dict[str, dict[str, int]] = {"pipeline": {}, "flat": {}}
+            for name, op in ops.items():
+                for which, e in (("pipeline", edges), ("flat", flat)):
+                    group = f"input-cut-{name}-{which}"
+                    sc.setJobGroup(group, group)
+                    op(e)
+                    jobs[which][name] = len(sc.statusTracker().getJobIdsForGroup(group))
+            edges.unpersist()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        assert jobs["pipeline"] == jobs["flat"], jobs

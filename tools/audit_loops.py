@@ -5,7 +5,9 @@ Every audited plan is one call of the engine's own step function
 (``pagerank_step``, ``label_propagation_step``, ``hashmin_step``, with
 ``operators.skew.HubSplit`` for the hub-split variants) on a state that
 one real step has already brought to the steady shape — a checkpointed
-step output, exactly as inside ``graph_core.iterate``.
+step output, exactly as inside ``graph_core.iterate``. The edges come
+through the engine's input path: the ``graph_core.edge_set`` cut, and
+its ``graph_core.symmetric`` view for the undirected loops.
 
 Counts ShuffleExchange nodes reachable without descending into cached
 (InMemoryTableScan) or checkpointed (ExistingRDD) subtrees — i.e. the
@@ -72,10 +74,12 @@ def _hubs(edges, hub_threshold, P):
 
 
 def pagerank_steady_plan(spark, n_edges, P, hub_threshold=None):
+    from rad_ecg_spark.operators.graph_core import edge_set
     from rad_ecg_spark.operators.pagerank import _prepare, pagerank_step
     from rad_ecg_spark.sources.synth_graph import synth_edges
 
-    edges, _, verts = _prepare(synth_edges(spark, n_edges, partitions=P), P, True)
+    cut, _ = edge_set(synth_edges(spark, n_edges, partitions=P))
+    edges, verts = _prepare(cut, P)
     n = verts.count()
     hubs = _hubs(edges, hub_threshold, P)
     ranks = verts.select(
@@ -85,19 +89,15 @@ def pagerank_steady_plan(spark, n_edges, P, hub_threshold=None):
 
 
 def _sym_and_verts(spark, n_edges, P):
-    """label propagation's setup: the symmetric edge table partitioned by
-    src and persisted, and the vertex set."""
-    from rad_ecg_spark.operators.graph_core import (
-        normalize_edges,
-        symmetrize,
-        vertices_of,
-    )
+    """label propagation's and hashmin's setup: the symmetric view of the
+    edge-set cut, persisted, and the vertex set."""
+    from rad_ecg_spark.operators.graph_core import edge_set, symmetric, vertices_of
     from rad_ecg_spark.sources.synth_graph import synth_edges
 
-    e = synth_edges(spark, n_edges, partitions=P)
-    sym = symmetrize(normalize_edges(e)).repartition(P, "src").persist()
+    edges, _ = edge_set(synth_edges(spark, n_edges, partitions=P))
+    sym = symmetric(edges, P).persist()
     sym.count()
-    return sym, vertices_of(e)
+    return sym, vertices_of(edges)
 
 
 def labelprop_steady_plan(spark, n_edges, P, hub_threshold=None):
