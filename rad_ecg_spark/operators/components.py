@@ -63,6 +63,7 @@ from rad_ecg_spark.operators.graph_core import (
     IterStats,
     both_directions,
     edge_set,
+    free_local_checkpoint,
     iterate,
     messages,
     pinned_loop_conf,
@@ -149,8 +150,6 @@ def connected_components(
     if method not in ("star", "hashmin", "hybrid"):
         raise ValueError(f"method must be 'star', 'hashmin' or 'hybrid', got {method!r}")
     spark = edges.sparkSession
-    # the cut is not freed here: the star result joins verts, a view of
-    # it, and hashmin labels still read it when no round ran
     edges, n_edges = edge_set(edges)
     verts = vertices_of(edges)
     if num_partitions is None:
@@ -165,13 +164,18 @@ def connected_components(
     # planned here, and under AQE even a lazy localCheckpoint runs its
     # shuffle stages as soon as it is taken
     with pinned_loop_conf(spark, num_partitions):
-        result = _run(edges, verts, method, max_iter, num_partitions, hashmin_rounds)
+        result, reads_cut = _run(
+            edges, verts, method, max_iter, num_partitions, hashmin_rounds
+        )
+    if not reads_cut:
+        free_local_checkpoint(edges)
     return result.select("id", "component")
 
 
 def _hashmin(edges, verts, max_rounds, num_partitions):
-    """(labels DataFrame(id, component), converged). Labels are always
-    component-consistent: label(v) = min id within some ball around v.
+    """(labels DataFrame(id, component), converged, rounds run). Labels
+    are always component-consistent: label(v) = min id within some ball
+    around v.
 
     Loop discipline mirrors labelprop (the measured 5.7x shape): sym
     partitioned by src ONCE and joined to labels on src==id — both
@@ -216,7 +220,7 @@ def _hashmin(edges, verts, max_rounds, num_partitions):
         max_rounds,
     )
     sym.unpersist()
-    return labels, stats.converged
+    return labels, stats.converged, stats.iterations
 
 
 def _star_components(edges, num_partitions, max_iter):
@@ -246,37 +250,40 @@ def _star_components(edges, num_partitions, max_iter):
 
 
 def _run(edges, verts, method, max_iter, num_partitions, hashmin_rounds=12):
-    if method == "hashmin":
-        result, _ = _hashmin(edges, verts, max_iter, num_partitions)
-    elif method == "hybrid":
-        labels, converged = _hashmin(edges, verts, hashmin_rounds, num_partitions)
-        if converged:
-            return labels
-        # contract by partial labels: quotient edges between label groups.
-        # |quotient| <= edges whose endpoints a hashmin ball never merged —
-        # tiny after ~diameter rounds on everything but adversarial chains.
-        ls = labels.select(F.col("id").alias("src"), F.col("component").alias("lsrc"))
-        ld = labels.select(F.col("id").alias("dst"), F.col("component").alias("ldst"))
-        quotient = (
-            edges.join(ls.hint("shuffle_hash"), "src")
-            .join(ld.hint("shuffle_hash"), "dst")
-            .filter(F.col("lsrc") != F.col("ldst"))
-            .select(F.col("lsrc").alias("src"), F.col("ldst").alias("dst"))
-        )
-        roots = _star_components(quotient, num_partitions, max_iter).select(
-            F.col("id").alias("component"), F.col("component").alias("root")
-        )
-        # shuffle join, not broadcast: an adversarial (long-chain) graph
-        # can leave a quotient as large as the label set
-        result = labels.join(roots.hint("shuffle_hash"), "component", "left").select(
-            "id",
-            F.coalesce(F.col("root"), F.col("component")).alias("component"),
-        )
-    else:
+    """(result, reads_cut): ``reads_cut`` is False when the result reads
+    only materialized loop state, so the caller can free the input cut.
+    The star result joins ``verts``, a view of the cut, and hashmin's
+    labels are the unmaterialized initial labels until a round ran."""
+    if method == "star":
         comp = _star_components(edges, num_partitions, max_iter)
         result = (
             verts.join(comp, "id", "left")
             .select("id", F.coalesce(F.col("component"), F.col("id")).alias("component"))
         )
-
-    return result
+        return result, True
+    rounds = max_iter if method == "hashmin" else hashmin_rounds
+    labels, converged, ran = _hashmin(edges, verts, rounds, num_partitions)
+    if method == "hashmin" or converged:
+        return labels, ran == 0
+    # contract by partial labels: quotient edges between label groups.
+    # |quotient| <= edges whose endpoints a hashmin ball never merged —
+    # tiny after ~diameter rounds on everything but adversarial chains.
+    ls = labels.select(F.col("id").alias("src"), F.col("component").alias("lsrc"))
+    ld = labels.select(F.col("id").alias("dst"), F.col("component").alias("ldst"))
+    quotient = (
+        edges.join(ls.hint("shuffle_hash"), "src")
+        .join(ld.hint("shuffle_hash"), "dst")
+        .filter(F.col("lsrc") != F.col("ldst"))
+        .select(F.col("lsrc").alias("src"), F.col("ldst").alias("dst"))
+    )
+    roots = _star_components(quotient, num_partitions, max_iter).select(
+        F.col("id").alias("component"), F.col("component").alias("root")
+    )
+    # shuffle join, not broadcast: an adversarial (long-chain) graph
+    # can leave a quotient as large as the label set
+    result = labels.join(roots.hint("shuffle_hash"), "component", "left").select(
+        "id",
+        F.coalesce(F.col("root"), F.col("component")).alias("component"),
+    )
+    # the star roots read the eagerly checkpointed quotient, not the cut
+    return result, ran == 0

@@ -197,9 +197,12 @@ def pagerank(
     n = verts.count()
     stats.num_vertices = n
     stats.num_edges = n_edges
-    if n == 0:  # the (empty) result reads verts, edges and the cut
-        return verts.select("id", F.lit(0.0).alias("rank"))
     free_local_checkpoint(cut)  # verts.count() materialized edges
+    if n == 0:  # a result that reads none of the caches
+        schema = verts.select("id", F.lit(0.0).alias("rank")).schema
+        edges.unpersist()
+        verts.unpersist()
+        return spark.createDataFrame([], schema)
 
     hubs = (
         HubSplit(edges, hub_degree_threshold, num_partitions)

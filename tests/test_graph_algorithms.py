@@ -32,6 +32,11 @@ def _rank_map(df):
     return {r["id"]: r["rank"] for r in df.collect()}
 
 
+def _persisted_rdds(spark) -> int:
+    """RDDs holding storage: persisted and localCheckpoint'd ones."""
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
 class TestPageRank:
     def test_ring_uniform_converges_first_iteration(self, spark):
         stats = PageRankStats()
@@ -119,11 +124,27 @@ class TestPageRank:
         for v in exp:
             assert abs(got[v] - exp[v]) < 1e-12
 
+    def test_empty_input_holds_no_storage(self, spark):
+        before = _persisted_rdds(spark)
+        ranks = pagerank(spark.createDataFrame([], "src long, dst long"))
+        assert ranks.collect() == []
+        assert ranks.schema.simpleString() == "struct<id:bigint,rank:double>"
+        assert _persisted_rdds(spark) <= before
+
 
 class TestConnectedComponents:
     def test_method_rejects_unknown(self, spark):
         with pytest.raises(ValueError, match="method"):
             connected_components(edges_df(spark, ISLANDS), method="Hybrid")
+
+    @pytest.mark.parametrize("method", ["hashmin", "hybrid"])
+    def test_materialized_labels_free_the_input_cut(self, spark, method):
+        # after a round, the labels are checkpointed loop state: the
+        # result holds their blocks only, not the input cut's
+        before = _persisted_rdds(spark)
+        comp = connected_components(edges_df(spark, ISLANDS), method=method)
+        assert _persisted_rdds(spark) - before <= 1
+        assert {r["id"]: r["component"] for r in comp.collect()} == components_oracle(ISLANDS)
 
     @pytest.mark.parametrize("method", ["star", "hashmin", "hybrid"])
     def test_islands_exact(self, spark, method):
