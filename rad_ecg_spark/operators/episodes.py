@@ -8,22 +8,15 @@ calls it the canonical UDTF). Re-expressed Spark-first: the group is a
 user's event history, the kernel detects "episodes" (maximal runs of
 consecutive above-threshold events) and emits one row per episode.
 
-Scale shape: one shuffle to co-locate each group (repartition by
-user + sortWithinPartitions), then ONE ``mapInPandas`` pass whose
-kernel handles every group in the partition in a single vectorized
-sweep (mask → run-break cumsum with user boundaries as breaks → one
-groupby agg for ALL users at once). Per-task memory is the partition's
-rows (size the partition count to the data on a cluster), a
+Scale shape: the one keyed sweep (operators/sweep.py): one shuffle to
+co-locate each user, then one ``mapInPandas`` pass that hands this
+kernel frames of complete user runs, one Arrow batch plus the longest
+run at a time. The kernel handles every user in a frame in a single
+vectorized pass (mask -> run-break cumsum with user boundaries as
+breaks -> one groupby agg for ALL users at once), so it computes the
+same episodes as a per-user kernel with zero per-user Python calls. A
 pathological mega-user is bounded by that user's row count — the same
 contract the reference's per-section kernel has.
-
-Round-6 note (guide §4.1): this was ``groupBy().applyInPandas`` with a
-per-user kernel. applyInPandas frames one Arrow batch and one Python
-function call PER GROUP; at 15k small groups (sf1.0) the measured
-per-group overhead was ~5 s for a TRIVIAL kernel, vs 0.8 s to stream
-the same rows through mapInPandas. The rewrite computes identical
-episodes (runs split at user boundaries exactly like per-group runs)
-with zero per-group Python calls.
 
 The kernel's arithmetic is exact-integer (cents) so the DuckDB oracle
 (a gaps-and-islands SQL twin) reproduces every output bit-for-bit.
@@ -31,11 +24,11 @@ The kernel's arithmetic is exact-integer (cents) so the DuckDB oracle
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from rad_ecg_spark.operators.graph_core import shuffle_partitions
+from rad_ecg_spark.operators.sweep import sweep, user_series
 
 EPISODE_SCHEMA = (
     "user_id long, episode_id int, n_events long, "
@@ -53,41 +46,13 @@ def detect_episodes(
 ) -> DataFrame:
     """One row per (user, episode): maximal run of consecutive events
     with value > threshold, in (ts, event_id) order."""
-    import numpy as np
-
     thr_c = int(round(threshold * 100))
-    spark = events.sparkSession
-    n_parts = shuffle_partitions(spark)
 
-    def _empty() -> pd.DataFrame:
-        return pd.DataFrame(
-            {
-                "user_id": pd.Series([], dtype="int64"),
-                "episode_id": pd.Series([], dtype="int32"),
-                "n_events": pd.Series([], dtype="int64"),
-                "start_ms": pd.Series([], dtype="int64"),
-                "end_ms": pd.Series([], dtype="int64"),
-                "sum_cents": pd.Series([], dtype="int64"),
-                "peak_cents": pd.Series([], dtype="int64"),
-            }
-        )
-
-    def kernel(batches):
-        frames = [b for b in batches if len(b)]
-        if not frames:
-            return  # empty partition: emit nothing
-        pdf = pd.concat(frames, ignore_index=True)
-        # cheap insurance: the feed is already (uid, ts_ms, oid)-sorted
-        # by sortWithinPartitions; a stable mergesort over sorted input
-        # is O(n)
-        pdf = pdf.sort_values(["uid", "ts_ms", "oid"], kind="mergesort")
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         uid = pdf["uid"].to_numpy(dtype=np.int64)
         ts = pdf["ts_ms"].to_numpy(dtype=np.int64)
         cents = pdf["cents"].to_numpy(dtype=np.int64)
         valid = cents > thr_c
-        if not valid.any():
-            yield _empty()
-            return
         # gaps-and-islands over ALL users at once: a run breaks where
         # valid flips OR the user changes (exactly the per-group runs)
         brk = np.empty(len(uid), dtype=bool)
@@ -113,7 +78,7 @@ def detect_episodes(
         # run ids ascend along the (uid, position) sort, so the cumcount
         # per user is the per-group 1-based episode index
         ep = g.groupby("uid", sort=False).cumcount() + 1
-        yield pd.DataFrame(
+        return pd.DataFrame(
             {
                 "user_id": g["uid"].to_numpy(dtype=np.int64),
                 "episode_id": ep.to_numpy(dtype=np.int32),
@@ -125,17 +90,8 @@ def detect_episodes(
             }
         )
 
-    prepared = events.select(
-        F.col(user_col).alias("uid"),
-        F.unix_millis(F.col(ts_col).cast("timestamp")).alias("ts_ms"),
-        F.round(F.col(value_col) * 100).cast("long").alias("cents"),
-        F.col(order_col).alias("oid"),
-    )
-    return (
-        prepared.repartition(n_parts, "uid")
-        .sortWithinPartitions("uid", "ts_ms", "oid")
-        .mapInPandas(kernel, schema=EPISODE_SCHEMA)
-    )
+    series = user_series(events, user_col, ts_col, value_col, order_col)
+    return sweep(series, "uid", ["ts_ms", "oid"], kernel, EPISODE_SCHEMA)
 
 
 def episodes_oracle_sql(threshold: float = 250.0) -> str:

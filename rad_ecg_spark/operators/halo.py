@@ -12,9 +12,10 @@ Spark-first halo exchange: Spark has no peer-to-peer partition
 exchange, so the idiomatic halo exchange is (1) a parallelism-invariant
 global row number rn (range partition + per-partition offsets — never a
 single-partition window), (2) each boundary row DUPLICATED into the
-neighboring chunk's group with own=false, (3) ONE shuffle by chunk id
-into ``applyInPandas``, where the vectorized kernel computes over
-own+halo rows and emits only own rows. Chunks are defined by rn, so
+neighboring chunk's group with own=false, (3) the one keyed sweep by
+chunk id (operators/sweep.py), which holds one Arrow batch plus one
+chunk at a time; the vectorized kernel computes over own+halo rows and
+emits only own rows. Chunks are defined by rn, so
 results are invariant to the physical partition count (property-tested)
 and to the chunk size (for the rolling median — exact equivalence to
 the global window; for MP the section IS the semantic unit, as in the
@@ -36,12 +37,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rad_ecg_spark.operators.graph_core import shuffle_partitions
+from rad_ecg_spark.operators.sweep import per_run, sweep
 
 
 def global_row_number(
     df: DataFrame,
     order_cols: list[str],
-    n_parts: int = 32,
+    n_parts: int,
 ) -> DataFrame:
     """Adds ``rn`` (1-based, dense, by ``order_cols``) without ever
     funneling the series through one task: range-partition + sort within
@@ -90,7 +92,16 @@ def with_halo_chunks(
     chunk c owns rn in [c*R+1, (c+1)*R]; the last ``halo_pre`` rows of a
     chunk are copied to chunk c+1 (its leading halo) and the first
     ``halo_post`` rows to chunk c-1 (its trailing halo). All JVM
-    expressions; the downstream groupBy("chunk") is the halo exchange."""
+    expressions; the downstream sweep by chunk is the halo exchange.
+
+    Halo rows come only from the ADJACENT chunk, so a chunk must hold at
+    least max(halo_pre, halo_post) rows: a smaller one would leave
+    windows short of rows two chunks away. ValueError otherwise."""
+    if chunk_rows < max(1, halo_pre, halo_post):
+        raise ValueError(
+            f"chunk_rows={chunk_rows} is smaller than the halo "
+            f"(pre {halo_pre}, post {halo_post})"
+        )
     R = chunk_rows
     c = ((F.col("rn") - 1) / R).cast("long")
     p = (F.col("rn") - 1) % R  # position within own chunk
@@ -112,42 +123,10 @@ def with_halo_chunks(
     )
 
 
-def _sweep_chunks(chunked: DataFrame, kernel_one, schema: str) -> DataFrame:
-    """Halo-exchange driver: repartition by chunk id, sort within
-    partitions, then ONE mapInPandas pass that slices each chunk's
-    contiguous block and applies ``kernel_one``.
-
-    Round 6 (guide §4.1): replaces ``groupBy("chunk").applyInPandas``,
-    which frames one Arrow batch + one Python call per chunk — ~2k
-    chunks at sf1.0 paid more in per-group framing than in kernel
-    compute. Same shuffle (one exchange by chunk), same sorted per-chunk
-    rows into the same kernel — identical outputs.
-    """
-    spark = chunked.sparkSession
-    n_parts = shuffle_partitions(spark)
-
-    def sweep(batches):
-        frames = [b for b in batches if len(b)]
-        if not frames:
-            return  # empty partition: emit nothing
-        pdf = pd.concat(frames, ignore_index=True)
-        ch = pdf["chunk"].to_numpy()
-        bounds = np.flatnonzero(np.r_[True, ch[1:] != ch[:-1], True])
-        outs = [kernel_one(pdf.iloc[a:b]) for a, b in zip(bounds[:-1], bounds[1:])]
-        yield pd.concat(outs, ignore_index=True)
-
-    return (
-        chunked.repartition(n_parts, "chunk")
-        .sortWithinPartitions("chunk", "rn")
-        .mapInPandas(sweep, schema=schema)
-    )
-
-
 def halo_rolling_median(
     events: DataFrame,
     h: int = 3,
     chunk_rows: int = 512,
-    n_parts: int = 32,
     ts_col: str = "ts",
     id_col: str = "event_id",
     value_col: str = "value",
@@ -163,7 +142,9 @@ def halo_rolling_median(
         F.unix_millis(F.col(ts_col).cast("timestamp")).alias("ts_ms"),
         F.col(value_col).cast("double").alias("v"),
     )
-    rn = global_row_number(series, ["ts_ms", "eid"], n_parts)
+    rn = global_row_number(
+        series, ["ts_ms", "eid"], shuffle_partitions(events.sparkSession)
+    )
     # ts_ms is dead once rn exists — drop it before the chunk exchange
     # (guide §2.3: project before the exchange)
     chunked = with_halo_chunks(
@@ -173,7 +154,6 @@ def halo_rolling_median(
     schema = "eid long, roll_med_c long"
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("rn", kind="mergesort")
         med = (
             pdf["v"]
             .rolling(window=2 * h + 1, center=True, min_periods=1)
@@ -189,7 +169,7 @@ def halo_rolling_median(
             }
         )
 
-    return _sweep_chunks(chunked, kernel, schema).select(
+    return sweep(chunked, "chunk", ["rn"], per_run(kernel, "chunk"), schema).select(
         F.col("eid").alias("event_id"), "roll_med_c"
     )
 
@@ -208,7 +188,6 @@ def halo_mp_discord(
     events: DataFrame,
     w: int = 8,
     chunk_rows: int = 512,
-    n_parts: int = 32,
     ts_col: str = "ts",
     id_col: str = "event_id",
     value_col: str = "value",
@@ -237,7 +216,9 @@ def halo_mp_discord(
         F.unix_millis(F.col(ts_col).cast("timestamp")).alias("ts_ms"),
         F.round(F.col(value_col) * 100).cast("long").alias("cents"),
     )
-    rn = global_row_number(series, ["ts_ms", "eid"], n_parts)
+    rn = global_row_number(
+        series, ["ts_ms", "eid"], shuffle_partitions(events.sparkSession)
+    )
     # ts_ms and eid are dead once rn exists (the kernel keys on rn) —
     # drop them before the chunk exchange (guide §2.3)
     chunked = with_halo_chunks(
@@ -255,18 +236,16 @@ def halo_mp_discord(
             }
         )
         out = mp_discord_kernel(local, w)
-        if len(out):
-            # local 1-based window start -> global window start, in int64
-            # (int32 would overflow past 2^31 global rows)
-            out["discord_idx"] = out["discord_idx"].astype(np.int64) + np.int64(
-                section
-            ) * np.int64(R)
-            out["nn_idx"] = out["nn_idx"].astype(np.int64) + np.int64(section) * np.int64(R)
-        else:
-            out = out.astype({"discord_idx": np.int64, "nn_idx": np.int64})
+        # local 1-based window start -> global window start, in int64
+        # (int32 would overflow past 2^31 global rows)
+        base = np.int64(section) * np.int64(R)
+        out["discord_idx"] = out["discord_idx"].astype(np.int64) + base
+        out["nn_idx"] = out["nn_idx"].astype(np.int64) + base
         return out
 
-    return _sweep_chunks(chunked, kernel, halo_mp_schema).select(
+    return sweep(
+        chunked, "chunk", ["rn"], per_run(kernel, "chunk"), halo_mp_schema
+    ).select(
         F.col("user_id").alias("section"),
         "discord_idx",
         "nn_idx",

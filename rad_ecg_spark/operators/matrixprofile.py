@@ -6,8 +6,9 @@ porcine/stumpy_discord.py) — for every length-w window of a series, the
 z-normalized distance to its nearest non-trivial neighbor; the window
 whose nearest neighbor is FARTHEST is the discord (anomaly).
 
-Spark-first shape: series are grouped by key (user), each group's
-kernel is vectorized numpy inside ``applyInPandas`` — the pairwise
+Spark-first shape: series are swept by key (user) through the one keyed
+sweep (operators/sweep.py), which holds one Arrow batch plus one user's
+run at a time; each group's kernel is vectorized numpy — the pairwise
 z-distance is computed as a LEFT-FOLD over the w lag terms so the
 DuckDB oracle (explicit 8-term sum chain) reproduces every double
 bit-for-bit. Window means/variances come from exact integer (cents)
@@ -34,9 +35,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from rad_ecg_spark.operators.graph_core import shuffle_partitions
+from rad_ecg_spark.operators.sweep import per_run, sweep, user_series
 
 MP_SCHEMA = (
     "user_id long, discord_idx int, nn_idx int, mp_e6 long, n_windows int"
@@ -131,47 +131,6 @@ def _blocked_nn(idx: np.ndarray, z: np.ndarray, w: int,
     return nn_pos, mp, has_nn
 
 
-def _sweep_groups(events, kernel_one, schema, user_col, ts_col, value_col, order_col):
-    """Shared per-user-series driver: repartition by user, sort within
-    partitions, then ONE mapInPandas pass that slices each user's
-    contiguous block and calls ``kernel_one`` on it.
-
-    Round 6 (guide §4.1): the previous ``groupBy().applyInPandas``
-    framed one Arrow batch + one Python call per group; with 15k small
-    user groups (sf1.0) that overhead alone measured ~5 s for a trivial
-    kernel. The partition sweep crosses the Python boundary once per
-    task; the per-user work is the same kernel on the same sorted rows,
-    so outputs are identical.
-    """
-    spark = events.sparkSession
-    n_parts = shuffle_partitions(spark)
-    prepared = events.select(
-        F.col(user_col).alias("uid"),
-        F.unix_millis(F.col(ts_col).cast("timestamp")).alias("ts_ms"),
-        F.round(F.col(value_col) * 100).cast("long").alias("cents"),
-        F.col(order_col).alias("oid"),
-    )
-
-    def sweep(batches):
-        frames = [b for b in batches if len(b)]
-        if not frames:
-            return  # empty partition: emit nothing
-        pdf = pd.concat(frames, ignore_index=True)
-        uid = pdf["uid"].to_numpy()
-        bounds = np.flatnonzero(np.r_[True, uid[1:] != uid[:-1], True])
-        outs = [
-            kernel_one(pdf.iloc[a:b])
-            for a, b in zip(bounds[:-1], bounds[1:])
-        ]
-        yield pd.concat(outs, ignore_index=True)
-
-    return (
-        prepared.repartition(n_parts, "uid")
-        .sortWithinPartitions("uid", "ts_ms", "oid")
-        .mapInPandas(sweep, schema=schema)
-    )
-
-
 def mp_discord_kernel(pdf: pd.DataFrame, w: int, threads: int = 1) -> pd.DataFrame:
     """Per-group discord kernel (module-level so tests and the halo
     layout can drive it directly). Expects columns uid, ts_ms, cents,
@@ -221,12 +180,9 @@ def matrix_profile_discord(
     """Per user: the discord window (1-based index), its nearest
     neighbor and z-distance^2 (x1e6), over length-``w`` windows of the
     cents series in (ts, order) order."""
-    return _sweep_groups(
-        events,
-        lambda pdf: mp_discord_kernel(pdf, w),
-        MP_SCHEMA,
-        user_col, ts_col, value_col, order_col,
-    )
+    series = user_series(events, user_col, ts_col, value_col, order_col)
+    kernel = per_run(lambda pdf: mp_discord_kernel(pdf, w), "uid")
+    return sweep(series, "uid", ["ts_ms", "oid"], kernel, MP_SCHEMA)
 
 
 def matrix_profile_oracle_sql(w: int = 8) -> str:
@@ -355,12 +311,9 @@ def fluss_regime(
     matrix_profile_discord: arc endpoints and crossing counts are exact
     integers; the CAC formula is mirrored verbatim in the oracle.
     """
-    return _sweep_groups(
-        events,
-        lambda pdf: fluss_kernel(pdf, w),
-        FLUSS_SCHEMA,
-        user_col, ts_col, value_col, order_col,
-    )
+    series = user_series(events, user_col, ts_col, value_col, order_col)
+    kernel = per_run(lambda pdf: fluss_kernel(pdf, w), "uid")
+    return sweep(series, "uid", ["ts_ms", "oid"], kernel, FLUSS_SCHEMA)
 
 
 def fluss_oracle_sql(w: int = 8) -> str:

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -32,3 +33,22 @@ def edges_df(spark, pairs, src_type="long"):
     t = T.LongType() if src_type == "long" else T.StringType()
     schema = T.StructType([T.StructField("src", t), T.StructField("dst", t)])
     return spark.createDataFrame(pairs, schema)
+
+
+# Arrow batch sizes for the keyed-sweep equivalence tests: the session's
+# own (every fixture partition fits in one batch) and 7 rows, which sends
+# key runs across batch boundaries.
+BATCH_ROWS = pytest.mark.parametrize("batch_rows", [None, 7], ids=["default", "7"])
+
+
+@contextlib.contextmanager
+def arrow_batch_rows(spark, n):
+    """Runs the block with ``n``-row Arrow batches (None: unchanged)."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    if n is not None:
+        spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)

@@ -15,8 +15,11 @@ from rad_ecg_spark.operators.halo import (
     global_row_number,
     halo_mp_discord,
     halo_rolling_median,
+    with_halo_chunks,
 )
 from rad_ecg_spark.operators.matrixprofile import mp_discord_kernel
+
+from .conftest import BATCH_ROWS, arrow_batch_rows
 
 
 def _series(spark, n, n_parts=8):
@@ -51,26 +54,48 @@ class TestGlobalRowNumber:
         assert a == b
 
 
+def _global_window_median(ev, h):
+    """The single global window (a one-partition Spark window — fine at
+    test scale only)."""
+    w = Window.orderBy("ts", "event_id").rowsBetween(-h, h)
+    return {
+        (r["event_id"], r["m"])
+        for r in ev.select(
+            "event_id",
+            F.floor(
+                F.expr("percentile(value, 0.5)").over(w) * 100 + F.lit(0.5)
+            ).cast("long").alias("m"),
+        ).collect()
+    }
+
+
 class TestHaloRollingMedian:
-    def test_matches_global_window(self, spark):
-        """Chunked+halo result == the single global window (computed via
-        a one-partition Spark window — fine at test scale only)."""
+    @BATCH_ROWS
+    def test_matches_global_window(self, spark, batch_rows):
+        """Chunked+halo result == the single global window, also when
+        chunks straddle Arrow batches."""
         ev = _series(spark, 3000)
-        got = {
-            (r["event_id"], r["roll_med_c"])
-            for r in halo_rolling_median(ev, h=3, chunk_rows=256).collect()
-        }
-        w = Window.orderBy("ts", "event_id").rowsBetween(-3, 3)
-        want = {
-            (r["event_id"], r["m"])
-            for r in ev.select(
-                "event_id",
-                F.floor(
-                    F.expr("percentile(value, 0.5)").over(w) * 100 + F.lit(0.5)
-                ).cast("long").alias("m"),
-            ).collect()
-        }
-        assert got == want
+        with arrow_batch_rows(spark, batch_rows):
+            got = {
+                (r["event_id"], r["roll_med_c"])
+                for r in halo_rolling_median(ev, h=3, chunk_rows=256).collect()
+            }
+        assert got == _global_window_median(ev, 3)
+
+    def test_chunk_smaller_than_halo_rejected(self, spark):
+        """Halo rows come from the adjacent chunk only: a chunk of exactly
+        h rows is still exact, a smaller one is refused (it used to give
+        wrong medians for almost every row)."""
+        ev = _series(spark, 200)
+        got = {tuple(r) for r in halo_rolling_median(ev, h=3, chunk_rows=3).collect()}
+        assert got == _global_window_median(ev, 3)
+        with pytest.raises(ValueError, match="smaller than the halo"):
+            halo_rolling_median(ev, h=3, chunk_rows=2)
+        with pytest.raises(ValueError, match="smaller than the halo"):
+            halo_mp_discord(ev, w=8, chunk_rows=6)
+        rn = spark.range(1, 11).withColumnRenamed("id", "rn")
+        with pytest.raises(ValueError):
+            with_halo_chunks(rn, chunk_rows=0, halo_pre=0, halo_post=0)
 
     def test_chunk_size_invariant(self, spark):
         ev = _series(spark, 2000)

@@ -9,9 +9,12 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from .conftest import BATCH_ROWS, arrow_batch_rows
+
 
 class TestEpisodesUDTF:
-    def test_known_episode_structure(self, spark):
+    @BATCH_ROWS
+    def test_known_episode_structure(self, spark, batch_rows):
         import datetime as dt
 
         from rad_ecg_spark.operators.episodes import detect_episodes
@@ -26,18 +29,25 @@ class TestEpisodesUDTF:
             (4, m(3), 1, "c", 400.0, ""),
             # user 2: never above threshold -> zero episodes
             (5, m(0), 2, "c", 10.0, ""),
+        ] + [
+            # user 3: 20 events, [300, 300, 300] then a break, five times;
+            # its run spans three or more 7-row batches
+            (6 + k, m(k), 3, "c", 100.0 if k % 4 == 3 else 300.0, "")
+            for k in range(20)
         ]
         ev = spark.createDataFrame(
             rows,
             "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
         )
-        got = {
-            (r["user_id"], r["episode_id"]): (r["n_events"], r["sum_cents"], r["peak_cents"])
-            for r in detect_episodes(ev, threshold=250.0).collect()
-        }
+        with arrow_batch_rows(spark, batch_rows):
+            got = {
+                (r["user_id"], r["episode_id"]): (r["n_events"], r["sum_cents"], r["peak_cents"])
+                for r in detect_episodes(ev, threshold=250.0).collect()
+            }
         assert got == {
             (1, 1): (2, 60000, 30000),
             (1, 2): (1, 40000, 40000),
+            **{(3, e): (3, 90000, 30000) for e in range(1, 6)},
         }
 
 

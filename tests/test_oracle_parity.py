@@ -13,6 +13,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entry_mod  # noqa: E402
 from tools.compare_oracle import compare_query, duck_connection  # noqa: E402
 
+from .conftest import arrow_batch_rows  # noqa: E402
+
 SF_DIR = "/root/testdata/sf0.001"
 
 QUERIES = entry_mod.queries()
@@ -27,6 +29,15 @@ def duck():
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(spark, duck, name):
     err = compare_query(spark, duck, name, QUERIES[name], ORACLES.get(name), SF_DIR)
+    assert err is None, f"{name}: {err}"
+
+
+@pytest.mark.parametrize("name", ["matrix_profile_discord", "fluss_regime"])
+def test_keyed_kernel_matches_oracle_with_straddling_batches(spark, duck, name):
+    """7-row Arrow batches send every user's run across batch boundaries
+    (the default batch holds a whole fixture partition)."""
+    with arrow_batch_rows(spark, 7):
+        err = compare_query(spark, duck, name, QUERIES[name], ORACLES[name], SF_DIR)
     assert err is None, f"{name}: {err}"
 
 

@@ -6,6 +6,11 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 python -m pytest tests/ -q
 python tools/compare_oracle.py /root/testdata/sf0.01
+# sf0.1 (TESTDATA: the directory holding the sf* tables, by default beside
+# the checkout): its ~12.5k-row partitions exceed the default 10,000-row
+# Arrow batch, so the keyed kernels' runs straddle batches
+python tools/compare_oracle.py "${TESTDATA:-../testdata}/sf0.1" episodes_udtf \
+  matrix_profile_discord fluss_regime halo_rolling_median halo_mp_discord
 python tools/plan_audit.py
 python tools/audit_loops.py
 echo "ALL CHECKS PASSED"
