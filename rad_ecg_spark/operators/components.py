@@ -183,7 +183,7 @@ def _hashmin(edges, verts, max_rounds, num_partitions):
     exchange-free — then the (dst, component) message stream pays the
     round's ONE shuffle into the min aggregation, and the write-back
     join is co-partitioned again (labels by id, nbr_min by dst).
-    Audited live by tools/audit_loops.py::hashmin_steady_plan.
+    Audited live by tools/plan_audit.py::hashmin_steady_plan.
 
     Frontier (delta) propagation: each round sends messages only from
     vertices whose label CHANGED last round. Labels are monotonically

@@ -50,6 +50,17 @@ def cosine(a, b):
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
+def _cosine_topk_tail(scored: DataFrame, k: int) -> DataFrame:
+    """The k best-scored ``vid`` per ``qid`` of ``scored(qid, vid, cos)``,
+    ranked by cosine descending, ties to the lower ``vid``."""
+    w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("vid"))
+    return (
+        scored.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= k)
+        .select("qid", "rk", "vid", "cos")
+    )
+
+
 def _dim_of(vectors: DataFrame, vec_col: str, dim: int | None) -> int:
     """Explicit dim wins; otherwise read one row with a clear error on
     an empty table (never silently assume)."""
@@ -84,12 +95,7 @@ def brute_force_topk(
         "vid",
         cosine(F.col("qvec"), F.col("vvec")).alias("cos"),
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("vid"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("qid", "rk", "vid", "cos")
-    )
+    return _cosine_topk_tail(scored, k)
 
 
 def hyperplanes(dim: int, n_tables: int, bits: int, seed: int = 42) -> list[list[list[float]]]:
@@ -330,12 +336,7 @@ def lsh_ann_topk(
     scored = cand.select(
         "qid", "vid", cosine(F.col("qvec"), F.col("vvec")).alias("cos")
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("vid"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("qid", "rk", "vid", "cos")
-    )
+    return _cosine_topk_tail(scored, k)
 
 
 def embedding_neardup_pairs(
@@ -384,15 +385,6 @@ def _cell_structs(vec_col, centroids: list[list[float]]):
         )
         out.append(F.struct(d2.alias("d2"), F.lit(ci).alias("cell")))
     return out
-
-
-def _cosine_topk_tail(scored: DataFrame, k: int) -> DataFrame:
-    w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("vid"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("qid", "rk", "vid", "cos")
-    )
 
 
 def ivf_topk(

@@ -5,6 +5,14 @@ skip-if-done + cache reload paths
 
 from __future__ import annotations
 
+import json
+import os
+import signal
+import subprocess
+import sys
+import time
+
+import pytest
 from pyspark.sql import functions as F
 
 from rad_ecg_spark.operators.pagerank import PageRankStats, pagerank
@@ -159,7 +167,107 @@ class TestCheckpointResume:
         bad._state_dir = lambda it: "/proc/forbidden/cannot/write/here"
         bad.commit(iteration=2, state=broken, rows=5, agg_value=1.0,
                    delta_max=0.1)
-        import pytest as _pytest
-
-        with _pytest.raises(Exception):
+        with pytest.raises(Exception):
             bad.wait()
+
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _pipeline_cmd(out: str, ck: str, resume: bool = False) -> list[str]:
+    """The job entry point on a 400-page synthetic crawl: PageRank only,
+    tol 0 so every run does all 20 iterations, durable checkpoints."""
+    cmd = [
+        sys.executable, os.path.join(REPO, "jobs", "run_web_pipeline.py"),
+        "--synth-pages", "20:20", "--algos", "pagerank", "--out", out,
+        "--checkpoint-dir", ck, "--tol", "0", "--max-iter", "20",
+    ]
+    return cmd + ["--resume"] if resume else cmd
+
+
+def _pipeline_env() -> dict:
+    # local stand-in for `spark-submit --py-files dist/rad_ecg_spark.zip`
+    return {
+        **os.environ,
+        "PYTHONPATH": REPO + os.pathsep + os.environ.get("PYTHONPATH", ""),
+        "PYSPARK_SUBMIT_ARGS": (
+            "--master local[2] --driver-memory 2g "
+            "--conf spark.sql.shuffle.partitions=2 "
+            "--conf spark.ui.showConsoleProgress=false pyspark-shell"
+        ),
+    }
+
+
+def _run_pipeline(out: str, ck: str, resume: bool = False) -> dict:
+    p = subprocess.run(
+        _pipeline_cmd(out, ck, resume), capture_output=True, text=True,
+        cwd=REPO, env=_pipeline_env(), timeout=600,
+    )
+    lines = [line for line in p.stdout.splitlines() if line.startswith("{")]
+    assert p.returncode == 0 and lines, p.stderr[-3000:]
+    return json.loads(lines[-1])
+
+
+def _written(path: str) -> bool:
+    import pyarrow.parquet as pq
+
+    try:
+        pq.read_metadata(path)
+        return True
+    except (OSError, ValueError):  # the footer is not written yet
+        return False
+
+
+def _kill_after_two_meta_rows(out: str, ck: str) -> int:
+    """Starts the job and SIGKILLs its process group (the driver JVM
+    included) once two complete PageRank iterations are in _meta;
+    returns the rows seen. Kills right after a row lands, so the next
+    append is an iteration away."""
+    meta_dir = os.path.join(ck, "pagerank", "_meta")
+    p = subprocess.Popen(
+        _pipeline_cmd(out, ck), stdout=subprocess.DEVNULL,
+        stderr=subprocess.DEVNULL, cwd=REPO, env=_pipeline_env(),
+        start_new_session=True,
+    )
+    deadline = time.monotonic() + 600
+    try:
+        while time.monotonic() < deadline:
+            if p.poll() is not None:
+                pytest.fail(f"the job finished (rc={p.returncode}) before the kill")
+            metas = (
+                [os.path.join(meta_dir, f) for f in os.listdir(meta_dir)
+                 if f.endswith(".parquet")]
+                if os.path.isdir(meta_dir) else []
+            )
+            if len(metas) >= 2 and all(_written(f) for f in metas):
+                os.killpg(p.pid, signal.SIGKILL)
+                p.wait()
+                return len(metas)
+            time.sleep(0.05)
+        pytest.fail("no PageRank checkpoint landed in time")
+    finally:
+        if p.poll() is None:
+            os.killpg(p.pid, signal.SIGKILL)
+            p.wait()
+
+
+def test_sigkill_mid_pagerank_then_resume_matches_uninterrupted(tmp_path):
+    """A real SIGKILL through the job entry point: the killed run resumes
+    from its last complete checkpoint and ends with the ranks of an
+    uninterrupted run — resume restores float64 state exactly, so only
+    summation-order noise may remain."""
+    import pandas as pd
+
+    full = _run_pipeline(str(tmp_path / "out_full"), str(tmp_path / "ck_full"))
+    assert full["pagerank"]["iterations"] == 20
+
+    out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
+    assert _kill_after_two_meta_rows(out, ck) >= 2
+    resumed = _run_pipeline(out, ck, resume=True)
+    assert resumed["pagerank"]["resumed_from"] >= 2
+    assert resumed["pagerank"]["iterations"] == 20
+
+    a = pd.read_parquet(tmp_path / "out_full" / "pagerank").set_index("id")["rank"]
+    b = pd.read_parquet(tmp_path / "out" / "pagerank").set_index("id")["rank"]
+    assert set(a.index) == set(b.index)
+    assert (a - b.reindex(a.index)).abs().max() < 1e-12

@@ -37,7 +37,8 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 RUNNER = r"""
-import glob, gzip, json, os, sys
+import json, os, sys
+from perfbench.trace import read_event_log
 from rad_ecg_spark.session import get_spark
 from rad_ecg_spark.sources.synth_graph import synth_edges
 from rad_ecg_spark.operators.pagerank import pagerank, PageRankStats
@@ -58,23 +59,8 @@ st = PageRankStats()
 pagerank(edges, tol=0.0, max_iter=iters, num_partitions=parts, stats=st).count()
 app_id = spark.sparkContext.applicationId
 spark.stop()
-sw = sr = 0
-# Spark 4 writes rolling v2 event logs: <dir>/eventlog_v2_<app>/events_*
-cands = (glob.glob(f"{evdir}/{app_id}*")
-         + glob.glob(f"{evdir}/eventlog_v2_{app_id}/events_*"))
-for f in cands:
-    if os.path.isdir(f):
-        continue
-    op = gzip.open if f.endswith(".gz") else open
-    with op(f, "rt") as fh:
-        for line in fh:
-            if '"SparkListenerTaskEnd"' not in line:
-                continue
-            ev = json.loads(line)
-            m = ev.get("Task Metrics") or {}
-            sw += (m.get("Shuffle Write Metrics") or {}).get("Shuffle Bytes Written", 0)
-            sr += ((m.get("Shuffle Read Metrics") or {}).get("Local Bytes Read", 0)
-                   + (m.get("Shuffle Read Metrics") or {}).get("Remote Bytes Read", 0))
+shuffle = sum(g.get("shuffle_bytes", 0)
+              for g in read_event_log(evdir, app_id).values())
 half = st.iter_wall_s[len(st.iter_wall_s)//2:]
 med = sorted(half)[len(half)//2]
 best = min(st.iter_wall_s[1:])  # skip iteration 1 (JIT warmup)
@@ -83,8 +69,7 @@ print("RESULT " + json.dumps({
     "setup_s": round(st.setup_wall_s, 2), "iter_wall_s": st.iter_wall_s,
     "steady_iter_s": med, "best_iter_s": best,
     "eps_med": round(st.num_edges/med), "eps_best": round(st.num_edges/best),
-    "shuffle_write_mb_per_iter": round(sw/1e6/st.iterations, 1),
-    "shuffle_read_mb_per_iter": round(sr/1e6/st.iterations, 1),
+    "shuffle_mb_per_iter": round(shuffle/1e6/st.iterations, 1),
 }))
 """
 
@@ -184,8 +169,8 @@ taken on faith' caveat.
 
 | config | best s/iter | median s/iter | edges/s/iter (best) | edges/s/iter (median) | shuffle W+R MB/iter |
 |---|---|---|---|---|---|
-| local[{rN['cpus']}]  (N)  | {rN['best_iter_s']} | {rN['steady_iter_s']} | {rN['eps_best']:,} | {rN['eps_med']:,} | {rN['shuffle_write_mb_per_iter']}+{rN['shuffle_read_mb_per_iter']} |
-| local[{r4N['cpus']}] (4N) | {r4N['best_iter_s']} | {r4N['steady_iter_s']} | {r4N['eps_best']:,} | {r4N['eps_med']:,} | {r4N['shuffle_write_mb_per_iter']}+{r4N['shuffle_read_mb_per_iter']} |
+| local[{rN['cpus']}]  (N)  | {rN['best_iter_s']} | {rN['steady_iter_s']} | {rN['eps_best']:,} | {rN['eps_med']:,} | {rN['shuffle_mb_per_iter']} |
+| local[{r4N['cpus']}] (4N) | {r4N['best_iter_s']} | {r4N['steady_iter_s']} | {r4N['eps_best']:,} | {r4N['eps_med']:,} | {r4N['shuffle_mb_per_iter']} |
 
 **Scaling efficiency (floor: best-iteration over all runs) = (eps_4N / eps_N) / 4 = {eff_best:.3f}**
 **Scaling efficiency (median of {repeats} interleaved pairs) = {paired['eff_paired_median']:.3f}**
@@ -216,8 +201,8 @@ decomposition — so the comparison isolates executor scaling.
   off in-loop.
 - Remaining sub-linearity in local mode is the shared substrate (one
   memory bus, one spark.local.dir tmpfs on one DRAM controller, one JVM
-  heap + GC): see the memory-bandwidth appendix
-  (tools/bench_membw.py) — a pure numpy memcpy saturates this host's
+  heap + GC): see the memory-bandwidth appendix of
+  BENCH/BASELINE.md — a pure numpy memcpy saturates this host's
   DRAM at a few threads, so past that point extra local "executors" add
   no bandwidth. A real 4N-executor cluster multiplies DRAM, NVMe and
   NICs by 4; the engine ships no design element that scales worse than

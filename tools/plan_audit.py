@@ -1,21 +1,36 @@
 """Physical-plan audit: assert each headline query compiles to the plan
 you'd WANT at 100 TB — filters pushed to the parquet scan, columns
 pruned, the right join strategy, a bounded number of exchanges, no
-cartesian products — and write the evidence to PLANS.md.
+cartesian products — and that the graph plans keep their shuffle
+budgets; write the evidence to PLANS.md.
+
+Three audit families, each under its own conf:
+- ``audit_queries``: every headline query's AQE initial plan (AQE on),
+  budgets counting ALL Exchange nodes in the plan string;
+- ``audit_triangle_wedges``: the triangle closure plan over the input
+  cut (AQE off), live nodes only;
+- ``audit_loops``: one steady-state iteration of each iterative loop,
+  built by the engine's own step functions (AQE off), live nodes only —
+  the hard gate "one live exchange per steady iteration".
 
 Usage: python tools/plan_audit.py [sf_dir]   (default sf0.001; plans are
-data-size independent, AQE initial plans are what is audited)
-Exits non-zero if any expectation fails.
+data-size independent). Writes all of PLANS.md in one pass and exits
+non-zero if any expectation fails.
 """
 
 from __future__ import annotations
 
+import contextlib
+import io
 import os
 import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql import functions as F  # noqa: E402
+
+LOOP_SECTION = "## Iterative-loop exchange audit (tools/plan_audit.py)"
 
 # name -> expectations. Budgets are UPPER bounds on Exchange nodes in
 # the final plan (reused/cached exchanges counted too — conservative).
@@ -82,66 +97,105 @@ AUDITS: dict[str, dict] = {
     },
 }
 
-
-def read_cols(plan: str, table: str) -> int | None:
-    """Column count in the parquet scan's ReadSchema for `table`."""
-    for m in re.finditer(r"Location:.*?" + table + r"\.parquet.*?ReadSchema: struct<([^>]*)>",
-                         plan, re.S):
-        inner = m.group(1)
-        return 0 if not inner.strip() else inner.count(",") + 1
-    # formatted explain puts ReadSchema on its own line after the scan
-    scan = re.search(
-        r"Scan parquet[^\n]*\n(?:[^\n]*\n)*?[^\n]*ReadSchema: struct<([^>]*)>", plan
-    )
-    return None
+AQE_OFF = {"spark.sql.adaptive.enabled": "false"}
 
 
-def audit(spark, sf_dir: str) -> tuple[list[str], list[str]]:
+@contextlib.contextmanager
+def pinned_conf(spark, conf: dict[str, str]):
+    """Runs the block under ``conf``, restoring the previous values."""
+    old = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
+def _live_nodes(df) -> list:
+    """Physical plan nodes outside cached (InMemoryTableScan) subtrees,
+    whose build cost was paid once at persist time. Checkpointed
+    (ExistingRDD) subtrees are leaves already."""
+    nodes = []
+
+    def walk(node) -> None:
+        if node.getClass().getSimpleName().startswith("InMemoryTableScan"):
+            return
+        nodes.append(node)
+        it = node.children().iterator()
+        while it.hasNext():
+            walk(it.next())
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return nodes
+
+
+def count_live_nodes(df, prefixes: tuple[str, ...]) -> dict[str, int]:
+    """Count live plan nodes by class-name prefix."""
+    names = [n.getClass().getSimpleName() for n in _live_nodes(df)]
+    return {p: sum(name.startswith(p) for name in names) for p in prefixes}
+
+
+def count_live_exchanges(df) -> tuple[int, list[str]]:
+    """(#shuffle exchanges, node names) outside cached subtrees."""
+    hits = [
+        n.nodeName()
+        for n in _live_nodes(df)
+        if n.getClass().getSimpleName().startswith("ShuffleExchange")
+    ]
+    return len(hits), hits
+
+
+def _report(name: str, probs: list[str]) -> list[str]:
+    print(("PASS " if not probs else "FAIL ") + name
+          + ("" if not probs else "  " + "; ".join(probs)))
+    return [f"{name}: {'; '.join(probs)}"] if probs else []
+
+
+def audit_queries(spark, sf_dir: str) -> tuple[list[str], list[str]]:
+    """The headline queries' AQE initial plans against ``AUDITS``."""
     from rad_ecg_spark.queries import ALL_QUERIES
 
     lines, failures = [], []
-    for name, exp in AUDITS.items():
-        df = ALL_QUERIES[name](spark, sf_dir)
-        import contextlib
-        import io
-
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        plan = buf.getvalue()
-        simple = df._jdf.queryExecution().executedPlan().toString()
-        probs = []
-        n_ex = len(re.findall(r"\bExchange\b", simple))
-        if "max_exchanges" in exp and n_ex > exp["max_exchanges"]:
-            probs.append(f"exchanges {n_ex} > budget {exp['max_exchanges']}")
-        for bad in exp.get("forbid", []):
-            if bad in simple:
-                probs.append(f"forbidden node {bad}")
-        for good in exp.get("expect", []):
-            if good not in simple:
-                probs.append(f"expected node {good} missing")
-        if "pushed_filter_on" in exp:
-            m = re.search(r"PushedFilters: \[([^\]]*)\]", plan)
-            if not (m and exp["pushed_filter_on"] in m.group(1)):
-                probs.append(f"filter on {exp['pushed_filter_on']} not pushed")
-        for table, budget in exp.get("max_read_cols", {}).items():
-            scans = re.findall(
-                table + r"\.parquet[^\n]*(?:\n[^\n]*?)*?ReadSchema: struct<([^>]*)>",
-                plan,
-            )
-            if scans:
-                ncols = max(
-                    (0 if not s.strip() else s.count(",") + 1) for s in scans
+    with pinned_conf(spark, {"spark.sql.adaptive.enabled": "true"}):
+        for name, exp in AUDITS.items():
+            df = ALL_QUERIES[name](spark, sf_dir)
+            buf = io.StringIO()
+            with contextlib.redirect_stdout(buf):
+                df.explain("formatted")
+            plan = buf.getvalue()
+            simple = df._jdf.queryExecution().executedPlan().toString()
+            probs = []
+            n_ex = len(re.findall(r"\bExchange\b", simple))
+            if "max_exchanges" in exp and n_ex > exp["max_exchanges"]:
+                probs.append(f"exchanges {n_ex} > budget {exp['max_exchanges']}")
+            for bad in exp.get("forbid", []):
+                if bad in simple:
+                    probs.append(f"forbidden node {bad}")
+            for good in exp.get("expect", []):
+                if good not in simple:
+                    probs.append(f"expected node {good} missing")
+            if "pushed_filter_on" in exp:
+                m = re.search(r"PushedFilters: \[([^\]]*)\]", plan)
+                if not (m and exp["pushed_filter_on"] in m.group(1)):
+                    probs.append(f"filter on {exp['pushed_filter_on']} not pushed")
+            for table, budget in exp.get("max_read_cols", {}).items():
+                scans = re.findall(
+                    table + r"\.parquet[^\n]*(?:\n[^\n]*?)*?ReadSchema: struct<([^>]*)>",
+                    plan,
                 )
-                if ncols > budget:
-                    probs.append(f"{table} scan reads {ncols} cols > budget {budget}")
-            else:
-                probs.append(f"no ReadSchema found for {table}")
-        status = "OK" if not probs else "FAIL: " + "; ".join(probs)
-        lines.append(f"### {name}\n- exchanges: {n_ex}\n- status: **{status}**\n")
-        if probs:
-            failures.append(f"{name}: {'; '.join(probs)}")
-        print(("PASS " if not probs else "FAIL ") + name + ("" if not probs else "  " + "; ".join(probs)))
+                if scans:
+                    ncols = max(
+                        (0 if not s.strip() else s.count(",") + 1) for s in scans
+                    )
+                    if ncols > budget:
+                        probs.append(f"{table} scan reads {ncols} cols > budget {budget}")
+                else:
+                    probs.append(f"no ReadSchema found for {table}")
+            status = "OK" if not probs else "FAIL: " + "; ".join(probs)
+            lines.append(f"### {name}\n- exchanges: {n_ex}\n- status: **{status}**\n")
+            failures += _report(name, probs)
     return lines, failures
 
 
@@ -158,29 +212,19 @@ def audit_triangle_wedges(spark, sf_dir: str) -> tuple[list[str], list[str]]:
     closure-join alignments; the degree and orientation subtrees each
     consumed twice are reused, not recomputed. The plan must read the cut
     and no parquet scan: the upstream derivation is never re-planned."""
-    from pyspark.sql import functions as F
-
     from rad_ecg_spark.operators.graph_core import edge_set, free_local_checkpoint
     from rad_ecg_spark.operators.triangles import _edge_closures, _oriented
     from rad_ecg_spark.queries.graph import derived_edges
-    from tools.audit_loops import count_live_exchanges, count_live_nodes
 
     cut, _ = edge_set(derived_edges(spark, sf_dir))
-    conf = {
-        "spark.sql.adaptive.enabled": "false",
-        "spark.sql.autoBroadcastJoinThreshold": "-1",
-    }
-    old = {k: spark.conf.get(k) for k in conf}
-    for k, v in conf.items():
-        spark.conf.set(k, v)
+    conf = {**AQE_OFF, "spark.sql.autoBroadcastJoinThreshold": "-1"}
     try:
-        closed = _edge_closures(_oriented(cut)).select(F.size("ws").alias("c"))
-        simple = closed._jdf.queryExecution().executedPlan().toString()
-        n_ex, _ = count_live_exchanges(closed)
-        scans = count_live_nodes(closed, ("RDDScan", "FileSourceScan"))
+        with pinned_conf(spark, conf):
+            closed = _edge_closures(_oriented(cut)).select(F.size("ws").alias("c"))
+            simple = closed._jdf.queryExecution().executedPlan().toString()
+            n_ex, _ = count_live_exchanges(closed)
+            scans = count_live_nodes(closed, ("RDDScan", "FileSourceScan"))
     finally:
-        for k, v in old.items():
-            spark.conf.set(k, v)
         free_local_checkpoint(cut)
     probs = []
     if n_ex > 7:
@@ -191,14 +235,136 @@ def audit_triangle_wedges(spark, sf_dir: str) -> tuple[list[str], list[str]]:
     if scans["FileSourceScan"] or not scans["RDDScan"]:
         probs.append("closure plan does not read only the input cut")
     status = "OK" if not probs else "FAIL: " + "; ".join(probs)
-    print(("PASS " if not probs else "FAIL ") + "triangle_wedge_close"
-          + ("" if not probs else "  " + "; ".join(probs)))
     lines = [
         f"### triangle_wedge_close (orientation + adjacency-intersect "
         f"closures over the input cut)\n- live exchanges: {n_ex} (budget 7)\n"
         f"- status: **{status}**\n"
     ]
-    return lines, ([f"triangle_wedge_close: {'; '.join(probs)}"] if probs else [])
+    return lines, _report("triangle_wedge_close", probs)
+
+
+# --- iterative loops --------------------------------------------------
+# Every audited plan is one call of the engine's own step function
+# (``pagerank_step``, ``label_propagation_step``, ``hashmin_step``, with
+# ``operators.skew.HubSplit`` for the hub-split variants) on a state that
+# one real step has already brought to the steady shape — a checkpointed
+# step output, exactly as inside ``graph_core.iterate``. The edges come
+# through the engine's input path: the ``graph_core.edge_set`` cut, and
+# its ``graph_core.symmetric`` view for the undirected loops.
+
+
+def _steady(state, step):
+    """The plan of ``step`` on ``state`` after one real warm-up step."""
+    return step(step(state).localCheckpoint(eager=True))
+
+
+def _hubs(edges, hub_threshold, P):
+    from rad_ecg_spark.operators.skew import HubSplit
+
+    return None if hub_threshold is None else HubSplit(edges, hub_threshold, P)
+
+
+def pagerank_steady_plan(spark, n_edges, P, hub_threshold=None):
+    from rad_ecg_spark.operators.graph_core import edge_set
+    from rad_ecg_spark.operators.pagerank import _prepare, pagerank_step
+    from rad_ecg_spark.sources.synth_graph import synth_edges
+
+    cut, _ = edge_set(synth_edges(spark, n_edges, partitions=P))
+    edges, verts = _prepare(cut, P)
+    n = verts.count()
+    hubs = _hubs(edges, hub_threshold, P)
+    ranks = verts.select(
+        "id", "outdeg", (F.lit(1.0) / F.lit(float(n))).alias("rank")
+    ).localCheckpoint(eager=True)
+    return _steady(ranks, lambda r: pagerank_step(r, edges, 0.0, n, 0.85, hubs))
+
+
+def _sym_and_verts(spark, n_edges, P):
+    """label propagation's and hashmin's setup: the symmetric view of the
+    edge-set cut, persisted, and the vertex set."""
+    from rad_ecg_spark.operators.graph_core import edge_set, symmetric, vertices_of
+    from rad_ecg_spark.sources.synth_graph import synth_edges
+
+    edges, _ = edge_set(synth_edges(spark, n_edges, partitions=P))
+    sym = symmetric(edges, P).persist()
+    sym.count()
+    return sym, vertices_of(edges)
+
+
+def labelprop_steady_plan(spark, n_edges, P, hub_threshold=None):
+    from rad_ecg_spark.operators.labelprop import label_propagation_step
+
+    sym, verts = _sym_and_verts(spark, n_edges, P)
+    hubs = _hubs(sym, hub_threshold, P)
+    labels = (
+        verts.select("id", F.col("id").alias("label"))
+        .repartition(P, "id")
+        .localCheckpoint(eager=True)
+    )
+    return _steady(labels, lambda s: label_propagation_step(s, sym, P, hubs))
+
+
+def hashmin_steady_plan(spark, n_edges, P):
+    """The common-case phase of connected components' hybrid method."""
+    from rad_ecg_spark.operators.components import hashmin_step
+
+    sym, verts = _sym_and_verts(spark, n_edges, P)
+    labels = (
+        verts.select(
+            "id",
+            F.col("id").alias("component"),
+            F.lit(1).cast("long").alias("changed"),
+        )
+        .repartition(P, "id")
+        .localCheckpoint(eager=True)
+    )
+    return _steady(labels, lambda s: hashmin_step(s, sym))
+
+
+def audit_loops(spark, n_edges=100_000, hub_threshold=50, P=4):
+    """[(name, live exchanges, exchange names + notes, ok)] for the five
+    steady-state loop plans, planned with AQE off. Budget: 1 live
+    exchange each; the hub-split plans also at most 3 broadcasts and 3
+    sorts."""
+    plans = (
+        ("pagerank_steady_iteration", lambda: pagerank_steady_plan(spark, n_edges, P)),
+        ("labelprop_steady_round", lambda: labelprop_steady_plan(spark, n_edges, P)),
+        ("cc_hashmin_steady_round", lambda: hashmin_steady_plan(spark, n_edges, P)),
+        (
+            "pagerank_hubsplit_steady",
+            lambda: pagerank_steady_plan(spark, n_edges, P, hub_threshold),
+        ),
+        (
+            "lp_hubsplit_steady",
+            lambda: labelprop_steady_plan(spark, n_edges, P, hub_threshold),
+        ),
+    )
+    results = []
+    with pinned_conf(spark, AQE_OFF):
+        for name, build in plans:
+            df = build()
+            n, hits = count_live_exchanges(df)
+            ok = n <= 1
+            if name.endswith("hubsplit_steady"):
+                # the split path adds broadcasts: budget them explicitly
+                # (<= 3: hub_ids semi-join build, hub slice, and at most one
+                # planner-chosen extra) and forbid sorts beyond min_by's
+                # partial+final SortAggregate pair plus the one sort under
+                # the final agg (measured equivalent to hash-aggregable
+                # rewrites, OPTIMIZATION_r06.md §12b) — e.g. a sort-merge
+                # join sneaking into the loop
+                nodes = count_live_nodes(df, ("BroadcastExchange", "Sort"))
+                hits = hits + [
+                    f"broadcasts={nodes['BroadcastExchange']} sorts={nodes['Sort']}"
+                ]
+                if nodes["BroadcastExchange"] > 3:
+                    ok = False
+                    hits.append("broadcast budget 3 exceeded")
+                if nodes["Sort"] > 3:
+                    ok = False
+                    hits.append("sort budget 3 exceeded: SMJ in steady loop?")
+            results.append((name, n, hits, ok))
+    return results
 
 
 def main() -> None:
@@ -208,10 +374,22 @@ def main() -> None:
     spark = get_spark(master="local[4]", shuffle_partitions=4,
                       extra_conf={"spark.ui.showConsoleProgress": "false"})
     spark.sparkContext.setLogLevel("ERROR")
-    lines, failures = audit(spark, sf_dir)
+    lines, failures = audit_queries(spark, sf_dir)
     t_lines, t_failures = audit_triangle_wedges(spark, sf_dir)
     lines += t_lines
     failures += t_failures
+    loops = audit_loops(spark)
+    lines += [
+        LOOP_SECTION + "\n",
+        "Live ShuffleExchange nodes in one STEADY-STATE iteration plan, built",
+        "by the engine's own step functions (cached/checkpointed subtrees",
+        "excluded — their cost was paid once):\n",
+    ]
+    for name, n, hits, ok in loops:
+        print(("PASS " if ok else "FAIL ") + f"{name}: {n} live exchange(s) (budget 1): {hits}")
+        lines.append(f"- {name}: **{n}** (budget 1) — {hits} — {'OK' if ok else 'FAIL'}")
+        if not ok:
+            failures.append(name)
     hdr = (
         "# PLANS — physical-plan audit\n\n"
         "Generated by tools/plan_audit.py: every headline query's plan is\n"
@@ -221,8 +399,8 @@ def main() -> None:
         "reused ones) — conservative upper bounds.\n\n"
     )
     with open("PLANS.md", "w") as f:
-        f.write(hdr + "\n".join(lines))
-    total = len(AUDITS) + 1  # + the triangle wedge-plan audit
+        f.write(hdr + "\n".join(lines) + "\n")
+    total = len(AUDITS) + 1 + len(loops)  # queries, triangle wedges, loops
     print(f"wrote PLANS.md ({total - len(failures)}/{total} OK)")
     if failures:
         sys.exit(1)
