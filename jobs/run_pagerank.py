@@ -36,10 +36,6 @@ def main() -> None:
         help="supernode split: srcs with outdeg >= N take the broadcast path",
     )
     ap.add_argument(
-        "--partwise", action="store_true",
-        help="per-partition idempotent snapshots (mid-iteration resume)",
-    )
-    ap.add_argument(
         "--checkpoint-every", type=int, default=1,
         help="durable snapshot every N iterations (resume granularity "
              "tradeoff; N=5 is measured free vs plain at 10M edges)",
@@ -70,11 +66,7 @@ def main() -> None:
     else:
         raise SystemExit("one of --edges / --pages is required")
 
-    if args.checkpoint_dir and args.partwise:
-        from rad_ecg_spark.plans.partwise import PartwiseCheckpointManager
-
-        ck = PartwiseCheckpointManager(spark, args.checkpoint_dir, "pagerank")
-    elif args.checkpoint_dir:
+    if args.checkpoint_dir:
         ck = CheckpointManager(
             spark, args.checkpoint_dir, "pagerank",
             async_write=args.async_checkpoint,

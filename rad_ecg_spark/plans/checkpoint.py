@@ -11,14 +11,18 @@ plus a snapshot-metadata table when a catalog is available):
     algo, iteration, rows, agg_value (e.g. sum of ranks), delta_max,
     wall_ms, status
 
-Commit protocol (crash-safe without atomic renames):
-  1. write state parquet for iteration k (directory write is idempotent —
-     a re-run overwrites the same path);
-  2. only then append the _meta row with status='complete'.
-A killed job leaves either no directory or an un-acknowledged directory;
-resume reads max(iteration) WHERE status='complete' and overwrites any
-torn k+1 directory. This mirrors the reference's skip-if-done + cache
-reload (/root/reference/src/rad_ecg/scripts/peak_detect_v4.py:1850-1853,
+Commit protocol: two steps in order, each seen by a reader in full or
+not at all.
+  1. the state directory for iteration k, written with Spark's overwrite
+     (a re-run replaces the same path; a torn directory is never read,
+     because no _meta row acknowledges it);
+  2. then the _meta row with status='complete', written to a dot-named
+     temp file under _meta and moved to its final name. Spark's reader
+     skips dot-named files, so a kill during the write leaves _meta
+     readable.
+Resume is iteration-granular: it reads max(iteration) WHERE
+status='complete' and overwrites any torn k+1 directory. This mirrors
+the reference's skip-if-done + cache reload (peak_detect_v4.py:1850-1853,
 porcine/stumpy_fluss_phase_angle.py:688-721).
 """
 
@@ -145,12 +149,8 @@ class CheckpointManager:
         delta_max: float,
         wall_ms: int,
     ) -> None:
-        self._write_state(state, self._state_dir(iteration))
+        state.write.mode("overwrite").parquet(self._state_dir(iteration))
         self._append_meta_row(iteration, rows, agg_value, delta_max, wall_ms)
-
-    def _write_state(self, state: DataFrame, out_dir: str) -> None:
-        """Commit step 1: the iteration's state snapshot (idempotent)."""
-        state.write.mode("overwrite").parquet(out_dir)
 
     def _append_meta_row(
         self, iteration: int, rows: int, agg_value: float, delta_max: float, wall_ms: int
@@ -165,11 +165,13 @@ class CheckpointManager:
         sees one schema across all rows. Object-store roots (gs://,
         s3://) resolve through pyarrow's FileSystem.from_uri, the same
         driver-side path an Iceberg catalog commit takes; local paths
-        use the local FS."""
+        use the local FS. The row lands under a dot-named temp name and
+        is moved to its final name, so readers never see a torn row."""
         import uuid
 
         import pyarrow as pa
         import pyarrow.parquet as pq
+        from pyarrow import fs as pafs
 
         table = pa.table(
             {
@@ -186,14 +188,13 @@ class CheckpointManager:
         fname = f"meta-{iteration:06d}-{uuid.uuid4().hex}.parquet"
         meta_dir = self._meta_dir()
         if "://" in meta_dir:
-            from pyarrow import fs as pafs
-
             filesystem, base = pafs.FileSystem.from_uri(meta_dir)
-            filesystem.create_dir(base, recursive=True)
-            pq.write_table(table, f"{base}/{fname}", filesystem=filesystem)
         else:
-            os.makedirs(meta_dir, exist_ok=True)
-            pq.write_table(table, os.path.join(meta_dir, fname))
+            filesystem, base = pafs.LocalFileSystem(), meta_dir
+        filesystem.create_dir(base, recursive=True)
+        tmp = f"{base}/.{fname}.tmp"
+        pq.write_table(table, tmp, filesystem=filesystem)
+        filesystem.move(tmp, f"{base}/{fname}")
 
     def last_complete(self) -> int | None:
         """Max complete iteration, or None if no checkpoint exists.

@@ -22,6 +22,10 @@ from .conftest import edges_df
 from .oracles import random_graph
 
 
+def _ranks(df) -> dict:
+    return {r["id"]: r["rank"] for r in df.collect()}
+
+
 class TestCheckpointResume:
     def test_kill_after_k_then_resume_equals_uninterrupted(self, spark, tmp_path):
         pairs = random_graph(50, 200, seed=6)
@@ -44,13 +48,7 @@ class TestCheckpointResume:
 
         # uninterrupted 8 iterations
         full = pagerank(edges_df(spark, pairs), tol=0.0, max_iter=8)
-        diff = (
-            resumed.withColumnRenamed("rank", "r2")
-            .join(full, "id")
-            .agg(F.max(F.abs(F.col("rank") - F.col("r2"))).alias("d"))
-            .collect()[0]["d"]
-        )
-        assert diff < 1e-15
+        assert _ranks(resumed) == _ranks(full)
 
     def test_meta_lineage_rows(self, spark, tmp_path):
         pairs = random_graph(30, 100, seed=12)
@@ -86,13 +84,7 @@ class TestCheckpointResume:
         assert [r["iteration"] for r in meta] == [1, 2, 3, 4]
         assert all(r["status"] == "complete" for r in meta)
         # the durable iteration-4 snapshot equals the in-memory result
-        loaded = cm.load_state(4).withColumnRenamed("rank", "r2")
-        diff = (
-            ranks.join(loaded, "id")
-            .agg(F.max(F.abs(F.col("rank") - F.col("r2"))).alias("d"))
-            .collect()[0]["d"]
-        )
-        assert diff == 0.0
+        assert _ranks(cm.load_state(4)) == _ranks(ranks)
         # resume from the async-written checkpoint
         cm2 = CheckpointManager(spark, ckdir, "pagerank", async_write=True)
         s2 = PageRankStats()
@@ -100,13 +92,7 @@ class TestCheckpointResume:
                            checkpointer=cm2, resume=True, stats=s2)
         assert s2.resumed_from == 4 and s2.iterations == 7
         full = pagerank(edges_df(spark, pairs), tol=0.0, max_iter=7)
-        diff = (
-            resumed.withColumnRenamed("rank", "r2")
-            .join(full, "id")
-            .agg(F.max(F.abs(F.col("rank") - F.col("r2"))).alias("d"))
-            .collect()[0]["d"]
-        )
-        assert diff < 1e-15
+        assert _ranks(resumed) == _ranks(full)
 
     def test_checkpoint_every_n_resumes_from_multiple(self, spark, tmp_path):
         """checkpoint_every=2 over 5 iterations leaves snapshots at 2 and
@@ -126,13 +112,94 @@ class TestCheckpointResume:
                            checkpoint_every=2)
         assert s2.resumed_from == 4 and s2.iterations == 8
         full = pagerank(edges_df(spark, pairs), tol=0.0, max_iter=8)
-        diff = (
-            resumed.withColumnRenamed("rank", "r2")
-            .join(full, "id")
-            .agg(F.max(F.abs(F.col("rank") - F.col("r2"))).alias("d"))
-            .collect()[0]["d"]
+        assert _ranks(resumed) == _ranks(full)
+
+    @pytest.mark.parametrize("async_write", [False, True])
+    def test_async_in_flight_then_exact_resume(self, spark, tmp_path, async_write):
+        """An async manager returns from commit() with the write still in
+        flight, a sync one after it landed; either way a resume ends with
+        the uninterrupted ranks."""
+        edges = spark.createDataFrame(
+            [(1, 2), (2, 3), (3, 1), (3, 4)], "src long, dst long"
         )
-        assert diff < 1e-15
+        full = _ranks(pagerank(edges, tol=0.0, max_iter=6))
+        root = str(tmp_path / "ck")
+        cm = CheckpointManager(spark, root, "pr", async_write=async_write)
+        in_flight = []
+        commit = cm.commit
+
+        def spy(**kwargs):
+            commit(**kwargs)
+            in_flight.append(cm._pending is not None)
+
+        cm.commit = spy
+        pagerank(edges, tol=0.0, max_iter=3, checkpointer=cm)
+        assert in_flight == [async_write] * 3
+        assert cm.last_complete() == 3
+        cm2 = CheckpointManager(spark, root, "pr", async_write=async_write)
+        st = PageRankStats()
+        resumed = pagerank(edges, tol=0.0, max_iter=6, checkpointer=cm2,
+                           resume=True, stats=st)
+        assert st.resumed_from == 3
+        assert _ranks(resumed) == full
+
+    def test_torn_meta_write_resumes_from_last_row(self, spark, tmp_path, monkeypatch):
+        """A kill inside iteration 3's _meta write leaves half a parquet
+        file behind. It must not hide the complete rows: the last
+        complete iteration is 2, and a resume ends with the ranks of an
+        uninterrupted run."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        pairs = random_graph(50, 200, seed=6)
+        ckdir = str(tmp_path / "ck")
+        write_table = pq.write_table
+
+        def torn_at_3(table, where, filesystem=None, **kwargs):
+            if table.column("iteration")[0].as_py() != 3:
+                return write_table(table, where, filesystem=filesystem, **kwargs)
+            buf = pa.BufferOutputStream()
+            write_table(table, buf, **kwargs)
+            data = buf.getvalue().to_pybytes()
+            out = (filesystem.open_output_stream(where) if filesystem
+                   else open(where, "wb"))
+            with out:
+                out.write(data[: len(data) // 2])
+            raise OSError("killed inside the _meta write")
+
+        monkeypatch.setattr(pq, "write_table", torn_at_3)
+        with pytest.raises(OSError, match="killed inside"):
+            pagerank(edges_df(spark, pairs), tol=0.0, max_iter=6,
+                     checkpointer=CheckpointManager(spark, ckdir, "pagerank"))
+        monkeypatch.undo()
+
+        cm = CheckpointManager(spark, ckdir, "pagerank")
+        assert cm.last_complete() == 2
+        st = PageRankStats()
+        resumed = pagerank(edges_df(spark, pairs), tol=0.0, max_iter=6,
+                           checkpointer=cm, resume=True, stats=st)
+        assert st.resumed_from == 2 and st.iterations == 6
+        full = pagerank(edges_df(spark, pairs), tol=0.0, max_iter=6)
+        assert _ranks(resumed) == _ranks(full)
+
+    def test_reused_dir_resume_equals_uninterrupted(self, spark, tmp_path):
+        """Graph A runs 3 iterations, then a fresh (non-resume) run of
+        graph B over the same directory runs 3; resuming B to 6 must
+        give exactly B's uninterrupted ranks, with nothing of A's
+        snapshots left in them."""
+        a = random_graph(50, 200, seed=6)
+        b = random_graph(50, 200, seed=7)
+        ckdir = str(tmp_path / "ck")
+        for pairs in (a, b):
+            pagerank(edges_df(spark, pairs), tol=0.0, max_iter=3,
+                     checkpointer=CheckpointManager(spark, ckdir, "pagerank"))
+        st = PageRankStats()
+        resumed = pagerank(edges_df(spark, b), tol=0.0, max_iter=6,
+                           checkpointer=CheckpointManager(spark, ckdir, "pagerank"),
+                           resume=True, stats=st)
+        assert st.resumed_from == 3 and st.iterations == 6
+        full = pagerank(edges_df(spark, b), tol=0.0, max_iter=6)
+        assert _ranks(resumed) == _ranks(full)
 
     def test_async_worker_is_daemon_and_close_drains(self, spark, tmp_path):
         """The async commit thread must be a daemon (a loop that raises
@@ -198,31 +265,27 @@ def _pipeline_env() -> dict:
     }
 
 
-def _run_pipeline(out: str, ck: str, resume: bool = False) -> dict:
+def _run_job(cmd: list[str]) -> dict:
+    """Runs a job entry point to completion; returns its JSON summary."""
     p = subprocess.run(
-        _pipeline_cmd(out, ck, resume), capture_output=True, text=True,
-        cwd=REPO, env=_pipeline_env(), timeout=600,
+        cmd, capture_output=True, text=True, cwd=REPO, env=_pipeline_env(),
+        timeout=600,
     )
     lines = [line for line in p.stdout.splitlines() if line.startswith("{")]
     assert p.returncode == 0 and lines, p.stderr[-3000:]
     return json.loads(lines[-1])
 
 
-def _written(path: str) -> bool:
-    import pyarrow.parquet as pq
-
-    try:
-        pq.read_metadata(path)
-        return True
-    except (OSError, ValueError):  # the footer is not written yet
-        return False
+def _run_pipeline(out: str, ck: str, resume: bool = False) -> dict:
+    return _run_job(_pipeline_cmd(out, ck, resume))
 
 
 def _kill_after_two_meta_rows(out: str, ck: str) -> int:
     """Starts the job and SIGKILLs its process group (the driver JVM
     included) once two complete PageRank iterations are in _meta;
-    returns the rows seen. Kills right after a row lands, so the next
-    append is an iteration away."""
+    returns the rows seen. A row counts once it has its final
+    ``meta-*.parquet`` name; the dot-named temp file of a row still
+    being written does not, so the kill may land inside a _meta write."""
     meta_dir = os.path.join(ck, "pagerank", "_meta")
     p = subprocess.Popen(
         _pipeline_cmd(out, ck), stdout=subprocess.DEVNULL,
@@ -234,15 +297,15 @@ def _kill_after_two_meta_rows(out: str, ck: str) -> int:
         while time.monotonic() < deadline:
             if p.poll() is not None:
                 pytest.fail(f"the job finished (rc={p.returncode}) before the kill")
-            metas = (
-                [os.path.join(meta_dir, f) for f in os.listdir(meta_dir)
-                 if f.endswith(".parquet")]
+            rows = (
+                [f for f in os.listdir(meta_dir)
+                 if f.startswith("meta-") and f.endswith(".parquet")]
                 if os.path.isdir(meta_dir) else []
             )
-            if len(metas) >= 2 and all(_written(f) for f in metas):
+            if len(rows) >= 2:
                 os.killpg(p.pid, signal.SIGKILL)
                 p.wait()
-                return len(metas)
+                return len(rows)
             time.sleep(0.05)
         pytest.fail("no PageRank checkpoint landed in time")
     finally:
@@ -271,3 +334,38 @@ def test_sigkill_mid_pagerank_then_resume_matches_uninterrupted(tmp_path):
     b = pd.read_parquet(tmp_path / "out" / "pagerank").set_index("id")["rank"]
     assert set(a.index) == set(b.index)
     assert (a - b.reindex(a.index)).abs().max() < 1e-12
+
+
+def test_run_pagerank_job_resumes_to_in_process_ranks(spark, tmp_path):
+    """jobs/run_pagerank.py end to end: 3 iterations with async
+    checkpoints, then --resume to 5; the job's ranks match an in-process
+    pagerank(max_iter=5) up to summation order (the job runs on 2
+    cores)."""
+    import pandas as pd
+
+    pairs = random_graph(50, 200, seed=6)
+    edges = str(tmp_path / "edges")
+    os.makedirs(edges)
+    pd.DataFrame(pairs, columns=["src", "dst"]).to_parquet(
+        os.path.join(edges, "part-0.parquet")
+    )
+    out, ck = str(tmp_path / "ranks"), str(tmp_path / "ck")
+
+    def run(*extra: str) -> dict:
+        return _run_job([
+            sys.executable, os.path.join(REPO, "jobs", "run_pagerank.py"),
+            "--edges", edges, "--out", out, "--checkpoint-dir", ck,
+            "--async-checkpoint", "--tol", "0", *extra,
+        ])
+
+    first = run("--max-iter", "3")
+    assert first["resumed_from"] is None and first["iterations"] == 3
+    resumed = run("--resume", "--max-iter", "5")
+    assert resumed["resumed_from"] == 3 and resumed["iterations"] == 5
+
+    got = pd.read_parquet(out).set_index("id")["rank"]
+    want = pd.Series(
+        _ranks(pagerank(edges_df(spark, pairs), tol=0.0, max_iter=5))
+    )
+    assert set(got.index) == set(want.index)
+    assert (got - want.reindex(got.index)).abs().max() < 1e-12

@@ -1,5 +1,6 @@
-"""Grouped-map kernels, skew-aware joins, partwise checkpoints, CSV
-source, spark.ml stage — round-2 coverage tests."""
+"""Grouped-map kernels, skew-aware joins, CSV source, spark.ml stage,
+sinks, streaming windows and blocked-kernel memory — round-2 coverage
+tests. Checkpoint/resume lives in test_checkpoint_resume.py."""
 
 from __future__ import annotations
 
@@ -181,65 +182,6 @@ class TestSkewAwarePageRank:
         assert got.groupBy("tag").count().orderBy("tag").collect() == (
             exp.groupBy("tag").count().orderBy("tag").collect()
         )
-
-
-class TestPartwiseCheckpoint:
-    def test_partial_rerun_writes_only_missing(self, spark, tmp_path):
-        from rad_ecg_spark.plans.partwise import write_state_partwise
-
-        df = spark.range(0, 1000, 1, 4).select("id", (F.col("id") * 2).alias("rank"))
-        out = str(tmp_path / "iter1")
-        st1 = write_state_partwise(df, out)
-        assert sorted(s["pid"] for s in st1) == [0, 1, 2, 3]
-        assert all(not s["skipped"] for s in st1)
-        files = sorted(os.listdir(out))
-        assert len(files) == 4 and not any(".tmp" in f for f in files)
-
-        # simulate a killed job: two partitions never landed
-        os.remove(os.path.join(out, files[1]))
-        os.remove(os.path.join(out, files[2]))
-        st2 = write_state_partwise(df, out)
-        assert sum(1 for s in st2 if s["skipped"]) == 2
-        assert sum(1 for s in st2 if not s["skipped"]) == 2
-        back = spark.read.parquet(out)
-        assert back.count() == 1000
-        assert back.agg(F.sum("rank")).collect()[0][0] == df.agg(F.sum("rank")).collect()[0][0]
-
-    @pytest.mark.parametrize("async_write", [False, True])
-    def test_pagerank_resume_with_partwise_manager(self, spark, tmp_path, async_write):
-        from rad_ecg_spark.operators.pagerank import PageRankStats, pagerank
-        from rad_ecg_spark.plans.partwise import PartwiseCheckpointManager
-
-        edges = spark.createDataFrame(
-            [(1, 2), (2, 3), (3, 1), (3, 4)], "src long, dst long"
-        )
-        full = {
-            r["id"]: r["rank"]
-            for r in pagerank(edges, tol=0.0, max_iter=6).collect()
-        }
-        root = str(tmp_path / "ckpt")
-        cp1 = PartwiseCheckpointManager(spark, root, "pr", async_write=async_write)
-        in_flight = []
-        commit = cp1.commit
-
-        def spy(**kwargs):
-            commit(**kwargs)
-            in_flight.append(cp1._pending is not None)
-
-        cp1.commit = spy
-        pagerank(edges, tol=0.0, max_iter=3, checkpointer=cp1).count()
-        assert in_flight == [async_write] * 3
-        assert cp1.last_complete() == 3
-        cp2 = PartwiseCheckpointManager(spark, root, "pr", async_write=async_write)
-        st = PageRankStats()
-        resumed = {
-            r["id"]: r["rank"]
-            for r in pagerank(
-                edges, tol=0.0, max_iter=6, checkpointer=cp2, resume=True, stats=st
-            ).collect()
-        }
-        assert st.resumed_from == 3
-        assert resumed == full
 
 
 class TestCsvSource:

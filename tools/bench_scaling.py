@@ -214,10 +214,10 @@ Derived 1.4k-edge graph (sf0.001): 53 iterations to delta < 1e-6,
 converged=True (driven end-to-end via spark-submit --py-files,
 jobs/run_pagerank.py). Per-iteration checkpoint write adds ~0.4 s/iter
 at sf0.001 (parquet snapshot + _meta append); kill-after-3 resume
-reproduces the uninterrupted run to < 1e-15
-(tests/test_checkpoint_resume.py); per-partition idempotent snapshots
-give mid-iteration resume (plans/partwise.py,
-tests/test_checkpoint_resume.py::TestPartwise).
+reproduces the uninterrupted run exactly
+(tests/test_checkpoint_resume.py); resume is iteration-granular and a
+torn _meta write is invisible to it (plans/checkpoint.py,
+tests/test_checkpoint_resume.py::TestCheckpointResume).
 
 ## Headline (bench.py, local[32], sf0.1)
 
