@@ -151,6 +151,11 @@ def connected_components(
         raise ValueError(f"method must be 'star', 'hashmin' or 'hybrid', got {method!r}")
     spark = edges.sparkSession
     edges, n_edges = edge_set(edges)
+    if n_edges == 0:
+        # nothing to label: the optimizer plans LIMIT 0 as an empty local
+        # relation, so the result runs no job and reads no freed block
+        free_local_checkpoint(edges)
+        return edges.select(F.col("src").alias("id"), F.col("src").alias("component")).limit(0)
     verts = vertices_of(edges)
     if num_partitions is None:
         # size on the symmetric edge table (2|E|) — the rows every round

@@ -2,6 +2,11 @@
 
 - exact: hash-groupBy on a content fingerprint (md5 of normalized text);
   keeps the min-id representative. One shuffle, partial-agg friendly.
+- token sets: ``token_sets`` -> ``(id, toks)``, one row per document,
+  toks = its distinct words. The MinHash, LSH, verify and near-dup
+  cluster stages read this frame and never tokenize, so each entry point
+  (jaccard_pairs, winnow_verified_pairs, dup_clusters, the pipeline)
+  tokenizes a document once.
 - n-gram Jaccard: word-level set overlap over candidate pairs generated
   by a shared-token join (never a blind cross join).
 - MinHash + LSH: k permutation-style hashes min-folded over tokens; the
@@ -23,7 +28,7 @@ Reference capability donor: overlap dedup via set-intersection + rollback
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from rad_ecg_spark.functions.textstats import fingerprint, words
@@ -56,14 +61,20 @@ def token_hash(col):
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long") % MERSENNE31
 
 
-def minhash_signatures(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def token_set(text: Column) -> Column:
+    """A document's distinct word set (NULL text reads as empty)."""
+    return F.array_distinct(words(F.coalesce(text, F.lit(""))))
+
+
+def token_sets(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+    """(id, toks): the token-set frame the near-dup stages read."""
+    return df.select(F.col(id_col), token_set(F.col(text_col)).alias("toks"))
+
+
+def minhash_signatures(toks: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, sig_0..sig_{k-1}): min over tokens of (a*h + b) mod p."""
-    tok = (
-        df.select(id_col, F.explode(words(F.col(text_col))).alias("w"))
-        .distinct()
-        .withColumn("h", token_hash(F.col("w")))
+    tok = toks.select(id_col, F.explode("toks").alias("w")).withColumn(
+        "h", token_hash(F.col("w"))
     )
     aggs = [
         F.min((F.lit(a) * F.col("h") + F.lit(b)) % MERSENNE31).alias(f"sig_{i}")
@@ -73,8 +84,7 @@ def minhash_signatures(
 
 
 def minhash_lsh_candidates(
-    df: DataFrame,
-    text_col: str = "text",
+    toks: DataFrame,
     id_col: str = "doc_id",
     bands: int = 4,
     max_bucket: int | None = None,
@@ -90,7 +100,7 @@ def minhash_lsh_candidates(
     """
     k = len(MINHASH_PARAMS)
     rows_per_band = k // bands
-    sigs = minhash_signatures(df, text_col, id_col)
+    sigs = minhash_signatures(toks, id_col)
     band_cols = []
     for b in range(bands):
         parts = [
@@ -124,8 +134,7 @@ def minhash_lsh_candidates(
 
 def verify_jaccard_pairs(
     cand: DataFrame,
-    df: DataFrame,
-    text_col: str = "text",
+    toks: DataFrame,
     id_col: str = "doc_id",
     threshold_num: int = 8,
     threshold_den: int = 10,
@@ -133,8 +142,8 @@ def verify_jaccard_pairs(
     """Exact word-set Jaccard verification of candidate pairs (a, b):
     returns (a, b, inter, uni) for pairs with Jaccard >= num/den.
 
-    Shape: each side of the pair joins its per-doc DISTINCT token ARRAY
-    (one row per doc), and the intersection is a JVM ``array_intersect``
+    Shape: each side of the pair joins its document's token set (one
+    row per doc), and the intersection is a JVM ``array_intersect``
     per candidate row — NOT a token-explode equi-join. Measured at
     sf0.1 (10.4M candidates): 5.1 s vs 37.3 s for the explode join,
     identical output; the explode join materializes |cand| x avg-tokens
@@ -142,11 +151,8 @@ def verify_jaccard_pairs(
     pair side. Result is set-semantics-identical, so the DuckDB oracles
     (which compute the same intersection relationally) are unaffected.
     """
-    toks = df.select(
-        F.col(id_col), F.array_distinct(words(F.col(text_col))).alias("_ts")
-    )
-    pa = toks.select(F.col(id_col).alias("a"), F.col("_ts").alias("_tsa"))
-    pb = toks.select(F.col(id_col).alias("b"), F.col("_ts").alias("_tsb"))
+    pa = toks.select(F.col(id_col).alias("a"), F.col("toks").alias("_tsa"))
+    pb = toks.select(F.col(id_col).alias("b"), F.col("toks").alias("_tsb"))
     return (
         cand.join(pa, "a")
         .join(pb, "b")
@@ -183,19 +189,16 @@ def jaccard_pairs(
     Verification recomputes the true intersection for surviving
     candidates only.
     """
-    tok = (
-        df.select(id_col, F.explode(words(F.col(text_col))).alias("w"))
-        .distinct()
-        .persist()
-    )
-    tok.count()  # materialize: the prefix self-join reads tok 4 ways
-    sizes = tok.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
+    toks = token_sets(df, text_col, id_col).persist()
+    toks.count()  # materialize: the prefix self-join and verify read it 5 ways
+    tok = toks.select(id_col, F.explode("toks").alias("w"))
+    sizes = toks.select(id_col, F.size("toks").alias("sz"))
     cand = jaccard_candidates(tok, sizes, id_col, threshold_num, threshold_den).persist()
     cand.count()  # materialize before verify (plan-reuse barrier)
     # verify: exact intersection over candidate pairs only (array form —
     # see verify_jaccard_pairs for the measured 7x over an explode join).
     # Eager localCheckpoint: materializes the (small) verified pair set
-    # ONCE and cuts its lineage off tok/cand, so both intermediate
+    # ONCE and cuts its lineage off toks/cand, so both intermediate
     # caches can be freed HERE instead of leaking a pair of persisted
     # tables per call in a long-lived driver (the block-accumulation
     # slowdown operators/components.py documents). The checkpoint's own
@@ -203,12 +206,12 @@ def jaccard_pairs(
     # the returned DataFrame is garbage collected — unlike CacheManager
     # entries, which live until an explicit unpersist.
     out = (
-        verify_jaccard_pairs(cand, df, text_col, id_col, threshold_num, threshold_den)
+        verify_jaccard_pairs(cand, toks, id_col, threshold_num, threshold_den)
         .select("a", "b", "inter", "uni")
         .localCheckpoint(eager=True)
     )
     cand.unpersist()
-    tok.unpersist()
+    toks.unpersist()
     return out
 
 
@@ -489,8 +492,36 @@ def winnow_verified_pairs(
         df, k, w, min_shared, max_bucket, text_col, id_col
     )
     return verify_jaccard_pairs(
-        cand, df, text_col, id_col, threshold_num, threshold_den
+        cand, token_sets(df, text_col, id_col), id_col, threshold_num, threshold_den
     ).select("a", "b", "shared", "inter", "uni")
+
+
+def near_dup_components(
+    toks: DataFrame,
+    id_col: str = "doc_id",
+    bands: int = 4,
+    threshold_num: int = 9,
+    threshold_den: int = 10,
+    max_bucket: int | None = None,
+) -> DataFrame:
+    """(id, component = min id) for every document in a verified
+    near-dup cluster of size >= 2: MinHash-LSH candidate pairs (an
+    equi-join, never O(n²)), exact word-Jaccard verification of the
+    candidates only, then connected components over the verified pairs
+    (the link-graph engine, here on DERIVED edges)."""
+    from rad_ecg_spark.operators.components import connected_components
+
+    cand = minhash_lsh_candidates(toks, id_col, bands, max_bucket)
+    # connected_components reads verified exactly once, into its input
+    # cut (graph_core.edge_set)
+    verified = verify_jaccard_pairs(
+        cand, toks, id_col, threshold_num, threshold_den
+    ).select(F.col("a").alias("src"), F.col("b").alias("dst"))
+    # hybrid = capped hashmin then star-on-contraction: measured 3.7x
+    # faster than pure star on the sf0.01 pair graph (7.6 vs 28.3 s)
+    # and it keeps star's worst-case round bound on chain-shaped
+    # clusters — same default rationale as the registry CC query.
+    return connected_components(verified, method="hybrid")
 
 
 def dup_clusters(
@@ -503,40 +534,20 @@ def dup_clusters(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """End-to-end corpus dedup — the actual 100 TB pipeline shape:
-
-    1. candidate pairs by MinHash-LSH banding (equi-join, never O(n²));
-    2. exact word-Jaccard verification on the candidate list only;
-    3. connected components over the verified near-dup pair graph
-       (operators/components.py — the same engine the link-graph
-       queries use, here on DERIVED edges);
-    4. min-id representative per duplicate cluster.
-
-    Returns (doc_id, rep, cluster_size) for every document that belongs
-    to a verified near-dup cluster of size >= 2 (singletons are by
-    definition their own representative and are omitted — the caller
-    anti-joins to drop non-representatives).
+    (doc_id, rep, cluster_size) for every document in a verified
+    near-dup cluster of size >= 2 (``near_dup_components``); singletons
+    are their own representative and are omitted.
 
     Reference capability donor: overlap dedup via set-intersection +
     rollback (peak_detect_v4.py:1710-1731); grouping shape
     (porcine/pig_extract.py:1007).
     """
-    from rad_ecg_spark.operators.components import connected_components
-
-    cand = minhash_lsh_candidates(df, text_col, id_col, bands, max_bucket)
-    # connected_components reads verified exactly once, into its input
-    # cut (graph_core.edge_set)
-    verified = verify_jaccard_pairs(
-        cand, df, text_col, id_col, threshold_num, threshold_den
-    ).select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    # hybrid = capped hashmin then star-on-contraction: measured 3.7x
-    # faster than pure star on the sf0.01 pair graph (7.6 vs 28.3 s)
-    # and it keeps star's worst-case round bound on chain-shaped
-    # clusters — same default rationale as the registry CC query.
-    cc = connected_components(verified, method="hybrid")
-    csize = cc.groupBy("component").agg(F.count(F.lit(1)).alias("cluster_size"))
-    out = cc.join(csize, "component").select(
+    cc = near_dup_components(
+        token_sets(df, text_col, id_col), id_col, bands,
+        threshold_num, threshold_den, max_bucket,
+    )
+    return cc.select(
         F.col("id").alias(id_col),
         F.col("component").alias("rep"),
-        "cluster_size",
+        F.count(F.lit(1)).over(Window.partitionBy("component")).alias("cluster_size"),
     )
-    return out

@@ -227,8 +227,12 @@ def iterate(
     - ``stats`` gets the iteration count, the wall (durable commit time
       excluded), ``stats.record(row)`` and the converged flag;
     - every ``checkpoint_every`` iterations ``checkpointer.commit`` gets
-      ``snapshot(state, row)``, and the last commit lands before return.
+      ``snapshot(state, row)``, and the last commit lands before return;
+    - a run from iteration 0 starts a new checkpoint generation
+      (``checkpointer.clear()``), so a later resume reads this run only.
     """
+    if checkpointer is not None and start == 0:
+        checkpointer.clear()
     with pinned_loop_conf(state.sparkSession, num_partitions):
         for it in range(start, max_iter):
             t_iter = time.monotonic()

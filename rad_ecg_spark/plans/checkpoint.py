@@ -21,14 +21,17 @@ not at all.
      skips dot-named files, so a kill during the write leaves _meta
      readable.
 Resume is iteration-granular: it reads max(iteration) WHERE
-status='complete' and overwrites any torn k+1 directory. This mirrors
+status='complete' and overwrites any torn k+1 directory. A run from
+iteration 0 first removes ``<root>/<algo>`` (``clear``), so the rows a
+resume reads all belong to one run. Every driver-side file operation
+resolves the root through ``_resolve``, so plain paths, ``file://`` and
+object-store roots behave alike. This mirrors
 the reference's skip-if-done + cache reload (peak_detect_v4.py:1850-1853,
 porcine/stumpy_fluss_phase_angle.py:688-721).
 """
 
 from __future__ import annotations
 
-import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -64,6 +67,7 @@ class CheckpointManager:
         self.spark = spark
         self.root = root
         self.algo = algo
+        self._dir = f"{root.rstrip('/')}/{algo}"
         self._t0 = time.monotonic()
         self._async = async_write
         # async worker: ONE daemon thread per in-flight commit (never
@@ -76,10 +80,32 @@ class CheckpointManager:
         self._pending: tuple | None = None  # (thread, [exception])
 
     def _state_dir(self, iteration: int) -> str:
-        return os.path.join(self.root, self.algo, "state", f"iteration={iteration}")
+        return f"{self._dir}/state/iteration={iteration}"
 
     def _meta_dir(self) -> str:
-        return os.path.join(self.root, self.algo, "_meta")
+        return f"{self._dir}/_meta"
+
+    def _resolve(self) -> tuple:
+        """(filesystem, base): the driver-side pyarrow view of
+        ``<root>/<algo>``. Object-store and ``file://`` roots resolve
+        through ``FileSystem.from_uri``, the same driver-side path an
+        Iceberg catalog commit takes; plain paths use the local FS."""
+        from pyarrow import fs as pafs
+
+        if "://" in self._dir:
+            return pafs.FileSystem.from_uri(self._dir)
+        return pafs.LocalFileSystem(), self._dir
+
+    def clear(self) -> None:
+        """Start a new checkpoint generation: remove ``<root>/<algo>``.
+        ``graph_core.iterate`` calls this before a run from iteration 0
+        commits, so a later resume never reads the rows or state of an
+        earlier run over the same directory."""
+        from pyarrow import fs as pafs
+
+        filesystem, base = self._resolve()
+        if filesystem.get_file_info(base).type != pafs.FileType.NotFound:
+            filesystem.delete_dir(base)
 
     def commit(
         self,
@@ -162,16 +188,13 @@ class CheckpointManager:
         driver/catalog-side metadata operation (plans/catalog.py maps
         this call to the snapshot-commit API). These Arrow types are
         the one definition of the _meta schema, so spark.read.parquet
-        sees one schema across all rows. Object-store roots (gs://,
-        s3://) resolve through pyarrow's FileSystem.from_uri, the same
-        driver-side path an Iceberg catalog commit takes; local paths
-        use the local FS. The row lands under a dot-named temp name and
-        is moved to its final name, so readers never see a torn row."""
+        sees one schema across all rows. The root resolves through
+        ``_resolve``. The row lands under a dot-named temp name and is
+        moved to its final name, so readers never see a torn row."""
         import uuid
 
         import pyarrow as pa
         import pyarrow.parquet as pq
-        from pyarrow import fs as pafs
 
         table = pa.table(
             {
@@ -186,15 +209,12 @@ class CheckpointManager:
         )
         # unique filename: concurrent algos/retries never clobber a row
         fname = f"meta-{iteration:06d}-{uuid.uuid4().hex}.parquet"
-        meta_dir = self._meta_dir()
-        if "://" in meta_dir:
-            filesystem, base = pafs.FileSystem.from_uri(meta_dir)
-        else:
-            filesystem, base = pafs.LocalFileSystem(), meta_dir
-        filesystem.create_dir(base, recursive=True)
-        tmp = f"{base}/.{fname}.tmp"
+        filesystem, base = self._resolve()
+        meta = f"{base}/_meta"
+        filesystem.create_dir(meta, recursive=True)
+        tmp = f"{meta}/.{fname}.tmp"
         pq.write_table(table, tmp, filesystem=filesystem)
-        filesystem.move(tmp, f"{base}/{fname}")
+        filesystem.move(tmp, f"{meta}/{fname}")
 
     def last_complete(self) -> int | None:
         """Max complete iteration, or None if no checkpoint exists.
@@ -202,11 +222,13 @@ class CheckpointManager:
         Only "no checkpoint yet" is swallowed; a corrupt/unreadable _meta
         must PROPAGATE — treating it as 'no checkpoint' would silently
         restart from iteration 0 and overwrite good snapshots."""
-        self.wait()
-        if not os.path.isdir(self._meta_dir()):
-            return None
+        from pyarrow import fs as pafs
         from pyspark.errors import AnalysisException
 
+        self.wait()
+        filesystem, base = self._resolve()
+        if filesystem.get_file_info(f"{base}/_meta").type == pafs.FileType.NotFound:
+            return None
         try:
             meta = self.spark.read.parquet(self._meta_dir())
         except AnalysisException as e:

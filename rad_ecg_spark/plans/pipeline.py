@@ -3,9 +3,12 @@ composable artifact:
 
     pages(url, warc_ts, html, text, lang)
       -> byte-exact text + outlink extraction (Arrow UDFs)
-      -> corpus dedup: exact (fingerprint) + near-dup clusters
+      -> corpus dedup, one token pass: each page is projected once to
+         (url, fp, toks) — its content fingerprint and its token set
+         (operators/dedup.token_set). The exact stage groups by fp and
+         carries the representative's token set; the near-dup stage
          (MinHash-LSH candidates -> exact Jaccard verify -> connected
-         components -> min-id representative)
+         components -> min-id representative) reads only those sets
       -> link rewrite: every url (src AND dst) maps to its dup-cluster
          representative, so mirror pages merge into one vertex instead
          of splitting rank mass
@@ -33,81 +36,63 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def dedup_pages(
-    pages: DataFrame,
-    jaccard_num: int = 9,
-    jaccard_den: int = 10,
-    lsh_bands: int = 4,
-    max_bucket: int | None = 1_000,
-) -> tuple[DataFrame, DataFrame]:
-    """(kept_pages, rep_map): collapse exact and near duplicates.
+# near-dup: word-set Jaccard >= 9/10 over 4-band MinHash-LSH candidates,
+# buckets above MAX_BUCKET members dropped (see dedup_pages)
+JACCARD_NUM, JACCARD_DEN, LSH_BANDS, MAX_BUCKET = 9, 10, 4, 1_000
 
-    rep_map(url, rep) covers EVERY input url (identity rows included),
-    so consumers can unconditionally join through it. kept_pages are
-    the representative rows only.
 
-    ``max_bucket`` (LSH mega-bucket cap) defaults to 1000 here — an
-    UNCAPPED-ish 10k ceiling melts on boilerplate-heavy corpora:
-    measured on the 100k-page synthetic crawl (34-word template
-    vocabulary), band buckets reach 13k docs and a 10k cap still
-    keeps ~486M candidate pairs with single join tasks carrying
-    |bucket|^2/2 ≈ 3e7 pairs (one core pegged for over an hour); at
-    1000 the kept candidate set is a few million pairs and the
-    per-task bound is 500k. A bucket that big means the band key is
-    boilerplate, i.e. uninformative — dropping it improves precision,
-    exact mirrors are already collapsed by the fingerprint stage, and
-    true near-dups keep their other ``lsh_bands - 1`` chances.
+def dedup_pages(pages: DataFrame) -> DataFrame:
+    """rep_map(url, rep): collapse exact and near duplicates.
+
+    rep_map covers EVERY input url (identity rows included), so
+    consumers can unconditionally join through it; the kept pages are
+    its ``url = rep`` rows.
+
+    Each page is projected once to ``(url, fp, toks)``; the exact stage
+    carries its representative's token set to the near-dup stage.
+
+    ``MAX_BUCKET`` (LSH mega-bucket cap) is 1000 — an UNCAPPED-ish 10k
+    ceiling melts on boilerplate-heavy corpora: measured on the
+    100k-page synthetic crawl (34-word template vocabulary), band
+    buckets reach 13k docs and a 10k cap still keeps ~486M candidate
+    pairs with single join tasks carrying |bucket|^2/2 ≈ 3e7 pairs (one
+    core pegged for over an hour); at 1000 the kept candidate set is a
+    few million pairs and the per-task bound is 500k. A bucket that big
+    means the band key is boilerplate, i.e. uninformative — dropping it
+    improves precision, exact mirrors are already collapsed by the
+    fingerprint stage, and true near-dups keep their other
+    ``LSH_BANDS - 1`` chances.
     """
     from rad_ecg_spark.functions.textstats import fingerprint
-    from rad_ecg_spark.operators.dedup import dup_clusters
+    from rad_ecg_spark.operators.dedup import near_dup_components, token_set
 
+    # NULL text is read as empty text: fingerprint(NULL) is NULL, and a
+    # NULL fp would fall out of the equi-join below (null != null),
+    # silently dropping the page from rep_map and breaking the every-url
+    # contract. Collapsing NULL with '' is deliberate — both carry zero
+    # extractable text, and the near-dup stage treats them identically
+    # (no tokens).
+    text = F.coalesce(F.col("text"), F.lit(""))
+    facts = pages.select("url", fingerprint(text).alias("fp"), token_set(text).alias("toks"))
     # exact stage first: identical fingerprints collapse to the min url
     # (exact_dedup's rule) before the more expensive near-dup machinery
     # sees the corpus. groupBy(fp) gets map-side partial aggregation, so
     # a mega-cluster of identical boilerplate reduces before the shuffle.
-    # NULL text is fingerprinted as empty text: fingerprint(NULL) is
-    # NULL, and a NULL fp would fall out of the equi-joins below (null
-    # != null), silently dropping the page from rep_map and breaking
-    # the every-url contract. Collapsing NULL with '' is deliberate —
-    # both carry zero extractable text, and the near-dup stage already
-    # treats them identically (no tokens).
-    with_fp = pages.select(
-        "url", fingerprint(F.coalesce(F.col("text"), F.lit(""))).alias("fp")
+    # Pages sharing a fingerprint share their word set, so min_by keeps
+    # the representative's.
+    exact = facts.groupBy("fp").agg(
+        F.min("url").alias("exact_rep"), F.min_by("toks", "url").alias("toks")
     )
-    exact_reps = with_fp.groupBy("fp").agg(F.min("url").alias("exact_rep"))
-    exact_map = with_fp.join(exact_reps, "fp").select("url", "exact_rep")
-    exact_kept = pages.join(
-        exact_map.filter(F.col("url") == F.col("exact_rep")).select("url"), "url"
+    exact_map = facts.join(exact, "fp").select("url", "exact_rep")
+    # near-dup clusters over the exact representatives
+    near = near_dup_components(
+        exact.select(F.col("exact_rep").alias("url"), "toks"), "url",
+        LSH_BANDS, JACCARD_NUM, JACCARD_DEN, MAX_BUCKET,
     )
-
-    # near-dup clusters over the exact-deduped corpus
-    clusters = dup_clusters(
-        exact_kept,
-        bands=lsh_bands,
-        threshold_num=jaccard_num,
-        threshold_den=jaccard_den,
-        max_bucket=max_bucket,
-        text_col="text",
-        id_col="url",
-    ).select(F.col("url").alias("curl"), F.col("rep").alias("near_rep"))
-
-    near_map = exact_kept.select("url").join(
-        clusters, F.col("url") == F.col("curl"), "left"
-    ).select(
-        "url", F.coalesce(F.col("near_rep"), F.col("url")).alias("near_rep")
+    # url -> exact rep -> near rep
+    return exact_map.join(near, F.col("exact_rep") == F.col("id"), "left").select(
+        "url", F.coalesce(F.col("component"), F.col("exact_rep")).alias("rep")
     )
-    # full map: url -> exact rep -> near rep
-    rep_map = (
-        exact_map.join(
-            near_map.select(F.col("url").alias("erurl"), "near_rep"),
-            F.col("exact_rep") == F.col("erurl"),
-        )
-        .select("url", F.col("near_rep").alias("rep"))
-    )
-    kept = pages.join(
-        rep_map.filter(F.col("url") == F.col("rep")).select("url"), "url"
-    )
-    return kept, rep_map
 
 
 def build_graph(pages: DataFrame, rep_map: DataFrame) -> DataFrame:
@@ -180,12 +165,10 @@ def run_pipeline(
 
     t0 = time.monotonic()
     n_pages = pages.count()
-    kept, rep_map = dedup_pages(pages)
-    kept = kept.persist()
-    rep_map = rep_map.persist()
-    n_kept = kept.count()
-    summary.update({"pages": n_pages, "kept_after_dedup": n_kept})
+    rep_map = dedup_pages(pages).persist()
     rep_map.write.mode("overwrite").parquet(os.path.join(out_dir, "rep_map"))
+    n_kept = rep_map.filter(F.col("url") == F.col("rep")).count()
+    summary.update({"pages": n_pages, "kept_after_dedup": n_kept})
     _stage("dedup", t0)
 
     t0 = time.monotonic()
@@ -254,7 +237,6 @@ def run_pipeline(
         summary["triangles"] = triangle_count(edges)
         _stage("triangles", t0)
 
-    kept.unpersist()
     rep_map.unpersist()
     edges.unpersist()
     walls["total"] = round(time.monotonic() - t_total, 3)

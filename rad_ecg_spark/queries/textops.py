@@ -23,7 +23,7 @@ from rad_ecg_spark.operators.dedup import (
     MINHASH_PARAMS,
     jaccard_pairs,
     minhash_lsh_candidates,
-    minhash_signatures,
+    token_sets,
 )
 from rad_ecg_spark.operators.graph_core import shuffle_partitions
 from rad_ecg_spark.operators.similarity import brute_force_topk
@@ -149,10 +149,6 @@ WHERE inter * {JACCARD_DEN} >= {JACCARD_NUM} * (sa.sz + sb.sz - inter)"""
 
 # --- MinHash signatures + LSH candidates --------------------------------
 
-def q_minhash_signatures(spark, sf_dir):
-    return minhash_signatures(_t(spark, sf_dir, "documents"))
-
-
 def _minhash_sig_sql() -> str:
     w = WORDS_SQL.format(c="text")
     h = (
@@ -172,7 +168,7 @@ SELECT doc_id, {sigs} FROM th GROUP BY doc_id"""
 
 def q_minhash_lsh_candidates(spark, sf_dir):
     return minhash_lsh_candidates(
-        _spread(_t(spark, sf_dir, "documents"), "doc_id"), bands=4
+        token_sets(_spread(_t(spark, sf_dir, "documents"), "doc_id")), bands=4
     )
 
 

@@ -27,9 +27,12 @@ def _ranks(df) -> dict:
 
 
 class TestCheckpointResume:
-    def test_kill_after_k_then_resume_equals_uninterrupted(self, spark, tmp_path):
+    @pytest.mark.parametrize("scheme", ["", "file://"], ids=["path", "file_uri"])
+    def test_kill_after_k_then_resume_equals_uninterrupted(self, spark, tmp_path, scheme):
+        """Also on a ``file://`` root, which resolves through pyarrow's
+        URI filesystem like an object-store root does."""
         pairs = random_graph(50, 200, seed=6)
-        ckdir = str(tmp_path / "ck")
+        ckdir = scheme + str(tmp_path / "ck")
 
         # "killed" after 3 iterations
         cm = CheckpointManager(spark, ckdir, "pagerank")
@@ -182,16 +185,18 @@ class TestCheckpointResume:
         full = pagerank(edges_df(spark, pairs), tol=0.0, max_iter=6)
         assert _ranks(resumed) == _ranks(full)
 
-    def test_reused_dir_resume_equals_uninterrupted(self, spark, tmp_path):
-        """Graph A runs 3 iterations, then a fresh (non-resume) run of
-        graph B over the same directory runs 3; resuming B to 6 must
-        give exactly B's uninterrupted ranks, with nothing of A's
-        snapshots left in them."""
+    @pytest.mark.parametrize("a_iters", [3, 4])
+    def test_reused_dir_resume_equals_uninterrupted(self, spark, tmp_path, a_iters):
+        """Graph A runs ``a_iters`` iterations, then a fresh (non-resume)
+        run of graph B over the same directory runs 3; resuming B to 6
+        must give exactly B's uninterrupted ranks, with nothing of A's
+        snapshots left in them — also when A ran deeper than B, so A's
+        last row is the directory's deepest."""
         a = random_graph(50, 200, seed=6)
         b = random_graph(50, 200, seed=7)
         ckdir = str(tmp_path / "ck")
-        for pairs in (a, b):
-            pagerank(edges_df(spark, pairs), tol=0.0, max_iter=3,
+        for pairs, iters in ((a, a_iters), (b, 3)):
+            pagerank(edges_df(spark, pairs), tol=0.0, max_iter=iters,
                      checkpointer=CheckpointManager(spark, ckdir, "pagerank"))
         st = PageRankStats()
         resumed = pagerank(edges_df(spark, b), tol=0.0, max_iter=6,

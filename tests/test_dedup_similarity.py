@@ -12,6 +12,7 @@ from rad_ecg_spark.operators.dedup import (
     minhash_lsh_candidates,
     minhash_signatures,
     simhash_pairs,
+    token_sets,
 )
 from rad_ecg_spark.operators.similarity import (
     brute_force_topk,
@@ -62,13 +63,13 @@ class TestJaccard:
 class TestMinHash:
     def test_identical_docs_identical_signatures(self, spark):
         sigs = {r["doc_id"]: tuple(r[f"sig_{i}"] for i in range(8))
-                for r in minhash_signatures(_docs_df(spark)).collect()}
+                for r in minhash_signatures(token_sets(_docs_df(spark))).collect()}
         assert sigs[1] == sigs[2] == sigs[3]
         assert sigs[1] != sigs[5]
 
     def test_lsh_candidates_contain_dups_not_disjoint(self, spark):
         cands = {(r["a"], r["b"]) for r in
-                 minhash_lsh_candidates(_docs_df(spark)).collect()}
+                 minhash_lsh_candidates(token_sets(_docs_df(spark))).collect()}
         assert (1, 2) in cands and (1, 3) in cands and (2, 3) in cands
         assert (5, 6) not in cands  # zero shared tokens
 

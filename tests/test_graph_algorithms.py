@@ -139,9 +139,22 @@ class TestConnectedComponents:
 
     @pytest.mark.parametrize("method", ["hashmin", "hybrid"])
     def test_materialized_labels_free_the_input_cut(self, spark, method):
+        before = _persisted_rdds(spark)
+        # an empty input: the cut's count is the one job, the cut is
+        # freed, and the empty result keeps the input's id type
+        sc = spark.sparkContext
+        group = f"cc-empty-{method}"
+        sc.setJobGroup(group, group)
+        try:
+            empty = connected_components(edges_df(spark, []), method=method)
+            assert empty.collect() == []
+            assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert empty.schema.simpleString() == "struct<id:bigint,component:bigint>"
+        assert _persisted_rdds(spark) == before
         # after a round, the labels are checkpointed loop state: the
         # result holds their blocks only, not the input cut's
-        before = _persisted_rdds(spark)
         comp = connected_components(edges_df(spark, ISLANDS), method=method)
         assert _persisted_rdds(spark) - before <= 1
         assert {r["id"]: r["component"] for r in comp.collect()} == components_oracle(ISLANDS)

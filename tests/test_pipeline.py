@@ -24,10 +24,100 @@ def _pages_with_mirrors(spark, n_sites=6, per_site=10):
     return pages.unionByName(mirror), pages
 
 
+# Near-dup fixture: word lists whose Jaccard similarities are set by hand
+# against the pipeline's 9/10 threshold.
+_BASE = ("alpha bravo charlie delta echo foxtrot golf hotel india juliet "
+         "kilo lima mike november oscar papa quebec romeo sierra tango").split()
+_PLAIN = ("amber basalt cobalt dune ember fjord garnet harbor iris jade kelp "
+          "lagoon marble nectar onyx pearl quartz reef slate tundra").split()
+_TEN = "north south east west up down left right inner outer".split()
+
+
+def _near_dup_pages(spark):
+    """(pages, expected {url: rep}):
+    - near/page-copy is near/page plus one word (J = 20/21, verified);
+    - chain/a ~ chain/b (20/21) and chain/b ~ chain/c (20/22), while
+      chain/a ~ chain/c is 19/22 < 9/10: only connected components joins
+      a and c;
+    - chain/d is an exact (upper-case, double-spaced) copy of chain/c;
+    - pair/x and pair/y differ in one of ten words (J = 9/11): an LSH
+      candidate that verification rejects;
+    - solo/z shares nothing."""
+    u = "https://{}.example/{}".format
+    rows = [
+        (u("near", "page"), " ".join(_PLAIN)),
+        (u("near", "page-copy"), " ".join(_PLAIN + ["umber"])),
+        (u("chain", "a"), " ".join(_BASE)),
+        (u("chain", "b"), " ".join(_BASE + ["uniform"])),
+        (u("chain", "c"), " ".join(_BASE[1:] + ["uniform", "victor"])),
+        (u("chain", "d"), "  ".join(_BASE[1:] + ["uniform", "victor"]).upper()),
+        (u("pair", "x"), " ".join(_TEN)),
+        (u("pair", "y"), " ".join(_TEN[:-1] + ["middle"])),
+        (u("solo", "z"), "nothing here resembles any other page at all"),
+    ]
+    expected = {
+        u("near", "page"): u("near", "page"),
+        u("near", "page-copy"): u("near", "page"),
+        u("chain", "a"): u("chain", "a"),
+        u("chain", "b"): u("chain", "a"),
+        u("chain", "c"): u("chain", "a"),
+        u("chain", "d"): u("chain", "a"),
+        u("pair", "x"): u("pair", "x"),
+        u("pair", "y"): u("pair", "y"),
+        u("solo", "z"): u("solo", "z"),
+    }
+    return spark.createDataFrame(rows, "url string, text string"), expected
+
+
 class TestDedupPages:
+    def test_near_dups_chains_and_exact_copies_map_to_one_rep(self, spark):
+        from rad_ecg_spark.operators.dedup import (
+            minhash_lsh_candidates,
+            token_sets,
+            verify_jaccard_pairs,
+        )
+        from rad_ecg_spark.plans.pipeline import (
+            JACCARD_DEN,
+            JACCARD_NUM,
+            LSH_BANDS,
+            MAX_BUCKET,
+        )
+
+        pages, expected = _near_dup_pages(spark)
+        assert {r["url"]: r["rep"] for r in dedup_pages(pages).collect()} == expected
+        # the fixture exercises each path it claims to
+        u = "https://{}.example/{}".format
+        toks = token_sets(pages, "text", "url")
+        cand = minhash_lsh_candidates(toks, "url", LSH_BANDS, MAX_BUCKET)
+        verified = {
+            (r["a"], r["b"])
+            for r in verify_jaccard_pairs(cand, toks, "url", JACCARD_NUM, JACCARD_DEN).collect()
+        }
+        cands = {(r["a"], r["b"]) for r in cand.collect()}
+        assert (u("pair", "x"), u("pair", "y")) in cands - verified
+        assert {(u("chain", "a"), u("chain", "b")), (u("chain", "b"), u("chain", "c"))} <= verified
+        assert (u("chain", "a"), u("chain", "c")) not in verified
+
+    def test_dedup_job_budget(self, spark):
+        """dedup_pages on 6 x 10 generated pages, materialized, in the
+        test session (local[4], AQE off): 6 Spark jobs with one token set
+        per page and two joins; 12 when every stage tokenized the text
+        itself and five joins surrounded the near-dup clusters."""
+        sc = spark.sparkContext
+        pages = generate_pages(spark, 6, 10)
+        group = "dedup-pages-jobs"
+        sc.setJobGroup(group, group)
+        try:
+            dedup_pages(pages).collect()
+            jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert jobs <= 9, jobs
+
     def test_mirrors_collapse_to_original(self, spark):
         both, orig = _pages_with_mirrors(spark)
-        kept, rep_map = dedup_pages(both)
+        rep_map = dedup_pages(both)
+        kept = rep_map.filter(F.col("url") == F.col("rep"))
         n_orig = orig.count()
         # every mirror url maps to the original (min-url rule: 'mirror...'
         # sorts after 'site...' only if... assert by fingerprint equality
@@ -49,7 +139,7 @@ class TestDedupPages:
 
     def test_rewritten_graph_merges_mirror_vertices(self, spark):
         both, orig = _pages_with_mirrors(spark)
-        kept, rep_map = dedup_pages(both)
+        rep_map = dedup_pages(both)
         edges = build_graph(both, rep_map)
         # no vertex from a collapsed mirror pair appears twice: every
         # endpoint must be its own representative
@@ -168,7 +258,7 @@ class TestPipelineRound5:
             ),
         )
         both = pages.unionByName(extra)
-        kept, rep_map = dedup_pages(both)
+        rep_map = dedup_pages(both)
         assert rep_map.count() == both.count()
         covered = {
             r["url"]
@@ -263,7 +353,7 @@ class TestGraphInputCut:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
         try:
             pages = generate_pages(spark, 6, 10)
-            _, rep_map = dedup_pages(pages)
+            rep_map = dedup_pages(pages)
             edges = build_graph(pages, rep_map).persist()
             edges.count()
             flat = spark.createDataFrame(edges.collect(), edges.schema)
