@@ -60,6 +60,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rad_ecg_spark.operators.graph_core import (
+    EdgeSet,
     IterStats,
     both_directions,
     edge_set,
@@ -135,7 +136,7 @@ def hashmin_step(labels: DataFrame, sym: DataFrame) -> DataFrame:
 
 
 def connected_components(
-    edges: DataFrame,
+    edges: DataFrame | EdgeSet,
     method: str = "star",
     max_iter: int = 50,
     num_partitions: int | None = None,
@@ -149,12 +150,14 @@ def connected_components(
     contraction if not yet converged — see module docstring)."""
     if method not in ("star", "hashmin", "hybrid"):
         raise ValueError(f"method must be 'star', 'hashmin' or 'hybrid', got {method!r}")
-    spark = edges.sparkSession
+    lent = isinstance(edges, EdgeSet)
     edges, n_edges = edge_set(edges)
+    spark = edges.sparkSession
     if n_edges == 0:
         # nothing to label: the optimizer plans LIMIT 0 as an empty local
         # relation, so the result runs no job and reads no freed block
-        free_local_checkpoint(edges)
+        if not lent:
+            free_local_checkpoint(edges)
         return edges.select(F.col("src").alias("id"), F.col("src").alias("component")).limit(0)
     verts = vertices_of(edges)
     if num_partitions is None:
@@ -172,7 +175,7 @@ def connected_components(
         result, reads_cut = _run(
             edges, verts, method, max_iter, num_partitions, hashmin_rounds
         )
-    if not reads_cut:
+    if not (reads_cut or lent):
         free_local_checkpoint(edges)
     return result.select("id", "component")
 

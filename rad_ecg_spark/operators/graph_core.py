@@ -6,15 +6,20 @@ Canonical edge schema everywhere in the engine: ``src``, ``dst`` (any
 orderable type — string urls or long ids). All operators accept a frame
 with those two columns and are agnostic to the vertex type.
 
-Input-cut invariant: every graph operator (``pagerank``,
-``connected_components``, ``label_propagation``, ``triangle_count``,
-``triangles``) takes its input only through ``edge_set``, which returns
-the deduplicated edge set behind a lazy ``localCheckpoint`` that its
-own count materializes — the input is read exactly once, and nothing
-the operator plans afterwards sees the input's lineage. The reason is
+Input-cut invariant, one cut per caller: every graph operator
+(``pagerank``, ``connected_components``, ``label_propagation``,
+``triangle_count``, ``triangles``) takes its input only through
+``edge_set``, which returns an ``EdgeSet``: the deduplicated edge set
+behind a lazy ``localCheckpoint`` that its own count materializes, and
+that count. Given a DataFrame, an operator takes the cut itself (the
+input is read exactly once) and frees it; given an ``EdgeSet``, it
+borrows the caller's cut, runs no job for it and leaves it in place,
+so a caller that runs several operators on one graph (``run_pipeline``)
+reads its input once and frees the cut after the last of them. Either
+way nothing the operator plans sees the input's lineage. The reason is
 join planning, not caching: over a persisted-and-counted DataFrame
 whose plan is a deep upstream derivation (the pipeline's extract/dedup
-``edges``), every self-join re-runs the broadcast jobs of that upstream
+edges), every self-join re-runs the broadcast jobs of that upstream
 plan, while a plain ``select … distinct`` reads the cache in one job.
 Measured on a 4-core host (``local[4]``, AQE on): on the pipeline graph
 of 6 × 10 generated pages, ``triangle_count`` ran 99 Spark jobs before
@@ -37,7 +42,7 @@ from __future__ import annotations
 import time
 from contextlib import contextmanager
 from dataclasses import dataclass, field
-from typing import Any, Callable
+from typing import Any, Callable, NamedTuple
 
 from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
@@ -147,13 +152,25 @@ def free_local_checkpoint(df: DataFrame | None) -> None:
         pass  # best-effort: a leaked block degrades perf, not correctness
 
 
-def edge_set(edges: DataFrame) -> tuple[DataFrame, int]:
-    """``(cut, n_edges)``: the input's distinct (src, dst) pairs behind a
-    lazy ``localCheckpoint`` that the count materializes — one job, one
-    read of the input (see the module docstring). The only way a graph
-    operator takes input; the caller frees the cut
+class EdgeSet(NamedTuple):
+    """A graph's input cut (``cut``, columns src, dst; distinct pairs,
+    materialized) and its row count. Passed to an operator it is lent:
+    the operator reads the cut and never frees it; its owner, whoever
+    called ``edge_set`` on a DataFrame, frees it with
+    ``free_local_checkpoint(es.cut)`` once no result it handed out still
+    reads it."""
+
+    cut: DataFrame
+    n_edges: int
+
+
+def edge_set(edges: DataFrame | EdgeSet) -> EdgeSet:
+    """``EdgeSet(cut, n_edges)``: the input's distinct (src, dst) pairs
+    behind a lazy ``localCheckpoint`` that the count materializes — one
+    job, one read of the input (see the module docstring). The only way
+    a graph operator takes input; the caller frees the cut
     (``free_local_checkpoint``) once the DataFrame it returns no longer
-    reads it.
+    reads it. An ``EdgeSet`` comes back as is, with no job.
 
     The cut records no key partitioning, on purpose: a self-join
     re-instances the checkpoint, and a copy whose recorded partitioning
@@ -164,6 +181,8 @@ def edge_set(edges: DataFrame) -> tuple[DataFrame, int]:
     checkpoint records none; taken with AQE off, which makes it one job
     instead of three, the narrow ``coalesce`` drops it. A consumer that
     needs a partitioning (PageRank's loop) repartitions the cut."""
+    if isinstance(edges, EdgeSet):
+        return edges
     spark = edges.sparkSession
     with pinned_loop_conf(spark):
         cut = (
@@ -172,7 +191,7 @@ def edge_set(edges: DataFrame) -> tuple[DataFrame, int]:
             .coalesce(shuffle_partitions(spark))
             .localCheckpoint(eager=False)
         )
-        return cut, cut.count()
+        return EdgeSet(cut, cut.count())
 
 
 @dataclass

@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from rad_ecg_spark.operators.graph_core import (
+    EdgeSet,
     IterStats,
     edge_set,
     free_local_checkpoint,
@@ -99,7 +100,7 @@ def label_propagation_step(
 
 
 def label_propagation(
-    edges: DataFrame,
+    edges: DataFrame | EdgeSet,
     max_iter: int = 10,
     num_partitions: int | None = None,
     stats: LabelPropStats | None = None,
@@ -119,11 +120,12 @@ def label_propagation(
     output is BITWISE identical to the unsplit plan (asserted in
     tests), not merely 1e-12-close.
     """
-    spark = edges.sparkSession
     if stats is None:
         stats = LabelPropStats()
 
+    lent = isinstance(edges, EdgeSet)
     edges, n_edges = edge_set(edges)
+    spark = edges.sparkSession
     if num_partitions is None:
         # sized on the symmetric table (2|E|), as connected components
         num_partitions = size_partitions(spark, n_edges * 2)
@@ -158,7 +160,8 @@ def label_propagation(
         max_iter,
     )
     sym.unpersist()
-    if labels is not initial:  # unmaterialized, initial still reads the cut
+    # a lent cut is its owner's; an unmaterialized initial still reads it
+    if not lent and labels is not initial:
         free_local_checkpoint(edges)
     # without this the hub-split path leaked ~2|E|+ cached rows per call
     # in a long-lived driver (ADVICE r05), and in run_pipeline the leaked

@@ -55,6 +55,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from rad_ecg_spark.operators.graph_core import (
+    EdgeSet,
     IterStats,
     edge_set,
     free_local_checkpoint,
@@ -139,7 +140,7 @@ def _prepare(cut: DataFrame, num_partitions: int):
 
 
 def pagerank(
-    edges: DataFrame,
+    edges: DataFrame | EdgeSet,
     damping: float = 0.85,
     tol: float = 1e-6,
     max_iter: int = 100,
@@ -153,7 +154,8 @@ def pagerank(
 ) -> DataFrame:
     """Returns DataFrame(id, rank). ``edges`` needs columns src, dst;
     PageRank runs on their edge set (``graph_core.edge_set``), so a
-    duplicate (src, dst) row does not inflate outdeg.
+    duplicate (src, dst) row does not inflate outdeg. An ``EdgeSet``
+    ``edges`` is read, not freed.
 
     Ranks sum to 1.0 at every iteration (dangling mass redistributed).
 
@@ -184,11 +186,12 @@ def pagerank(
     if tol_mode not in ("abs", "rel"):
         raise ValueError(f"tol_mode must be 'abs' or 'rel', got {tol_mode!r}")
     t_setup = _time.monotonic()
-    spark = edges.sparkSession
     if stats is None:
         stats = PageRankStats()
 
+    lent = isinstance(edges, EdgeSet)
     cut, n_edges = edge_set(edges)
+    spark = cut.sparkSession
     if num_partitions is None:
         # size partitions to the data: tiny graphs at full parallelism
         # pay ~6s/iteration of pure task overhead (measured)
@@ -197,7 +200,8 @@ def pagerank(
     n = verts.count()
     stats.num_vertices = n
     stats.num_edges = n_edges
-    free_local_checkpoint(cut)  # verts.count() materialized edges
+    if not lent:
+        free_local_checkpoint(cut)  # verts.count() materialized edges
     if n == 0:  # a result that reads none of the caches
         schema = verts.select("id", F.lit(0.0).alias("rank")).schema
         edges.unpersist()

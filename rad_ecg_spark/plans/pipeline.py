@@ -17,6 +17,11 @@ composable artifact:
          propagation, triangle count
       -> per-stage parquet outputs + a machine-readable run summary.
 
+Each stage's input is computed once and handed to every consumer, and
+nothing is persisted: ``rep_map`` is written and read back from its
+parquet, and the link graph is cut once (``graph_core.edge_set``), lent
+to all four graph stages as one ``EdgeSet`` and freed after the last.
+
 Every stage is the same operator the registry queries exercise (so the
 pipeline is covered by the same oracles); this module only composes
 them. Scale shape: the dedup candidate joins are banded (never O(n²)),
@@ -34,6 +39,8 @@ import contextlib
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from rad_ecg_spark.operators.graph_core import edge_set, free_local_checkpoint
 
 
 # near-dup: word-set Jaccard >= 9/10 over 4-band MinHash-LSH candidates,
@@ -165,15 +172,19 @@ def run_pipeline(
 
     t0 = time.monotonic()
     n_pages = pages.count()
-    rep_map = dedup_pages(pages).persist()
-    rep_map.write.mode("overwrite").parquet(os.path.join(out_dir, "rep_map"))
+    # read back flat: build_graph over the written rows plans fewer jobs
+    # than over a frame whose lineage reads the dedup components
+    rep_path = os.path.join(out_dir, "rep_map")
+    dedup_pages(pages).write.mode("overwrite").parquet(rep_path)
+    rep_map = spark.read.parquet(rep_path)
     n_kept = rep_map.filter(F.col("url") == F.col("rep")).count()
     summary.update({"pages": n_pages, "kept_after_dedup": n_kept})
     _stage("dedup", t0)
 
     t0 = time.monotonic()
-    edges = build_graph(pages, rep_map).persist()
-    summary["edges"] = edges.count()
+    # the one cut of the link graph, lent to every graph stage below
+    graph = edge_set(build_graph(pages, rep_map))
+    summary["edges"] = graph.n_edges
     _stage("extract_build_graph", t0)
 
     if "pagerank" in algos:
@@ -192,7 +203,7 @@ def run_pipeline(
         with ck if ck is not None else contextlib.nullcontext():
             st = PageRankStats()
             ranks = pagerank(
-                edges, tol=tol, tol_mode=tol_mode, max_iter=max_iter,
+                graph, tol=tol, tol_mode=tol_mode, max_iter=max_iter,
                 checkpointer=ck, resume=resume, stats=st,
                 hub_degree_threshold=hub_degree_threshold,
             )
@@ -208,7 +219,7 @@ def run_pipeline(
         from rad_ecg_spark.operators.components import connected_components
 
         t0 = time.monotonic()
-        cc = connected_components(edges, method="hybrid")
+        cc = connected_components(graph, method="hybrid")
         cc.write.mode("overwrite").parquet(os.path.join(out_dir, "components"))
         summary["components"] = cc.select("component").distinct().count()
         _stage("components", t0)
@@ -218,7 +229,7 @@ def run_pipeline(
         t0 = time.monotonic()
         lst = LabelPropStats()
         lp = label_propagation(
-            edges, max_iter=min(max_iter, 30), stats=lst,
+            graph, max_iter=min(max_iter, 30), stats=lst,
             hub_degree_threshold=hub_degree_threshold,
         )
         lp.write.mode("overwrite").parquet(os.path.join(out_dir, "labels"))
@@ -234,11 +245,10 @@ def run_pipeline(
         from rad_ecg_spark.operators.triangles import triangle_count
 
         t0 = time.monotonic()
-        summary["triangles"] = triangle_count(edges)
+        summary["triangles"] = triangle_count(graph)
         _stage("triangles", t0)
 
-    rep_map.unpersist()
-    edges.unpersist()
+    free_local_checkpoint(graph.cut)
     walls["total"] = round(time.monotonic() - t_total, 3)
     summary["stage_wall_s"] = walls
     os.makedirs(out_dir, exist_ok=True)

@@ -341,6 +341,17 @@ def test_sigkill_mid_pagerank_then_resume_matches_uninterrupted(tmp_path):
     assert (a - b.reindex(a.index)).abs().max() < 1e-12
 
 
+def _edges_parquet(path: str, pairs) -> str:
+    """``pairs`` as a one-file (src, dst) parquet table at ``path``."""
+    import pandas as pd
+
+    os.makedirs(path)
+    pd.DataFrame(pairs, columns=["src", "dst"]).to_parquet(
+        os.path.join(path, "part-0.parquet")
+    )
+    return path
+
+
 def test_run_pagerank_job_resumes_to_in_process_ranks(spark, tmp_path):
     """jobs/run_pagerank.py end to end: 3 iterations with async
     checkpoints, then --resume to 5; the job's ranks match an in-process
@@ -349,11 +360,7 @@ def test_run_pagerank_job_resumes_to_in_process_ranks(spark, tmp_path):
     import pandas as pd
 
     pairs = random_graph(50, 200, seed=6)
-    edges = str(tmp_path / "edges")
-    os.makedirs(edges)
-    pd.DataFrame(pairs, columns=["src", "dst"]).to_parquet(
-        os.path.join(edges, "part-0.parquet")
-    )
+    edges = _edges_parquet(str(tmp_path / "edges"), pairs)
     out, ck = str(tmp_path / "ranks"), str(tmp_path / "ck")
 
     def run(*extra: str) -> dict:
@@ -374,3 +381,31 @@ def test_run_pagerank_job_resumes_to_in_process_ranks(spark, tmp_path):
     )
     assert set(got.index) == set(want.index)
     assert (got - want.reindex(got.index)).abs().max() < 1e-12
+
+
+@pytest.mark.parametrize("algo", ["components", "triangles"])
+def test_run_graph_job_matches_in_process_operator(spark, tmp_path, algo):
+    """jobs/run_graph.py end to end: the job's output equals the
+    in-process operator's on the same graph, exactly (integer ids and
+    counts; the job runs on 2 cores)."""
+    import pandas as pd
+
+    from rad_ecg_spark.operators.components import connected_components
+    from rad_ecg_spark.operators.triangles import triangles
+
+    pairs = random_graph(50, 200, seed=6)
+    edges = _edges_parquet(str(tmp_path / "edges"), pairs)
+    out = str(tmp_path / algo)
+    info = _run_job([
+        sys.executable, os.path.join(REPO, "jobs", "run_graph.py"),
+        "--algo", algo, "--edges", edges, "--out", out,
+    ])
+    if algo == "components":
+        want = connected_components(edges_df(spark, pairs), method="hybrid")
+    else:
+        want = triangles(edges_df(spark, pairs))
+    got = pd.read_parquet(out)[want.columns]
+    assert info["rows"] == len(got)
+    assert sorted(got.itertuples(index=False)) == sorted(
+        want.toPandas().itertuples(index=False)
+    )

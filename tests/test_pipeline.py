@@ -4,6 +4,7 @@ outputs must land on disk with a consistent summary."""
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 
@@ -334,6 +335,42 @@ class TestPipelineRound5:
         )
 
 
+@contextlib.contextmanager
+def _aqe_on(spark):
+    """The engine default (the test session turns AQE off)."""
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+
+
+def _jobs(spark, group: str, fn) -> int:
+    """Spark jobs that ``fn()`` runs."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _graph_ops():
+    from rad_ecg_spark.operators.components import connected_components
+    from rad_ecg_spark.operators.labelprop import label_propagation
+    from rad_ecg_spark.operators.pagerank import pagerank
+    from rad_ecg_spark.operators.triangles import triangle_count
+
+    return {
+        "pagerank": lambda e: pagerank(e, tol=0.0, max_iter=3).collect(),
+        "components": lambda e: connected_components(e, method="hybrid").collect(),
+        "labelprop": lambda e: label_propagation(e, max_iter=3).collect(),
+        "triangles": triangle_count,
+    }
+
+
 class TestGraphInputCut:
     def test_pipeline_edges_cost_no_more_jobs_than_a_flat_copy(self, spark):
         """Each graph operator reads its input once, through the edge-set
@@ -343,35 +380,73 @@ class TestGraphInputCut:
         its joins. Under AQE, the engine default: with AQE off a cut
         carries its origin's size statistics and plans other joins than
         a flat copy does."""
-        from rad_ecg_spark.operators.components import connected_components
-        from rad_ecg_spark.operators.labelprop import label_propagation
-        from rad_ecg_spark.operators.pagerank import pagerank
-        from rad_ecg_spark.operators.triangles import triangle_count
-
-        sc = spark.sparkContext
-        aqe = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        try:
+        with _aqe_on(spark):
             pages = generate_pages(spark, 6, 10)
             rep_map = dedup_pages(pages)
             edges = build_graph(pages, rep_map).persist()
             edges.count()
             flat = spark.createDataFrame(edges.collect(), edges.schema)
-            ops = {
-                "pagerank": lambda e: pagerank(e, tol=0.0, max_iter=3).collect(),
-                "components": lambda e: connected_components(e, method="hybrid").collect(),
-                "labelprop": lambda e: label_propagation(e, max_iter=3).collect(),
-                "triangles": triangle_count,
-            }
             jobs: dict[str, dict[str, int]] = {"pipeline": {}, "flat": {}}
-            for name, op in ops.items():
+            for name, op in _graph_ops().items():
                 for which, e in (("pipeline", edges), ("flat", flat)):
-                    group = f"input-cut-{name}-{which}"
-                    sc.setJobGroup(group, group)
-                    op(e)
-                    jobs[which][name] = len(sc.statusTracker().getJobIdsForGroup(group))
+                    jobs[which][name] = _jobs(
+                        spark, f"input-cut-{name}-{which}", lambda: op(e)
+                    )
             edges.unpersist()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            spark.conf.set("spark.sql.adaptive.enabled", aqe)
         assert jobs["pipeline"] == jobs["flat"], jobs
+
+    def test_a_lent_edge_set_costs_no_cut_and_outlives_the_operators(self, spark):
+        """An EdgeSet passed to an operator is lent: the operator runs
+        exactly one job fewer than on the raw frame (the cut's count),
+        and leaves the cut's blocks in place for the next operator."""
+        from rad_ecg_spark.operators.graph_core import edge_set, free_local_checkpoint
+
+        with _aqe_on(spark):
+            pages = generate_pages(spark, 6, 10)
+            graph = build_graph(pages, dedup_pages(pages))
+            flat = spark.createDataFrame(graph.collect(), graph.schema)
+            es = edge_set(flat)
+            cut_rdd = es.cut._jdf.queryExecution().analyzed().rdd().id()
+            jobs: dict[str, dict[str, int]] = {"flat": {}, "edge_set": {}}
+            for name, op in _graph_ops().items():
+                for which, e in (("flat", flat), ("edge_set", es)):
+                    jobs[which][name] = _jobs(
+                        spark, f"lent-cut-{name}-{which}", lambda: op(e)
+                    )
+        assert {k: v - 1 for k, v in jobs["flat"].items()} == jobs["edge_set"], jobs
+        assert spark.sparkContext._jsc.getPersistentRDDs().containsKey(cut_rdd)
+        assert es.cut.count() == es.n_edges
+        free_local_checkpoint(es.cut)
+        assert not spark.sparkContext._jsc.getPersistentRDDs().containsKey(cut_rdd)
+
+    def test_run_pipeline_cuts_its_link_graph_once(self, spark, tmp_path, monkeypatch):
+        """run_pipeline cuts its link graph once and lends the EdgeSet to
+        all four graph stages, which take no cut of their own. Cuts are
+        counted from build_graph on: the dedup stage's connected
+        components, over its verified pairs, cut that separate input
+        inside dedup_pages."""
+        from rad_ecg_spark.operators import components, graph_core, labelprop
+        from rad_ecg_spark.operators import pagerank, triangles
+        from rad_ecg_spark.plans import pipeline
+
+        built: list[bool] = []
+        cuts: list[int] = []
+        real_build, real_cut = pipeline.build_graph, graph_core.edge_set
+
+        def build(*args):
+            built.append(True)
+            return real_build(*args)
+
+        def cut(edges):
+            es = real_cut(edges)
+            if built and es is not edges:
+                cuts.append(es.n_edges)
+            return es
+
+        monkeypatch.setattr(pipeline, "build_graph", build)
+        for mod in (pipeline, pagerank, components, labelprop, triangles):
+            monkeypatch.setattr(mod, "edge_set", cut, raising=False)
+        both, _ = _pages_with_mirrors(spark)
+        summary = run_pipeline(spark, both, str(tmp_path / "out"), max_iter=3)
+        assert built == [True]
+        assert cuts == [summary["edges"]]
