@@ -1,14 +1,21 @@
-"""spark-submit entry point for the non-PageRank graph algorithms.
+"""spark-submit entry point for the graph algorithms over a (src, dst)
+parquet table.
 
     python jobs/make_pyfiles.py          # -> dist/rad_ecg_spark.zip
     spark-submit --py-files dist/rad_ecg_spark.zip jobs/run_graph.py \
-        --algo {components|labelprop|triangles} \
+        --algo {pagerank|components|labelprop|triangles} \
         --edges /path/to/edges_parquet --out /path/to/result \
-        [--max-iter N] [--partitions P]
+        [--max-iter N] [--checkpoint-dir /path/to/ck [--resume]]
 
-Input: parquet with columns (src, dst); outputs:
-  components -> (id, component), labelprop -> (id, label),
-  triangles  -> (id, tri_count).
+Outputs: pagerank -> (id, rank), components -> (id, component),
+labelprop -> (id, label), triangles -> (id, tri_count). The job prints
+one JSON line with ``algo``, the output's ``rows`` and the run's facts.
+
+PageRank with --checkpoint-dir commits an async checkpoint every
+iteration, and --resume restarts it from the last complete one; the
+other algorithms reject the PageRank options. Components run the hybrid
+method. A pages table goes through jobs/run_web_pipeline.py, which
+dedups the pages before it builds the link graph.
 """
 
 from __future__ import annotations
@@ -20,16 +27,36 @@ import json
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--algo", required=True,
-                    choices=["components", "labelprop", "triangles"])
-    ap.add_argument("--edges", required=True)
+                    choices=["pagerank", "components", "labelprop", "triangles"])
+    ap.add_argument("--edges", required=True, help="parquet dir with (src, dst)")
     ap.add_argument("--out", required=True)
-    ap.add_argument("--max-iter", type=int, default=50)
-    ap.add_argument("--method", default="hybrid",
-                    choices=["hybrid", "hashmin", "star"],
-                    help="components only: hybrid (capped hashmin + star "
-                         "on the contraction) is the recommended default")
-    ap.add_argument("--partitions", type=int)
+    ap.add_argument("--max-iter", type=int,
+                    help="default: 100 for pagerank, 50 for components and labelprop")
+    ap.add_argument("--checkpoint-dir", help="pagerank only")
+    ap.add_argument("--resume", action="store_true",
+                    help="pagerank only: restart from the last complete checkpoint")
+    ap.add_argument("--damping", type=float, default=0.85, help="pagerank only")
+    ap.add_argument("--tol", type=float, default=1e-6, help="pagerank only")
+    ap.add_argument("--tol-mode", choices=("abs", "rel"), default="abs",
+                    help="pagerank only: abs L-inf delta < tol, or rel "
+                         "(scale-invariant: effective tolerance tol/n)")
+    ap.add_argument(
+        "--hub-degree-threshold", type=int,
+        help="pagerank only: srcs with outdeg >= N take the broadcast "
+             "supernode path (operators/skew.py)",
+    )
     args = ap.parse_args()
+    pagerank_only = [
+        k for k in ("checkpoint_dir", "resume", "damping", "tol", "tol_mode",
+                    "hub_degree_threshold")
+        if getattr(args, k) != ap.get_default(k)
+    ]
+    if args.algo != "pagerank" and pagerank_only:
+        ap.error(f"--{pagerank_only[0].replace('_', '-')} applies to --algo pagerank only")
+    if args.resume and not args.checkpoint_dir:
+        ap.error("--resume needs --checkpoint-dir")
+    if args.max_iter is None:
+        args.max_iter = 100 if args.algo == "pagerank" else 50
 
     from pyspark.sql import SparkSession
 
@@ -38,21 +65,34 @@ def main() -> None:
     edges = spark.read.parquet(args.edges)
 
     info: dict = {"algo": args.algo}
-    if args.algo == "components":
+    if args.algo == "pagerank":
+        from rad_ecg_spark.operators.pagerank import PageRankStats, pagerank
+        from rad_ecg_spark.plans.checkpoint import CheckpointManager
+
+        ck = (
+            CheckpointManager(spark, args.checkpoint_dir, "pagerank", async_write=True)
+            if args.checkpoint_dir
+            else None
+        )
+        st = PageRankStats()
+        out = pagerank(
+            edges, damping=args.damping, tol=args.tol, tol_mode=args.tol_mode,
+            max_iter=args.max_iter, checkpointer=ck, resume=args.resume,
+            stats=st, hub_degree_threshold=args.hub_degree_threshold,
+        )
+        info.update(vertices=st.num_vertices, edges=st.num_edges,
+                    iterations=st.iterations, converged=st.converged,
+                    resumed_from=st.resumed_from,
+                    final_delta=st.deltas[-1] if st.deltas else None)
+    elif args.algo == "components":
         from rad_ecg_spark.operators.components import connected_components
 
-        out = connected_components(
-            edges, method=args.method, max_iter=args.max_iter,
-            num_partitions=args.partitions
-        )
-        info["method"] = args.method
+        out = connected_components(edges, max_iter=args.max_iter)
     elif args.algo == "labelprop":
         from rad_ecg_spark.operators.labelprop import LabelPropStats, label_propagation
 
         st = LabelPropStats()
-        out = label_propagation(
-            edges, max_iter=args.max_iter, num_partitions=args.partitions, stats=st
-        )
+        out = label_propagation(edges, max_iter=args.max_iter, stats=st)
         info.update(iterations=st.iterations, converged=st.converged,
                     changes=st.changes)
     else:

@@ -37,6 +37,8 @@ def main() -> None:
                     help="PageRank convergence criterion: abs L-inf delta, "
                          "or rel (scale-invariant, effective tol/n)")
     args = ap.parse_args()
+    if args.resume and not args.checkpoint_dir:
+        ap.error("--resume needs --checkpoint-dir")
 
     from pyspark.sql import SparkSession
 

@@ -19,18 +19,18 @@ same output) and as the measured fast path on LOW-diameter graphs:
 O(diameter) rounds, each one join+min-agg — at 10M edges / 1M vertices
 (diameter ~7) hashmin converges in 112 s vs star's 216 s on local[32].
 
-``hybrid`` (the default for the registry query) combines them: run
-hashmin for a capped number of rounds — enough for any web-shaped
-(small-diameter) graph to finish — then, if not converged, CONTRACT the
-graph by the partial labels (quotient edges (label(u), label(v)),
-usually orders of magnitude smaller) and finish with star's O(log n)
-rounds on the contraction. Correctness: hashmin labels are component-
-consistent (label(v) is a vertex of v's component, and the component's
-global-min vertex always keeps itself as label), so contraction
-preserves connectivity and star's min-root over quotient nodes IS the
-original min vertex id. This keeps hashmin's measured 2x win on the
-common case without giving up the worst-case round bound on a
-long-chain component.
+``hybrid`` (the default, and the method every engine caller runs)
+combines them: run hashmin for ``HASHMIN_ROUNDS`` rounds — enough for
+any web-shaped (small-diameter) graph to finish — then, if not
+converged, CONTRACT the graph by the partial labels (quotient edges
+(label(u), label(v)), usually orders of magnitude smaller) and finish
+with star's O(log n) rounds on the contraction. Correctness: hashmin
+labels are component-consistent (label(v) is a vertex of v's component,
+and the component's global-min vertex always keeps itself as label), so
+contraction preserves connectivity and star's min-root over quotient
+nodes IS the original min vertex id. This keeps hashmin's measured 2x
+win on the common case without giving up the worst-case round bound on
+a long-chain component.
 
 Session lifetime note: results are projections over localCheckpoint
 state (and the input cut, ``graph_core.edge_set``) whose blocks live
@@ -72,6 +72,10 @@ from rad_ecg_spark.operators.graph_core import (
     symmetric,
     vertices_of,
 )
+
+# hybrid's hashmin cap: enough rounds for any web-shaped (small-diameter)
+# graph to finish before the star-on-contraction fallback
+HASHMIN_ROUNDS = 12
 
 
 def _min_of_neighborhood(sym: DataFrame) -> DataFrame:
@@ -137,17 +141,15 @@ def hashmin_step(labels: DataFrame, sym: DataFrame) -> DataFrame:
 
 def connected_components(
     edges: DataFrame | EdgeSet,
-    method: str = "star",
+    method: str = "hybrid",
     max_iter: int = 50,
-    num_partitions: int | None = None,
-    hashmin_rounds: int = 12,
 ) -> DataFrame:
     """DataFrame(id, component); component = min id in the component.
 
-    ``method``: "star" (worst-case-safe O(log n) rounds), "hashmin"
-    (O(diameter) rounds, fastest on web-shaped graphs), or "hybrid"
-    (hashmin capped at ``hashmin_rounds``, then star on the label
-    contraction if not yet converged — see module docstring)."""
+    ``method``: "hybrid" (hashmin capped at ``HASHMIN_ROUNDS``, then
+    star on the label contraction if not yet converged — see module
+    docstring), "star" (worst-case-safe O(log n) rounds) or "hashmin"
+    (O(diameter) rounds, fastest on web-shaped graphs)."""
     if method not in ("star", "hashmin", "hybrid"):
         raise ValueError(f"method must be 'star', 'hashmin' or 'hybrid', got {method!r}")
     lent = isinstance(edges, EdgeSet)
@@ -160,11 +162,10 @@ def connected_components(
             free_local_checkpoint(edges)
         return edges.select(F.col("src").alias("id"), F.col("src").alias("component")).limit(0)
     verts = vertices_of(edges)
-    if num_partitions is None:
-        # size on the symmetric edge table (2|E|) — the rows every round
-        # actually moves; vertex-count sizing left a 3M-row sym table on
-        # 2 partitions at sf1.0 (1.2 s/round vs 0.45 s at 16).
-        num_partitions = size_partitions(spark, n_edges * 2)
+    # size on the symmetric edge table (2|E|) — the rows every round
+    # actually moves; vertex-count sizing left a 3M-row sym table on 2
+    # partitions at sf1.0 (1.2 s/round vs 0.45 s at 16).
+    num_partitions = size_partitions(spark, n_edges * 2)
 
     # pinned around the whole run, not only inside iterate(): the state
     # set-ups between and around the loops (hashmin's initial labels,
@@ -172,9 +173,7 @@ def connected_components(
     # planned here, and under AQE even a lazy localCheckpoint runs its
     # shuffle stages as soon as it is taken
     with pinned_loop_conf(spark, num_partitions):
-        result, reads_cut = _run(
-            edges, verts, method, max_iter, num_partitions, hashmin_rounds
-        )
+        result, reads_cut = _run(edges, verts, method, max_iter, num_partitions)
     if not (reads_cut or lent):
         free_local_checkpoint(edges)
     return result.select("id", "component")
@@ -257,7 +256,7 @@ def _star_components(edges, num_partitions, max_iter):
     )
 
 
-def _run(edges, verts, method, max_iter, num_partitions, hashmin_rounds=12):
+def _run(edges, verts, method, max_iter, num_partitions):
     """(result, reads_cut): ``reads_cut`` is False when the result reads
     only materialized loop state, so the caller can free the input cut.
     The star result joins ``verts``, a view of the cut, and hashmin's
@@ -269,7 +268,7 @@ def _run(edges, verts, method, max_iter, num_partitions, hashmin_rounds=12):
             .select("id", F.coalesce(F.col("component"), F.col("id")).alias("component"))
         )
         return result, True
-    rounds = max_iter if method == "hashmin" else hashmin_rounds
+    rounds = max_iter if method == "hashmin" else HASHMIN_ROUNDS
     labels, converged, ran = _hashmin(edges, verts, rounds, num_partitions)
     if method == "hashmin" or converged:
         return labels, ran == 0

@@ -521,7 +521,7 @@ def near_dup_components(
     # faster than pure star on the sf0.01 pair graph (7.6 vs 28.3 s)
     # and it keeps star's worst-case round bound on chain-shaped
     # clusters — same default rationale as the registry CC query.
-    return connected_components(verified, method="hybrid")
+    return connected_components(verified)
 
 
 def dup_clusters(

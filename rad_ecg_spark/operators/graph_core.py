@@ -72,13 +72,11 @@ def shuffle_partitions(spark) -> int:
     return int(spark.conf.get("spark.sql.shuffle.partitions"))
 
 
-def size_partitions(spark, n_rows: int, configured: int | None = None) -> int:
+def size_partitions(spark, n_rows: int) -> int:
     """Partition count proportional to data size, capped by the session
     shuffle-partition setting (which on a real cluster is sized to
-    executor count)."""
-    if configured is None:
-        configured = shuffle_partitions(spark)
-    return max(2, min(configured, n_rows // EDGE_ROWS_PER_PARTITION + 1))
+    executor count). The one sizing rule of the graph operators."""
+    return max(2, min(shuffle_partitions(spark), n_rows // EDGE_ROWS_PER_PARTITION + 1))
 
 
 @contextmanager
@@ -218,7 +216,6 @@ def iterate(
     start: int = 0,
     prev: Any = None,
     checkpointer=None,
-    checkpoint_every: int = 1,
     snapshot: Callable[[DataFrame, Row], dict] | None = None,
 ) -> DataFrame:
     """Run ``state = step(state, prev)`` from iteration ``start`` until
@@ -245,13 +242,16 @@ def iterate(
       async commit may still be writing the superseded state;
     - ``stats`` gets the iteration count, the wall (durable commit time
       excluded), ``stats.record(row)`` and the converged flag;
-    - every ``checkpoint_every`` iterations ``checkpointer.commit`` gets
-      ``snapshot(state, row)``, and the last commit lands before return;
+    - every iteration ``checkpointer.commit`` gets ``snapshot(state,
+      row)``, and the last commit lands before return;
+    - ``stats.iterations`` counts from ``start``, so a resume at or past
+      ``max_iter`` reports the resumed-from iteration, not 0;
     - a run from iteration 0 starts a new checkpoint generation
       (``checkpointer.clear()``), so a later resume reads this run only.
     """
     if checkpointer is not None and start == 0:
         checkpointer.clear()
+    stats.iterations = start
     with pinned_loop_conf(state.sparkSession, num_partitions):
         for it in range(start, max_iter):
             t_iter = time.monotonic()
@@ -264,7 +264,7 @@ def iterate(
             stats.iterations = it + 1
             stats.record(row)
             stats.iter_wall_s.append(round(time.monotonic() - t_iter, 3))
-            if checkpointer is not None and (it + 1) % checkpoint_every == 0:
+            if checkpointer is not None:
                 checkpointer.commit(iteration=it + 1, **snapshot(state, row))
             if done(row, prev):
                 stats.converged = True

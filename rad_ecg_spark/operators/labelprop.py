@@ -102,7 +102,6 @@ def label_propagation_step(
 def label_propagation(
     edges: DataFrame | EdgeSet,
     max_iter: int = 10,
-    num_partitions: int | None = None,
     stats: LabelPropStats | None = None,
     hub_degree_threshold: int | None = None,
 ) -> DataFrame:
@@ -125,10 +124,8 @@ def label_propagation(
 
     lent = isinstance(edges, EdgeSet)
     edges, n_edges = edge_set(edges)
-    spark = edges.sparkSession
-    if num_partitions is None:
-        # sized on the symmetric table (2|E|), as connected components
-        num_partitions = size_partitions(spark, n_edges * 2)
+    # sized on the symmetric table (2|E|), as connected components
+    num_partitions = size_partitions(edges.sparkSession, n_edges * 2)
     # lazy persist: HubSplit's counts or round 1's join materialize it
     sym = symmetric(edges, num_partitions).persist(StorageLevel.MEMORY_AND_DISK)
 

@@ -144,9 +144,7 @@ def pagerank(
     damping: float = 0.85,
     tol: float = 1e-6,
     max_iter: int = 100,
-    num_partitions: int | None = None,
     checkpointer: CheckpointManager | None = None,
-    checkpoint_every: int = 1,
     resume: bool = False,
     stats: PageRankStats | None = None,
     hub_degree_threshold: int | None = None,
@@ -158,6 +156,12 @@ def pagerank(
     ``edges`` is read, not freed.
 
     Ranks sum to 1.0 at every iteration (dangling mass redistributed).
+
+    ``checkpointer``: commits every iteration's ranks (see
+    ``plans.checkpoint.CheckpointManager`` for why there is one
+    cadence). ``resume=True`` starts from its last complete iteration,
+    or from 0 over an empty directory, and needs a ``checkpointer``
+    (ValueError otherwise: there is nothing to resume from).
 
     ``tol_mode``: convergence criterion for ``tol``.
       - ``"abs"`` (default): max_v |rank_{k+1}(v) - rank_k(v)| < tol.
@@ -185,6 +189,8 @@ def pagerank(
 
     if tol_mode not in ("abs", "rel"):
         raise ValueError(f"tol_mode must be 'abs' or 'rel', got {tol_mode!r}")
+    if resume and checkpointer is None:
+        raise ValueError("resume=True needs a checkpointer to resume from")
     t_setup = _time.monotonic()
     if stats is None:
         stats = PageRankStats()
@@ -192,10 +198,9 @@ def pagerank(
     lent = isinstance(edges, EdgeSet)
     cut, n_edges = edge_set(edges)
     spark = cut.sparkSession
-    if num_partitions is None:
-        # size partitions to the data: tiny graphs at full parallelism
-        # pay ~6s/iteration of pure task overhead (measured)
-        num_partitions = size_partitions(spark, n_edges)
+    # size partitions to the data: tiny graphs at full parallelism pay
+    # ~6s/iteration of pure task overhead (measured)
+    num_partitions = size_partitions(spark, n_edges)
     edges, verts = _prepare(cut, num_partitions)
     n = verts.count()
     stats.num_vertices = n
@@ -216,7 +221,7 @@ def pagerank(
 
     start_iter = 0
     ranks = None
-    if resume and checkpointer is not None:
+    if resume:
         last = checkpointer.last_complete()
         if last is not None:
             start_iter = last
@@ -265,7 +270,6 @@ def pagerank(
         start=start_iter,
         prev={"dangling": dangling},
         checkpointer=checkpointer,
-        checkpoint_every=checkpoint_every,
         snapshot=lambda state, row: dict(
             state=state.select("id", "rank"),
             rows=n,

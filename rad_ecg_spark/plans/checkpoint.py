@@ -52,13 +52,13 @@ class CheckpointManager:
         one first), so meta rows land in iteration order;
       - callers that free superseded state blocks (localCheckpoint) must
         call wait() first — the iterative loops in operators/ do.
-    Measured at 10M edges to 1e-6 convergence (BENCH/BASELINE.md
-    round-4): the round-3 protocol (meta row via a coalesce(1) Spark
-    job) cost 3.9x the plain wall; replacing that one-row job with the
-    driver-side pyarrow append (_append_meta_row) brings SYNC
-    per-iteration checkpointing to 1.15x plain, async to 1.07x and
-    checkpoint_every=5 to 1.10x — i.e. durable per-iteration lineage is
-    now within noise of free at bench scale.
+    One commit cadence, every iteration, because a sparser one buys
+    nothing: measured at 10M edges to 1e-6 convergence (BENCH/BASELINE.md
+    round-4), async commits every iteration cost 1.07x the plain wall,
+    against 1.10x for sync commits every 5 iterations (sync every
+    iteration: 1.15x). That is with the driver-side pyarrow ``_meta``
+    append (``_append_meta_row``); the round-3 protocol, a coalesce(1)
+    Spark job per row, cost 3.9x.
     """
 
     def __init__(

@@ -219,7 +219,7 @@ def run_pipeline(
         from rad_ecg_spark.operators.components import connected_components
 
         t0 = time.monotonic()
-        cc = connected_components(graph, method="hybrid")
+        cc = connected_components(graph)
         cc.write.mode("overwrite").parquet(os.path.join(out_dir, "components"))
         summary["components"] = cc.select("component").distinct().count()
         _stage("components", t0)

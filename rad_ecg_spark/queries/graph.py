@@ -85,12 +85,11 @@ def q_pagerank_5iter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # hybrid: hashmin (the measured 2x fast path on this low-diameter
-    # graph) capped at 12 rounds, star-on-contraction as the worst-case
-    # net — see operators/components.py docstring and BENCH/BASELINE.md
-    return connected_components(
-        derived_edges(spark, sf_dir, dedup=False), method="hybrid"
-    )
+    # hybrid (the default): hashmin (the measured 2x fast path on this
+    # low-diameter graph) capped at HASHMIN_ROUNDS, star-on-contraction
+    # as the worst-case net — see operators/components.py docstring and
+    # BENCH/BASELINE.md
+    return connected_components(derived_edges(spark, sf_dir, dedup=False))
 
 
 def q_labelprop_3iter(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -73,24 +73,3 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
-
-def ship_package(spark: SparkSession) -> str:
-    """Zip rad_ecg_spark and addPyFile it so executors can unpickle our
-    UDFs regardless of driver cwd — the programmatic equivalent of
-    ``spark-submit --py-files rad_ecg_spark.zip`` (north_rule packaging
-    requirement). Returns the zip path."""
-    import os as _os
-    import tempfile
-    import zipfile
-
-    pkg_dir = _os.path.dirname(_os.path.abspath(__file__))
-    root = _os.path.dirname(pkg_dir)
-    zpath = _os.path.join(tempfile.gettempdir(), "rad_ecg_spark.zip")
-    with zipfile.ZipFile(zpath, "w") as zf:
-        for dirpath, _dirs, files in _os.walk(pkg_dir):
-            for f in files:
-                if f.endswith(".py"):
-                    full = _os.path.join(dirpath, f)
-                    zf.write(full, _os.path.relpath(full, root))
-    spark.sparkContext.addPyFile(zpath)
-    return zpath

@@ -73,6 +73,30 @@ class TestCheckpointResume:
         assert s.resumed_from is None
         assert s.iterations == 2
 
+    @pytest.mark.parametrize("max_iter", [4, 3])
+    def test_resume_at_or_past_max_iter_counts_resumed_iterations(
+        self, spark, tmp_path, max_iter
+    ):
+        """A resume with nothing left to run returns the checkpointed
+        ranks and counts the iterations behind them, not 0."""
+        edges = edges_df(spark, random_graph(30, 100, seed=12))
+        ckdir = str(tmp_path / "ck")
+        want = _ranks(pagerank(
+            edges, tol=0.0, max_iter=4,
+            checkpointer=CheckpointManager(spark, ckdir, "pagerank"),
+        ))
+        st = PageRankStats()
+        resumed = pagerank(edges, tol=0.0, max_iter=max_iter,
+                           checkpointer=CheckpointManager(spark, ckdir, "pagerank"),
+                           resume=True, stats=st)
+        assert st.resumed_from == 4 and st.iterations == 4
+        assert _ranks(resumed) == want
+
+    def test_resume_without_checkpointer_raises(self, spark):
+        with pytest.raises(ValueError, match="checkpointer"):
+            pagerank(edges_df(spark, random_graph(20, 60, seed=13)), tol=0.0,
+                     max_iter=2, resume=True)
+
     def test_async_commit_equals_sync_and_resumes(self, spark, tmp_path):
         """async_write=True must leave the identical on-disk protocol:
         in-order complete meta rows, loadable final state equal to the
@@ -95,26 +119,6 @@ class TestCheckpointResume:
                            checkpointer=cm2, resume=True, stats=s2)
         assert s2.resumed_from == 4 and s2.iterations == 7
         full = pagerank(edges_df(spark, pairs), tol=0.0, max_iter=7)
-        assert _ranks(resumed) == _ranks(full)
-
-    def test_checkpoint_every_n_resumes_from_multiple(self, spark, tmp_path):
-        """checkpoint_every=2 over 5 iterations leaves snapshots at 2 and
-        4; resume restarts from 4 and matches the uninterrupted run."""
-        pairs = random_graph(30, 120, seed=22)
-        ckdir = str(tmp_path / "ck-every")
-        cm = CheckpointManager(spark, ckdir, "pagerank")
-        pagerank(edges_df(spark, pairs), tol=0.0, max_iter=5,
-                 checkpointer=cm, checkpoint_every=2)
-        meta = cm.meta().orderBy("iteration").collect()
-        assert [r["iteration"] for r in meta] == [2, 4]
-        assert cm.last_complete() == 4
-        cm2 = CheckpointManager(spark, ckdir, "pagerank")
-        s2 = PageRankStats()
-        resumed = pagerank(edges_df(spark, pairs), tol=0.0, max_iter=8,
-                           checkpointer=cm2, resume=True, stats=s2,
-                           checkpoint_every=2)
-        assert s2.resumed_from == 4 and s2.iterations == 8
-        full = pagerank(edges_df(spark, pairs), tol=0.0, max_iter=8)
         assert _ranks(resumed) == _ranks(full)
 
     @pytest.mark.parametrize("async_write", [False, True])
@@ -352,8 +356,15 @@ def _edges_parquet(path: str, pairs) -> str:
     return path
 
 
-def test_run_pagerank_job_resumes_to_in_process_ranks(spark, tmp_path):
-    """jobs/run_pagerank.py end to end: 3 iterations with async
+def _graph_cmd(algo: str, edges: str, out: str, *extra: str) -> list[str]:
+    return [
+        sys.executable, os.path.join(REPO, "jobs", "run_graph.py"),
+        "--algo", algo, "--edges", edges, "--out", out, *extra,
+    ]
+
+
+def test_run_graph_pagerank_job_resumes_to_in_process_ranks(spark, tmp_path):
+    """jobs/run_graph.py --algo pagerank end to end: 3 iterations with
     checkpoints, then --resume to 5; the job's ranks match an in-process
     pagerank(max_iter=5) up to summation order (the job runs on 2
     cores)."""
@@ -364,11 +375,9 @@ def test_run_pagerank_job_resumes_to_in_process_ranks(spark, tmp_path):
     out, ck = str(tmp_path / "ranks"), str(tmp_path / "ck")
 
     def run(*extra: str) -> dict:
-        return _run_job([
-            sys.executable, os.path.join(REPO, "jobs", "run_pagerank.py"),
-            "--edges", edges, "--out", out, "--checkpoint-dir", ck,
-            "--async-checkpoint", "--tol", "0", *extra,
-        ])
+        return _run_job(_graph_cmd(
+            "pagerank", edges, out, "--checkpoint-dir", ck, "--tol", "0", *extra
+        ))
 
     first = run("--max-iter", "3")
     assert first["resumed_from"] is None and first["iterations"] == 3
@@ -383,25 +392,25 @@ def test_run_pagerank_job_resumes_to_in_process_ranks(spark, tmp_path):
     assert (got - want.reindex(got.index)).abs().max() < 1e-12
 
 
-@pytest.mark.parametrize("algo", ["components", "triangles"])
+@pytest.mark.parametrize("algo", ["components", "triangles", "labelprop"])
 def test_run_graph_job_matches_in_process_operator(spark, tmp_path, algo):
     """jobs/run_graph.py end to end: the job's output equals the
-    in-process operator's on the same graph, exactly (integer ids and
-    counts; the job runs on 2 cores)."""
+    in-process operator's on the same graph, exactly (integer ids,
+    labels and counts; the job runs on 2 cores)."""
     import pandas as pd
 
     from rad_ecg_spark.operators.components import connected_components
+    from rad_ecg_spark.operators.labelprop import label_propagation
     from rad_ecg_spark.operators.triangles import triangles
 
     pairs = random_graph(50, 200, seed=6)
     edges = _edges_parquet(str(tmp_path / "edges"), pairs)
     out = str(tmp_path / algo)
-    info = _run_job([
-        sys.executable, os.path.join(REPO, "jobs", "run_graph.py"),
-        "--algo", algo, "--edges", edges, "--out", out,
-    ])
+    info = _run_job(_graph_cmd(algo, edges, out))
     if algo == "components":
         want = connected_components(edges_df(spark, pairs), method="hybrid")
+    elif algo == "labelprop":
+        want = label_propagation(edges_df(spark, pairs), max_iter=50)
     else:
         want = triangles(edges_df(spark, pairs))
     got = pd.read_parquet(out)[want.columns]
@@ -409,3 +418,25 @@ def test_run_graph_job_matches_in_process_operator(spark, tmp_path, algo):
     assert sorted(got.itertuples(index=False)) == sorted(
         want.toPandas().itertuples(index=False)
     )
+
+
+@pytest.mark.parametrize("cmd", [
+    ["run_graph.py", "--algo", "pagerank", "--resume"],
+    ["run_graph.py", "--algo", "components", "--checkpoint-dir", "ck"],
+    ["run_graph.py", "--algo", "labelprop", "--tol", "0"],
+    ["run_web_pipeline.py", "--synth-pages", "2:2", "--resume"],
+], ids=["graph_resume", "graph_cc_checkpoint", "graph_lp_tol", "web_pipeline_resume"])
+def test_jobs_reject_options_they_cannot_apply(tmp_path, cmd):
+    """--resume without --checkpoint-dir, and a PageRank option (its
+    checkpoints included) given to another algorithm, are usage errors:
+    the job exits with status 2 before it starts Spark."""
+    script, *args = cmd
+    if script == "run_graph.py":
+        args += ["--edges", str(tmp_path / "edges")]
+    p = subprocess.run(
+        [sys.executable, os.path.join(REPO, "jobs", script), *args,
+         "--out", str(tmp_path / "out")],
+        capture_output=True, text=True, cwd=REPO, env=_pipeline_env(),
+        timeout=600,
+    )
+    assert p.returncode == 2 and "error:" in p.stderr, p.stderr

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import pytest
 
+from rad_ecg_spark.operators import components
 from rad_ecg_spark.operators.components import connected_components
 from rad_ecg_spark.operators.labelprop import label_propagation
 from rad_ecg_spark.operators.pagerank import PageRankStats, pagerank
@@ -186,31 +187,33 @@ class TestConnectedComponents:
 
 
     @pytest.mark.parametrize("rounds", [0, 1, 3])
-    def test_hybrid_forced_contraction_random_graph(self, spark, rounds):
+    def test_hybrid_forced_contraction_random_graph(self, spark, rounds, monkeypatch):
         """Random sparse graph with the hashmin cap too small to
         converge: the star-on-contraction phase must finish exactly.
         rounds=0 is the degenerate identity contraction (star runs on
         the original graph)."""
+        monkeypatch.setattr(components, "HASHMIN_ROUNDS", rounds)
         pairs = random_graph(120, 110, seed=11)
         got = {
             r["id"]: r["component"]
             for r in connected_components(
-                edges_df(spark, pairs), method="hybrid", hashmin_rounds=rounds
+                edges_df(spark, pairs), method="hybrid"
             ).collect()
         }
         assert got == components_oracle(pairs)
 
-    def test_hybrid_contraction_on_long_chain(self, spark):
+    def test_hybrid_contraction_on_long_chain(self, spark, monkeypatch):
         """A 60-vertex chain with hashmin capped at 3 rounds cannot
         converge in phase 1 -> the star-on-contraction path must finish
         it exactly (plus a disjoint triangle for a second component)."""
+        monkeypatch.setattr(components, "HASHMIN_ROUNDS", 3)
         chain = [(i, i + 1) for i in range(60)]
         tri = [(100, 101), (101, 102), (100, 102)]
         pairs = chain + tri
         got = {
             r["id"]: r["component"]
             for r in connected_components(
-                edges_df(spark, pairs), method="hybrid", hashmin_rounds=3
+                edges_df(spark, pairs), method="hybrid"
             ).collect()
         }
         exp = components_oracle(pairs)

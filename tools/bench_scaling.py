@@ -56,7 +56,7 @@ spark.sparkContext.setLogLevel("ERROR")
 edges = synth_edges(spark, n_edges, partitions=parts)
 edges.count()
 st = PageRankStats()
-pagerank(edges, tol=0.0, max_iter=iters, num_partitions=parts, stats=st).count()
+pagerank(edges, tol=0.0, max_iter=iters, stats=st).count()
 app_id = spark.sparkContext.applicationId
 spark.stop()
 shuffle = sum(g.get("shuffle_bytes", 0)
@@ -212,8 +212,8 @@ decomposition — so the comparison isolates executor scaling.
 
 Derived 1.4k-edge graph (sf0.001): 53 iterations to delta < 1e-6,
 converged=True (driven end-to-end via spark-submit --py-files,
-jobs/run_pagerank.py). Per-iteration checkpoint write adds ~0.4 s/iter
-at sf0.001 (parquet snapshot + _meta append); kill-after-3 resume
+jobs/run_graph.py --algo pagerank). Per-iteration checkpoint write adds
+~0.4 s/iter at sf0.001 (parquet snapshot + _meta append); kill-after-3 resume
 reproduces the uninterrupted run exactly
 (tests/test_checkpoint_resume.py); resume is iteration-granular and a
 torn _meta write is invisible to it (plans/checkpoint.py,
