@@ -14,8 +14,10 @@ one JSON line with ``algo``, the output's ``rows`` and the run's facts.
 PageRank with --checkpoint-dir commits an async checkpoint every
 iteration, and --resume restarts it from the last complete one; the
 other algorithms reject the PageRank options. Components run the hybrid
-method. A pages table goes through jobs/run_web_pipeline.py, which
-dedups the pages before it builds the link graph.
+method; PageRank and label propagation split off supernode hubs
+themselves (operators/skew.py hub_split). A pages table goes through
+jobs/run_web_pipeline.py, which dedups the pages before it builds the
+link graph.
 """
 
 from __future__ import annotations
@@ -40,15 +42,9 @@ def main() -> None:
     ap.add_argument("--tol-mode", choices=("abs", "rel"), default="abs",
                     help="pagerank only: abs L-inf delta < tol, or rel "
                          "(scale-invariant: effective tolerance tol/n)")
-    ap.add_argument(
-        "--hub-degree-threshold", type=int,
-        help="pagerank only: srcs with outdeg >= N take the broadcast "
-             "supernode path (operators/skew.py)",
-    )
     args = ap.parse_args()
     pagerank_only = [
-        k for k in ("checkpoint_dir", "resume", "damping", "tol", "tol_mode",
-                    "hub_degree_threshold")
+        k for k in ("checkpoint_dir", "resume", "damping", "tol", "tol_mode")
         if getattr(args, k) != ap.get_default(k)
     ]
     if args.algo != "pagerank" and pagerank_only:
@@ -77,8 +73,7 @@ def main() -> None:
         st = PageRankStats()
         out = pagerank(
             edges, damping=args.damping, tol=args.tol, tol_mode=args.tol_mode,
-            max_iter=args.max_iter, checkpointer=ck, resume=args.resume,
-            stats=st, hub_degree_threshold=args.hub_degree_threshold,
+            max_iter=args.max_iter, checkpointer=ck, resume=args.resume, stats=st,
         )
         info.update(vertices=st.num_vertices, edges=st.num_edges,
                     iterations=st.iterations, converged=st.converged,

@@ -9,6 +9,8 @@ outputs + summary.json.
         [--checkpoint-dir /path/ck --resume] \
         [--algos pagerank,components,labelprop,triangles] \
         [--synth-pages SITES:PAGES_PER_SITE]   # demo corpus instead of --pages
+
+An --algos entry outside plans/pipeline.py ALGOS is a usage error.
 """
 
 from __future__ import annotations
@@ -29,20 +31,22 @@ def main() -> None:
     ap.add_argument("--max-iter", type=int, default=100)
     ap.add_argument("--verify-extract", action="store_true",
                     help="assert the byte-exact text invariant before running")
-    ap.add_argument("--hub-threshold", type=int, default=None,
-                    help="out-degree threshold routing supernode hubs through "
-                         "the broadcast path in PageRank/label propagation "
-                         "(power-law web graphs; operators/skew.py)")
     ap.add_argument("--tol-mode", choices=("abs", "rel"), default="abs",
                     help="PageRank convergence criterion: abs L-inf delta, "
                          "or rel (scale-invariant, effective tol/n)")
     args = ap.parse_args()
     if args.resume and not args.checkpoint_dir:
         ap.error("--resume needs --checkpoint-dir")
+    algos = tuple(a.strip() for a in args.algos.split(",") if a.strip())
+
+    from rad_ecg_spark.plans.pipeline import check_algos, run_pipeline
+
+    try:
+        check_algos(algos)
+    except ValueError as e:
+        ap.error(f"--algos: {e}")
 
     from pyspark.sql import SparkSession
-
-    from rad_ecg_spark.plans.pipeline import run_pipeline
 
     spark = SparkSession.builder.appName("web-pipeline").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -61,13 +65,12 @@ def main() -> None:
         spark,
         pages,
         args.out,
-        algos=tuple(a.strip() for a in args.algos.split(",") if a.strip()),
+        algos=algos,
         checkpoint_dir=args.checkpoint_dir,
         resume=args.resume,
         tol=args.tol,
         max_iter=args.max_iter,
         verify_extract=args.verify_extract,
-        hub_degree_threshold=args.hub_threshold,
         tol_mode=args.tol_mode,
     )
     print(json.dumps(summary, sort_keys=True))

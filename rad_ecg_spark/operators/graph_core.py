@@ -80,8 +80,25 @@ def size_partitions(spark, n_rows: int) -> int:
 
 
 @contextmanager
+def pinned_conf(spark, conf: dict[str, str]):
+    """Runs the block under ``conf``, then restores each key's previous
+    value, or unsets it if the session had not set it (a fallback written
+    back would override the built-in default for the rest of the session)."""
+    old = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def pinned_loop_conf(spark, shuffle_partitions: int | None = None):
-    """Disable AQE for the duration of an iterative loop.
+    """``pinned_conf`` with AQE off, for the duration of an iterative loop.
 
     Two reasons, both measured at 10M edges on local[32]:
     - partition coalescing changes the state's partitioning between
@@ -102,32 +119,13 @@ def pinned_loop_conf(spark, shuffle_partitions: int | None = None):
     vertex-sized exchange per iteration re-aligning the aggregate output
     to the state's partitioning (guide §2.4: share one exchange).
     """
-    keys = {
+    conf = {
         "spark.sql.adaptive.enabled": "false",
         "spark.sql.adaptive.coalescePartitions.enabled": "false",
     }
     if shuffle_partitions is not None:
-        keys["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-    # capture via no-default get (returns the conf's own default when the
-    # session never set it) — a typed fallback string would be written
-    # back verbatim on restore and corrupt e.g. shuffle.partitions in
-    # sessions that rely on the built-in default
-    old: dict[str, str | None] = {}
-    for k in keys:
-        try:
-            old[k] = spark.conf.get(k)
-        except Exception:
-            old[k] = None
-    for k, v in keys.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    return pinned_conf(spark, conf)
 
 
 def free_local_checkpoint(df: DataFrame | None) -> None:
@@ -246,10 +244,10 @@ def iterate(
       row)``, and the last commit lands before return;
     - ``stats.iterations`` counts from ``start``, so a resume at or past
       ``max_iter`` reports the resumed-from iteration, not 0;
-    - a run from iteration 0 starts a new checkpoint generation
-      (``checkpointer.clear()``), so a later resume reads this run only.
+    - a run from iteration 0 that commits starts a new checkpoint
+      generation (``checkpointer.clear()``): a later resume reads it only.
     """
-    if checkpointer is not None and start == 0:
+    if checkpointer is not None and start == 0 < max_iter:
         checkpointer.clear()
     stats.iterations = start
     with pinned_loop_conf(state.sparkSession, num_partitions):

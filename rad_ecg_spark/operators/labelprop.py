@@ -52,7 +52,7 @@ from rad_ecg_spark.operators.graph_core import (
     symmetric,
     vertices_of,
 )
-from rad_ecg_spark.operators.skew import HubSplit
+from rad_ecg_spark.operators.skew import HubSplit, hub_split
 
 
 @dataclass
@@ -103,21 +103,18 @@ def label_propagation(
     edges: DataFrame | EdgeSet,
     max_iter: int = 10,
     stats: LabelPropStats | None = None,
-    hub_degree_threshold: int | None = None,
 ) -> DataFrame:
     """DataFrame(id, label). Converges when no vertex changes label
     (synchronous LP can 2-cycle on bipartite structures — max_iter bounds
     that; the fixed iteration count is itself deterministic).
 
-    ``hub_degree_threshold``: same supernode split as
-    operators/pagerank.py — symmetric-degree hubs keep their edges in
-    balanced natural partitioning and join a BROADCAST slice of the
-    label state each round, while residual edges keep the
-    co-partitioned shuffle-hash path with per-key rows bounded by the
-    threshold. Unlike PageRank's float contributions, LP messages are
-    exact (dst, label) rows feeding an integer count, so the split
-    output is BITWISE identical to the unsplit plan (asserted in
-    tests), not merely 1e-12-close.
+    Supernodes: PageRank's split (``operators.skew.hub_split``) on the
+    symmetric view, for vertices with more than 2|E| / P rows. A vertex
+    holds at most half the view, so at P == 2 no job checks; at P >= 3
+    one groupBy builds the cache round 1 reads. LP messages are exact
+    (dst, label) rows feeding an integer count, so the split output is
+    BITWISE identical to the unsplit plan (asserted in tests), not
+    merely 1e-12-close.
     """
     if stats is None:
         stats = LabelPropStats()
@@ -125,15 +122,11 @@ def label_propagation(
     lent = isinstance(edges, EdgeSet)
     edges, n_edges = edge_set(edges)
     # sized on the symmetric table (2|E|), as connected components
-    num_partitions = size_partitions(edges.sparkSession, n_edges * 2)
-    # lazy persist: HubSplit's counts or round 1's join materialize it
+    rows = n_edges * 2
+    num_partitions = size_partitions(edges.sparkSession, rows)
+    # lazy persist: the hub check (P >= 3) or round 1's join materializes it
     sym = symmetric(edges, num_partitions).persist(StorageLevel.MEMORY_AND_DISK)
-
-    hubs = (
-        HubSplit(sym, hub_degree_threshold, num_partitions)
-        if hub_degree_threshold is not None
-        else None
-    )
+    hubs = hub_split(sym, rows, num_partitions, max_rows=n_edges)
     # select BEFORE repartition: localCheckpoint records only the FIRST
     # partitioning of a PartitioningCollection, and selecting
     # id->label AFTER the repartition makes that hash(label), which the

@@ -64,7 +64,7 @@ from rad_ecg_spark.operators.graph_core import (
     out_degrees,
     size_partitions,
 )
-from rad_ecg_spark.operators.skew import HubSplit
+from rad_ecg_spark.operators.skew import HubSplit, hub_split
 from rad_ecg_spark.plans.checkpoint import CheckpointManager
 
 
@@ -147,7 +147,6 @@ def pagerank(
     checkpointer: CheckpointManager | None = None,
     resume: bool = False,
     stats: PageRankStats | None = None,
-    hub_degree_threshold: int | None = None,
     tol_mode: str = "abs",
 ) -> DataFrame:
     """Returns DataFrame(id, rank). ``edges`` needs columns src, dst;
@@ -160,8 +159,10 @@ def pagerank(
     ``checkpointer``: commits every iteration's ranks (see
     ``plans.checkpoint.CheckpointManager`` for why there is one
     cadence). ``resume=True`` starts from its last complete iteration,
-    or from 0 over an empty directory, and needs a ``checkpointer``
-    (ValueError otherwise: there is nothing to resume from).
+    or from ``max_iter`` when that is lower (the checkpoint generation
+    holds every iteration up to the last), or from 0 over an empty
+    directory, and needs a ``checkpointer`` (ValueError otherwise: there
+    is nothing to resume from).
 
     ``tol_mode``: convergence criterion for ``tol``.
       - ``"abs"`` (default): max_v |rank_{k+1}(v) - rank_k(v)| < tol.
@@ -175,15 +176,12 @@ def pagerank(
         iterations vs abs-mode's 7 at 10M edges / 1M vertices —
         BENCH/BASELINE.md 'Convergence benchmark').
 
-    ``hub_degree_threshold``: when set, src vertices with out-degree >=
-    threshold take the supernode path (operators/skew.py) — their edges
-    stay in balanced natural partitioning and join a BROADCAST slice of
-    the rank state, while residual edges keep the co-partitioned
-    shuffle-hash path with per-key row counts bounded by the threshold.
-    Results are numerically identical to the unsplit plan within
-    float-summation reordering (contributions flow through a different
-    union/partial-aggregation tree, so sums agree to ~1e-12, not
-    bitwise — see tests/test_kernels_and_io.py star-graph check).
+    Supernodes: a source with more than |E| / P of the edges (P the
+    loop's partitions) takes ``operators.skew.hub_split``'s path: its
+    edges stay in balanced natural partitioning and join a BROADCAST
+    slice of the rank state. Results match the unsplit plan up to float
+    summation order (~1e-12, not bitwise — tests/test_kernels_and_io.py
+    star-graph check).
     """
     import time as _time
 
@@ -202,31 +200,29 @@ def pagerank(
     # ~6s/iteration of pure task overhead (measured)
     num_partitions = size_partitions(spark, n_edges)
     edges, verts = _prepare(cut, num_partitions)
-    n = verts.count()
+    # the vertex count materializes verts; the max out-degree rides along
+    n, max_outdeg = verts.agg(F.count(F.lit(1)), F.max("outdeg")).collect()[0]
     stats.num_vertices = n
     stats.num_edges = n_edges
     if not lent:
-        free_local_checkpoint(cut)  # verts.count() materialized edges
+        free_local_checkpoint(cut)  # the vertex count materialized edges
     if n == 0:  # a result that reads none of the caches
         schema = verts.select("id", F.lit(0.0).alias("rank")).schema
         edges.unpersist()
         verts.unpersist()
         return spark.createDataFrame([], schema)
 
-    hubs = (
-        HubSplit(edges, hub_degree_threshold, num_partitions)
-        if hub_degree_threshold is not None
-        else None
-    )
+    hubs = hub_split(edges, n_edges, num_partitions, max_rows=max_outdeg)
 
     start_iter = 0
     ranks = None
     if resume:
         last = checkpointer.last_complete()
         if last is not None:
-            start_iter = last
-            stats.resumed_from = last
-            loaded = checkpointer.load_state(last).select(
+            start_iter = min(last, max_iter)  # 0: the initial state
+            stats.resumed_from = start_iter
+        if start_iter > 0:
+            loaded = checkpointer.load_state(start_iter).select(
                 F.col("id").alias("cid"), "rank"
             )
             ranks = (

@@ -18,8 +18,11 @@ Two structural tools:
   threshold); residual edges keep the co-partitioned shuffle-hash path,
   where the per-src row count is bounded by the threshold, so no task
   can be handed more than threshold rows for one key. ``HubSplit`` is
-  that split persisted for a loop (PageRank and label propagation
-  ``hub_degree_threshold``) together with its per-iteration messages.
+  that split persisted for a loop together with its per-iteration
+  messages, and ``hub_split`` the one rule for when PageRank and label
+  propagation take it: split off the sources holding more than an
+  average partition's share of the edges, so no residual key outweighs
+  an average partition (BENCH/BASELINE.md 'Hub-split supernode path').
 
 Reference capability donor: the work-queue rebalancing idea
 (/root/reference/src/rad_ecg/scripts/peak_detect_v4.py:1664-1679) —
@@ -32,7 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from rad_ecg_spark.operators.graph_core import messages
+from rad_ecg_spark.operators.graph_core import messages, out_degrees
 
 
 def salted_join(
@@ -119,3 +122,20 @@ class HubSplit:
     def unpersist(self) -> None:
         for df in (self.residual, self.hub_edges, self.hub_ids):
             df.unpersist()
+
+
+def hub_split(
+    edges: DataFrame, rows: int, num_partitions: int, max_rows: int | None = None
+) -> HubSplit | None:
+    """A ``HubSplit`` of the src-partitioned ``edges`` whose hubs are the
+    sources with more than ``rows / num_partitions`` rows (``rows``: the
+    edge count the loop is sized on), or None when there are none.
+    ``max_rows``, a bound on one source's rows the caller holds without
+    a job, skips the check when within that share; otherwise one groupBy
+    by src, with no exchange, finds the hubs."""
+    share = rows // num_partitions
+    if max_rows is not None and max_rows <= share:
+        return None
+    if not out_degrees(edges).filter(F.col("outdeg") > share).collect():
+        return None
+    return HubSplit(edges, share + 1, num_partitions)

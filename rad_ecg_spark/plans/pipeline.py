@@ -46,6 +46,13 @@ from rad_ecg_spark.operators.graph_core import edge_set, free_local_checkpoint
 # near-dup: word-set Jaccard >= 9/10 over 4-band MinHash-LSH candidates,
 # buckets above MAX_BUCKET members dropped (see dedup_pages)
 JACCARD_NUM, JACCARD_DEN, LSH_BANDS, MAX_BUCKET = 9, 10, 4, 1_000
+ALGOS = ("pagerank", "components", "labelprop", "triangles")  # run in this order
+
+
+def check_algos(algos) -> None:
+    """ValueError naming the entries of ``algos`` not in ``ALGOS``."""
+    if unknown := [a for a in algos if a not in ALGOS]:
+        raise ValueError(f"unknown algos {unknown}: choose from {list(ALGOS)}")
 
 
 def dedup_pages(pages: DataFrame) -> DataFrame:
@@ -130,23 +137,22 @@ def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
     out_dir: str,
-    algos: tuple[str, ...] = ("pagerank", "components", "labelprop", "triangles"),
+    algos: tuple[str, ...] = ALGOS,
     checkpoint_dir: str | None = None,
     resume: bool = False,
     tol: float = 1e-6,
     max_iter: int = 100,
     verify_extract: bool = False,
-    hub_degree_threshold: int | None = None,
     tol_mode: str = "abs",
 ) -> dict:
     """Run the full pipeline; returns a summary dict (also written to
     ``<out_dir>/summary.json``). ``summary["stage_wall_s"]`` carries
     per-stage wall-clock so a bench-scale run is self-reporting.
 
-    ``hub_degree_threshold``: real web graphs are power-law — when set,
-    PageRank and label propagation route supernode hubs through the
-    broadcast path (operators/skew.py; ~2x/iteration at extreme
-    out-degree skew, BENCH/BASELINE.md 'Hub-split supernode path').
+    ``algos``: a subset of ``ALGOS`` (else ValueError, before any Spark
+    job). PageRank and label propagation split off power-law supernode
+    hubs themselves (``operators.skew.hub_split``; ~2x/iteration at
+    extreme out-degree skew, BENCH/BASELINE.md 'Hub-split supernode path').
     ``tol_mode``: "abs" or "rel" PageRank convergence criterion
     (operators/pagerank.py — "rel" is the scale-invariant form)."""
     import json
@@ -155,6 +161,7 @@ def run_pipeline(
 
     from rad_ecg_spark.functions.extract import text_invariant_violations
 
+    check_algos(algos)
     summary: dict = {}
     walls: dict[str, float] = {}
     t_total = time.monotonic()
@@ -205,7 +212,6 @@ def run_pipeline(
             ranks = pagerank(
                 graph, tol=tol, tol_mode=tol_mode, max_iter=max_iter,
                 checkpointer=ck, resume=resume, stats=st,
-                hub_degree_threshold=hub_degree_threshold,
             )
             ranks.write.mode("overwrite").parquet(os.path.join(out_dir, "pagerank"))
         summary["pagerank"] = {
@@ -228,10 +234,7 @@ def run_pipeline(
 
         t0 = time.monotonic()
         lst = LabelPropStats()
-        lp = label_propagation(
-            graph, max_iter=min(max_iter, 30), stats=lst,
-            hub_degree_threshold=hub_degree_threshold,
-        )
+        lp = label_propagation(graph, max_iter=min(max_iter, 30), stats=lst)
         lp.write.mode("overwrite").parquet(os.path.join(out_dir, "labels"))
         # a capped, non-converged LP run must be visible in the summary,
         # not silently reported like a converged one

@@ -11,20 +11,9 @@ lakes; on a catalog this is ``df.writeTo(tbl).overwritePartitions()``.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame
 
-
-@contextmanager
-def _dynamic_overwrite(spark):
-    key = "spark.sql.sources.partitionOverwriteMode"
-    old = spark.conf.get(key, "static")
-    spark.conf.set(key, "dynamic")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
+from rad_ecg_spark.operators.graph_core import pinned_conf
 
 
 def write_partitioned_table(
@@ -36,5 +25,7 @@ def write_partitioned_table(
     """Write df as a partitioned parquet table. With mode='overwrite',
     only the partitions PRESENT IN df are replaced (dynamic overwrite);
     other partitions are untouched — safe incremental backfills."""
-    with _dynamic_overwrite(df.sparkSession):
+    with pinned_conf(
+        df.sparkSession, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+    ):
         df.write.mode(mode).partitionBy(*partition_cols).parquet(path)

@@ -14,7 +14,8 @@ inverse-CDF power law, src = floor(V * u^alpha) with u uniform on
 v^(1/alpha - 1), a genuine heavy-tailed web-graph out-degree. At
 alpha=6, V=E/10 the single hottest source owns ~V^(-1/6) ≈ 7-8% of ALL
 edges — the straggler shape the hub-split path
-(operators/pagerank.py hub_degree_threshold) exists for.
+(operators/skew.py hub_split) exists for; the engine takes it once a
+source's share exceeds 1/P of the edges (P the loop's partitions).
 """
 
 from __future__ import annotations

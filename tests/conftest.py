@@ -8,6 +8,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from rad_ecg_spark.operators.graph_core import pinned_conf  # noqa: E402
 from rad_ecg_spark.session import get_spark  # noqa: E402
 
 
@@ -41,14 +42,8 @@ def edges_df(spark, pairs, src_type="long"):
 BATCH_ROWS = pytest.mark.parametrize("batch_rows", [None, 7], ids=["default", "7"])
 
 
-@contextlib.contextmanager
 def arrow_batch_rows(spark, n):
     """Runs the block with ``n``-row Arrow batches (None: unchanged)."""
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    old = spark.conf.get(key)
-    if n is not None:
-        spark.conf.set(key, str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
+    if n is None:
+        return contextlib.nullcontext()
+    return pinned_conf(spark, {"spark.sql.execution.arrow.maxRecordsPerBatch": str(n)})

@@ -73,24 +73,27 @@ class TestCheckpointResume:
         assert s.resumed_from is None
         assert s.iterations == 2
 
-    @pytest.mark.parametrize("max_iter", [4, 3])
+    @pytest.mark.parametrize("max_iter", [4, 3, 0])
     def test_resume_at_or_past_max_iter_counts_resumed_iterations(
         self, spark, tmp_path, max_iter
     ):
-        """A resume with nothing left to run returns the checkpointed
-        ranks and counts the iterations behind them, not 0."""
+        """A resume with nothing left to run over a 4-iteration checkpoint
+        returns the ranks of iteration ``max_iter`` — those of an
+        uninterrupted ``max_iter`` run — and counts the iterations behind
+        them, not 0 and not the checkpoint's 4. It keeps the checkpoint
+        generation, even at ``max_iter == 0``."""
         edges = edges_df(spark, random_graph(30, 100, seed=12))
         ckdir = str(tmp_path / "ck")
-        want = _ranks(pagerank(
-            edges, tol=0.0, max_iter=4,
-            checkpointer=CheckpointManager(spark, ckdir, "pagerank"),
-        ))
+        pagerank(edges, tol=0.0, max_iter=4,
+                 checkpointer=CheckpointManager(spark, ckdir, "pagerank"))
+        want = _ranks(pagerank(edges, tol=0.0, max_iter=max_iter))
         st = PageRankStats()
-        resumed = pagerank(edges, tol=0.0, max_iter=max_iter,
-                           checkpointer=CheckpointManager(spark, ckdir, "pagerank"),
+        cm = CheckpointManager(spark, ckdir, "pagerank")
+        resumed = pagerank(edges, tol=0.0, max_iter=max_iter, checkpointer=cm,
                            resume=True, stats=st)
-        assert st.resumed_from == 4 and st.iterations == 4
+        assert st.resumed_from == max_iter and st.iterations == max_iter
         assert _ranks(resumed) == want
+        assert cm.last_complete() == 4
 
     def test_resume_without_checkpointer_raises(self, spark):
         with pytest.raises(ValueError, match="checkpointer"):
@@ -425,11 +428,14 @@ def test_run_graph_job_matches_in_process_operator(spark, tmp_path, algo):
     ["run_graph.py", "--algo", "components", "--checkpoint-dir", "ck"],
     ["run_graph.py", "--algo", "labelprop", "--tol", "0"],
     ["run_web_pipeline.py", "--synth-pages", "2:2", "--resume"],
-], ids=["graph_resume", "graph_cc_checkpoint", "graph_lp_tol", "web_pipeline_resume"])
+    ["run_web_pipeline.py", "--synth-pages", "2:2", "--algos", "pagerank,pagernk"],
+], ids=["graph_resume", "graph_cc_checkpoint", "graph_lp_tol", "web_pipeline_resume",
+        "web_pipeline_unknown_algo"])
 def test_jobs_reject_options_they_cannot_apply(tmp_path, cmd):
-    """--resume without --checkpoint-dir, and a PageRank option (its
-    checkpoints included) given to another algorithm, are usage errors:
-    the job exits with status 2 before it starts Spark."""
+    """--resume without --checkpoint-dir, a PageRank option (its
+    checkpoints included) given to another algorithm, and an unknown
+    pipeline algorithm are usage errors: the job exits with status 2
+    before it starts Spark."""
     script, *args = cmd
     if script == "run_graph.py":
         args += ["--edges", str(tmp_path / "edges")]

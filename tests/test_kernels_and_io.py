@@ -72,12 +72,36 @@ class TestStatBundle:
         assert abs(bundle["skew_e6"] / 1e6 - ref["s"]) < 1e-4
 
 
+def _record_hub_splits(monkeypatch) -> list:
+    """Hub ids of every ``HubSplit`` the engine's rule builds from now on."""
+    from rad_ecg_spark.operators import skew
+
+    made: list = []
+
+    class Recorded(skew.HubSplit):
+        def __init__(self, *args):
+            super().__init__(*args)
+            made.append({r["id"] for r in self.hub_ids.collect()})
+
+    monkeypatch.setattr(skew, "HubSplit", Recorded)
+    return made
+
+
+def _split_at(threshold):
+    """A stand-in for ``skew.hub_split`` that always splits at ``threshold``."""
+    from rad_ecg_spark.operators.skew import HubSplit
+
+    return lambda edges, rows, P, max_rows=None: HubSplit(edges, threshold, P)
+
+
 class TestSkewAwarePageRank:
-    def test_star_graph_hub_path_balanced_and_exact(self, spark):
-        """100k-spoke star: with hub_degree_threshold the hub's edges ride
-        the broadcast path in BALANCED partitioning (max/median task rows
-        < 4x), and ranks stay 1e-12-equal to the unsplit plan."""
-        from rad_ecg_spark.operators.pagerank import pagerank
+    def test_star_graph_hub_path_balanced_and_exact(self, spark, monkeypatch):
+        """100k-spoke star: the hub's edges ride the broadcast path in
+        BALANCED partitioning (max/median task rows < 4x); pagerank()
+        with no option takes that split by itself (the hub holds every
+        edge, over |E| / P), and its ranks stay 1e-12-equal to the
+        unsplit plan."""
+        from rad_ecg_spark.operators import pagerank as pagerank_mod
         from rad_ecg_spark.operators.skew import split_hub_edges
 
         n = 100_000
@@ -96,26 +120,70 @@ class TestSkewAwarePageRank:
         ]
         assert max(sizes) / sorted(sizes)[len(sizes) // 2] < 4.0
 
-        base = {
-            r["id"]: r["rank"]
-            for r in pagerank(edges, tol=0.0, max_iter=3).collect()
-        }
+        made = _record_hub_splits(monkeypatch)
         split = {
             r["id"]: r["rank"]
-            for r in pagerank(
-                edges, tol=0.0, max_iter=3, hub_degree_threshold=1000
-            ).collect()
+            for r in pagerank_mod.pagerank(edges, tol=0.0, max_iter=3).collect()
         }
+        assert made == [{0}]
+        monkeypatch.setattr(pagerank_mod, "hub_split", lambda *a, **k: None)
+        base = {
+            r["id"]: r["rank"]
+            for r in pagerank_mod.pagerank(edges, tol=0.0, max_iter=3).collect()
+        }
+        assert made == [{0}]
         assert base.keys() == split.keys()
         assert all(abs(base[k] - split[k]) < 1e-12 for k in base)
 
-    def test_powerlaw_synth_is_skewed_deterministic_and_split_exact(self, spark):
+    def test_hub_split_rule(self, spark):
+        """``skew.hub_split`` splits exactly the sources above rows / P:
+        none on the web-shaped pipeline graph (directed or symmetric,
+        at 2 or 4 partitions), none without a job for a symmetric view
+        at P == 2 (a vertex holds at most half its rows), and the star's
+        centre in its symmetric view once P >= 3."""
+        from rad_ecg_spark.operators.graph_core import (
+            edge_set,
+            free_local_checkpoint,
+            symmetric,
+        )
+        from rad_ecg_spark.operators.skew import hub_split
+        from rad_ecg_spark.sources.pages import expected_edges
+
+        web, n = edge_set(
+            spark.createDataFrame(expected_edges(6, 10), "src string, dst string")
+        )
+        for P in (2, 4):
+            assert hub_split(web.repartition(P, "src"), n, P) is None
+            assert hub_split(symmetric(web, P), 2 * n, P, max_rows=n) is None
+        free_local_checkpoint(web)
+
+        n = 1_000
+        star = spark.range(1, n + 1, 1, 4).select(
+            F.lit(0).alias("src"), F.col("id").alias("dst")
+        )
+        sc = spark.sparkContext
+        sc.setJobGroup("hub-rule-p2", "hub-rule-p2")
+        try:
+            assert hub_split(symmetric(star, 2), 2 * n, 2, max_rows=n) is None
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup("hub-rule-p2")) == 0
+        hubs = hub_split(symmetric(star, 3), 2 * n, 3, max_rows=n)
+        assert {r["id"] for r in hubs.hub_ids.collect()} == {0}
+        assert hubs.residual.count() == n and hubs.hub_edges.count() == n
+        hubs.unpersist()
+
+    def test_powerlaw_synth_is_skewed_deterministic_and_split_exact(
+        self, spark, monkeypatch
+    ):
         """src_skew='powerlaw' plants a genuine out-degree hot spot (the
         top source owns >3% of edges at alpha=6), the table is identical
-        at any requested parallelism, and the hub-split PageRank stays
-        1e-12-equal to the unsplit plan on it — the small-scale twin of
-        the 50M-edge headroom run in BENCH/BASELINE.md."""
-        from rad_ecg_spark.operators.pagerank import pagerank
+        at any requested parallelism, and the hub-split PageRank (split
+        at out-degree 500, below the engine's |E| / P share, which this
+        hot spot does not reach at 2 partitions) stays 1e-12-equal to
+        the unsplit plan on it — the small-scale twin of the 50M-edge
+        headroom run in BENCH/BASELINE.md."""
+        from rad_ecg_spark.operators import pagerank as pagerank_mod
         from rad_ecg_spark.sources.synth_graph import synth_edges
 
         n_edges = 200_000
@@ -133,35 +201,38 @@ class TestSkewAwarePageRank:
         n_actual = e4.count()
         assert top["d"] / n_actual > 0.03, "powerlaw mode must plant a hot source"
 
+        made = _record_hub_splits(monkeypatch)
         base = {
-            r["id"]: r["rank"] for r in pagerank(e4, tol=0.0, max_iter=3).collect()
+            r["id"]: r["rank"]
+            for r in pagerank_mod.pagerank(e4, tol=0.0, max_iter=3).collect()
         }
+        assert made == []
+        monkeypatch.setattr(pagerank_mod, "hub_split", _split_at(500))
         split = {
             r["id"]: r["rank"]
-            for r in pagerank(
-                e4, tol=0.0, max_iter=3, hub_degree_threshold=500
-            ).collect()
+            for r in pagerank_mod.pagerank(e4, tol=0.0, max_iter=3).collect()
         }
+        assert len(made) == 1 and top["src"] in made[0]
         assert base.keys() == split.keys()
         assert all(abs(base[k] - split[k]) < 1e-12 for k in base)
 
-    def test_labelprop_hub_split_is_bitwise_identical(self, spark):
+    def test_labelprop_hub_split_is_bitwise_identical(self, spark, monkeypatch):
         """LP's supernode split must be BITWISE identical to the unsplit
         plan (messages are exact (dst, label) rows into an integer
         count — no float reordering), including per-round change
         counts."""
-        from rad_ecg_spark.operators.labelprop import (
-            LabelPropStats,
-            label_propagation,
-        )
+        from rad_ecg_spark.operators import labelprop as labelprop_mod
+        from rad_ecg_spark.operators.labelprop import LabelPropStats
         from rad_ecg_spark.sources.synth_graph import synth_edges
 
         e = synth_edges(spark, 100_000, partitions=4, src_skew="powerlaw")
         s1, s2 = LabelPropStats(), LabelPropStats()
-        base = label_propagation(e, max_iter=4, stats=s1)
-        split = label_propagation(
-            e, max_iter=4, stats=s2, hub_degree_threshold=500
-        )
+        made = _record_hub_splits(monkeypatch)
+        base = labelprop_mod.label_propagation(e, max_iter=4, stats=s1)
+        assert made == []
+        monkeypatch.setattr(labelprop_mod, "hub_split", _split_at(500))
+        split = labelprop_mod.label_propagation(e, max_iter=4, stats=s2)
+        assert len(made) == 1 and made[0]
         d = base.withColumnRenamed("label", "l2").join(split, "id")
         assert d.count() == base.count()
         assert d.filter(F.col("label") != F.col("l2")).count() == 0

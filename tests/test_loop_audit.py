@@ -12,7 +12,7 @@ from .test_oracle_parity import SF_DIR
 
 
 def test_steady_loop_plans_meet_budgets(spark):
-    results = audit_loops(spark, n_edges=2_000, hub_threshold=15)
+    results = audit_loops(spark, n_edges=2_000)
     assert [name for name, *_ in results] == [
         "pagerank_steady_iteration",
         "labelprop_steady_round",

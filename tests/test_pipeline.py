@@ -4,13 +4,13 @@ outputs must land on disk with a consistent summary."""
 
 from __future__ import annotations
 
-import contextlib
 import json
 import os
 
 from pyspark.sql import functions as F
 
 from rad_ecg_spark.functions.extract import pages_to_edges
+from rad_ecg_spark.operators.graph_core import pinned_conf
 from rad_ecg_spark.plans.pipeline import build_graph, dedup_pages, run_pipeline
 from rad_ecg_spark.sources.pages import generate_pages
 
@@ -235,6 +235,23 @@ class TestRunPipeline:
         assert failed_commits == [True]
 
 
+    def test_unknown_algo_raises_before_any_spark_job(self, spark, tmp_path):
+        """A misspelt algorithm name is a ValueError naming it, raised
+        before the first Spark job, not a run with no graph stage."""
+        import pytest
+
+        pages = generate_pages(spark, 2, 2)
+
+        def run():
+            with pytest.raises(ValueError, match="'pagernk'"):
+                run_pipeline(
+                    spark, pages, str(tmp_path / "out"), algos=("components", "pagernk")
+                )
+
+        assert _jobs(spark, "unknown-algo", run) == 0
+        assert not os.path.exists(tmp_path / "out")
+
+
 class TestPipelineRound5:
     def test_null_text_pages_stay_in_rep_map(self, spark):
         """A NULL-text page must not fall out of rep_map (null fp !=
@@ -292,58 +309,30 @@ class TestPipelineRound5:
         assert isinstance(summary["labelprop"]["converged"], bool)
         assert summary["pagerank"]["resumed_from"] is None
 
-    def test_hub_threshold_and_tol_mode_flow_through(self, spark, tmp_path):
-        """The supernode split and the rel convergence criterion are
-        reachable from the composed pipeline (power-law web graphs are
-        the pipeline's target domain): identical ranks/labels with and
-        without the hub split, and rel mode converges like the
-        operator-level contract says."""
+    def test_tol_mode_flows_through(self, spark, tmp_path):
+        """The rel convergence criterion is reachable from the composed
+        pipeline: its PageRank stage stops where the operator does with
+        tol_mode="rel" on the same graph, later than under "abs" (rel's
+        effective tolerance, tol/n, is the stricter)."""
+        from rad_ecg_spark.operators.pagerank import PageRankStats, pagerank
+
         both, _ = _pages_with_mirrors(spark, n_sites=4, per_site=8)
-        plain_out = str(tmp_path / "plain")
-        split_out = str(tmp_path / "split")
-        s_plain = run_pipeline(
-            spark, both, plain_out, algos=("pagerank", "labelprop"),
-            max_iter=15, tol_mode="rel",
+        out = str(tmp_path / "rel")
+        summary = run_pipeline(
+            spark, both, out, algos=("pagerank",), tol=1e-2, max_iter=30,
+            tol_mode="rel",
         )
-        s_split = run_pipeline(
-            spark, both, split_out, algos=("pagerank", "labelprop"),
-            max_iter=15, tol_mode="rel", hub_degree_threshold=3,
-        )
-        # same criterion, same graph: identical iteration trajectories
-        assert s_split["pagerank"]["iterations"] == s_plain["pagerank"]["iterations"]
-        assert s_split["labels"] == s_plain["labels"]
-        a = spark.read.parquet(os.path.join(plain_out, "pagerank"))
-        b = spark.read.parquet(os.path.join(split_out, "pagerank")).select(
-            F.col("id").alias("bid"), F.col("rank").alias("brank")
-        )
-        diff = (
-            a.join(b, a.id == F.col("bid"))
-            .select(F.max(F.abs(F.col("rank") - F.col("brank"))).alias("d"))
-            .collect()[0]["d"]
-        )
-        # float-summation reordering only (operators/pagerank.py contract)
-        assert diff < 1e-12
-        la = spark.read.parquet(os.path.join(plain_out, "labels"))
-        lb = spark.read.parquet(os.path.join(split_out, "labels")).select(
-            F.col("id").alias("bid"), F.col("label").alias("blabel")
-        )
-        assert (
-            la.join(lb, la.id == F.col("bid"))
-            .filter(F.col("label") != F.col("blabel"))
-            .count()
-            == 0
-        )
+        graph = build_graph(both, spark.read.parquet(os.path.join(out, "rep_map")))
+        rel, plain = PageRankStats(), PageRankStats()
+        pagerank(graph, tol=1e-2, max_iter=30, tol_mode="rel", stats=rel)
+        pagerank(graph, tol=1e-2, max_iter=30, stats=plain)
+        assert rel.converged and plain.converged
+        assert summary["pagerank"]["iterations"] == rel.iterations > plain.iterations
 
 
-@contextlib.contextmanager
 def _aqe_on(spark):
     """The engine default (the test session turns AQE off)."""
-    aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    return pinned_conf(spark, {"spark.sql.adaptive.enabled": "true"})
 
 
 def _jobs(spark, group: str, fn) -> int:

@@ -30,6 +30,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from rad_ecg_spark.operators.graph_core import pinned_conf  # noqa: E402
+
 LOOP_SECTION = "## Iterative-loop exchange audit (tools/plan_audit.py)"
 
 # name -> expectations. Budgets are UPPER bounds on Exchange nodes in
@@ -98,19 +100,6 @@ AUDITS: dict[str, dict] = {
 }
 
 AQE_OFF = {"spark.sql.adaptive.enabled": "false"}
-
-
-@contextlib.contextmanager
-def pinned_conf(spark, conf: dict[str, str]):
-    """Runs the block under ``conf``, restoring the previous values."""
-    old = {k: spark.conf.get(k) for k in conf}
-    for k, v in conf.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in old.items():
-            spark.conf.set(k, v)
 
 
 def _live_nodes(df) -> list:
@@ -245,12 +234,13 @@ def audit_triangle_wedges(spark, sf_dir: str) -> tuple[list[str], list[str]]:
 
 # --- iterative loops --------------------------------------------------
 # Every audited plan is one call of the engine's own step function
-# (``pagerank_step``, ``label_propagation_step``, ``hashmin_step``, with
-# ``operators.skew.HubSplit`` for the hub-split variants) on a state that
-# one real step has already brought to the steady shape — a checkpointed
-# step output, exactly as inside ``graph_core.iterate``. The edges come
-# through the engine's input path: the ``graph_core.edge_set`` cut, and
-# its ``graph_core.symmetric`` view for the undirected loops.
+# (``pagerank_step``, ``label_propagation_step``, ``hashmin_step``) on a
+# state that one real step has already brought to the steady shape — a
+# checkpointed step output, exactly as inside ``graph_core.iterate``.
+# The edges come through the engine's input path: the
+# ``graph_core.edge_set`` cut, and its ``graph_core.symmetric`` view for
+# the undirected loops. Each takes its split from the engine's rule,
+# ``operators.skew.hub_split``, which splits only a planted hub.
 
 
 def _steady(state, step):
@@ -258,44 +248,52 @@ def _steady(state, step):
     return step(step(state).localCheckpoint(eager=True))
 
 
-def _hubs(edges, hub_threshold, P):
-    from rad_ecg_spark.operators.skew import HubSplit
-
-    return None if hub_threshold is None else HubSplit(edges, hub_threshold, P)
-
-
-def pagerank_steady_plan(spark, n_edges, P, hub_threshold=None):
-    from rad_ecg_spark.operators.graph_core import edge_set
-    from rad_ecg_spark.operators.pagerank import _prepare, pagerank_step
+def _edges(spark, n_edges, P, hub):
+    """``synth_edges``, plus with ``hub`` a source holding over half the
+    edges: a hub of the directed and the symmetric view at P partitions."""
     from rad_ecg_spark.sources.synth_graph import synth_edges
 
-    cut, _ = edge_set(synth_edges(spark, n_edges, partitions=P))
+    edges = synth_edges(spark, n_edges, partitions=P)
+    star = spark.range(1, 2 * n_edges + 1, 1, P).select(
+        F.lit(0).cast("long").alias("src"), F.col("id").alias("dst")
+    )
+    return edges.unionByName(star) if hub else edges
+
+
+def pagerank_steady_plan(spark, n_edges, P, hub=False):
+    from rad_ecg_spark.operators.graph_core import edge_set
+    from rad_ecg_spark.operators.pagerank import _prepare, pagerank_step
+    from rad_ecg_spark.operators.skew import hub_split
+
+    cut, rows = edge_set(_edges(spark, n_edges, P, hub))
     edges, verts = _prepare(cut, P)
     n = verts.count()
-    hubs = _hubs(edges, hub_threshold, P)
+    hubs = hub_split(edges, rows, P)
+    assert hub == (hubs is not None)
     ranks = verts.select(
         "id", "outdeg", (F.lit(1.0) / F.lit(float(n))).alias("rank")
     ).localCheckpoint(eager=True)
     return _steady(ranks, lambda r: pagerank_step(r, edges, 0.0, n, 0.85, hubs))
 
 
-def _sym_and_verts(spark, n_edges, P):
+def _sym_and_verts(spark, n_edges, P, hub=False):
     """label propagation's and hashmin's setup: the symmetric view of the
-    edge-set cut, persisted, and the vertex set."""
+    edge-set cut, persisted, the vertex set, and the cut's row count."""
     from rad_ecg_spark.operators.graph_core import edge_set, symmetric, vertices_of
-    from rad_ecg_spark.sources.synth_graph import synth_edges
 
-    edges, _ = edge_set(synth_edges(spark, n_edges, partitions=P))
+    edges, rows = edge_set(_edges(spark, n_edges, P, hub))
     sym = symmetric(edges, P).persist()
     sym.count()
-    return sym, vertices_of(edges)
+    return sym, vertices_of(edges), rows
 
 
-def labelprop_steady_plan(spark, n_edges, P, hub_threshold=None):
+def labelprop_steady_plan(spark, n_edges, P, hub=False):
     from rad_ecg_spark.operators.labelprop import label_propagation_step
+    from rad_ecg_spark.operators.skew import hub_split
 
-    sym, verts = _sym_and_verts(spark, n_edges, P)
-    hubs = _hubs(sym, hub_threshold, P)
+    sym, verts, rows = _sym_and_verts(spark, n_edges, P, hub)
+    hubs = hub_split(sym, 2 * rows, P, max_rows=rows)
+    assert hub == (hubs is not None)
     labels = (
         verts.select("id", F.col("id").alias("label"))
         .repartition(P, "id")
@@ -308,7 +306,7 @@ def hashmin_steady_plan(spark, n_edges, P):
     """The common-case phase of connected components' hybrid method."""
     from rad_ecg_spark.operators.components import hashmin_step
 
-    sym, verts = _sym_and_verts(spark, n_edges, P)
+    sym, verts, _ = _sym_and_verts(spark, n_edges, P)
     labels = (
         verts.select(
             "id",
@@ -321,7 +319,7 @@ def hashmin_steady_plan(spark, n_edges, P):
     return _steady(labels, lambda s: hashmin_step(s, sym))
 
 
-def audit_loops(spark, n_edges=100_000, hub_threshold=50, P=4):
+def audit_loops(spark, n_edges=100_000, P=4):
     """[(name, live exchanges, exchange names + notes, ok)] for the five
     steady-state loop plans, planned with AQE off. Budget: 1 live
     exchange each; the hub-split plans also at most 3 broadcasts and 3
@@ -332,11 +330,11 @@ def audit_loops(spark, n_edges=100_000, hub_threshold=50, P=4):
         ("cc_hashmin_steady_round", lambda: hashmin_steady_plan(spark, n_edges, P)),
         (
             "pagerank_hubsplit_steady",
-            lambda: pagerank_steady_plan(spark, n_edges, P, hub_threshold),
+            lambda: pagerank_steady_plan(spark, n_edges, P, hub=True),
         ),
         (
             "lp_hubsplit_steady",
-            lambda: labelprop_steady_plan(spark, n_edges, P, hub_threshold),
+            lambda: labelprop_steady_plan(spark, n_edges, P, hub=True),
         ),
     )
     results = []
