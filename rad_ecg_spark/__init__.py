@@ -4,7 +4,8 @@ A from-scratch engine with the query/data-processing capabilities of the
 reference repo METIS-MICOR/rad_ecg (see SURVEY.md), re-expressed Spark-first:
 
 - ``sources``   : deterministic synthetic Common-Crawl-style ``pages`` table
-                  (url, warc_ts, html, text, lang) + parquet table loaders.
+                  (url, warc_ts, html, text, lang) + a JVM-side synthetic
+                  edge generator.
 - ``functions`` : vectorized Arrow/pandas UDFs — byte-exact text extraction,
                   outlink extraction, text quality/lang-id/token stats,
                   vector (embedding) math kept JVM-side where possible.
@@ -17,8 +18,6 @@ reference repo METIS-MICOR/rad_ecg (see SURVEY.md), re-expressed Spark-first:
                   skew-handling (salting, hub split).
 - ``plans``     : per-iteration checkpoint/lineage/resume (Iceberg-style
                   snapshot semantics over partitioned parquet + _meta table).
-- ``streaming`` : Structured Streaming analogs (windowed aggregation with
-                  watermark over the events stream).
 
 Everything is DataFrame-first: Catalyst handles pushdown/pruning/join
 selection; Python appears only inside Arrow-batched pandas UDFs.

@@ -20,7 +20,7 @@ edge extraction.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -73,12 +73,4 @@ def text_invariant_violations(pages: DataFrame) -> DataFrame:
     """Rows where extract_text(html) != stored text (should be empty)."""
     return pages.withColumn("extracted", extract_text(F.col("html"))).filter(
         F.col("extracted") != F.col("text")
-    )
-
-
-def token_count(col: Column) -> Column:
-    """Whitespace token count, JVM-side (no UDF)."""
-    trimmed = F.trim(col)
-    return F.when(trimmed == "", F.lit(0)).otherwise(
-        F.size(F.split(trimmed, r"[ \t\n\f\r]+"))
     )

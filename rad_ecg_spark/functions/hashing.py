@@ -1,8 +1,7 @@
-"""Deterministic 64-bit mixing hash, identical scalar + numpy-vector forms.
+"""Deterministic 64-bit mixing hash.
 
 Used by the synthetic pages generator (link targets, word choice, lang
-choice) and by dedup/sketch operators (MinHash, SimHash). A pure integer
-function of its inputs so the same fixture can be generated on the driver
+choice). A pure integer function of its inputs so the same fixture can be generated on the driver
 (oracle) and on executors (distributed generation) with identical bytes —
 the reference pins seeds the same way (tests/test_rad_ecg.py:45,51 in
 /root/reference).
@@ -11,8 +10,6 @@ splitmix64 finalizer (public-domain constant set, Steele et al.).
 """
 
 from __future__ import annotations
-
-import numpy as np
 
 _MASK = (1 << 64) - 1
 
@@ -26,17 +23,4 @@ def hash64(*parts: int) -> int:
         h ^= h >> 31
         h = (h * 0x94D049BB133111EB) & _MASK
         h ^= h >> 27
-    return h
-
-
-def hash64_np(a: np.ndarray, salt: int = 0) -> np.ndarray:
-    """Vectorized equivalent of ``hash64(x, salt)`` over a uint64 array."""
-    with np.errstate(over="ignore"):
-        h = np.full(a.shape, 0x9E3779B97F4A7C15, dtype=np.uint64)
-        for p in (a.astype(np.uint64), np.uint64(salt)):
-            h = h ^ p
-            h = h * np.uint64(0xBF58476D1CE4E5B9)
-            h = h ^ (h >> np.uint64(31))
-            h = h * np.uint64(0x94D049BB133111EB)
-            h = h ^ (h >> np.uint64(27))
     return h

@@ -1,15 +1,12 @@
-"""Multimodal (image/audio/video) column processing for training-data
+"""Multimodal (image/video) column processing for training-data
 pipelines.
 
-Modality payloads are opaque ``binary`` columns with typed metadata
-structs. The codecs here are REAL, dependency-free decoders for the
-three formats the synthetic corpus uses — 24-bit uncompressed BMP
-(image), 16-bit PCM WAV (audio) and Y4M/YUV4MPEG2 Cmono (video) —
-implemented with struct/numpy only (this container ships no
-Pillow/ffmpeg). Compressed formats beyond those raise
-NotImplementedError at the exact call site where the external decoder
-would plug in (``decode_backend="pil"``/"ffmpeg"), with identical
-Arrow plumbing.
+Modality payloads are opaque ``binary`` columns. The codecs here are
+REAL, dependency-free decoders for the two formats the planted fixtures
+use — 24-bit uncompressed BMP (image) and Y4M/YUV4MPEG2 Cmono (video) —
+implemented with struct/numpy only (no Pillow/ffmpeg dependency).
+Compressed formats need an external decoder in the same
+``mapInPandas`` plumbing.
 
 Scale notes: payload rows are large (KB-MB each), so these operators
 key their repartitioning on BYTE budget, not row count —
@@ -24,7 +21,6 @@ per-channel block stitching (porcine/pig_extract.py:1390-1423).
 
 from __future__ import annotations
 
-import hashlib
 import struct
 from typing import Iterator
 
@@ -32,36 +28,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType()),  # image | audio | video
-        T.StructField("payload", T.BinaryType()),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("width", T.IntegerType()),
-                    T.StructField("height", T.IntegerType()),
-                    T.StructField("sample_rate", T.IntegerType()),
-                    T.StructField("n_frames", T.IntegerType()),
-                    T.StructField("codec", T.StringType()),
-                ]
-            ),
-        ),
-    ]
-)
-
-IMAGE_FEATURES_SCHEMA = (
-    "media_id long, feat array<float>, mean_luma double, decode_ok boolean"
-)
-
-AUDIO_FEATURES_SCHEMA = (
-    "media_id long, n_samples long, rms double, zero_crossings long, "
-    "peak int, decode_ok boolean"
-)
 
 
 # --- real, dependency-free codecs ---------------------------------------
@@ -95,160 +61,7 @@ def bmp_decode(b: bytes) -> np.ndarray:
     return rows[::-1, :, ::-1]  # bottom-up BGR -> top-down RGB
 
 
-def wav_encode(samples: np.ndarray, rate: int) -> bytes:
-    """int16 mono samples -> 16-bit PCM WAV bytes."""
-    data = samples.astype("<i2").tobytes()
-    hdr = struct.pack(
-        "<4sI4s4sIHHIIHH4sI",
-        b"RIFF", 36 + len(data), b"WAVE", b"fmt ", 16,
-        1, 1, rate, rate * 2, 2, 16, b"data", len(data),
-    )
-    return hdr + data
-
-
-def wav_decode(b: bytes) -> tuple[int, np.ndarray]:
-    """16-bit PCM WAV bytes -> (sample_rate, int16 samples).
-
-    Walks the RIFF chunk list rather than assuming a canonical 44-byte
-    header, so files with extended fmt / LIST / other chunks decode
-    correctly instead of silently yielding garbage samples."""
-    if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
-        raise ValueError("not a WAV payload")
-    fmt_chunk = data_chunk = None
-    pos = 12
-    while pos + 8 <= len(b):
-        cid = b[pos : pos + 4]
-        (size,) = struct.unpack_from("<I", b, pos + 4)
-        if cid == b"fmt ":
-            fmt_chunk = pos + 8
-        elif cid == b"data":
-            data_chunk = (pos + 8, size)
-        pos += 8 + size + (size & 1)  # chunks are word-aligned
-    if fmt_chunk is None or data_chunk is None:
-        raise ValueError("WAV missing fmt/data chunk")
-    fmt, ch, rate, bits = struct.unpack_from("<HHIxxxxxxH", b, fmt_chunk)
-    if fmt != 1 or ch != 1 or bits != 16:
-        raise ValueError(f"unsupported WAV variant (fmt={fmt}, ch={ch}, bits={bits})")
-    off, n = data_chunk
-    n = min(n, len(b) - off)
-    return rate, np.frombuffer(b, dtype="<i2", count=n // 2, offset=off)
-
-
 # --- deterministic synthetic corpus --------------------------------------
-
-def synth_media(spark, n: int, kind: str = "image", partitions: int = 4) -> DataFrame:
-    """Deterministic synthetic media table with REAL payload encodings:
-    16x16 24-bit BMPs for images, 1600-sample 16 kHz PCM WAVs for audio,
-    and 24-frame 16x16 Y4M (YUV4MPEG2 Cmono) clips for video."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for rid in b["id"].tolist():
-                rng = np.random.default_rng(rid)
-                if kind == "image":
-                    px = rng.integers(0, 256, size=(16, 16, 3), dtype=np.uint8)
-                    rows.append((rid, kind, bmp_encode(px), (16, 16, 0, 1, "bmp")))
-                elif kind == "audio":
-                    s = (rng.integers(-2000, 2000, size=1600)).astype(np.int16)
-                    rows.append((rid, kind, wav_encode(s, 16000), (0, 0, 16000, 0, "pcm16")))
-                else:  # video: real Y4M container (mono luma planes)
-                    frames = rng.integers(0, 256, size=(24, 16, 16), dtype=np.uint8)
-                    rows.append(
-                        (rid, kind, y4m_encode(frames, (25, 1)), (16, 16, 25, 24, "y4m"))
-                    )
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "payload", "meta"])
-
-    return spark.range(0, n, 1, partitions).mapInPandas(gen, MEDIA_SCHEMA)
-
-
-def _fake_decode(payload: bytes, dim: int = 8) -> np.ndarray:
-    """Deterministic stand-in decode: bytes -> feature vector (used for
-    opaque/video payloads and tests that don't care about pixels)."""
-    h = hashlib.sha256(payload).digest()
-    return (
-        np.frombuffer(h[: dim * 4], dtype=np.uint32).astype(np.float32)
-        / np.float32(2**32)
-    )
-
-
-def _bmp_features(payload: bytes, dim: int) -> tuple[np.ndarray, float]:
-    px = bmp_decode(payload).astype(np.float64)
-    luma = 0.299 * px[:, :, 0] + 0.587 * px[:, :, 1] + 0.114 * px[:, :, 2]
-    # dim vertical strips -> per-strip mean luma, a real (if tiny) embed
-    strips = np.array_split(luma, dim, axis=1)
-    feat = np.array([s.mean() for s in strips], dtype=np.float32) / np.float32(255.0)
-    return feat, float(luma.mean())
-
-
-def extract_image_features(
-    media: DataFrame, decode_backend: str = "bmp", feat_dim: int = 8
-) -> DataFrame:
-    """payload -> fixed-dim feature vector via mapInPandas (Arrow batches
-    of whole payloads; vectorized numpy decode, no per-row round trips)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            feats, lumas, oks = [], [], []
-            for p in b["payload"]:
-                try:
-                    if p is None:
-                        raise ValueError("null payload")
-                    if decode_backend == "bmp":
-                        f, l = _bmp_features(bytes(p), feat_dim)
-                    elif decode_backend == "fake":
-                        f = _fake_decode(bytes(p), feat_dim)
-                        l = float(f.mean())
-                    else:
-                        raise NotImplementedError(
-                            f"decode backend {decode_backend!r}: external "
-                            "codecs (PIL/ffmpeg) are not available in this "
-                            "environment; bmp/wav are built in — swap the "
-                            "decoder here for other formats."
-                        )
-                    feats.append(f), lumas.append(l), oks.append(True)
-                except (ValueError, struct.error):
-                    feats.append(None), lumas.append(None), oks.append(False)
-            yield pd.DataFrame(
-                {
-                    "media_id": b["media_id"],
-                    "feat": feats,
-                    "mean_luma": lumas,
-                    "decode_ok": oks,
-                }
-            )
-
-    return media.select("media_id", "payload").mapInPandas(run, IMAGE_FEATURES_SCHEMA)
-
-
-def extract_audio_features(media: DataFrame) -> DataFrame:
-    """WAV payload -> (rms, zero-crossing count, peak) per clip."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = {k: [] for k in ("media_id", "n_samples", "rms", "zero_crossings", "peak", "decode_ok")}
-            for rid, p in zip(b["media_id"], b["payload"]):
-                out["media_id"].append(rid)
-                try:
-                    if p is None:
-                        raise ValueError("null payload")
-                    _, s = wav_decode(bytes(p))
-                    x = s.astype(np.float64)
-                    out["n_samples"].append(len(s))
-                    out["rms"].append(float(np.sqrt(np.mean(x * x))) if len(s) else 0.0)
-                    out["zero_crossings"].append(int(np.sum(np.abs(np.diff(np.signbit(s).astype(np.int8)))) ))
-                    out["peak"].append(int(np.max(np.abs(x))) if len(s) else 0)
-                    out["decode_ok"].append(True)
-                except (ValueError, struct.error):
-                    out["n_samples"].append(None)
-                    out["rms"].append(None)
-                    out["zero_crossings"].append(None)
-                    out["peak"].append(None)
-                    out["decode_ok"].append(False)
-            yield pd.DataFrame(out)
-
-    return media.select("media_id", "payload").mapInPandas(run, AUDIO_FEATURES_SCHEMA)
-
 
 def synth_event_bmp(
     events: DataFrame, n_ids: int = 48, h: int = 8, w: int = 16
@@ -288,7 +101,7 @@ def image_luma_profile(media: DataFrame, n_strips: int = 8) -> DataFrame:
     """payload -> per-vertical-strip EXACT integer luma sum (BT.601
     coefficients scaled x1000: 299 R + 587 G + 114 B per pixel). The
     integer output makes the real decode path hash-comparable against a
-    SQL oracle — the float-feature variant is extract_image_features."""
+    SQL oracle."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
@@ -307,30 +120,12 @@ def image_luma_profile(media: DataFrame, n_strips: int = 8) -> DataFrame:
     )
 
 
-def frame_sample_plan(media: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling plan: (media_id, frame_idx) rows — the
-    shuffle-level fan-out a real frame extractor would feed. JVM-side
-    sequence/explode; the per-frame decode is the pluggable stage."""
-    return media.filter(F.col("kind") == "video").select(
-        "media_id",
-        F.explode(
-            F.sequence(
-                F.lit(0),
-                F.greatest(F.col("meta.n_frames") - 1, F.lit(0)),
-                F.lit(every_n),
-            )
-        ).alias("frame_idx"),
-    )
-
-
 # --- Y4M (YUV4MPEG2) video codec -----------------------------------------
 # Public format (mjpegtools YUV4MPEG2 spec): ASCII stream header
 # "YUV4MPEG2 W<w> H<h> F<num>:<den> ... C<cs>\n", then per frame a
 # "FRAME...\n" marker followed by the raw plane bytes. Cmono = one
 # 8-bit luma plane per frame — a real, dependency-free video container
-# (struct/numpy only), closing the codec plug the docstring's
-# NotImplementedError leaves for compressed formats (H.264 etc. still
-# need ffmpeg and still raise at that call site).
+# (struct/numpy only); compressed formats (H.264 etc.) need ffmpeg.
 
 def y4m_encode(frames: np.ndarray, fps: tuple[int, int] = (25, 1)) -> bytes:
     """frames: (n_frames, h, w) uint8 luma planes -> Y4M Cmono bytes."""

@@ -1,4 +1,4 @@
-"""Power transforms (Box-Cox / Yeo-Johnson) as vectorized pandas UDFs.
+"""Power transform (Yeo-Johnson) as a vectorized pandas UDF.
 
 Reference capability: the PowerTransformer normalization stage
 (/root/reference/src/rad_ecg/scripts/ml/anomaly/ml_anom.py:798-821).
@@ -47,27 +47,6 @@ def yeojohnson_udf(lam: float = 0.5):
         return pd.Series(out)
 
     return yj
-
-
-def boxcox_udf(lam: float = 0.5):
-    """Box-Cox transform with fixed lambda; defined for x > 0 only —
-    non-positive inputs yield NULL (NaN), mirroring the reference's
-    positive-domain contract."""
-
-    @pandas_udf("double")
-    def bc(s: pd.Series) -> pd.Series:
-        x = s.to_numpy(dtype=np.float64)
-        out = np.full_like(x, np.nan)
-        ok = x > 0
-        if lam == 0.0:
-            out[ok] = np.log(x[ok])
-        elif lam == 0.5:
-            out[ok] = 2.0 * (np.sqrt(x[ok]) - 1.0)
-        else:
-            out[ok] = (np.power(x[ok], lam) - 1.0) / lam
-        return pd.Series(out)
-
-    return bc
 
 
 def power_transform_query(events, lam: float = 0.5):

@@ -1,7 +1,9 @@
 """Deduplication family for web-scale corpora.
 
-- exact: hash-groupBy on a content fingerprint (md5 of normalized text);
-  keeps the min-id representative. One shuffle, partial-agg friendly.
+- exact: hash-groupBy on a content fingerprint (md5 of normalized text,
+  ``textstats.fingerprint``), keeping the min-id representative; the
+  pipeline's exact stage (plans/pipeline.py ``dedup_pages``). One
+  shuffle, partial-agg friendly.
 - token sets: ``token_sets`` -> ``(id, toks)``, one row per document,
   toks = its distinct words. The MinHash, LSH, verify and near-dup
   cluster stages read this frame and never tokenize, so each entry point
@@ -31,28 +33,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from rad_ecg_spark.functions.textstats import fingerprint, words
+from rad_ecg_spark.functions.textstats import words
 
 MERSENNE31 = (1 << 31) - 1
 # fixed public-style LCG parameters for the k minhash functions
 MINHASH_PARAMS = [(2 * i + 1, 7919 * (i + 1)) for i in range(8)]
-
-
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Keep the min-id row per content fingerprint. Returns the kept rows
-    plus group size (n_copies).
-
-    Skew shape: groupBy(fp) gets map-side partial aggregation, so a
-    mega-duplicate cluster (millions of identical boilerplate docs)
-    reduces to one partial row per map partition before the shuffle —
-    no hot partition. (A Window over partitionBy(fp) would put the whole
-    cluster in one task.)
-    """
-    with_fp = df.withColumn("fp", fingerprint(F.col(text_col)))
-    reps = with_fp.groupBy("fp").agg(
-        F.min(id_col).alias(id_col), F.count(F.lit(1)).alias("n_copies")
-    )
-    return with_fp.join(reps, ["fp", id_col])
 
 
 def token_hash(col):
@@ -96,7 +81,8 @@ def minhash_lsh_candidates(
     members than the cap BEFORE the self-join (a mega-bucket of boiler-
     plate docs would otherwise cost |bucket|^2 in one task); capped
     buckets are by definition huge duplicate clusters better handled by
-    exact_dedup first, so the recall tradeoff is explicit and bounded.
+    an exact fingerprint dedup first, so the recall tradeoff is explicit
+    and bounded.
     """
     k = len(MINHASH_PARAMS)
     rows_per_band = k // bands

@@ -12,10 +12,10 @@
   production mitigation). Hyperplanes are deterministic (seeded) so
   results are reproducible at any parallelism — and are embedded as
   literals so a DuckDB oracle reproduces buckets and scores exactly.
-- IVF (inverted-file) ANN: coarse k-means quantization via spark.ml
-  KMeans (fixed seed), vectors assigned to their nearest centroid cell;
-  each query probes only the ``nprobe`` nearest cells. The centroid set
-  is tiny and broadcast; the candidate join is an equi-join on cell id.
+- IVF (inverted-file) ANN: fixed seeded centroids, vectors assigned to
+  their nearest centroid cell; each query probes only the ``nprobe``
+  nearest cells. The centroid set is tiny and broadcast; the candidate
+  join is an equi-join on cell id.
 
 Reference capability donor: top-k discord selection
 (/root/reference/src/rad_ecg/scripts/ml/anomaly/stump_anom.py:92) and
@@ -371,7 +371,8 @@ def embedding_neardup_pairs(
 
 def _cell_structs(vec_col, centroids: list[list[float]]):
     """[(d2 to centroid ci, ci), ...] as JVM struct expressions; d2 is a
-    left-assoc zip_with/aggregate fold (the oracle mirrors the order)."""
+    left-assoc zip_with/aggregate fold (the oracle mirrors the order).
+    Tests hold ``_with_cells`` bit-identical to it."""
     out = []
     for ci, c in enumerate(centroids):
         carr = F.array(*[F.lit(float(x)) for x in c])
@@ -385,66 +386,6 @@ def _cell_structs(vec_col, centroids: list[list[float]]):
         )
         out.append(F.struct(d2.alias("d2"), F.lit(ci).alias("cell")))
     return out
-
-
-def ivf_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_cells: int = 16,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 7,
-    fit_fraction: float = 1.0,
-) -> DataFrame:
-    """IVF (inverted-file) ANN: spark.ml KMeans coarse quantizer (fixed
-    seed), vectors live in their nearest-centroid cell, queries probe the
-    ``nprobe`` nearest cells only. The scan per query is an equi-join on
-    cell id against ~nprobe/n_cells of the corpus.
-
-    At 100 TB: the KMeans fit runs on a seeded SAMPLE (``fit_fraction``
-    — centroid quality needs thousands of points per cell, not the whole
-    corpus), ``transform`` is a map-side pass (centroids broadcast by
-    spark.ml), and the candidate join shuffles by cell id — no all-pairs
-    stage anywhere. Quality gate: recall pytest
-    (tests/test_dedup_similarity.py). For a fully deterministic,
-    SQL-checkable variant see ``ivf_fixed_topk``.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    v = vectors.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).alias("vvec"),
-        array_to_vector(F.col(vec_col)).alias("features"),
-    )
-    fit_df = v.select("features")
-    if fit_fraction < 1.0:
-        fit_df = fit_df.sample(fraction=fit_fraction, seed=seed)
-    model = KMeans(k=n_cells, seed=seed, maxIter=10).fit(fit_df)
-    assigned = model.transform(v).select(
-        "vid", "vvec", F.col("prediction").alias("cell")
-    )
-    # rank each query's distance to every centroid; keep nprobe cells.
-    # centroids are tiny (n_cells × dim) → literal arrays, JVM expressions.
-    cents = [c.tolist() for c in model.clusterCenters()]
-    q = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec"))
-    probe = (
-        q.select(
-            "qid", "qvec",
-            F.explode(
-                F.slice(F.array_sort(F.array(*_cell_structs(F.col("qvec"), cents))), 1, nprobe)
-            ).alias("pc"),
-        )
-        .select("qid", "qvec", F.col("pc.cell").alias("cell"))
-    )
-    scored = (
-        assigned.join(F.broadcast(probe), "cell")
-        .filter(F.col("vid") != F.col("qid"))
-        .select("qid", "vid", cosine(F.col("qvec"), F.col("vvec")).alias("cos"))
-    )
-    return _cosine_topk_tail(scored, k)
 
 
 def ivf_centroids(dim: int, n_cells: int, seed: int = 11) -> list[list[float]]:
@@ -467,8 +408,7 @@ def ivf_fixed_topk(
     """IVF ANN with FIXED centroids passed as literals: cell assignment
     (argmin d2, ties to the smaller cell id) and the nprobe probe both
     become pure JVM expressions, so the whole operator is
-    SQL-expressible and carries a full DuckDB oracle — the correctness
-    twin of ``ivf_topk`` (which fits its quantizer). Same scale shape:
+    SQL-expressible and carries a full DuckDB oracle. Scale shape:
     map-side assignment, broadcast probe, equi-join on cell id.
 
     Assignment and probe run as vectorized Arrow passes (``_with_cells``)

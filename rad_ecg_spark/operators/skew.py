@@ -10,19 +10,16 @@ Two structural tools:
   instead of one straggler. Use when the small side is too big to
   broadcast but the big side has hot keys.
 
-- ``split_hub_edges(edges, threshold)``: degree-based hub/residual split
-  for iterative message passing. Edges whose src out-degree >= threshold
-  go to a ``hub`` table kept in its natural (balanced) partitioning and
-  joined per-iteration against a BROADCAST slice of the rank state
-  (the slice has at most |hubs| rows — tiny by definition of a hub
-  threshold); residual edges keep the co-partitioned shuffle-hash path,
-  where the per-src row count is bounded by the threshold, so no task
-  can be handed more than threshold rows for one key. ``HubSplit`` is
-  that split persisted for a loop together with its per-iteration
-  messages, and ``hub_split`` the one rule for when PageRank and label
-  propagation take it: split off the sources holding more than an
-  average partition's share of the edges, so no residual key outweighs
-  an average partition (BENCH/BASELINE.md 'Hub-split supernode path').
+- ``HubSplit(edges, hub_ids, num_partitions)``: hub/residual split for
+  iterative message passing. Edges whose src is one of ``hub_ids`` go to a
+  ``hub`` table in balanced round-robin partitioning and are joined
+  per-iteration against a BROADCAST slice of the rank state (the slice
+  has one row per hub); residual edges keep the co-partitioned
+  shuffle-hash path, where no source outweighs an average partition.
+  ``hub_split`` is the one rule for when PageRank and label propagation
+  take it: split off the sources holding more than an average
+  partition's share of the edges (BENCH/BASELINE.md 'Hub-split
+  supernode path').
 
 Reference capability donor: the work-queue rebalancing idea
 (/root/reference/src/rad_ecg/scripts/peak_detect_v4.py:1664-1679) —
@@ -78,49 +75,39 @@ def salted_join(
     return big_s.join(small_s, [key, "_salt"], how).drop("_salt")
 
 
-def split_hub_edges(
-    edges: DataFrame, threshold: int
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(residual_edges, hub_edges, hub_ids): split by src out-degree.
-
-    hub_ids is small by construction (sum of degrees is |E|, so at most
-    |E|/threshold hubs exist) — safe to broadcast.
-    """
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    hubs = deg.filter(F.col("outdeg") >= threshold).select("src")
-    hub_edges = edges.join(F.broadcast(hubs), "src", "left_semi")
-    residual = edges.join(F.broadcast(hubs), "src", "left_anti")
-    return residual, hub_edges, hubs.select(F.col("src").alias("id"))
-
-
 class HubSplit:
-    """``split_hub_edges`` of a src-partitioned edge table, persisted and
-    materialized once for an iterative loop; ``unpersist()`` after it."""
+    """The split of a src-partitioned edge table at the source ids
+    ``hub_ids`` (a few: ``hub_split`` collects at most P - 1), persisted
+    and materialized once for an iterative loop; ``unpersist()`` after
+    it. The ids are literals in the plans (``isin``), so neither the
+    split nor an iteration broadcasts them."""
 
-    def __init__(self, edges: DataFrame, threshold: int, num_partitions: int):
-        residual, hub_edges, hub_ids = split_hub_edges(edges, threshold)
-        # residual inherits HashPartitioning(src) (broadcast anti-join
-        # preserves the streamed side's partitioning); hub edges get
-        # BALANCED round-robin partitioning — that is the point.
-        self.residual = residual.persist(StorageLevel.MEMORY_AND_DISK)
-        self.hub_edges = hub_edges.repartition(num_partitions).persist(
-            StorageLevel.MEMORY_AND_DISK
+    def __init__(self, edges: DataFrame, hub_ids: list, num_partitions: int):
+        self.hub_ids = hub_ids
+        is_hub = F.col("src").isin(hub_ids)
+        # residual keeps HashPartitioning(src) (a filter preserves it;
+        # a NULL src, which never joins a state row, is dropped); hub
+        # edges get BALANCED round-robin partitioning — that is the point.
+        self.residual = edges.filter(~is_hub).persist(StorageLevel.MEMORY_AND_DISK)
+        self.hub_edges = (
+            edges.filter(is_hub)
+            .repartition(num_partitions)
+            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        self.hub_ids = hub_ids.persist()
-        self.residual.count(), self.hub_edges.count(), self.hub_ids.count()
+        self.residual.count(), self.hub_edges.count()
 
     def messages(self, state: DataFrame, cols: list) -> DataFrame:
         """graph_core.messages over the split: residual edges keep the
         co-partitioned path with bounded per-key rows, hub edges join a
-        broadcast state slice (<= |E|/threshold rows)."""
-        hub_slice = state.join(F.broadcast(self.hub_ids), "id", "left_semi")
+        broadcast state slice (one row per hub)."""
+        hub_slice = state.filter(F.col("id").isin(self.hub_ids))
         m_hub = self.hub_edges.join(
             F.broadcast(hub_slice), self.hub_edges.src == F.col("id")
         ).select(*cols)
         return messages(self.residual, state, cols).unionByName(m_hub)
 
     def unpersist(self) -> None:
-        for df in (self.residual, self.hub_edges, self.hub_ids):
+        for df in (self.residual, self.hub_edges):
             df.unpersist()
 
 
@@ -136,6 +123,7 @@ def hub_split(
     share = rows // num_partitions
     if max_rows is not None and max_rows <= share:
         return None
-    if not out_degrees(edges).filter(F.col("outdeg") > share).collect():
+    hubs = out_degrees(edges).filter(F.col("outdeg") > share).collect()
+    if not hubs:
         return None
-    return HubSplit(edges, share + 1, num_partitions)
+    return HubSplit(edges, [r["src"] for r in hubs], num_partitions)

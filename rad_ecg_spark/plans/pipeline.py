@@ -88,8 +88,8 @@ def dedup_pages(pages: DataFrame) -> DataFrame:
     # (no tokens).
     text = F.coalesce(F.col("text"), F.lit(""))
     facts = pages.select("url", fingerprint(text).alias("fp"), token_set(text).alias("toks"))
-    # exact stage first: identical fingerprints collapse to the min url
-    # (exact_dedup's rule) before the more expensive near-dup machinery
+    # exact stage first: identical fingerprints collapse to their min url
+    # before the more expensive near-dup machinery
     # sees the corpus. groupBy(fp) gets map-side partial aggregation, so
     # a mega-cluster of identical boilerplate reduces before the shuffle.
     # Pages sharing a fingerprint share their word set, so min_by keeps

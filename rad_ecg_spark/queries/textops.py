@@ -392,11 +392,9 @@ FROM ranked WHERE rk <= {TOPK_K}"""
 
 
 # --- IVF ANN, fixed-centroid variant (full DuckDB oracle) -----------------
-# The spark.ml-KMeans quantizer (operators/similarity.py:ivf_topk, now
-# sample-fit) is gated by the recall pytest — a k-means fit isn't
-# SQL-expressible. This registry entry is its correctness twin: the SAME
-# assignment/probe/join/topk plan with the centroid set as seeded double
-# literals, so every stage has an exact SQL mirror.
+# The assignment/probe/join/topk plan with the centroid set as seeded
+# double literals (a k-means fit isn't SQL-expressible), so every stage
+# has an exact SQL mirror.
 
 IVF_CELLS, IVF_NPROBE, IVF_SEED = 8, 2, 11
 

@@ -6,8 +6,10 @@ Design notes (scale-first):
 - AQE on for relational queries (skew-join splitting, partition
   coalescing). Iterative graph loops pin partition counts themselves so
   exchange reuse survives (see operators/pagerank.py).
-- shuffle.partitions defaults to the core count: on a real cluster this
-  is set to ~2-3x total executor cores via spark-submit conf.
+- master and shuffle.partitions come from the caller or, left as None,
+  from the submitted conf (spark-submit ``--master`` and ``--conf
+  spark.sql.shuffle.partitions``; on a real cluster ~2-3x total
+  executor cores), else Spark's own defaults.
 - UTC session timezone so results compare bit-for-bit against the
   DuckDB oracle (naive-UTC timestamps).
 """
@@ -27,22 +29,18 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (or local[*]).
-    On a real cluster, pass ``master=None`` with spark-submit providing
-    the master; these confs are safe cluster-side too.
+    ``master`` and ``shuffle_partitions`` left as None are not set here:
+    the master and partition count that spark-submit (or
+    ``PYSPARK_SUBMIT_ARGS``) provides stay in force. These confs are
+    safe cluster-side too.
     """
-    if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-        master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        cpus_s = os.environ.get("SPARK_GRAFT_CPUS", "")
-        shuffle_partitions = int(cpus_s) if cpus_s.isdigit() else 32
-
+    builder = SparkSession.builder.appName(app_name)
+    if master is not None:
+        builder = builder.master(master)
+    if shuffle_partitions is not None:
+        builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
+        builder.config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")

@@ -33,7 +33,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from rad_ecg_spark.functions.hashing import hash64
 
-SEED = 42
 EPOCH = _dt.datetime(2026, 1, 1, 0, 0, 0)
 
 _VOCAB = [

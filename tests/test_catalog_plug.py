@@ -1,21 +1,16 @@
-"""Catalog plug (plans/catalog.py): the Iceberg backend is gated, its
-statements are pinned, and its MERGE rule is semantically identical to
-the parquet stand-in's merge_upsert."""
+"""Iceberg checkpoint seam (plans/checkpoint.py): the catalog backend is
+gated on a configured catalog, and its state-table statement is pinned."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import Row
 
-from rad_ecg_spark.plans.catalog import (
+from rad_ecg_spark.plans.checkpoint import (
     IcebergSink,
-    ParquetSink,
     create_state_table_sql,
-    dedupe_batch,
     iceberg_catalogs,
-    merge_sql,
 )
-from rad_ecg_spark.plans.upsert import merge_upsert
 
 
 def test_no_catalog_in_sandbox_and_gate_raises(spark):
@@ -24,68 +19,8 @@ def test_no_catalog_in_sandbox_and_gate_raises(spark):
         IcebergSink(spark)
 
 
-def test_merge_sql_pins_keep_one_rule():
-    sql = merge_sql("cat.ns.t", ["k", "v", "ts"], ["k"], "ts")
-    assert "MERGE INTO cat.ns.t t USING __updates s ON t.k = s.k" in sql
-    # latest-ts-wins with updates-beat-existing-on-ties is exactly >=
-    assert "WHEN MATCHED AND s.ts >= t.ts THEN UPDATE SET" in sql
-    assert "WHEN NOT MATCHED THEN INSERT (k, v, ts) VALUES (s.k, s.v, s.ts)" in sql
-
-
 def test_create_state_table_sql_partitions_by_iteration(spark):
     df = spark.createDataFrame([Row(id=1, rank=0.5)])
     sql = create_state_table_sql("cat.ns.pagerank_state", df)
     assert "id bigint" in sql and "rank double" in sql
     assert "USING iceberg PARTITIONED BY (iteration)" in sql
-
-
-def _simulate_iceberg_merge(existing, updates, key_cols, ts_col):
-    """Apply merge_sql's rule in plain python: per key, the deduped
-    update replaces the existing row iff s.ts >= t.ts; unmatched
-    updates insert; untouched existing rows survive."""
-    tgt = {tuple(r[k] for k in key_cols): r.asDict() for r in existing.collect()}
-    for r in dedupe_batch(updates, key_cols, ts_col).collect():
-        key = tuple(r[k] for k in key_cols)
-        if key not in tgt or r[ts_col] >= tgt[key][ts_col]:
-            tgt[key] = r.asDict()
-    return sorted(tuple(sorted(d.items())) for d in tgt.values())
-
-
-def test_merge_rule_matches_parquet_stand_in(spark, tmp_path):
-    """merge_upsert (stand-in) and the MERGE INTO rule (catalog) must
-    agree on every case: new key, newer update, OLDER update (must NOT
-    clobber), exact-ts tie (update wins), duplicate keys in one batch."""
-    existing = spark.createDataFrame(
-        [Row(k=1, v="old1", ts=10), Row(k=2, v="old2", ts=20), Row(k=3, v="old3", ts=30)]
-    )
-    updates = spark.createDataFrame(
-        [
-            Row(k=1, v="new1", ts=11),   # newer -> replaces
-            Row(k=2, v="late2", ts=19),  # older -> must NOT clobber
-            Row(k=3, v="tie3", ts=30),   # tie -> update wins
-            Row(k=4, v="ins4a", ts=5),   # batch-dup key: ts=7 wins
-            Row(k=4, v="ins4b", ts=7),
-        ]
-    )
-    target = str(tmp_path / "tbl")
-    merge_upsert(spark, target, existing, ["k"], "ts")
-    merge_upsert(spark, target, updates, ["k"], "ts")
-    stand_in = sorted(
-        tuple(sorted(r.asDict().items())) for r in spark.read.parquet(target).collect()
-    )
-    simulated = _simulate_iceberg_merge(existing, updates, ["k"], "ts")
-    assert stand_in == simulated
-    got = dict((dict(t)["k"], dict(t)["v"]) for t in stand_in)
-    assert got == {1: "new1", 2: "old2", 3: "tie3", 4: "ins4b"}
-
-
-def test_parquet_sink_roundtrip(spark, tmp_path):
-    sink = ParquetSink(spark, str(tmp_path))
-    df = spark.createDataFrame([Row(part="a", x=1), Row(part="b", x=2)])
-    sink.overwrite_partitions(df, "t", ["part"])
-    # dynamic overwrite: rewriting only partition 'a' keeps 'b'
-    sink.overwrite_partitions(
-        spark.createDataFrame([Row(part="a", x=9)]), "t", ["part"]
-    )
-    got = {r["part"]: r["x"] for r in spark.read.parquet(str(tmp_path / "t")).collect()}
-    assert got == {"a": 9, "b": 2}

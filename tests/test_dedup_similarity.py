@@ -7,7 +7,6 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from rad_ecg_spark.operators.dedup import (
-    exact_dedup,
     jaccard_pairs,
     minhash_lsh_candidates,
     minhash_signatures,
@@ -32,15 +31,6 @@ DOCS = [
 
 def _docs_df(spark):
     return spark.createDataFrame(DOCS, "doc_id long, text string")
-
-
-class TestExactDedup:
-    def test_keeps_min_id_and_counts_copies(self, spark):
-        kept = exact_dedup(_docs_df(spark))
-        rows = {r["doc_id"]: r["n_copies"] for r in kept.collect()}
-        assert 1 in rows and 2 not in rows and 3 not in rows
-        assert rows[1] == 3  # docs 1,2,3 share one fingerprint
-        assert rows[4] == 1 and rows[5] == 1 and rows[6] == 1
 
 
 class TestJaccard:
@@ -145,39 +135,6 @@ class TestSimilarity:
         empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
         with pytest.raises(ValueError, match="cannot infer embedding dim"):
             lsh_ann_topk(empty, empty, k=1)
-
-    def test_ivf_topk_finds_cluster_mates(self, spark):
-        from rad_ecg_spark.operators.similarity import ivf_topk
-
-        vecs = self._vec_df(spark)
-        q = vecs.filter(F.col("vec_id") == 0)
-        # 4 planted clusters, 4 cells, probe 2: the query's own cell holds
-        # its 4 jittered mates
-        top = ivf_topk(vecs, q, k=4, n_cells=4, nprobe=2).collect()
-        assert {r["vid"] for r in top} == {1, 2, 3, 4}
-        assert all(r["cos"] > 0.99 for r in top)
-
-
-    def test_ivf_sample_fit_recall_on_embeddings(self, spark):
-        """Sample-based KMeans fit (fit_fraction=0.5) keeps useful recall
-        vs brute force on the real embeddings table: planted-cluster data,
-        8 cells, probe 2 -> expect most true neighbors recovered."""
-        from rad_ecg_spark.operators.similarity import brute_force_topk, ivf_topk
-
-        vecs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        q = vecs.filter(F.col("vec_id") < 5)
-        truth = {
-            (r["qid"], r["vid"])
-            for r in brute_force_topk(vecs, q, k=3).collect()
-        }
-        got = {
-            (r["qid"], r["vid"])
-            for r in ivf_topk(
-                vecs, q, k=3, n_cells=8, nprobe=2, fit_fraction=0.5
-            ).collect()
-        }
-        recall = len(truth & got) / len(truth)
-        assert recall >= 0.6, f"recall {recall:.2f}"
 
     def test_ivf_fixed_topk_exact_within_probed_cells(self, spark):
         """ivf_fixed_topk with ALL cells probed degenerates to exact

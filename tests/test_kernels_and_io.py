@@ -1,13 +1,10 @@
-"""Grouped-map kernels, skew-aware joins, CSV source, spark.ml stage,
-sinks, streaming windows and blocked-kernel memory — round-2 coverage
-tests. Checkpoint/resume lives in test_checkpoint_resume.py."""
+"""Grouped-map kernels, skew-aware joins, the spark.ml stage, the power
+transform and blocked-kernel memory. Checkpoint/resume lives in
+test_checkpoint_resume.py."""
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 from .conftest import BATCH_ROWS, arrow_batch_rows
@@ -81,17 +78,23 @@ def _record_hub_splits(monkeypatch) -> list:
     class Recorded(skew.HubSplit):
         def __init__(self, *args):
             super().__init__(*args)
-            made.append({r["id"] for r in self.hub_ids.collect()})
+            made.append(set(self.hub_ids))
 
     monkeypatch.setattr(skew, "HubSplit", Recorded)
     return made
 
 
 def _split_at(threshold):
-    """A stand-in for ``skew.hub_split`` that always splits at ``threshold``."""
+    """A stand-in for ``skew.hub_split`` that always splits off the
+    sources with at least ``threshold`` rows."""
+    from rad_ecg_spark.operators.graph_core import out_degrees
     from rad_ecg_spark.operators.skew import HubSplit
 
-    return lambda edges, rows, P, max_rows=None: HubSplit(edges, threshold, P)
+    def split(edges, rows, P, max_rows=None):
+        hubs = out_degrees(edges).filter(F.col("outdeg") >= threshold).collect()
+        return HubSplit(edges, [r["src"] for r in hubs], P)
+
+    return split
 
 
 class TestSkewAwarePageRank:
@@ -102,22 +105,21 @@ class TestSkewAwarePageRank:
         edge, over |E| / P), and its ranks stay 1e-12-equal to the
         unsplit plan."""
         from rad_ecg_spark.operators import pagerank as pagerank_mod
-        from rad_ecg_spark.operators.skew import split_hub_edges
+        from rad_ecg_spark.operators.skew import HubSplit
 
         n = 100_000
         edges = spark.range(1, n + 1, 1, 8).select(
             F.lit(0).alias("src"), F.col("id").alias("dst")
         )
-        residual, hub_edges, hub_ids = split_hub_edges(edges, threshold=1000)
-        assert residual.count() == 0
-        assert {r["id"] for r in hub_ids.collect()} == {0}
+        hubs = HubSplit(edges, [0], 8)
+        assert hubs.residual.count() == 0
         sizes = [
             r["n"]
-            for r in hub_edges.repartition(8)
-            .groupBy(F.spark_partition_id().alias("p"))
+            for r in hubs.hub_edges.groupBy(F.spark_partition_id().alias("p"))
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
         ]
+        hubs.unpersist()
         assert max(sizes) / sorted(sizes)[len(sizes) // 2] < 4.0
 
         made = _record_hub_splits(monkeypatch)
@@ -169,8 +171,9 @@ class TestSkewAwarePageRank:
             sc.setLocalProperty("spark.jobGroup.id", None)
         assert len(sc.statusTracker().getJobIdsForGroup("hub-rule-p2")) == 0
         hubs = hub_split(symmetric(star, 3), 2 * n, 3, max_rows=n)
-        assert {r["id"] for r in hubs.hub_ids.collect()} == {0}
-        assert hubs.residual.count() == n and hubs.hub_edges.count() == n
+        assert hubs.hub_ids == [0]
+        assert {tuple(r) for r in hubs.residual.collect()} == {(i, 0) for i in range(1, n + 1)}
+        assert {tuple(r) for r in hubs.hub_edges.collect()} == {(0, i) for i in range(1, n + 1)}
         hubs.unpersist()
 
     def test_powerlaw_synth_is_skewed_deterministic_and_split_exact(
@@ -255,24 +258,6 @@ class TestSkewAwarePageRank:
         )
 
 
-class TestCsvSource:
-    def test_schema_first_permissive_quarantine(self, spark, tmp_path):
-        from rad_ecg_spark.sources.csv_source import read_csv, split_corrupt
-
-        p = tmp_path / "in.csv"
-        p.write_text(
-            "id,name,score\n"
-            "1,alice,3.5\n"
-            "2,bob,not_a_number\n"
-            "3,carol,9.25\n"
-        )
-        df = read_csv(spark, str(p), "id long, name string, score double")
-        clean, bad = split_corrupt(df)
-        assert {r["id"] for r in clean.collect()} == {1, 3}
-        assert bad.count() == 1
-        assert "not_a_number" in bad.collect()[0]["raw_line"]
-
-
 class TestSparkMLStage:
     def test_linear_regression_matches_closed_form_ols(self, spark):
         """spark.ml LinearRegression (no regularization) on y = 3x + 7
@@ -305,165 +290,6 @@ class TestSparkMLStage:
         ).fit(assembled)
         assert abs(model.coefficients[0] - slope) < 1e-6
         assert abs(model.coefficients[0] - 3.0) < 0.01
-
-
-class TestMetadataScan:
-    def test_footer_scan_counts_without_data_read(self, spark):
-        from rad_ecg_spark.sources.metadata import column_stats, parquet_footer_scan
-
-        meta = parquet_footer_scan(spark, "/root/testdata/sf0.001").collect()
-        by_table = {os.path.basename(r["path"]): r["n_rows"]
-                    for r in meta if "events" in r["path"] or "region" in r["path"]}
-        # region is 5 rows at every SF; events sf0.001 is 1000
-        assert by_table.get("region.parquet") == 5
-        assert by_table.get("events.parquet") == 1000
-
-        stats = column_stats(
-            spark, "/root/testdata/sf0.001/region.parquet", "r_regionkey"
-        ).collect()
-        assert len(stats) >= 1
-        assert stats[0]["vmin"] == "0" and stats[0]["vmax"] == "4"
-
-
-class TestUpsertSink:
-    def test_merge_upsert_latest_wins(self, spark, tmp_path):
-        import datetime as dt
-
-        from rad_ecg_spark.plans.upsert import merge_upsert
-
-        tgt = str(tmp_path / "tbl")
-        t = lambda k: dt.datetime(2024, 1, 1) + dt.timedelta(minutes=k)  # noqa: E731
-        base = spark.createDataFrame(
-            [(1, t(0), 10.0), (2, t(0), 20.0)], "k long, ts timestamp, v double"
-        )
-        merge_upsert(spark, tgt, base, ["k"], "ts")
-        upd = spark.createDataFrame(
-            [
-                (2, t(5), 99.0),   # newer -> replaces
-                (1, t(0), 77.0),   # same ts duplicate -> update wins
-                (3, t(1), 30.0),   # brand new key
-            ],
-            "k long, ts timestamp, v double",
-        )
-        merge_upsert(spark, tgt, upd, ["k"], "ts")
-        got = {r["k"]: r["v"] for r in spark.read.parquet(tgt).collect()}
-        assert got == {1: 77.0, 2: 99.0, 3: 30.0}
-
-        # stale late row must NOT regress the newer value
-        late = spark.createDataFrame([(2, t(1), 5.0)], "k long, ts timestamp, v double")
-        merge_upsert(spark, tgt, late, ["k"], "ts")
-        got = {r["k"]: r["v"] for r in spark.read.parquet(tgt).collect()}
-        assert got[2] == 99.0
-
-    def test_streaming_foreach_batch_upsert(self, spark, tmp_path):
-        import datetime as dt
-        import os as _os
-
-        from rad_ecg_spark.plans.upsert import foreach_batch_upsert
-
-        src = tmp_path / "src"
-        src.mkdir()
-        t0 = dt.datetime(2024, 1, 1)
-
-        def mk(name, rows, mtime):
-            df = spark.createDataFrame(rows, "k long, ts timestamp, v double")
-            p = str(src / name)
-            df.coalesce(1).write.mode("overwrite").parquet(p)
-            _os.utime(p, (mtime, mtime))
-            for f in _os.listdir(p):
-                _os.utime(_os.path.join(p, f), (mtime, mtime))
-
-        mk("b0", [(1, t0, 1.0), (2, t0, 2.0)], 1000)
-        mk("b1", [(2, t0 + dt.timedelta(minutes=1), 22.0), (3, t0, 3.0)], 2000)
-        stream = (
-            spark.readStream.schema("k long, ts timestamp, v double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src) + "/*")
-        )
-        tgt = str(tmp_path / "tbl")
-        q = foreach_batch_upsert(
-            stream, tgt, ["k"], "ts", checkpoint_dir=str(tmp_path / "ckpt")
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        got = {r["k"]: r["v"] for r in spark.read.parquet(tgt).collect()}
-        assert got == {1: 1.0, 2: 22.0, 3: 3.0}
-
-
-class TestPartitionedSink:
-    def test_dynamic_overwrite_replaces_only_written_partitions(self, spark, tmp_path):
-        from rad_ecg_spark.sources.sinks import write_partitioned_table
-
-        tbl = str(tmp_path / "tbl")
-        base = spark.createDataFrame(
-            [("a", 1), ("a", 2), ("b", 10)], "part string, v long"
-        )
-        write_partitioned_table(base, tbl, ["part"])
-        # backfill ONLY partition 'a'; 'b' must survive
-        fix = spark.createDataFrame([("a", 99)], "part string, v long")
-        write_partitioned_table(fix, tbl, ["part"])
-        got = {(r["part"], r["v"]) for r in spark.read.parquet(tbl).collect()}
-        assert got == {("a", 99), ("b", 10)}
-
-
-class TestSchemaEvolution:
-    def test_merge_schema_defaults_and_derivations(self, spark, tmp_path):
-        from rad_ecg_spark.sources.evolution import read_evolved
-
-        tbl = str(tmp_path / "gen")
-        # generation 1: no 'score', no 'grade'
-        spark.createDataFrame([(1, 10.0), (2, 20.0)], "id long, v double") \
-            .write.parquet(tbl + "/g1")
-        # generation 2: adds 'score'
-        spark.createDataFrame([(3, 30.0, 0.5)], "id long, v double, score double") \
-            .write.parquet(tbl + "/g2")
-        df = read_evolved(
-            spark,
-            tbl + "/*",
-            defaults={"score": -1.0},
-            derivations={"score2x": lambda d: F.col("score") * 2},
-        )
-        got = {r["id"]: (r["score"], r["score2x"]) for r in df.collect()}
-        assert got == {1: (-1.0, -2.0), 2: (-1.0, -2.0), 3: (0.5, 1.0)}
-        assert set(df.columns) == {"id", "v", "score", "score2x"}
-
-
-class TestStreamingSlidingWindow:
-    def test_streaming_sliding_matches_batch(self, spark, tmp_path):
-        import os
-
-        from rad_ecg_spark.streaming.events import (
-            read_events_stream,
-            run_to_memory,
-            windowed_counts,
-        )
-
-        d = tmp_path / "ev_stream"
-        d.mkdir()
-        (d / "events.parquet").symlink_to("/root/testdata/sf0.001/events.parquet")
-        stream = read_events_stream(spark, str(d))
-        got = {
-            (r["wstart_s"], r["event_type"]): (r["n"], r["sum_value_c"])
-            for r in run_to_memory(
-                windowed_counts(stream, slide="90 minutes"), "sw_test"
-            ).collect()
-        }
-        batch = (
-            spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-            .groupBy(
-                F.window(F.col("ts").cast("timestamp"), "6 hours", "90 minutes").alias("w"),
-                "event_type",
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.round(F.col("value") * 100).cast("long")).alias("s"),
-            )
-            .select(F.unix_timestamp("w.start").alias("ws"), "event_type", "n", "s")
-        )
-        exp = {(r["ws"], r["event_type"]): (r["n"], r["s"]) for r in batch.collect()}
-        assert got == exp
 
 
 class TestBlockedKernelMemory:
@@ -605,7 +431,7 @@ class TestPowerTransform:
     def test_general_lambda_matches_textbook_formula(self, spark):
         import numpy as np
 
-        from rad_ecg_spark.functions.transforms import boxcox_udf, yeojohnson_udf
+        from rad_ecg_spark.functions.transforms import yeojohnson_udf
 
         xs = (-3.5, -1.0, 0.0, 0.2, 4.0)
         df = spark.createDataFrame([(float(x),) for x in xs], "x double")
@@ -617,7 +443,3 @@ class TestPowerTransform:
             return -(((1 - x) ** (2 - lam)) - 1) / (2 - lam)
 
         assert np.allclose(got, [ref(x) for x in xs])
-        # box-cox: positive domain only, lam=0.5 -> 2(sqrt(x)-1)
-        gb = [r[0] for r in df.select(boxcox_udf(0.5)("x")).collect()]
-        assert gb[0] is None and gb[2] is None
-        assert abs(gb[4] - 2.0) < 1e-12

@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 from rad_ecg_spark.functions.extract import (
     pages_to_edges,
     text_invariant_violations,
-    token_count,
 )
 from rad_ecg_spark.operators.pagerank import pagerank
 from rad_ecg_spark.operators.triangles import triangle_count
@@ -75,11 +74,6 @@ class TestExtraction:
         assert out["u2"][0] == "\nonly para"
         assert out["u4"][1] == ["https://x/", "https://y/"]
         assert out["u3"][0] == "\n"  # survives undecodable bytes
-
-    def test_token_count(self, spark):
-        df = spark.createDataFrame([("a b  c",), ("",), ("  ",), ("one",)], "t string")
-        got = [r["n"] for r in df.select(token_count(F.col("t")).alias("n")).collect()]
-        assert got == [3, 0, 0, 1]
 
 
 class TestEndToEnd:

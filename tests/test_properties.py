@@ -5,7 +5,6 @@ from __future__ import annotations
 
 import datetime as dt
 
-import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -115,42 +114,6 @@ class TestSimHashBandingComplete:
                     brute.add((i, j))
         banded = {(r["a"], r["b"]) for r in simhash_pairs(df, max_hamming=3).collect()}
         assert banded == brute and len(brute) > 0
-
-
-class TestUpsertProperties:
-    @SLOW
-    @given(
-        updates=st.lists(
-            st.tuples(
-                st.integers(min_value=0, max_value=5),   # key
-                st.integers(min_value=0, max_value=10),  # ts offset
-                st.integers(min_value=0, max_value=99),  # value
-            ),
-            min_size=1,
-            max_size=12,
-        )
-    )
-    def test_merge_idempotent_and_latest_wins(self, spark, tmp_path_factory, updates):
-        from rad_ecg_spark.plans.upsert import merge_upsert
-
-        t0 = dt.datetime(2024, 1, 1)
-        tgt = str(tmp_path_factory.mktemp("upsert") / "tbl")
-        df = spark.createDataFrame(
-            [(k, t0 + dt.timedelta(minutes=m), float(v)) for k, m, v in updates],
-            "k long, ts timestamp, v double",
-        )
-        merge_upsert(spark, tgt, df, ["k"], "ts")
-        once = sorted((r["k"], r["ts"], r["v"]) for r in spark.read.parquet(tgt).collect())
-        merge_upsert(spark, tgt, df, ["k"], "ts")  # replay the same batch
-        twice = sorted((r["k"], r["ts"], r["v"]) for r in spark.read.parquet(tgt).collect())
-        assert once == twice
-        # exactly one row per key, carrying that key's max timestamp
-        by_key = {}
-        for k, m, v in updates:
-            by_key.setdefault(k, []).append(m)
-        assert {r[0] for r in once} == set(by_key)
-        for k, ts, _v in once:
-            assert ts == t0 + dt.timedelta(minutes=max(by_key[k]))
 
 
 class TestY4MCodecProperty:

@@ -1,82 +1,11 @@
-"""Streaming semantics + multimodal plumbing tests."""
+"""Multimodal plumbing: the Y4M video codec and the frame-sampling decode."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
-
-from rad_ecg_spark.functions.multimodal import (
-    extract_image_features,
-    frame_sample_plan,
-    synth_media,
-)
-from rad_ecg_spark.streaming.events import (
-    dedup_within_watermark,
-    read_events_stream,
-    run_to_memory,
-    windowed_counts,
-)
-
-SF_DIR = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def events_stream_dir(tmp_path_factory):
-    # file stream sources watch a DIRECTORY; expose the single parquet
-    # file through a symlinked dir
-    d = tmp_path_factory.mktemp("events_stream")
-    (d / "events.parquet").symlink_to(f"{SF_DIR}/events.parquet")
-    return str(d)
-
-
-class TestStreaming:
-    def test_windowed_counts_match_batch(self, spark, events_stream_dir):
-        stream = read_events_stream(spark, events_stream_dir)
-        got = {
-            (r["wstart_s"], r["event_type"]): (r["n"], r["sum_value_c"])
-            for r in run_to_memory(windowed_counts(stream), "wc_test").collect()
-        }
-        batch = (
-            spark.read.parquet(f"{SF_DIR}/events.parquet")
-            .groupBy(F.window(F.col("ts").cast("timestamp"), "6 hours").alias("w"), "event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.round(F.col("value") * 100).cast("long")).alias("s"),
-            )
-            .select(F.unix_timestamp("w.start").alias("ws"), "event_type", "n", "s")
-        )
-        exp = {(r["ws"], r["event_type"]): (r["n"], r["s"]) for r in batch.collect()}
-        assert got == exp
-
-    def test_dedup_within_watermark(self, spark, events_stream_dir):
-        stream = read_events_stream(spark, events_stream_dir)
-        n = run_to_memory(dedup_within_watermark(stream), "dd_test").count()
-        exp = spark.read.parquet(f"{SF_DIR}/events.parquet").count()
-        assert n == exp  # no duplicate event_ids in the source
 
 
 class TestMultimodal:
-    def test_feature_extraction_deterministic(self, spark):
-        media = synth_media(spark, 50)
-        feats = extract_image_features(media).orderBy("media_id").collect()
-        assert len(feats) == 50
-        assert all(len(r["feat"]) == 8 for r in feats)
-        assert all(r["decode_ok"] for r in feats)
-        again = extract_image_features(synth_media(spark, 50)).orderBy("media_id").collect()
-        assert [r["feat"] for r in feats] == [r["feat"] for r in again]
-
-    def test_real_backend_is_explicit_stub(self, spark):
-        media = synth_media(spark, 5)
-        with pytest.raises(Exception, match="NotImplementedError|decode backend"):
-            extract_image_features(media, decode_backend="pil").collect()
-
-    def test_frame_sample_plan(self, spark):
-        media = synth_media(spark, 10, kind="video")
-        # synth video is 24 real Y4M frames -> every_n=5 samples 0..20
-        plan = frame_sample_plan(media, every_n=5).collect()
-        assert {r["frame_idx"] for r in plan} == {0, 5, 10, 15, 20}
-        assert len(plan) == 50
-
     def test_y4m_roundtrip_and_rejects(self, spark):
         """Real Y4M codec: encode -> decode is bit-exact (frames, dims,
         fps); malformed streams fail loudly."""
@@ -122,154 +51,3 @@ class TestMultimodal:
             for fi in (0, 5, 10):
                 assert got[(mid, fi)] == int(luma[fi].sum())
         assert len(got) == 18
-
-
-class TestStatefulStreaming:
-    def test_staleness_timeout_emits_stale_row(self, spark, tmp_path):
-        """Three ordered micro-batches; user 20 goes quiet after batch 0,
-        the watermark advances past its timeout, and the operator must
-        emit exactly one 'stale' row for it (reference semantics: >60s
-        staleness triggers a re-vet)."""
-        import datetime as dt
-        import os
-
-        from rad_ecg_spark.streaming.stateful import staleness_monitor
-
-        d = tmp_path / "stream_in"
-        d.mkdir()
-        t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
-
-        def mk(name, rows, mtime):
-            df = spark.createDataFrame(
-                rows, "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-            )
-            p = str(d / name)
-            df.coalesce(1).write.mode("overwrite").parquet(p)
-            os.utime(p, (mtime, mtime))
-            for f in os.listdir(p):
-                os.utime(os.path.join(p, f), (mtime, mtime))
-            return p
-
-        m = lambda mins: t0 + dt.timedelta(minutes=mins)  # noqa: E731
-        mk("b0", [(1, m(0), 10, "click", 100.0, ""), (2, m(0), 20, "click", 200.0, "")], 1000)
-        mk("b1", [(3, m(10), 10, "click", 50.0, "")], 2000)
-        mk("b2", [(4, m(20), 10, "click", 25.0, "")], 3000)
-
-        stream = (
-            spark.readStream.schema(
-                "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(d) + "/*")
-        )
-        out = staleness_monitor(stream, watermark="1 minute", stale_after_ms=60_000)
-        q = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName("stale_test")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        rows = spark.sql("SELECT * FROM stale_test").collect()
-        stale = [r for r in rows if r["status"] == "stale"]
-        assert len(stale) == 1 and stale[0]["user_id"] == 20
-        assert stale[0]["n_events"] == 1 and stale[0]["sum_cents"] == 20000
-        # user 10 stayed active through all three batches
-        active10 = [r for r in rows if r["user_id"] == 10 and r["status"] == "active"]
-        assert max(r["n_events"] for r in active10) == 3
-        assert not any(r["status"] == "stale" and r["user_id"] == 10 for r in rows)
-
-
-class TestRealCodecs:
-    def test_bmp_pipeline_matches_direct_decode(self, spark):
-        import numpy as np
-
-        from rad_ecg_spark.functions.multimodal import (
-            bmp_decode,
-            extract_image_features,
-            synth_media,
-        )
-
-        media = synth_media(spark, 8)
-        rows = {r["media_id"]: r for r in
-                media.join(extract_image_features(media), "media_id").collect()}
-        for mid, r in rows.items():
-            px = bmp_decode(bytes(r["payload"])).astype(np.float64)
-            luma = 0.299 * px[:, :, 0] + 0.587 * px[:, :, 1] + 0.114 * px[:, :, 2]
-            assert abs(r["mean_luma"] - luma.mean()) < 1e-9
-            assert len(r["feat"]) == 8
-
-    def test_corrupt_payload_quarantined_not_fatal(self, spark):
-        from pyspark.sql import functions as F
-
-        from rad_ecg_spark.functions.multimodal import extract_image_features, synth_media
-
-        media = synth_media(spark, 6).withColumn(
-            "payload",
-            F.when(F.col("media_id") % 2 == 0, F.col("payload")).otherwise(
-                F.lit(b"not a bmp")
-            ),
-        )
-        got = {r["media_id"]: r["decode_ok"] for r in extract_image_features(media).collect()}
-        assert got == {i: (i % 2 == 0) for i in range(6)}
-
-    def test_audio_features_closed_form(self, spark):
-        import numpy as np
-
-        from rad_ecg_spark.functions.multimodal import (
-            extract_audio_features,
-            synth_media,
-            wav_decode,
-        )
-
-        media = synth_media(spark, 5, kind="audio")
-        rows = {r["media_id"]: r for r in
-                media.join(extract_audio_features(media), "media_id").collect()}
-        for mid, r in rows.items():
-            _, s = wav_decode(bytes(r["payload"]))
-            x = s.astype(np.float64)
-            assert r["n_samples"] == len(s) == 1600
-            assert abs(r["rms"] - float(np.sqrt(np.mean(x * x)))) < 1e-9
-            assert r["peak"] == int(np.max(np.abs(x)))
-            assert r["decode_ok"]
-
-    def test_bounded_rolling_state(self, spark, tmp_path):
-        """The recent-values buffer must stay bounded at 6 and the
-        rolling mean must reflect only the last 6 events."""
-        import datetime as dt
-        import os
-
-        from rad_ecg_spark.streaming.stateful import staleness_monitor
-
-        d = tmp_path / "roll_in"
-        d.mkdir()
-        t0 = dt.datetime(2024, 1, 1)
-        rows = [
-            (i, t0 + dt.timedelta(seconds=i), 1, "c", float(i + 1), "")
-            for i in range(10)  # cents: 100..1000
-        ]
-        df = spark.createDataFrame(
-            rows, "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-        )
-        p = str(d / "b0")
-        df.coalesce(1).write.mode("overwrite").parquet(p)
-        stream = (
-            spark.readStream.schema(
-                "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-            )
-            .parquet(str(d) + "/*")
-        )
-        out = staleness_monitor(stream)
-        q = out.writeStream.outputMode("append").format("memory").queryName("roll_test").start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        r = spark.sql("SELECT * FROM roll_test WHERE status='active'").collect()[0]
-        assert r["n_events"] == 10
-        assert r["recent_n"] == 6
-        # last six cents: 500..1000 -> mean 750
-        assert r["recent_mean_c"] == 750

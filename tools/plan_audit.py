@@ -322,7 +322,7 @@ def hashmin_steady_plan(spark, n_edges, P):
 def audit_loops(spark, n_edges=100_000, P=4):
     """[(name, live exchanges, exchange names + notes, ok)] for the five
     steady-state loop plans, planned with AQE off. Budget: 1 live
-    exchange each; the hub-split plans also at most 3 broadcasts and 3
+    exchange each; the hub-split plans also at most 2 broadcasts and 3
     sorts."""
     plans = (
         ("pagerank_steady_iteration", lambda: pagerank_steady_plan(spark, n_edges, P)),
@@ -345,8 +345,8 @@ def audit_loops(spark, n_edges=100_000, P=4):
             ok = n <= 1
             if name.endswith("hubsplit_steady"):
                 # the split path adds broadcasts: budget them explicitly
-                # (<= 3: hub_ids semi-join build, hub slice, and at most one
-                # planner-chosen extra) and forbid sorts beyond min_by's
+                # (<= 2: the hub slice and at most one planner-chosen
+                # extra) and forbid sorts beyond min_by's
                 # partial+final SortAggregate pair plus the one sort under
                 # the final agg (measured equivalent to hash-aggregable
                 # rewrites, OPTIMIZATION_r06.md §12b) — e.g. a sort-merge
@@ -355,9 +355,9 @@ def audit_loops(spark, n_edges=100_000, P=4):
                 hits = hits + [
                     f"broadcasts={nodes['BroadcastExchange']} sorts={nodes['Sort']}"
                 ]
-                if nodes["BroadcastExchange"] > 3:
+                if nodes["BroadcastExchange"] > 2:
                     ok = False
-                    hits.append("broadcast budget 3 exceeded")
+                    hits.append("broadcast budget 2 exceeded")
                 if nodes["Sort"] > 3:
                     ok = False
                     hits.append("sort budget 3 exceeded: SMJ in steady loop?")
