@@ -13,7 +13,8 @@ one JSON line with ``algo``, the output's ``rows`` and the run's facts.
 
 PageRank with --checkpoint-dir commits an async checkpoint every
 iteration, and --resume restarts it from the last complete one; the
-other algorithms reject the PageRank options. Components run the hybrid
+other algorithms reject the PageRank options, and triangles, which
+does not iterate, rejects --max-iter. Components run the hybrid
 method; PageRank and label propagation split off supernode hubs
 themselves (operators/skew.py hub_split). A pages table goes through
 jobs/run_web_pipeline.py, which dedups the pages before it builds the
@@ -51,6 +52,8 @@ def main() -> None:
         ap.error(f"--{pagerank_only[0].replace('_', '-')} applies to --algo pagerank only")
     if args.resume and not args.checkpoint_dir:
         ap.error("--resume needs --checkpoint-dir")
+    if args.algo == "triangles" and args.max_iter is not None:
+        ap.error("--max-iter does not apply to --algo triangles (no iterations)")
     if args.max_iter is None:
         args.max_iter = 100 if args.algo == "pagerank" else 50
 

@@ -10,7 +10,10 @@ outputs + summary.json.
         [--algos pagerank,components,labelprop,triangles] \
         [--synth-pages SITES:PAGES_PER_SITE]   # demo corpus instead of --pages
 
-An --algos entry outside plans/pipeline.py ALGOS is a usage error.
+An --algos entry outside plans/pipeline.py ALGOS is a usage error, and
+so is an option no listed algorithm reads: --checkpoint-dir, --resume,
+--tol and --tol-mode need pagerank, --max-iter needs pagerank or
+labelprop.
 """
 
 from __future__ import annotations
@@ -45,6 +48,14 @@ def main() -> None:
         check_algos(algos)
     except ValueError as e:
         ap.error(f"--algos: {e}")
+    pagerank_only = [
+        k for k in ("checkpoint_dir", "tol", "tol_mode")
+        if getattr(args, k) != ap.get_default(k)
+    ]
+    if "pagerank" not in algos and pagerank_only:
+        ap.error(f"--{pagerank_only[0].replace('_', '-')} needs pagerank in --algos")
+    if args.max_iter != ap.get_default("max_iter") and not {"pagerank", "labelprop"} & set(algos):
+        ap.error("--max-iter needs pagerank or labelprop in --algos")
 
     from pyspark.sql import SparkSession
 

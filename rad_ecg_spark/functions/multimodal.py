@@ -8,11 +8,12 @@ implemented with struct/numpy only (no Pillow/ffmpeg dependency).
 Compressed formats need an external decoder in the same
 ``mapInPandas`` plumbing.
 
-Scale notes: payload rows are large (KB-MB each), so these operators
-key their repartitioning on BYTE budget, not row count —
-``spark.sql.execution.arrow.maxRecordsPerBatch`` keeps an Arrow batch
-of payloads within executor memory; decode runs inside ``mapInPandas``
-(one Python worker pass, no per-row round trips).
+Scale notes: each operator is one ``mapInPandas`` pass over its
+input's partitions (one Python worker pass, no per-row round trips)
+and nothing repartitions. Its Arrow batches hold
+``spark.sql.execution.arrow.maxRecordsPerBatch`` rows (10,000 in
+``session.get_spark``), so a batch's memory is that row count times
+the payload size: 10 MB at 1 KB per payload, 10 GB at 1 MB.
 
 Reference capability donor: binary block-structured scan + typed decode
 (/root/reference/src/rad_ecg/scripts/lib_ebm/pyebmreader.py:68-181) and
@@ -127,13 +128,14 @@ def image_luma_profile(media: DataFrame, n_strips: int = 8) -> DataFrame:
 # 8-bit luma plane per frame — a real, dependency-free video container
 # (struct/numpy only); compressed formats (H.264 etc.) need ffmpeg.
 
-def y4m_encode(frames: np.ndarray, fps: tuple[int, int] = (25, 1)) -> bytes:
-    """frames: (n_frames, h, w) uint8 luma planes -> Y4M Cmono bytes."""
+def y4m_encode(frames: np.ndarray) -> bytes:
+    """frames: (n_frames, h, w) uint8 luma planes -> Y4M Cmono bytes at
+    25 fps (``F25:1``)."""
     if frames.ndim != 3:
         raise ValueError(f"frames must be (n, h, w), got {frames.shape}")
     n, h, w = frames.shape
     out = bytearray(
-        f"YUV4MPEG2 W{w} H{h} F{fps[0]}:{fps[1]} Ip A1:1 Cmono\n".encode("ascii")
+        f"YUV4MPEG2 W{w} H{h} F25:1 Ip A1:1 Cmono\n".encode("ascii")
     )
     for f in np.ascontiguousarray(frames, dtype=np.uint8):
         out += b"FRAME\n"

@@ -62,8 +62,9 @@ def _e6(x: float) -> int:
     return int(math.floor(x * 1e6 + 0.5))
 
 
-def stat_bundle(events: DataFrame, value_col: str = "value") -> DataFrame:
-    """Per-event_type metrics bundle via groupBy().applyInPandas."""
+def stat_bundle(events: DataFrame) -> DataFrame:
+    """Per-event_type metrics bundle of ``events(event_type, value)`` via
+    groupBy().applyInPandas."""
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         v = pdf["v"].to_numpy(dtype=np.int64)
@@ -97,7 +98,7 @@ def stat_bundle(events: DataFrame, value_col: str = "value") -> DataFrame:
         )
 
     prepared = events.select(
-        "event_type", F.floor(F.col(value_col)).cast("long").alias("v")
+        "event_type", F.floor(F.col("value")).cast("long").alias("v")
     ).filter(F.col("v").isNotNull())
     return prepared.groupBy("event_type").applyInPandas(kernel, schema=BUNDLE_SCHEMA)
 

@@ -4,11 +4,13 @@
   ``textstats.fingerprint``), keeping the min-id representative; the
   pipeline's exact stage (plans/pipeline.py ``dedup_pages``). One
   shuffle, partial-agg friendly.
-- token sets: ``token_sets`` -> ``(id, toks)``, one row per document,
-  toks = its distinct words. The MinHash, LSH, verify and near-dup
-  cluster stages read this frame and never tokenize, so each entry point
-  (jaccard_pairs, winnow_verified_pairs, dup_clusters, the pipeline)
-  tokenizes a document once.
+- token sets: ``(id, toks)``, one row per document, toks = its
+  distinct words (``token_sets`` projects ``(doc_id, toks)`` from the
+  documents table; the pipeline projects ``(url, toks)`` with
+  ``token_set``). The MinHash, LSH, verify and near-dup cluster stages
+  read this frame, keyed by their ``id_col``, and never tokenize, so
+  each entry point (jaccard_pairs, winnow_verified_pairs, dup_clusters,
+  the pipeline) tokenizes a document once.
 - n-gram Jaccard: word-level set overlap over candidate pairs generated
   by a shared-token join (never a blind cross join).
 - MinHash + LSH: k permutation-style hashes min-folded over tokens; the
@@ -51,9 +53,10 @@ def token_set(text: Column) -> Column:
     return F.array_distinct(words(F.coalesce(text, F.lit(""))))
 
 
-def token_sets(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(id, toks): the token-set frame the near-dup stages read."""
-    return df.select(F.col(id_col), token_set(F.col(text_col)).alias("toks"))
+def token_sets(df: DataFrame) -> DataFrame:
+    """(doc_id, toks) of a ``documents(doc_id, text)`` frame: the
+    token-set frame the near-dup stages read."""
+    return df.select("doc_id", token_set(F.col("text")).alias("toks"))
 
 
 def minhash_signatures(toks: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -155,14 +158,10 @@ def verify_jaccard_pairs(
 
 
 def jaccard_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold_num: int = 8,
-    threshold_den: int = 10,
+    df: DataFrame, threshold_num: int = 8, threshold_den: int = 10
 ) -> DataFrame:
-    """Near-dup pairs by word-set Jaccard >= num/den, exact integer
-    comparison (inter*den >= num*union).
+    """Near-dup pairs of ``documents(doc_id, text)`` by word-set Jaccard
+    >= num/den, exact integer comparison (inter*den >= num*union).
 
     Candidate generation uses LOSSLESS prefix filtering (Bayardo et al.
     WWW'07 "Scaling Up All Pairs"; Xiao et al. WWW'08 PPJoin; the
@@ -175,11 +174,11 @@ def jaccard_pairs(
     Verification recomputes the true intersection for surviving
     candidates only.
     """
-    toks = token_sets(df, text_col, id_col).persist()
+    toks = token_sets(df).persist()
     toks.count()  # materialize: the prefix self-join and verify read it 5 ways
-    tok = toks.select(id_col, F.explode("toks").alias("w"))
-    sizes = toks.select(id_col, F.size("toks").alias("sz"))
-    cand = jaccard_candidates(tok, sizes, id_col, threshold_num, threshold_den).persist()
+    tok = toks.select("doc_id", F.explode("toks").alias("w"))
+    sizes = toks.select("doc_id", F.size("toks").alias("sz"))
+    cand = jaccard_candidates(tok, sizes, threshold_num, threshold_den).persist()
     cand.count()  # materialize before verify (plan-reuse barrier)
     # verify: exact intersection over candidate pairs only (array form —
     # see verify_jaccard_pairs for the measured 7x over an explode join).
@@ -192,7 +191,7 @@ def jaccard_pairs(
     # the returned DataFrame is garbage collected — unlike CacheManager
     # entries, which live until an explicit unpersist.
     out = (
-        verify_jaccard_pairs(cand, toks, id_col, threshold_num, threshold_den)
+        verify_jaccard_pairs(cand, toks, "doc_id", threshold_num, threshold_den)
         .select("a", "b", "inter", "uni")
         .localCheckpoint(eager=True)
     )
@@ -202,23 +201,20 @@ def jaccard_pairs(
 
 
 def jaccard_candidates(
-    tok: DataFrame,
-    sizes: DataFrame,
-    id_col: str = "doc_id",
-    threshold_num: int = 8,
-    threshold_den: int = 10,
+    tok: DataFrame, sizes: DataFrame, threshold_num: int = 8, threshold_den: int = 10
 ) -> DataFrame:
     """Lossless prefix-filter candidate pairs (a < b) for Jaccard >=
-    num/den over a distinct (id, w) token table. Exposed separately so
-    the fan-out bound is testable: the join key is each doc's RARE-token
-    prefix, so a universally shared token generates no candidates unless
-    the threshold's prefix window reaches it."""
+    num/den over a distinct (doc_id, w) token table and its (doc_id, sz)
+    set sizes. Exposed separately so the fan-out bound is testable: the
+    join key is each doc's RARE-token prefix, so a universally shared
+    token generates no candidates unless the threshold's prefix window
+    reaches it."""
     dfreq = tok.groupBy("w").agg(F.count(F.lit(1)).alias("dfreq"))
     # per-doc token position in the GLOBAL (dfreq asc, token asc) order
-    pos_w = Window.partitionBy(id_col).orderBy("dfreq", "w")
+    pos_w = Window.partitionBy("doc_id").orderBy("dfreq", "w")
     ranked = (
         tok.join(dfreq, "w")
-        .join(sizes, id_col)
+        .join(sizes, "doc_id")
         .withColumn("pos", F.row_number().over(pos_w))
     )
     # prefix length = sz - ceil(t*sz) + 1  (integer ceil via DIV)
@@ -227,10 +223,10 @@ def jaccard_candidates(
         <= F.col("sz")
         - F.expr(f"({threshold_num} * sz + {threshold_den} - 1) DIV {threshold_den}")
         + 1
-    ).select(id_col, "w")
+    ).select("doc_id", "w")
     return (
-        prefix.select(F.col(id_col).alias("a"), "w")
-        .join(prefix.select(F.col(id_col).alias("b"), "w"), "w")
+        prefix.select(F.col("doc_id").alias("a"), "w")
+        .join(prefix.select(F.col("doc_id").alias("b"), "w"), "w")
         .filter(F.col("a") < F.col("b"))
         .select("a", "b")
         .distinct()
@@ -240,10 +236,9 @@ def jaccard_candidates(
 _SIMHASH_BITS = 60  # md5-hex-prefix hash (the portable-hash policy) = 60 bits
 
 
-def simhash_table(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """(id, sh): 60-bit SimHash per doc, entirely JVM-side codegen.
+def simhash_table(df: DataFrame) -> DataFrame:
+    """(id, sh): 60-bit SimHash per doc of ``documents(doc_id, text)``,
+    entirely JVM-side codegen.
 
     Shape: explode distinct word tokens, hash each token with the same
     md5-prefix policy as ``token_hash`` (engine-portable), then ONE
@@ -258,7 +253,7 @@ def simhash_table(
     """
     tok = (
         df.select(
-            F.col(id_col).alias("id"), F.explode(words(F.col(text_col))).alias("w")
+            F.col("doc_id").alias("id"), F.explode(words(F.col("text"))).alias("w")
         )
         .distinct()
         .withColumn("h", F.conv(F.substring(F.md5("w"), 1, 15), 16, 10).cast("long"))
@@ -278,10 +273,9 @@ def simhash_table(
     return tok.groupBy("id").agg(*votes).select("id", sig.cast("long").alias("sh"))
 
 
-def simhash_pairs(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", max_hamming: int = 3
-) -> DataFrame:
-    """Near-dup pairs with Hamming(simhash) <= max_hamming.
+def simhash_pairs(df: DataFrame, max_hamming: int = 3) -> DataFrame:
+    """Near-dup pairs of ``documents(doc_id, text)`` with
+    Hamming(simhash) <= max_hamming.
 
     Candidate generation bands the 60-bit sketch into (max_hamming + 1)
     chunks (pigeonhole: <= max_hamming differing bits => at least one
@@ -296,7 +290,7 @@ def simhash_pairs(
     # ~0.8 s/side at sf1.0). Eager localCheckpoint (not persist) so the
     # blocks are reclaimed by the ContextCleaner when the result is
     # garbage collected — same discipline as jaccard_pairs.
-    s = simhash_table(df, text_col, id_col).localCheckpoint(eager=True)
+    s = simhash_table(df).localCheckpoint(eager=True)
     chunks = []
     for c in range(n_chunks):
         lo = c * width
@@ -348,13 +342,12 @@ def simhash_pairs(
 
 # --- winnowing (rolling-hash) document fingerprints ---------------------
 
-def winnow_fingerprints(
-    df: DataFrame,
-    k: int = 8,
-    w: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+# fingerprints shared by more documents than this are boilerplate,
+# dropped before the candidate self-join (``winnow_neardup``)
+WINNOW_MAX_BUCKET = 200
+
+
+def winnow_fingerprints(df: DataFrame, k: int = 8, w: int = 4) -> DataFrame:
     """MOSS winnowing fingerprints (Schleimer, Wilkerson & Aiken,
     "Winnowing: Local Algorithms for Document Fingerprinting", SIGMOD
     2003): hash every character k-gram of the whitespace-normalized
@@ -374,7 +367,8 @@ def winnow_fingerprints(
     shorter than k characters carry no fingerprint and are dropped
     (documented contract; n in [1, w) selects the single global min).
 
-    Returns (id_col, fp) rows, distinct per document.
+    Reads ``documents(doc_id, text)``; returns (doc_id, fp) rows,
+    distinct per document.
 
     Reference capability donor: content fingerprint + overlap detection
     (/root/reference/src/rad_ecg/scripts/peak_detect_v4.py:1710-1731);
@@ -393,34 +387,30 @@ def winnow_fingerprints(
     # explicit whitespace class (textstats.WS_CLASS): Java \s and RE2 \s
     # disagree on U+000B, and the DuckDB oracle must normalize identically
     norm = F.trim(
-        F.regexp_replace(F.lower(F.col(text_col)), r"[ \t\n\f\r]+", " ")
+        F.regexp_replace(F.lower(F.col("text")), r"[ \t\n\f\r]+", " ")
     )
     return (
-        df.select(F.col(id_col), norm.alias("_norm"))
+        df.select("doc_id", norm.alias("_norm"))
         .withColumn("_n", F.length("_norm") - F.lit(k - 1))
         .filter(F.col("_n") >= 1)
         .withColumn("_hashes", F.expr(f"transform(sequence(1, _n), i -> {gram_hash})"))
-        .select(F.col(id_col), F.explode(F.expr(sel)).alias("fp"))
+        .select("doc_id", F.explode(F.expr(sel)).alias("fp"))
     )
 
 
 def winnow_neardup(
-    df: DataFrame,
-    k: int = 8,
-    w: int = 4,
-    min_shared: int = 2,
-    max_bucket: int = 200,
-    text_col: str = "text",
-    id_col: str = "doc_id",
+    df: DataFrame, k: int = 8, w: int = 4, min_shared: int = 2
 ) -> DataFrame:
-    """Near-dup candidate pairs by shared winnowing fingerprints:
-    (a, b, shared) for pairs sharing >= min_shared selected hashes.
+    """Near-dup candidate pairs of ``documents(doc_id, text)`` by shared
+    winnowing fingerprints: (a, b, shared) for pairs sharing >=
+    min_shared selected hashes.
 
     Scale shape: the pair generator is an equi-join on fp (never
-    all-pairs), and fingerprints shared by more than ``max_bucket``
-    documents (site boilerplate: headers, cookie banners) are dropped
-    BEFORE the join — the same mega-bucket cap as the LSH candidate
-    paths, bounding any single join task at max_bucket^2 pairs.
+    all-pairs), and fingerprints shared by more than
+    ``WINNOW_MAX_BUCKET`` documents (site boilerplate: headers, cookie
+    banners) are dropped BEFORE the join — the same mega-bucket cap as
+    the LSH candidate paths, bounding any single join task at
+    WINNOW_MAX_BUCKET^2 pairs.
 
     Candidate density is governed by (k, w): small k on templated
     corpora makes k-grams collide heavily and the pair count balloon
@@ -429,16 +419,16 @@ def winnow_neardup(
     w ~ 25) and treat the output as CANDIDATES to verify (e.g. exact
     Jaccard on the pair list), as with the other LSH paths.
     """
-    fps = winnow_fingerprints(df, k, w, text_col, id_col)
+    fps = winnow_fingerprints(df, k, w)
     small = (
         fps.groupBy("fp")
         .agg(F.count(F.lit(1)).alias("_sz"))
-        .filter(F.col("_sz") <= max_bucket)
+        .filter(F.col("_sz") <= WINNOW_MAX_BUCKET)
         .select("fp")
     )
     capped = fps.join(small, "fp")
-    l = capped.select(F.col("fp"), F.col(id_col).alias("a"))
-    r = capped.select(F.col("fp"), F.col(id_col).alias("b"))
+    l = capped.select(F.col("fp"), F.col("doc_id").alias("a"))
+    r = capped.select(F.col("fp"), F.col("doc_id").alias("b"))
     return (
         l.join(r, "fp")
         .filter(F.col("a") < F.col("b"))
@@ -453,17 +443,15 @@ def winnow_verified_pairs(
     k: int = 8,
     w: int = 4,
     min_shared: int = 2,
-    max_bucket: int = 200,
     threshold_num: int = 1,
     threshold_den: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
-    """The full winnow dedup pipeline: candidate pairs by shared
-    winnowing fingerprints (``winnow_neardup``), VERIFIED by the exact
-    word-set Jaccard >= num/den — the composition its candidates-only
-    stage documents as required (k-gram collisions make raw winnow
-    pairs low-precision at small k).
+    """The full winnow dedup pipeline over ``documents(doc_id, text)``:
+    candidate pairs by shared winnowing fingerprints
+    (``winnow_neardup``), VERIFIED by the exact word-set Jaccard >=
+    num/den — the composition its candidates-only stage documents as
+    required (k-gram collisions make raw winnow pairs low-precision at
+    small k).
 
     Scale shape: verification touches ONLY the candidate pair list (an
     equi-join of candidates against the distinct token table, grouped to
@@ -474,11 +462,9 @@ def winnow_verified_pairs(
     Returns (a, b, shared, inter, uni): fingerprint-share count plus the
     exact intersection/union backing the Jaccard decision.
     """
-    cand = winnow_neardup(
-        df, k, w, min_shared, max_bucket, text_col, id_col
-    )
+    cand = winnow_neardup(df, k, w, min_shared)
     return verify_jaccard_pairs(
-        cand, token_sets(df, text_col, id_col), id_col, threshold_num, threshold_den
+        cand, token_sets(df), "doc_id", threshold_num, threshold_den
     ).select("a", "b", "shared", "inter", "uni")
 
 
@@ -515,12 +501,10 @@ def dup_clusters(
     bands: int = 4,
     threshold_num: int = 9,
     threshold_den: int = 10,
-    max_bucket: int | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
-    """End-to-end corpus dedup — the actual 100 TB pipeline shape:
-    (doc_id, rep, cluster_size) for every document in a verified
+    """End-to-end corpus dedup of ``documents(doc_id, text)`` — the
+    actual 100 TB pipeline shape: (doc_id, rep, cluster_size) for every
+    document in a verified
     near-dup cluster of size >= 2 (``near_dup_components``); singletons
     are their own representative and are omitted.
 
@@ -529,11 +513,10 @@ def dup_clusters(
     (porcine/pig_extract.py:1007).
     """
     cc = near_dup_components(
-        token_sets(df, text_col, id_col), id_col, bands,
-        threshold_num, threshold_den, max_bucket,
+        token_sets(df), "doc_id", bands, threshold_num, threshold_den
     )
     return cc.select(
-        F.col("id").alias(id_col),
+        F.col("id").alias("doc_id"),
         F.col("component").alias("rep"),
         F.count(F.lit(1)).over(Window.partitionBy("component")).alias("cluster_size"),
     )

@@ -36,16 +36,10 @@ EPISODE_SCHEMA = (
 )
 
 
-def detect_episodes(
-    events: DataFrame,
-    threshold: float = 250.0,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    order_col: str = "event_id",
-) -> DataFrame:
-    """One row per (user, episode): maximal run of consecutive events
-    with value > threshold, in (ts, event_id) order."""
+def detect_episodes(events: DataFrame, threshold: float = 250.0) -> DataFrame:
+    """One row per (user, episode) of ``events(user_id, ts, value,
+    event_id)``: maximal run of consecutive events with value >
+    threshold, in (ts, event_id) order."""
     thr_c = int(round(threshold * 100))
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -90,7 +84,7 @@ def detect_episodes(
             }
         )
 
-    series = user_series(events, user_col, ts_col, value_col, order_col)
+    series = user_series(events)
     return sweep(series, "uid", ["ts_ms", "oid"], kernel, EPISODE_SCHEMA)
 
 

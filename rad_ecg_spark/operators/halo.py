@@ -124,23 +124,19 @@ def with_halo_chunks(
 
 
 def halo_rolling_median(
-    events: DataFrame,
-    h: int = 3,
-    chunk_rows: int = 512,
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    value_col: str = "value",
+    events: DataFrame, h: int = 3, chunk_rows: int = 512
 ) -> DataFrame:
     """Centered (-h,+h) rolling median over the ONE global series of all
-    events ordered by (ts, id) — exactly the plain-window semantics
-    ``median(value) OVER (ORDER BY ts, id ROWS BETWEEN h PRECEDING AND
-    h FOLLOWING)``, clipped at the global series edges only. Interior
-    chunk edges see a full window via the h-row halos, so the output is
-    chunk-size- and parallelism-invariant (property-tested)."""
+    ``events(ts, event_id, value)`` ordered by (ts, event_id) — exactly
+    the plain-window semantics ``median(value) OVER (ORDER BY ts,
+    event_id ROWS BETWEEN h PRECEDING AND h FOLLOWING)``, clipped at the
+    global series edges only. Interior chunk edges see a full window via
+    the h-row halos, so the output is chunk-size- and
+    parallelism-invariant (property-tested)."""
     series = events.select(
-        F.col(id_col).alias("eid"),
-        F.unix_millis(F.col(ts_col).cast("timestamp")).alias("ts_ms"),
-        F.col(value_col).cast("double").alias("v"),
+        F.col("event_id").alias("eid"),
+        F.unix_millis(F.col("ts").cast("timestamp")).alias("ts_ms"),
+        F.col("value").cast("double").alias("v"),
     )
     rn = global_row_number(
         series, ["ts_ms", "eid"], shuffle_partitions(events.sparkSession)
@@ -184,16 +180,10 @@ SELECT event_id,
 FROM events"""
 
 
-def halo_mp_discord(
-    events: DataFrame,
-    w: int = 8,
-    chunk_rows: int = 512,
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    value_col: str = "value",
-) -> DataFrame:
-    """Per-SECTION matrix-profile discord over the ONE global series
-    (the reference's per-section contract, stumpy_discord.py:310-470):
+def halo_mp_discord(events: DataFrame, w: int = 8, chunk_rows: int = 512) -> DataFrame:
+    """Per-SECTION matrix-profile discord over the ONE global series of
+    ``events(ts, event_id, value)`` in (ts, event_id) order (the
+    reference's per-section contract, stumpy_discord.py:310-470):
     windows are GLOBAL length-w windows of the full series (a window may
     span the section boundary — that is what the w-1 trailing halo rows
     provide); each section searches nearest neighbors among its own
@@ -212,9 +202,9 @@ def halo_mp_discord(
 
     R = chunk_rows
     series = events.select(
-        F.col(id_col).alias("eid"),
-        F.unix_millis(F.col(ts_col).cast("timestamp")).alias("ts_ms"),
-        F.round(F.col(value_col) * 100).cast("long").alias("cents"),
+        F.col("event_id").alias("eid"),
+        F.unix_millis(F.col("ts").cast("timestamp")).alias("ts_ms"),
+        F.round(F.col("value") * 100).cast("long").alias("cents"),
     )
     rn = global_row_number(
         series, ["ts_ms", "eid"], shuffle_partitions(events.sparkSession)

@@ -17,7 +17,7 @@ sides (identically in the oracle).
 
 Memory: the distance matrix is never materialized whole. ``_blocked_nn``
 streams row-blocks of the (m x m) matrix through two REUSED fixed-size
-buffers (default cap ~64 MB total regardless of m), keeping a running
+buffers (~64 MB in total regardless of m), keeping a running
 per-row nearest neighbor — a 100k-window group peaks at the buffer cap,
 not at the 80 GB an (m x m) float64 allocation would need. Each pair's
 d2 is still the identical k-ordered scalar chain, so blocking changes
@@ -68,70 +68,43 @@ def znorm_windows(x: np.ndarray, w: int):
     return idx, z
 
 
-def _blocked_nn(idx: np.ndarray, z: np.ndarray, w: int,
-                max_block_elems: int | None = None,
-                threads: int = 1):
+def _blocked_nn(idx: np.ndarray, z: np.ndarray, w: int):
     """Per-window nearest non-trivial neighbor (nn_pos, d2, has_nn),
-    streaming row-blocks of the pairwise matrix through reused buffers.
+    streaming row-blocks of the pairwise matrix through two reused
+    buffers of at most ``_MAX_BLOCK_ELEMS`` doubles each (read at call
+    time, so tests can shrink it).
 
     Exactness contract: each pair's d2 is the left-assoc k-ordered
     chain ((0 + d_1^2) + d_2^2) + ... — blocking over rows i never
     touches a pair's own accumulation chain, so every double is
     bit-identical to the full-matrix computation (and to the SQL
     oracle's explicit sum chain). Ties: first (smallest-j) argmin.
-
-    ``threads`` > 1 fans independent blocks over a thread pool (numpy
-    releases the GIL on the large elementwise ops). Default 1: inside a
-    Spark task the scheduler already owns the core; multi-thread only
-    when driving the kernel directly (tests, single-series tooling).
-    Each thread owns its buffers, so peak memory is threads * 2 *
-    (block x m) doubles — max_block_elems caps the per-thread block.
     """
-    if max_block_elems is None:
-        max_block_elems = _MAX_BLOCK_ELEMS  # read at call time (testable)
     m = len(idx)
-    block = max(1, min(m, max_block_elems // m))
+    block = max(1, min(m, _MAX_BLOCK_ELEMS // m))
     zT = np.ascontiguousarray(z.T)  # (w, m): contiguous per-lag rows
     nn_pos = np.empty(m, dtype=np.int64)
     mp = np.empty(m, dtype=np.float64)
     has_nn = np.empty(m, dtype=bool)
-
-    def run_range(lo0: int, hi0: int) -> None:
-        acc = np.empty((min(block, hi0 - lo0), m))
-        d = np.empty_like(acc)
-        for lo in range(lo0, hi0, block):
-            hi = min(lo + block, hi0)
-            a, dd = acc[: hi - lo], d[: hi - lo]
-            a.fill(0.0)
-            for k in range(w):
-                np.subtract(zT[k, lo:hi, None], zT[k, None, :], out=dd)
-                np.multiply(dd, dd, out=dd)
-                np.add(a, dd, out=a)
-            a[np.abs(idx[lo:hi, None] - idx[None, :]) < w] = np.inf
-            has_nn[lo:hi] = ~np.isinf(a).all(axis=1)
-            nn = np.argmin(a, axis=1)  # first min = smallest j
-            nn_pos[lo:hi] = nn
-            mp[lo:hi] = a[np.arange(hi - lo), nn]
-
-    if threads <= 1 or m <= block:
-        run_range(0, m)
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        # contiguous row ranges, one per thread (disjoint output slices)
-        bounds = np.linspace(0, m, threads + 1).astype(int)
-        with ThreadPoolExecutor(max_workers=threads) as ex:
-            futs = [
-                ex.submit(run_range, int(a), int(b))
-                for a, b in zip(bounds[:-1], bounds[1:])
-                if b > a
-            ]
-            for f in futs:
-                f.result()
+    acc = np.empty((block, m))
+    d = np.empty_like(acc)
+    for lo in range(0, m, block):
+        hi = min(lo + block, m)
+        a, dd = acc[: hi - lo], d[: hi - lo]
+        a.fill(0.0)
+        for k in range(w):
+            np.subtract(zT[k, lo:hi, None], zT[k, None, :], out=dd)
+            np.multiply(dd, dd, out=dd)
+            np.add(a, dd, out=a)
+        a[np.abs(idx[lo:hi, None] - idx[None, :]) < w] = np.inf
+        has_nn[lo:hi] = ~np.isinf(a).all(axis=1)
+        nn = np.argmin(a, axis=1)  # first min = smallest j
+        nn_pos[lo:hi] = nn
+        mp[lo:hi] = a[np.arange(hi - lo), nn]
     return nn_pos, mp, has_nn
 
 
-def mp_discord_kernel(pdf: pd.DataFrame, w: int, threads: int = 1) -> pd.DataFrame:
+def mp_discord_kernel(pdf: pd.DataFrame, w: int) -> pd.DataFrame:
     """Per-group discord kernel (module-level so tests and the halo
     layout can drive it directly). Expects columns uid, ts_ms, cents,
     oid; returns one MP_SCHEMA row (or none)."""
@@ -151,7 +124,7 @@ def mp_discord_kernel(pdf: pd.DataFrame, w: int, threads: int = 1) -> pd.DataFra
         return empty
     idx, z = zw
     m = len(idx)
-    nn_pos, mp, has_nn = _blocked_nn(idx, z, w, threads=threads)
+    nn_pos, mp, has_nn = _blocked_nn(idx, z, w)
     if not has_nn.any():
         return empty
     mp[~has_nn] = -np.inf
@@ -169,18 +142,12 @@ def mp_discord_kernel(pdf: pd.DataFrame, w: int, threads: int = 1) -> pd.DataFra
     )
 
 
-def matrix_profile_discord(
-    events: DataFrame,
-    w: int = 8,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    order_col: str = "event_id",
-) -> DataFrame:
-    """Per user: the discord window (1-based index), its nearest
-    neighbor and z-distance^2 (x1e6), over length-``w`` windows of the
-    cents series in (ts, order) order."""
-    series = user_series(events, user_col, ts_col, value_col, order_col)
+def matrix_profile_discord(events: DataFrame, w: int = 8) -> DataFrame:
+    """Per user of ``events(user_id, ts, value, event_id)``: the discord
+    window (1-based index), its nearest neighbor and z-distance^2
+    (x1e6), over length-``w`` windows of the cents series in
+    (ts, event_id) order."""
+    series = user_series(events)
     kernel = per_run(lambda pdf: mp_discord_kernel(pdf, w), "uid")
     return sweep(series, "uid", ["ts_ms", "oid"], kernel, MP_SCHEMA)
 
@@ -242,7 +209,7 @@ WHERE rk = 1"""
 FLUSS_SCHEMA = "user_id long, boundary_idx int, cac_e6 long, n_arcs int"
 
 
-def fluss_kernel(pdf: pd.DataFrame, w: int, threads: int = 1) -> pd.DataFrame:
+def fluss_kernel(pdf: pd.DataFrame, w: int) -> pd.DataFrame:
     """Per-group FLUSS kernel (module-level, same contract as
     mp_discord_kernel). Nearest neighbors via the blocked O(buffer)
     streaming pass — identical doubles to the full-matrix layout."""
@@ -261,7 +228,7 @@ def fluss_kernel(pdf: pd.DataFrame, w: int, threads: int = 1) -> pd.DataFrame:
     if zw is None:
         return empty
     idx, z = zw
-    nn_pos, _, has_nn = _blocked_nn(idx, z, w, threads=threads)
+    nn_pos, _, has_nn = _blocked_nn(idx, z, w)
     if not has_nn.any():
         return empty
     # arcs in ORIGINAL 1-based window coordinates, only rows with a nn
@@ -292,17 +259,11 @@ def fluss_kernel(pdf: pd.DataFrame, w: int, threads: int = 1) -> pd.DataFrame:
     )
 
 
-def fluss_regime(
-    events: DataFrame,
-    w: int = 8,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    order_col: str = "event_id",
-) -> DataFrame:
-    """FLUSS-style regime boundary per user (Gharghabi et al., ICDM'17 —
-    public): every window draws an arc to its 1-NN; positions crossed by
-    few arcs are semantic regime boundaries. The corrected arc curve
+def fluss_regime(events: DataFrame, w: int = 8) -> DataFrame:
+    """FLUSS-style regime boundary per user of ``events(user_id, ts,
+    value, event_id)`` (Gharghabi et al., ICDM'17 — public): every
+    window draws an arc to its 1-NN; positions crossed by few arcs are
+    semantic regime boundaries. The corrected arc curve
     CAC(p) = min(crossings(p) / ideal(p), 1) with the random-arc
     parabola ideal(p) = 2 p (nw - p) / nw; the boundary is the argmin
     over p in [w+1, nw-1-w] (edge exclusion), ties to the smallest p.
@@ -311,7 +272,7 @@ def fluss_regime(
     matrix_profile_discord: arc endpoints and crossing counts are exact
     integers; the CAC formula is mirrored verbatim in the oracle.
     """
-    series = user_series(events, user_col, ts_col, value_col, order_col)
+    series = user_series(events)
     kernel = per_run(lambda pdf: fluss_kernel(pdf, w), "uid")
     return sweep(series, "uid", ["ts_ms", "oid"], kernel, FLUSS_SCHEMA)
 

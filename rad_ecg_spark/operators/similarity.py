@@ -61,34 +61,27 @@ def _cosine_topk_tail(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
-def _dim_of(vectors: DataFrame, vec_col: str, dim: int | None) -> int:
+def _dim_of(vectors: DataFrame, dim: int | None) -> int:
     """Explicit dim wins; otherwise read one row with a clear error on
     an empty table (never silently assume)."""
     if dim is not None:
         return dim
-    row = vectors.select(vec_col).first()
+    row = vectors.select("embedding").first()
     if row is None or row[0] is None:
         raise ValueError(
-            f"cannot infer embedding dim: '{vec_col}' has no non-null rows; "
+            "cannot infer embedding dim: 'embedding' has no non-null rows; "
             "pass dim= explicitly"
         )
     return len(row[0])
 
 
-def brute_force_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact top-k cosine neighbors per query (query id aliased qid).
-    queries is expected small → broadcast; the big side streams."""
-    q = queries.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec")
-    )
+def brute_force_topk(vectors: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
+    """Exact top-k cosine neighbors per query over ``(vec_id,
+    embedding)`` tables (query id aliased qid). queries is expected
+    small → broadcast; the big side streams."""
+    q = queries.select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec"))
     pairs = vectors.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).alias("vvec")
+        F.col("vec_id").alias("vid"), F.col("embedding").alias("vvec")
     ).join(F.broadcast(q), F.col("vid") != F.col("qid"))
     scored = pairs.select(
         "qid",
@@ -260,15 +253,11 @@ def band_buckets(vec_col, planes: list[list[list[float]]]):
 
 
 def _bucketed(
-    vectors: DataFrame,
-    id_col: str,
-    vec_col: str,
-    planes,
-    max_bucket: int | None,
-    arrow: bool = False,
+    vectors: DataFrame, planes, max_bucket: int | None, arrow: bool = False
 ) -> DataFrame:
-    """(id, vec, tid, bucket) rows, one per LSH table, with mega-buckets
-    (> max_bucket members) dropped — bounds every join task.
+    """(id, vec, tid, bucket) rows of a ``(vec_id, embedding)`` table, one
+    per LSH table, with mega-buckets (> max_bucket members) dropped —
+    bounds every join task.
 
     ``arrow=True`` computes the buckets with the vectorized
     ``_with_band_buckets`` pass (bit-identical; see its docstring) —
@@ -283,15 +272,15 @@ def _bucketed(
     cost is fixed overhead, not bucket math, at every bench scale)."""
     if arrow:
         b = _with_band_buckets(
-            vectors.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")),
+            vectors.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec")),
             "vec",
             planes,
         ).select("id", "vec", F.posexplode("buckets").alias("tid", "bucket"))
     else:
         b = vectors.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("vec"),
-            F.explode(band_buckets(F.col(vec_col), planes)).alias("tb"),
+            F.col("vec_id").alias("id"),
+            F.col("embedding").alias("vec"),
+            F.explode(band_buckets(F.col("embedding"), planes)).alias("tb"),
         ).select(
             "id", "vec", F.col("tb.tid").alias("tid"), F.col("tb.bucket").alias("bucket")
         )
@@ -311,20 +300,18 @@ def lsh_ann_topk(
     k: int = 5,
     n_tables: int = 4,
     bits: int = 12,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int | None = None,
-    max_bucket: int | None = None,
     seed: int = 42,
 ) -> DataFrame:
-    """Approximate top-k: candidates restricted to vectors sharing ANY of
-    the query's ``n_tables`` band buckets (2^bits buckets per table).
-    The candidate join is an equi-join on (table, bucket) — expected
-    candidates per query ≈ n_tables * n / 2^bits, never O(n)."""
-    dim = _dim_of(vectors, vec_col, dim)
+    """Approximate top-k over ``(vec_id, embedding)`` tables: candidates
+    restricted to vectors sharing ANY of the query's ``n_tables`` band
+    buckets (2^bits buckets per table). The candidate join is an
+    equi-join on (table, bucket) — expected candidates per query ≈
+    n_tables * n / 2^bits, never O(n)."""
+    dim = _dim_of(vectors, dim)
     planes = hyperplanes(dim, n_tables, bits, seed)
-    v = _bucketed(vectors, id_col, vec_col, planes, max_bucket, arrow=True)
-    q = _bucketed(queries, id_col, vec_col, planes, max_bucket=None, arrow=True).select(
+    v = _bucketed(vectors, planes, max_bucket=None, arrow=True)
+    q = _bucketed(queries, planes, max_bucket=None, arrow=True).select(
         F.col("id").alias("qid"), F.col("vec").alias("qvec"), "tid", "bucket"
     )
     cand = (
@@ -344,19 +331,18 @@ def embedding_neardup_pairs(
     threshold: float = 0.98,
     n_tables: int = 4,
     bits: int = 12,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int | None = None,
     max_bucket: int | None = 10_000,
     seed: int = 42,
 ) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs via banded LSH self-join.
+    """Embedding-cosine near-duplicate pairs of a ``(vec_id, embedding)``
+    table via banded LSH self-join.
     Each table's bucket join is bounded (expected n/2^bits per bucket,
     hard-capped by max_bucket), so the self-join cost is
     ~ n_tables * sum(bucket_size^2) — never the n^2 cross product."""
-    dim = _dim_of(vectors, vec_col, dim)
+    dim = _dim_of(vectors, dim)
     planes = hyperplanes(dim, n_tables, bits, seed)
-    v = _bucketed(vectors, id_col, vec_col, planes, max_bucket)
+    v = _bucketed(vectors, planes, max_bucket)
     l = v.select(F.col("id").alias("a"), F.col("vec").alias("va"), "tid", "bucket")
     r = v.select(F.col("id").alias("b"), F.col("vec").alias("vb"), "tid", "bucket")
     return (
@@ -402,25 +388,24 @@ def ivf_fixed_topk(
     centroids: list[list[float]],
     k: int = 5,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """IVF ANN with FIXED centroids passed as literals: cell assignment
-    (argmin d2, ties to the smaller cell id) and the nprobe probe both
-    become pure JVM expressions, so the whole operator is
-    SQL-expressible and carries a full DuckDB oracle. Scale shape:
+    """IVF ANN over ``(vec_id, embedding)`` tables with FIXED centroids
+    passed as literals: cell assignment (argmin d2, ties to the smaller
+    cell id) and the nprobe probe both become pure JVM expressions, so
+    the whole operator is SQL-expressible and carries a full DuckDB
+    oracle. Scale shape:
     map-side assignment, broadcast probe, equi-join on cell id.
 
     Assignment and probe run as vectorized Arrow passes (``_with_cells``)
     bit-identical to the `_cell_structs` expression path — see that
     helper for the fold-order / tie-break / null-semantics contract."""
     v = _with_cells(
-        vectors.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vvec")),
+        vectors.select(F.col("vec_id").alias("vid"), F.col("embedding").alias("vvec")),
         "vvec",
         centroids,
         nprobe=None,
     )
-    q = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec"))
+    q = queries.select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec"))
     probe = _with_cells(q, "qvec", centroids, nprobe=nprobe).select(
         "qid", "qvec", F.explode("cells").alias("cell")
     )

@@ -3,7 +3,8 @@ broadcast handling for high-degree supernodes").
 
 Two structural tools:
 
-- ``salted_join(big, small, key, n_salts)``: generic salted equi-join.
+- ``salted_join(big, small, key, n_salts)``: generic salted inner
+  equi-join.
   The big side gets a per-row salt (hash of a disambiguating column mod
   n_salts), the small side is replicated n_salts times, and the join key
   becomes (key, salt) — a single hot key fans out over n_salts tasks
@@ -40,14 +41,13 @@ def salted_join(
     small: DataFrame,
     key: str,
     n_salts: int = 16,
-    how: str = "inner",
     unique_col: str | None = None,
 ) -> DataFrame:
-    """Equi-join big⋈small on ``key`` with the hot-key fan-out spread
-    over ``n_salts`` subtasks. Output rows equal ``big.join(small, key,
-    how)`` for how in {inner, left} ONLY (the small side is replicated
-    n_salts times, so right/full-outer would emit unmatched small rows
-    n_salts times — asserted away).
+    """Inner equi-join big⋈small on ``key`` with the hot-key fan-out
+    spread over ``n_salts`` subtasks. Output rows equal
+    ``big.join(small, key)``. Inner only: the small side is replicated
+    n_salts times, so an outer join would emit each unmatched small row
+    n_salts times.
 
     Salt derivation is DETERMINISTIC — this matters under stage retries:
     Spark only guards round-robin repartition against indeterminate-stage
@@ -63,8 +63,6 @@ def salted_join(
       proportional to the duplicate multiplicity, documented tradeoff);
       distinct rows spread uniformly.
     """
-    if how not in ("inner", "left"):
-        raise ValueError(f"salted_join supports inner/left only, got {how!r}")
     salt_src = (
         [F.col(unique_col)] if unique_col is not None else [F.col(c) for c in big.columns]
     )
@@ -72,7 +70,7 @@ def salted_join(
     big_s = big.withColumn("_salt", salt)
     salts = F.explode(F.array(*[F.lit(i) for i in range(n_salts)])).alias("_salt")
     small_s = small.select("*", salts)
-    return big_s.join(small_s, [key, "_salt"], how).drop("_salt")
+    return big_s.join(small_s, [key, "_salt"]).drop("_salt")
 
 
 class HubSplit:

@@ -91,14 +91,13 @@ def sweep(
     )
 
 
-def user_series(
-    events: DataFrame, user_col: str, ts_col: str, value_col: str, order_col: str
-) -> DataFrame:
-    """The per-user series the keyed kernels read: uid, ts_ms, exact
-    integer cents and the tie-break order id."""
+def user_series(events: DataFrame) -> DataFrame:
+    """The per-user series the keyed kernels read from
+    ``events(user_id, ts, value, event_id)``: uid, ts_ms, exact integer
+    cents and the tie-break order id."""
     return events.select(
-        F.col(user_col).alias("uid"),
-        F.unix_millis(F.col(ts_col).cast("timestamp")).alias("ts_ms"),
-        F.round(F.col(value_col) * 100).cast("long").alias("cents"),
-        F.col(order_col).alias("oid"),
+        F.col("user_id").alias("uid"),
+        F.unix_millis(F.col("ts").cast("timestamp")).alias("ts_ms"),
+        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        F.col("event_id").alias("oid"),
     )

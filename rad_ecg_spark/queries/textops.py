@@ -21,6 +21,7 @@ from rad_ecg_spark.functions.textstats import (
 from rad_ecg_spark.operators.dedup import (
     MERSENNE31,
     MINHASH_PARAMS,
+    WINNOW_MAX_BUCKET,
     jaccard_pairs,
     minhash_lsh_candidates,
     token_sets,
@@ -166,18 +167,22 @@ WITH tok AS (
 SELECT doc_id, {sigs} FROM th GROUP BY doc_id"""
 
 
+MINHASH_BANDS = 4
+
+
 def q_minhash_lsh_candidates(spark, sf_dir):
     return minhash_lsh_candidates(
-        token_sets(_spread(_t(spark, sf_dir, "documents"), "doc_id")), bands=4
+        token_sets(_spread(_t(spark, sf_dir, "documents"), "doc_id")),
+        bands=MINHASH_BANDS,
     )
 
 
-def _minhash_lsh_sql_union(bands: int = 4) -> str:
+def _minhash_lsh_sql_union() -> str:
     k = len(MINHASH_PARAMS)
-    rpb = k // bands
+    rpb = k // MINHASH_BANDS
     sig_sql = _minhash_sig_sql()
     selects = []
-    for b in range(bands):
+    for b in range(MINHASH_BANDS):
         parts = ", ".join(f"CAST(sig_{b * rpb + r} AS VARCHAR)" for r in range(rpb))
         selects.append(
             f"SELECT doc_id AS id, {b} AS band_id, concat_ws('_', {parts}) AS band_key FROM sigs"
@@ -238,8 +243,9 @@ def q_cosine_topk(spark, sf_dir):
     )
 
 
-def _cosine_topk_sql(dim: int = 64) -> str:
+def _cosine_topk_sql() -> str:
     # explicit left-assoc sums reproduce Spark's sequential aggregate fold
+    dim = LSH_DIM  # the embeddings' width
     dot = " + ".join(
         f"CAST(q.embedding[{i}] AS DOUBLE) * v.embedding[{i}]" for i in range(1, dim + 1)
     )
@@ -279,11 +285,11 @@ def q_simhash_pairs(spark, sf_dir):
     )
 
 
-def _simhash_sql(max_hamming: int = SIMHASH_MAX_HAMMING) -> str:
+def _simhash_sql() -> str:
     from rad_ecg_spark.operators.dedup import _SIMHASH_BITS
 
     w = WORDS_SQL.format(c="text")
-    n_chunks = max_hamming + 1
+    n_chunks = SIMHASH_MAX_HAMMING + 1
     width = _SIMHASH_BITS // n_chunks
     chunk_rows = []
     for c in range(n_chunks):
@@ -316,7 +322,7 @@ WITH tok AS (
 SELECT a, b,
        CAST(bit_count(xor(CAST(sha AS UBIGINT), CAST(shb AS UBIGINT))) AS INT) AS hamming
 FROM cand
-WHERE bit_count(xor(CAST(sha AS UBIGINT), CAST(shb AS UBIGINT))) <= {max_hamming}"""
+WHERE bit_count(xor(CAST(sha AS UBIGINT), CAST(shb AS UBIGINT))) <= {SIMHASH_MAX_HAMMING}"""
 
 
 # --- deterministic banded hyperplane LSH ANN (oracle-checkable) ----------
@@ -521,8 +527,9 @@ def q_winnow_verified(spark, sf_dir):
     )
 
 
-def _winnow_base_sql(k: int = WINNOW_K, w: int = WINNOW_W) -> str:
+def _winnow_base_sql() -> str:
     """Shared CTE text: per-doc winnowed fingerprint rows."""
+    k, w = WINNOW_K, WINNOW_W
     gram = (
         f"CAST(concat('0x', substring(md5(substring(norm, i, {k})), 1, 15))"
         f" AS UBIGINT) % {MERSENNE31}"
@@ -551,20 +558,17 @@ WITH d AS (
 )"""
 
 
-def _winnow_verified_sql(min_shared: int = WINNOW_MIN_SHARED,
-                         max_bucket: int = 200,
-                         num: int = WINNOW_VER_NUM,
-                         den: int = WINNOW_VER_DEN) -> str:
+def _winnow_verified_sql() -> str:
     w = WORDS_SQL.format(c="text")
     return _winnow_base_sql() + f""",
 small AS (
-  SELECT fp FROM fp_rows GROUP BY fp HAVING count(*) <= {max_bucket}
+  SELECT fp FROM fp_rows GROUP BY fp HAVING count(*) <= {WINNOW_MAX_BUCKET}
 ), capped AS (
   SELECT f.doc_id, f.fp FROM fp_rows f JOIN small USING (fp)
 ), cand AS (
   SELECT l.doc_id AS a, r.doc_id AS b, CAST(count(*) AS BIGINT) AS shared
   FROM capped l JOIN capped r ON l.fp = r.fp AND l.doc_id < r.doc_id
-  GROUP BY 1, 2 HAVING count(*) >= {min_shared}
+  GROUP BY 1, 2 HAVING count(*) >= {WINNOW_MIN_SHARED}
 ), tok AS (
   SELECT DISTINCT doc_id, unnest(list_distinct({w})) AS w FROM documents
 ), sizes AS (
@@ -579,7 +583,7 @@ SELECT c.a, c.b, c.shared, i.inter,
        CAST(sa.sz + sb.sz - i.inter AS BIGINT) AS uni
 FROM cand c JOIN inter i ON i.a = c.a AND i.b = c.b
 JOIN sizes sa ON sa.doc_id = c.a JOIN sizes sb ON sb.doc_id = c.b
-WHERE i.inter * {den} >= {num} * (sa.sz + sb.sz - i.inter)"""
+WHERE i.inter * {WINNOW_VER_DEN} >= {WINNOW_VER_NUM} * (sa.sz + sb.sz - i.inter)"""
 
 
 # --- embedding-cosine near-dup pairs (banded hyperplane LSH self-join) ---
@@ -677,7 +681,7 @@ def q_dup_clusters(spark, sf_dir):
 
     return dup_clusters(
         _spread(_t(spark, sf_dir, "documents"), "doc_id"),
-        bands=4,
+        bands=MINHASH_BANDS,
         threshold_num=JACCARD_NUM,
         threshold_den=JACCARD_DEN,
     )

@@ -427,15 +427,22 @@ def test_run_graph_job_matches_in_process_operator(spark, tmp_path, algo):
     ["run_graph.py", "--algo", "pagerank", "--resume"],
     ["run_graph.py", "--algo", "components", "--checkpoint-dir", "ck"],
     ["run_graph.py", "--algo", "labelprop", "--tol", "0"],
+    ["run_graph.py", "--algo", "triangles", "--max-iter", "5"],
     ["run_web_pipeline.py", "--synth-pages", "2:2", "--resume"],
     ["run_web_pipeline.py", "--synth-pages", "2:2", "--algos", "pagerank,pagernk"],
-], ids=["graph_resume", "graph_cc_checkpoint", "graph_lp_tol", "web_pipeline_resume",
-        "web_pipeline_unknown_algo"])
+    ["run_web_pipeline.py", "--synth-pages", "2:2", "--algos", "components,triangles",
+     "--tol", "1e-3"],
+    ["run_web_pipeline.py", "--synth-pages", "2:2", "--algos", "components",
+     "--max-iter", "5"],
+], ids=["graph_resume", "graph_cc_checkpoint", "graph_lp_tol", "graph_triangles_max_iter",
+        "web_pipeline_resume", "web_pipeline_unknown_algo",
+        "web_pipeline_tol_without_pagerank", "web_pipeline_max_iter_cc_only"])
 def test_jobs_reject_options_they_cannot_apply(tmp_path, cmd):
     """--resume without --checkpoint-dir, a PageRank option (its
-    checkpoints included) given to another algorithm, and an unknown
-    pipeline algorithm are usage errors: the job exits with status 2
-    before it starts Spark."""
+    checkpoints included) given to another algorithm or to a pipeline
+    without pagerank, --max-iter where no algorithm reads it, and an
+    unknown pipeline algorithm are usage errors: the job exits with
+    status 2 before it starts Spark."""
     script, *args = cmd
     if script == "run_graph.py":
         args += ["--edges", str(tmp_path / "edges")]

@@ -297,7 +297,7 @@ class TestBlockedKernelMemory:
         """A 50k-row group streams through the blocked NN pass within a
         fixed buffer cap (the old (m x m) layout would allocate ~20 GB
         here). tracemalloc tracks numpy allocations; bound is the
-        documented threads * buffers footprint plus slack."""
+        documented two-buffer footprint plus slack."""
         import tracemalloc
 
         import numpy as np
@@ -319,7 +319,7 @@ class TestBlockedKernelMemory:
         mp._MAX_BLOCK_ELEMS = 1_000_000  # 8 MB/buffer: tighter, faster bound
         try:
             tracemalloc.start()
-            out = mp.mp_discord_kernel(pdf, 8, threads=4)
+            out = mp.mp_discord_kernel(pdf, 8)
             _, peak = tracemalloc.get_traced_memory()
         finally:
             tracemalloc.stop()
@@ -327,23 +327,22 @@ class TestBlockedKernelMemory:
         assert len(out) == 1 and out["n_windows"].iloc[0] == 49_993
         assert peak < 400e6, f"peak {peak/1e6:.0f} MB exceeds 400 MB cap"
 
-    def test_blocked_equals_full_matrix_bitwise(self):
-        """Row-blocking (any block size, any thread count) never changes
-        a double: each pair's d2 is its own k-ordered scalar chain."""
+    def test_blocked_equals_full_matrix_bitwise(self, monkeypatch):
+        """Row-blocking (any block size) never changes a double: each
+        pair's d2 is its own k-ordered scalar chain."""
         import numpy as np
 
-        from rad_ecg_spark.operators.matrixprofile import _blocked_nn, znorm_windows
+        from rad_ecg_spark.operators import matrixprofile as mp
 
         rng = np.random.default_rng(5)
         x = rng.integers(0, 9000, 3000).astype(np.int64)
-        idx, z = znorm_windows(x, 8)
-        base = _blocked_nn(idx, z, 8, max_block_elems=len(idx) * len(idx))
-        for kwargs in (
-            {"max_block_elems": 7 * len(idx)},
-            {"max_block_elems": 20000, "threads": 5},
-            {"max_block_elems": len(idx), "threads": 2},
-        ):
-            got = _blocked_nn(idx, z, 8, **kwargs)
+        idx, z = mp.znorm_windows(x, 8)
+        m = len(idx)
+        monkeypatch.setattr(mp, "_MAX_BLOCK_ELEMS", m * m)  # one block
+        base = mp._blocked_nn(idx, z, 8)
+        for cap in (7 * m, m):
+            monkeypatch.setattr(mp, "_MAX_BLOCK_ELEMS", cap)
+            got = mp._blocked_nn(idx, z, 8)
             for a, b in zip(base, got):
                 assert np.array_equal(a, b)
 

@@ -74,7 +74,7 @@ class TestDedupPages:
     def test_near_dups_chains_and_exact_copies_map_to_one_rep(self, spark):
         from rad_ecg_spark.operators.dedup import (
             minhash_lsh_candidates,
-            token_sets,
+            token_set,
             verify_jaccard_pairs,
         )
         from rad_ecg_spark.plans.pipeline import (
@@ -88,7 +88,7 @@ class TestDedupPages:
         assert {r["url"]: r["rep"] for r in dedup_pages(pages).collect()} == expected
         # the fixture exercises each path it claims to
         u = "https://{}.example/{}".format
-        toks = token_sets(pages, "text", "url")
+        toks = pages.select("url", token_set(F.col("text")).alias("toks"))
         cand = minhash_lsh_candidates(toks, "url", LSH_BANDS, MAX_BUCKET)
         verified = {
             (r["a"], r["b"])

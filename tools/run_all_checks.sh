@@ -5,6 +5,9 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 python -m pytest tests/ -q
+# the benchmark's own tests (no Spark): an engine change that breaks an
+# import or a name the benchmark uses fails here, not in a bench run
+python -m pytest perfbench/test_perfbench.py -q
 # TESTDATA: the directory holding the sf* tables, by default beside the
 # checkout
 python tools/compare_oracle.py "${TESTDATA:-../testdata}/sf0.01"
